@@ -8,9 +8,9 @@ Runs the headline queries from ``__spark_entry__.queries()`` at
 CONTRACT-LINE SIZE: the driver records only the last ~2000 chars of
 stdout, so the JSON line must fit inside that window whole (round 7's
 record was lost to an oversized ``notes`` object pushing the line's
-head out of the capture).  Everything verbose — methodology notes,
-per-round workload-change annotations — now lives in
-``BENCH_NOTES.md`` (rewritten per run) and on stderr; the stdout line
+head out of the capture).  The methodology lives in the static
+``BENCH_NOTES.md``; the full record goes to stderr and to the
+git-ignored ``bench_last_run.json`` sidecar; the stdout line
 carries only metric/value/unit/queries/sf plus compact ``subs``
 sub-timings for method-union rows, and a hard length guard drops
 ``subs`` to the sidecar if the line would exceed the window.
@@ -248,6 +248,7 @@ def _extra_subs(spark, sf_dir):
         },
     }
 
+
 # Stdout contract-line budget: the driver keeps the last 2000 chars
 # of stdout; the line (plus its newline) must fit inside it whole.
 LINE_BUDGET = 1980
@@ -289,429 +290,6 @@ def _anchor_reruns(
             attempts += 1
             spent += 1
     return reruns
-
-NOTES = """# BENCH notes (regenerated by bench.py each run)
-
-Methodology (unchanged since round 6 unless noted):
-
-- warmup: met frames + minhash signature table (the incremental
-  index's durable state) + LSH candidate pairs persisted; python
-  worker pool pre-forked; JVM codegen warmed.  Shared ingest is
-  reference-equivalent in-memory station frames — per-query numbers
-  exclude it, keeping cross-round comparisons on one footing.
-- timing: min of 2 materializations per query (this host shows rare
-  multi-second stalls landing on a random query; min-of-2 reports
-  the plan's cost, not scheduler luck).
-- `subs`: per-half sub-timings for method-union rows, measured as a
-  filter on the union's literal tag (the other branch folds away),
-  min of 2.  A union row's halves need not sum to its total: the
-  total shares scans/shuffles between branches.
-- streaming_daily_agg: stream SOURCE parquet written once per
-  process and reused (harness setup); the number prices stream
-  start + watermark agg, not the source write.
-- round 8: contract line slimmed to survive the driver's 2000-char
-  stdout tail window (round 7's record was truncated by an inline
-  notes object); verbose annotations moved here.
-
-Round-8 paired measurement (VERDICT r7 item 3) — r7 code (de521ce)
-vs r8 code, interleaved on one uncontended box, 2 runs each,
-min-of-2 per query:
-
-- SAME-CODE noise band: per-query |a-b|/min median 7-9%, with rare
-  single-query stalls to +70-90% (rows >150 ms; the stalls land on
-  random queries — this is the host noise SCALE.md documents).
-  Totals swing several percent run-to-run. Conclusion: round 7's
-  +13.5% comparable-set drift was host noise, as suspected — do not
-  read per-query deltas under ~15% or total deltas under ~5% as
-  regressions.
-- comparable set (50 queries): r7 66.4 s -> r8 69.5 s (+4.6%), of
-  which +3.2 s was web_curation alone carrying the since-reverted
-  PSL broadcast-join placement; excluding it the set is -0.2% (dead
-  even, inside the band). The reverted placement and the measured
-  costs of both PSL variants are documented in q_web_curation /
-  pipeline/psl.py.
-- repetition_stats grew by construction late in round 8: the row now
-  computes the FULL Gopher table-A1 family (dup line/para occurrence
-  + char fractions, top-2/3/4-gram char fractions, positional-
-  coverage dup-5..10-gram char fractions over a deterministic
-  multiline reconstruction) on top of the original top-unigram/
-  bigram pair. The family runs as the Arrow kernel (see SCALE.md's
-  three-way shape comparison: 413 s relational vs 18 s Arrow at 2M
-  docs), so the sf0.1 row grows modestly — added work, not
-  regression.
-- the round-8 timing harness keeps query BUILD inside the timer
-  (driver-action-paced rows: smet_roundtrip, dup_clusters,
-  streaming_daily_agg, minhash_pairs) — an early round-8 draft
-  accidentally excluded it and those four rows read 27x faster;
-  the paired protocol caught the contract change.
-
-Round-9 paired measurement (VERDICT r8 item 8, same protocol) —
-r8 code (3794c6f) vs r9 code, interleaved on one uncontended box,
-2 runs each, min-of-2 per query, identical 52-query sets:
-
-- totals: r8 70.24 s -> r9 67.91 s (-3.3%) — inside the recorded
-  ±7-9% band; no regression.
-- ONE real grown row, by construction: `web_curation` 2.57 ->
-  3.33 s (+29%). Round 9 adds the DOM-tier extractor's decision
-  columns (`n_chars_dom`/`dom_md5`) — one ArrowEvalPython stage on
-  the main-content scan plus the per-word-inline-tag html wrapper
-  on the m9==2 slice (a regexp_replace per doc). The +0.76 s buys
-  hash-checking a SECOND extraction tier's decisions per doc; the
-  kernel itself is the fast shape (paired chain runs: 14.4 s vs
-  the flat tier's 31.5 s at 1.28M docs — SCALE.md round 9).
-- `minhash_pairs` +11.5% and `humidity_mhpm` +10.4% sit just past
-  the band edge on untouched code — the documented random-stall
-  tail; every other delta is <=|9.8|% and most are negative.
-- the round-9 Arrow kernel work (gopher length dispatch, stateless
-  decontamination flag, minhash_signature_arrow) targets the
-  composition/chain paths, NOT the bench registry rows, which keep
-  their engine-portable JVM shapes for the DuckDB twins; an
-  uncontended end-of-round single run totalled 65.7 s over the
-  same 52 rows with every per-query delta inside the band.
-  (A bench run chained after a 17-minute pytest on the same box
-  read 82 s — contended totals are not comparable, per the
-  methodology note above.)
-
-Round-10 workload changes (registry restructure, VERDICT r9 item 1):
-
-- `embedding_topk` + `pq_topk` merged into ONE `ann_topk` row (same
-  subplans, common `score` column); its four `subs` (brute/ivf/pq/
-  ivfpq) correspond to the old rows' subs — compare those, not the
-  union total, across the merge.
-- NEW `weighted_mixture` row: epoch fan-out (explode(sequence)) +
-  md5-uniform fractional draw over three doc_id%3 sources at 2x the
-  corpus — a union of filtered scans, zero shuffle; the row also
-  pays one 3-row count aggregate for source sizes (the
-  catalog-manifest stand-in).
-- NEW Arrow-kernel subs (VERDICT r9 item 4) timed as standalone
-  builds on the registry rows' own inputs, NOT tag filters:
-  `decontaminate.stateless` (one-kernel flag path, includes the
-  benchmark-gram collect), `decontaminate.surgical`
-  (remove_contaminated_spans over the train slice, same gram
-  collect), `minhash_pairs.arrow_sig` (minhash_signature_arrow at
-  16 hashes/3-shingle). These track the chain kernels' perf
-  round-to-round; their JVM twins remain the oracle shapes.
-
-Round-10 paired measurement (VERDICT r9 item 8, same protocol) —
-r9 code (8a2c3b8, git worktree) vs r10 code, interleaved on one
-uncontended box, 2 runs each, min-of-2 per query:
-
-- comparable set (50 shared queries): r9 63.77 s -> r10 62.80 s
-  (-1.5%) — dead even inside the ±7-9% band; NO regressions. Largest
-  per-query deltas are all on untouched code and within/just past
-  the band on sub-second rows (wind_cosine_fit +15.5%,
-  humidity_mhpm +14.8%, temp_sine_sunloc -18.6%) — the documented
-  stall tail, proportionally larger on small rows.
-- VERDICT r9 item 5 CLOSED: the `decontaminate.bloom` sub reads
-  4.37 s (r9 code) / 4.21 s (r10 code) in this paired run vs the
-  one-off 5.72 s in BENCH_r09 — the +32% reading was the stall
-  tail, not a bloom-path regression (r8's 4.32 s is the anchor;
-  both codes now agree with it, and the sub again sits below the
-  row total).
-- merge arithmetic: ann_topk union total 1.18 s vs the two former
-  rows' 0.52 + 0.79 = 1.31 s — the shared embeddings scan makes the
-  union marginally cheaper; its brute/ivf subs read higher than the
-  old standalone rows' subs (1.01/0.99 vs 0.76/0.75) but the
-  sub-plan is verified identical (the method filter constant-folds
-  the other three branches away: no Union/MapInPandas in the brute
-  sub plan) — sub-second stall-tail noise, compare round-to-round
-  from here.
-- new-row costs: weighted_mixture 0.37-0.39 s (incl. its 3-row size
-  aggregate); Arrow-kernel subs: stateless 1.12 s vs exact 1.84 s
-  (the flag-path win), surgical 0.77 s over the whole train slice,
-  arrow_sig 0.69 s.
-- AFTER the paired run, the bloom path was restructured (single-pass
-  broadcast form, bit-identical rows — see pipeline/bloom.py): the
-  `decontaminate` row re-measured 4.26 -> 2.75 s with bloom sub
-  4.21 -> 2.31 s on the same box. Round-11 readers: compare the r10
-  BENCH json's decontaminate row against ~2.7 s, not the paired
-  table's 4.26 s.
-- LATE round-10 restructure: `temp_sine_sunshift` folded into
-  `temp_sine_variants` as its fourth method branch (sub `sunshift`
-  carries the old row's number — compare that, not the union total,
-  across the merge); the freed slot registered NEW row
-  `semantic_dedup` (SemDeDup against the pinned 8x64 coarse
-  quantizer: Arrow-matmul cell assign + salted within-cell cosine
-  join + driver union-find CC).
-- LATE round-10 additions: `ann_topk` gained its FIFTH method branch
-  `lsh` (hyperplane-bucket join + in-bucket exact re-rank, 6
-  deterministic planes — the union total grows by construction; the
-  new `lsh` sub carries it). `duplicate_clusters` takes a driver
-  union-find fast path on parameter-scale graphs: `semantic_dedup`
-  7.3 -> ~5.3 s, `dup_clusters` 4.2 -> ~1.5 s (full harness,
-  uncontended), labels identical.
-- LATE round-10 plane fix: the LSH hyperplane family was measured
-  RANK 2 (every sine-generated plane in one 2-D subspace — k planes
-  cut ~2k sectors, not 2^k cells), so bucket self-joins massively
-  over-generated candidates; now md5-seeded Box-Muller gaussians
-  (full-rank, SCALE.md). `embedding_neardup` 3.0 -> ~0.7 s is this
-  fix (true 256-bucket pruning at 8 planes); its row count drops to
-  the true >=0.3 pair set (15 at sf0.01 / 286 at sf0.1) since the
-  degenerate buckets had been surfacing extra same-sector pairs.
-
-Round-11 workload changes:
-
-- `humidity_lindew` folded into `humidity_variants` as its third
-  branch (sub `lindew` carries the old row's number — compare that,
-  not the union total, across the merge); the freed slot registered
-  NEW row `tokenize_apply`: BOTH tokenizer encoders scoring with the
-  PINNED trained models (no training inside the row, unlike the
-  bpe_tokenize/unigram_tokenize tail rows which still train fresh) —
-  two shuffle-free MapInPandas scans unioned, subs bpe/unigram.
-- `radiation_proxy_variants` gained its third branch `bc_fitted`
-  (the pinned fit_bristow_campbell_params literals through the same
-  B-C pipeline — the union total grows by construction; the new sub
-  carries it).
-- NEW `semantic_dedup` stage subs (assign/pairs/cc) — CUMULATIVE
-  prefixes of the row's pipeline (cell argmax; + within-cell cosine
-  join; + connected components), timed as standalone builds like the
-  Arrow-kernel subs; subtract adjacent subs to attribute stage cost.
-- tokenizer scans (tokenize_apply + both tail rows) now prune to
-  (doc_id, text) before the mapInPandas encode — the encoder ships
-  every input column through Arrow, so the unpruned scans were
-  paying Python transfer for lang/source/n_chars.
-
-Round-11 paired measurement (VERDICT r10 item 8, same protocol) —
-r10 code (91943cd, git worktree) vs r11 code, interleaved on one
-uncontended box, 2 runs each, min-of-2 per query:
-
-- FULL-harness comparable set (52 shared queries): r10 69.37 s ->
-  r11 77.74 s (+12.1%) — but r11's full pass also runs the new subs
-  (3 semantic_dedup stage builds, bc_fitted, lindew, tokenize_apply
-  halves), and the apparent drift was spread across UNTOUCHED
-  sub-second met rows. A second interleaved pair on the identical
-  52-query set with ALL subs disabled in both codes read r10
-  68.55 s -> r11 71.39 s (+4.1%) — inside the band, with every
-  out-of-band delta accounted for: humidity_variants +77% absorbed
-  humidity_lindew (family total 2.17+1.79=3.96 -> 3.69 s, the
-  merge made the family FASTER via the shared sine chain) and
-  radiation_proxy_variants +40% grew its third bc_fitted branch by
-  construction. Verdict: no regression; compare families/subs, not
-  union totals, across the merges.
-- web_curation 3.40 -> 2.62 s (-23%): the round-11 fix replacing
-  the harness's unpartitioned row_number domain id with the
-  md5-partner equi-join is a real win, not just hygiene.
-- semantic_dedup 5.27 -> 5.02 s (dead even); its NEW stage subs
-  read assign 0.18 / pairs 4.33 / cc 4.58 (cumulative) — the
-  within-cell cosine pair join is ~85% of the row; the CC fixpoint
-  adds ~0.25 s at this scale (driver union-find fast path). The
-  pairs_arrow sub prices the Arrow einsum twin of that dominant
-  stage from round 12 on.
-- NEW tokenize_apply row: 0.42 s (bpe 0.41 / unigram 0.44 subs) —
-  two shuffle-free broadcast-model encode scans.
-
-Late round-11 (after the paired run): `radiation_course` folded into
-`radiation_proxy_variants` as method='course' (sub carries the old
-row's number), freeing the slot that registered NEW row
-`span_removal` — one ExactSubstr detect+excise round with portable
-md5 gram hashes, the whole pipeline replayed by the DuckDB twin;
-`semantic_dedup` switched its within-cell cosine to the Arrow einsum
-kernel (pairs sub 4.11 -> pairs_arrow 1.93 s on the identical
-candidate set; the row stays hash-green at both SFs).
-
-End-of-round uncontended single run (the round-12 comparison
-anchor): 53-query total 70.24 s — semantic_dedup 2.26 s (was
-5.27-6.09 s: the Arrow switch), span_removal 2.78 s, tokenize_apply
-0.38 s, radiation_proxy_variants 5.21 s (now 4 branches),
-humidity_variants 3.37 s (3 branches). A run earlier the same hour
-read 128 s while the host was draining a 32-thread load (15-min
-loadavg 4.8) — contended totals are not comparable, per the
-methodology note; the sd stage subs (pairs 4.47 vs pairs_arrow 1.67)
-kept their RATIO even in the contended run, which is what the subs
-are for.
-
-Round-12 paired measurement (VERDICT r11 items 4+8, same protocol) —
-r11 code (ddfdafc, git worktree) vs r12 code, interleaved A-B-A-B on
-one idle box, 2 runs each, min-of-2 per query:
-
-- 53 shared queries: r11 83.49 s -> r12 75.18 s (-10.0%), with a
-  broad -15..-20% on UNTOUCHED rows (ann_topk, jaccard_pairs,
-  cascade_disagg, api_pipeline, smet_roundtrip...) — environment
-  drift favoring the later-in-pair runs (r11's first run read
-  101 s right after session start), not code. Read only the
-  touched rows as code signal.
-- The THREE rows round-11's driver run flagged out-of-band —
-  humidity_mhpm (+34%), text_features (+29%), streaming_daily_agg
-  (+17%), all on untouched code — are ATTRIBUTED TO THE STALL TAIL:
-  in this paired run humidity_mhpm min-read 0.60 s on the very r11
-  code the driver measured at 1.14 s, and text_features /
-  streaming_daily_agg moved WITH the broad drift (2.94->2.35,
-  3.07->2.45), at or below their round-10 levels on both codes. No
-  plan diff exists (text_features is a join-free single scan); no
-  action taken, correctly.
-- span_removal 3.72 -> 5.55 s (+49%): REAL ADDED WORK by
-  construction — the row grew the method='fixpoint' branch (an
-  engineered 80-doc template-junction corpus run until_clean: two
-  excision rounds + the clean probe, all driver-action-paced at
-  construction time), putting convergence itself under the DuckDB
-  hash gate. Its new single/fixpoint subs both carry the fixpoint
-  construction (see SUBQUERIES note); compare the row total
-  round-to-round, and the 'single' half only for scan-side changes.
-- Everything else within band; no regressions to chase.
-
-End-of-round-12 uncontended anchor: 80.91 s / 53 queries (paired-run
-full totals read 77.86-80.76 s) — span_removal 5.07 s after the
-fixpoint corpus got coalesce(1) (80 literal rows were spread over 64
-range() partitions; pure task overhead, measured 4.0 -> 2.4 s on the
-branch alone). A run half an hour earlier on an idle box (loadavg
-0.13) read 108.78 s with every row uniformly ~35% slower — the stall
-tail is bimodal and strikes whole runs, so compare per-query minima
-across runs, never one run's total. span_removal's subs all carry
-the fixpoint construction (it runs at DataFrame-build time); that is
-the documented sub semantics for driver-action-paced rows.
-
-AFTER the 80.91 anchor, span_removal grew its THIRD branch
-(method='removeall' — the keep_first=False policy under the oracle,
-run on the doc_id%5 slice precisely to bound this cost): the row is
-now ~6.4-6.9 s, i.e. +~1.5 s of genuinely added oracle work, and the
-comparable round-13 expectation for the 53-query total is ~82-83 s
-on a clean run. Final round-12 runs read 89.09 s and 101.4 s
-back-to-back on an idle box — the same bimodal drift; the 89.09 run
-is recorded below as Last run.
-
-Round-13 measurement-integrity changes (VERDICT r12 items 1+4+6):
-
-- STALL-PROOFING: the official artifact stops needing a narrative.
-  (a) The two query passes are now TIME-SEPARATED by a full subs pass
-  between them, so a transient stall cannot poison both minima of a
-  row the way back-to-back passes could. (b) The 1-min loadavg at
-  each query pass start rides the contract line (`load: [a, b]`) —
-  contended runs are self-labeling. (c) BENCH_ANCHOR.json (committed;
-  per-query minima over clean end-of-round runs) gates reruns: any
-  row whose cross-pass min reads >30% over its anchor gets up to two
-  extra materializations; rows STILL over after that are listed in
-  the line's `rr` field (a real regression stays visible — it cannot
-  be rescued by reruns) and the rerun attempts land in the sidecar's
-  "Anchor-gated reruns" section. Regenerate the anchor when a row
-  grows by construction (note it here), never to absorb a slowdown.
-- span_removal: the single+removeall branches now share ONE gram
-  scan (one groupBy computes full-corpus count, slice count and the
-  keeper; one probe join tags each position's branch memberships;
-  the merged span table is eagerly checkpointed before the two
-  excisions). Row re-measured ~5.0 s uncontended (was ~6.4-6.9 s
-  with the round-12 added removeall work) — a REAL saving, branches
-  pytest-pinned row-identical to the public op, DuckDB twin
-  unchanged. Expect the round-13 53-query total at ~80-82 s clean.
-- semantic_dedup subs UNIT CHANGE: `pairs` + `pairs_arrow` now price
-  at the sibling sf0.01 corpus (the JVM-HOF `pairs` kernel was
-  retired from the row in round 11; pricing it at bench SF cost
-  2×10.4 s/run — 3.5× the row's own wall). The pairs/pairs_arrow
-  RATIO remains the tracked signal; compare ratios, not absolutes,
-  across the round-12/13 boundary. `assign`/`cc` stay at bench SF
-  (prefixes of the live row). SPARK_GRAFT_PRICE_TWINS=full restores
-  the old pricing.
-- Stall-tail confirmations (VERDICT r12 item 6) — every row round 12
-  flagged as drift reverted on the round-13 clean runs (cross-run
-  minima, idle box), with no plan change to any of them:
-  wind_random 0.37 -> 0.10 s (r10/r11 level);
-  dyadic_calendars 0.93 -> 0.31 s (r11 0.27);
-  streaming_daily_agg 5.72 -> 2.29 s (r12 paired 2.45);
-  text_features 5.55 -> 2.06 s (r12 paired 2.35);
-  smet_roundtrip 3.11 -> 1.67 s (r10 level).
-  The r12 driver readings were the stall tail, as the paired protocol
-  attributed.
-- BENCH_ANCHOR.json generated this round as the per-row MEAN of two
-  clean end-of-round runs (totals 65.51 / 67.88 s; a third run that
-  read 88.4 s — the stall mode — was excluded). Anchors total
-  66.68 s / 53 queries at sf0.1. Mean-not-min: a min anchor plus the
-  ±20% same-code noise band made borderline rows (dup_clusters'
-  driver-action-paced CC rounds, clean spread 1.36-1.91 s) flag on
-  their own noise; the mean centers the 1.3× gate so clean runs pass
-  and the 1.5-3× bimodal stall still trips it. The drop from the r12
-  80.91 s expectation decomposes as: span_removal's shared gram scan
-  (~-3.3 s on the row), the rest environment-side — the r12 anchor
-  run itself carried drift (its own notes list 89-101 s runs around
-  it); compare rows against THESE anchors from round 13 on.
-
-Round-13 paired measurement (VERDICT r12 item 7, same protocol) —
-r12 code (c7f97df, git worktree) vs r13 code, interleaved A-B-A-B on
-one box, 2 full runs each, min-of-2-runs per query:
-
-- 53 shared queries: r12 78.74 s -> r13 73.58 s (-6.6%). The one
-  change-driven delta is span_removal 5.18 -> 3.81 s (the shared
-  gram scan; uncontended it reads ~3.0-3.7 s). text_features
-  (3.00 -> 1.69) and semantic_dedup (3.27 -> 2.14) moved on
-  UNTOUCHED plans — interleave-position drift, the same pattern the
-  r12 pairing documented (both rows sit at/below their historical
-  clean levels on both codes). The only positive deltas are
-  doc_sample +0.28 and decontaminate +0.33 on untouched code —
-  inside the band. No regressions to chase.
-- r12's first interleaved run read 95.8 s (its own stall mode, no
-  loadavg instrumentation in that code); both r13 runs carried
-  loads [2.2-5.0] from the interleaving itself and still read
-  75.2/78.6 s — the new rr gate flagged exactly one row once
-  (jaccard_pairs, on the contended second run), demonstrating the
-  intended behavior: uniform contention passes, per-row outliers
-  get flagged and re-measured.
-
-Round-13 optimization-session changes (second half of the round —
-per-change interleaved A-B evidence in OPTIMIZATION_r13.md; every
-touched row re-verified hash-green):
-
-- The host ran its SLOW mode for most of this session (two full
-  bench runs read 78.6/88.7 s with 9-33 rows uniformly over the
-  66.68 s anchors, loads 1.2-3.9; the shared-scan rows landed BELOW
-  anchor on the same runs) — all decisions below rest on
-  same-session interleaved A-B pairs, not on cross-day absolutes.
-- web_curation: pagerank's driver_below path persists the projected
-  edge list across its two actions (node-count + collect), so the
-  derived-edge plan (regex URL normalization + partner join) runs
-  once per build, not twice. Row build 3.0 -> 2.3 s warm.
-- decontaminate: the exact+bloom branches share ONE corpus gram
-  scan (both membership decisions ride the same stream; bloom still
-  passes through the packed probe + verify join). Interleaved A-B:
-  new faster on every rep (3.9 vs 4.0-6.3 s). The method subs now
-  price the shared scan plus both predicates — compare the row
-  total, same caveat as the other shared rows.
-- decontaminate.bloom sub additionally switched to the packed
-  (plan-constant) Bloom probe via filter_mode='auto' — 1 verify
-  join instead of 8 joins of the gram stream; verdicts pin-tested
-  identical.
-- doc_perplexity: both deployment branches now score with ONE
-  trained model (bigram_lm + lazy localCheckpoint + the new model=
-  injection); was 4 corpus tokenize passes for one model. A-B: 6/8
-  pairs faster, min 1.92 vs 2.11 s.
-- repetition_stats / embedding_neardup / ann_topk: the Arrow
-  kernels were being EVALUATED TWICE per reference — pushed
-  filters/join-key null-rejection clone ArrowEvalPython (guide
-  §4.4). asNondeterministic on the bucket/encode kernels pins one
-  eval per side: repetition_stats op 0.61->0.44 s, embedding_neardup
-  1.9->1.2 s, ann_topk 3.5->2.2 s (parquet scans 24->12).
-  ivf_assign's _cell deliberately NOT flagged (it broke
-  semantic_dedup's shared sized-window subtree, +80% measured —
-  NOTE in similarity.py).
-- ann_topk additionally shares one materialized embeddings scan
-  across its five branches (lazy localCheckpoint per build):
-  2.2 -> 1.8 s warm.
-- Rows examined and deliberately left alone (api_pipeline,
-  jaccard_pairs, text_features, smet_roundtrip, streaming_daily_agg,
-  cascade rows, doc_sample, robots_eval, met families): rationale
-  per row in OPTIMIZATION_r13.md.
-
-Round-14 optimization-session changes (per-change interleaved A-B
-evidence in OPTIMIZATION_r14.md; every touched row re-verified
-hash-green at sf0.01 AND sf0.001):
-
-- jaccard_pairs: registry row flipped to the Arrow shingle kernel
-  (one materialization read by both join sides); the JVM expression
-  form stays the DuckDB-twin shape. A-B 3.0-4.1 -> 2.0-2.7 s.
-- met family: plan-CONSTRUCTION memoization (PlanMemo over the
-  unresolved sun/potrad/neighbor/variant expression trees) — py4j
-  commands per warm build -28..-83%; no plan or value change.
-- semantic_dedup `cc` sub priced at the sf0.01 twin corpus like the
-  pairs twins (it re-ran a dup_clusters near-twin at bench SF twice
-  per pass); SPARK_GRAFT_PRICE_TWINS=full restores.
-- ann_topk: the pq+ivfpq branches now run as ONE fused scored scan
-  (pq_ivfpq_topk — codes, cells and the per-query ADC gathers
-  computed once per batch; both methods' partials from one kernel;
-  bit-identical to the public-op pair, pin-tested). Row A-B
-  2.15 -> 1.86 s min, plan ArrowEvalPython 8 -> 4, MapInPandas
-  4 -> 2. SUB SEMANTICS: the `pq` and `ivfpq` method subs now each
-  price the one fused kernel (the method filter can no longer fold
-  the other method's in-kernel work, same as the decontaminate /
-  shared-scan rows) — expect those two subs to read nearly equal;
-  compare the row total round-to-round.
-"""
 
 
 def main():
@@ -907,13 +485,10 @@ def main():
         if len(line) > LINE_BUDGET:
             line = json.dumps(core, separators=(",", ":"))
 
-    with open(os.path.join(here, "BENCH_NOTES.md"), "w") as f:
-        f.write(NOTES)
-        f.write("\n## Last run\n\n```json\n")
-        f.write(json.dumps(with_subs, indent=2))
-        f.write("\n```\n\n## Anchor-gated reruns (last run)\n\n```json\n")
-        f.write(json.dumps(rerun_note, indent=2))
-        f.write("\n```\n")
+    with open(os.path.join(here, "bench_last_run.json"), "w") as f:
+        json.dump(
+            {"last_run": with_subs, "anchor_reruns": rerun_note}, f, indent=2
+        )
     print(json.dumps(with_subs), file=sys.stderr)
     print(line)
 

@@ -39,6 +39,13 @@ def memo_part(v):
     return None
 
 
+def _own(v):
+    """The caller's own view of a cached value: a dict of trees is
+    copied so a caller's ``pop``/assignment cannot strip entries from
+    every later hit; Column trees are immutable and shared as is."""
+    return dict(v) if isinstance(v, dict) else v
+
+
 class PlanMemo:
     """LRU memo of built expression trees, scoped to the active Spark
     application (see module docstring)."""
@@ -61,12 +68,12 @@ class PlanMemo:
             # FIFO): a hot geometry inserted first must survive
             del self._d[key]
             self._d[key] = got
-            return got
+            return _own(got)
         out = build()
         if len(self._d) >= self._cap:
             self._d.pop(next(iter(self._d)))
         self._d[key] = out
-        return out
+        return _own(out)
 
     def clear(self):
         self._d.clear()

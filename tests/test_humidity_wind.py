@@ -254,7 +254,10 @@ def test_q_humidity_variants_matches_public_ops(spark):
     )
     import __spark_entry__ as entry
 
-    from melodist_spark.operators.humidity import disaggregate_humidity
+    from melodist_spark.operators.humidity import (
+        dewpoint_regression,
+        disaggregate_humidity,
+    )
 
     sf_dir = "/root/testdata/sf0.001"
     q = entry.q_humidity_variants(spark, sf_dir)
@@ -276,6 +279,17 @@ def test_q_humidity_variants_matches_public_ops(spark):
             daily, method="min_max", temp_disagg=temp_disagg,
             keys=["user_id"],
         ),
+        # Debele et al. 2007 eq. 20/21: the tmin dewpoint regression
+        # with a 12 h sine perturbation period
+        "lindew": disaggregate_humidity(
+            daily,
+            method="linear_dewpoint_variation",
+            temp_disagg=temp_disagg,
+            hum_params=dewpoint_regression(
+                entry._met_hourly(spark, sf_dir), keys=["user_id"]
+            ).withColumn("kr", F.lit(12)),
+            keys=["user_id"],
+        ),
     }
     for variant, df in pub.items():
         got = snap(
@@ -287,11 +301,3 @@ def test_q_humidity_variants_matches_public_ops(spark):
             df.select("user_id", "ts", F.round("hum", 6).alias("hum_h"))
         )
         assert got == want, f"branch {variant} diverged from the public op"
-
-    got = snap(
-        q.filter(F.col("variant") == "lindew").select(
-            "user_id", "ts", "hum_h"
-        )
-    )
-    want = snap(entry.q_humidity_lindew(spark, sf_dir))
-    assert got == want, "branch lindew diverged from the public op"

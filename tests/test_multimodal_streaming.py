@@ -2316,9 +2316,28 @@ def test_sun_times_memo_is_lru_not_fifo(spark):
     for i in range(300):
         # touch the hot geometry, then insert a cold one
         again = solar.sun_times_exprs("date", 11.0, 47.0, 1.0)
-        assert again is hot_exprs  # still cached (never rebuilt)
+        # still cached (never rebuilt): the very same Column trees
+        assert all(again[k] is hot_exprs[k] for k in hot_exprs)
         solar.sun_times_exprs("date", float(i), 0.0, 0.0)
     assert len(solar._SUN_TIMES_MEMO) <= 256
+    solar._SUN_TIMES_MEMO.clear()
+
+
+def test_plan_memo_hit_is_not_aliased_by_caller_mutation(spark):
+    """A memo hit hands each caller its own dict: popping a key from
+    one caller's sun-times dict must not strip it from every later
+    call in the application."""
+    from melodist_spark.functions import solar
+
+    solar._SUN_TIMES_MEMO.clear()
+    first = solar.sun_times_exprs("date", "lon", "lat", "timezone")
+    keys = set(first)
+    first.pop("sunrise")
+    again = solar.sun_times_exprs("date", "lon", "lat", "timezone")
+    assert set(again) == keys
+    assert again is not first
+    again.clear()
+    assert set(solar.sun_times_exprs("date", "lon", "lat", "timezone")) == keys
     solar._SUN_TIMES_MEMO.clear()
 
 

@@ -3087,8 +3087,14 @@ def test_pq_ivfpq_fused_matches_public_ops(spark):
     want = pair(emb, queries, IVF_CENTROIDS, PQ_CODEBOOKS, 5, 2)
     pd.testing.assert_frame_equal(norm(fused), norm(want))
     assert len(fused) > 0
-    # ... and the registry entry rides the fused op (rounded scores)
-    got = entry.q_pq_topk(spark, sf_dir).toPandas()
+    # ... and the registry row's pq/ivfpq branches ride the fused op
+    # (rounded scores)
+    got = (
+        entry.queries()["ann_topk"](spark, sf_dir)
+        .filter(F.col("method").isin("pq", "ivfpq"))
+        .withColumnRenamed("score", "pq_score")
+        .toPandas()
+    )
     want_r = norm(want)
     want_r["pq_score"] = want_r["pq_score"].round(6)
     pd.testing.assert_frame_equal(

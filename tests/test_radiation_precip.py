@@ -215,8 +215,29 @@ def test_q_radiation_proxy_variants_matches_public_ops(spark):
     )
     import __spark_entry__ as entry
 
+    from melodist_spark.pipeline.pinned import BC_FITTED
+
     sf_dir = "/root/testdata/sf0.001"
     q = entry.q_radiation_proxy_variants(spark, sf_dir)
+    daily = entry._met_daily(spark, sf_dir)
+    stations = entry._met_stations(daily)
+    # mean_course shape: month-hour glob means quantized to the dyadic
+    # 2^-20 grid, so the per-day window average is an exact double sum
+    # in any summation order
+    grid = 1048576.0
+    course = (
+        entry._met_hourly(spark, sf_dir)
+        .withColumn("__gd", F.col("glob").cast("decimal(20,10)"))
+        .groupBy(
+            "user_id", F.month("ts").alias("month"), F.hour("ts").alias("hour")
+        )
+        .agg(
+            (
+                F.floor((F.sum("__gd").cast("double") / F.count("*")) * grid)
+                / grid
+            ).alias("value")
+        )
+    )
 
     def snap(df):
         # negative-dT winter days yield NaN globs by design (the
@@ -227,16 +248,41 @@ def test_q_radiation_proxy_variants_matches_public_ops(spark):
         return sorted(tuple(norm(v) for v in r) for r in df.collect())
 
     branches = {
-        "ssd": entry.q_radiation_ssd,
-        "bc": entry.q_radiation_bc,
-        "bc_fitted": entry.q_radiation_bc_fitted,
-        "course": entry.q_radiation_course,
+        # Angstroem sunshine-duration scaling on a synthetic ssd column
+        "ssd": disaggregate_radiation(
+            daily.withColumn(
+                "ssd", F.col("hum") - F.floor(F.col("hum") / 10.0) * 10.0
+            ),
+            stations,
+            method="pot_rad_via_ssd",
+            keys=["user_id"],
+        ),
+        "bc": disaggregate_radiation(
+            daily, stations, method="pot_rad_via_bc", keys=["user_id"]
+        ),
+        "bc_fitted": disaggregate_radiation(
+            daily,
+            stations,
+            method="pot_rad_via_bc",
+            bristcamp_a=BC_FITTED["a"],
+            bristcamp_c=BC_FITTED["c"],
+            keys=["user_id"],
+        ),
+        "course": disaggregate_radiation(
+            daily,
+            stations,
+            method="mean_course",
+            mean_course=course,
+            keys=["user_id"],
+        ),
     }
-    for method, fn in branches.items():
+    for method, df in branches.items():
         got = snap(
             q.filter(F.col("method") == method).select(
                 "user_id", "ts", "glob_h"
             )
         )
-        want = snap(fn(spark, sf_dir))
+        want = snap(
+            df.select("user_id", "ts", F.round("glob", 6).alias("glob_h"))
+        )
         assert got == want, f"branch {method} diverged from the public op"

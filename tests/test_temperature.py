@@ -250,8 +250,32 @@ def test_q_temp_sine_variants_matches_public_ops(spark):
     )
     import __spark_entry__ as entry
 
+    from melodist_spark.functions.solar import sun_times_exprs
+
     sf_dir = "/root/testdata/sf0.001"
     q = entry.q_temp_sine_variants(spark, sf_dir)
+    daily = entry._met_daily(spark, sf_dir)
+    stations = entry._met_stations(daily)
+    # sun_loc_shift calibration: the monthly mean offset of the
+    # observed warmest hour (latest hour on ties) from solar noon
+    m = entry._met_hourly(spark, sf_dir)
+    daily_max = m.groupBy("user_id", F.to_date("ts").alias("date")).agg(
+        F.max("temp").alias("tmax_h")
+    )
+    at_max = (
+        m.withColumn("date", F.to_date("ts"))
+        .join(daily_max, ["user_id", "date"])
+        .filter(F.col("temp") == F.col("tmax_h"))
+        .groupBy("user_id", "date")
+        .agg(F.max(F.hour("ts")).alias("max_hour"))
+    )
+    st = sun_times_exprs("date", entry.LON, entry.LAT, entry.TZ)
+    max_delta = (
+        at_max.withColumn("sunnoon", st["sunnoon"])
+        .withColumn("delta", F.col("max_hour") - F.col("sunnoon"))
+        .groupBy("user_id", F.month("date").alias("month"))
+        .agg(F.avg("delta").alias("max_delta"))
+    )
 
     def snap(df):
         def norm(v):
@@ -260,16 +284,33 @@ def test_q_temp_sine_variants_matches_public_ops(spark):
         return sorted(tuple(norm(v) for v in r) for r in df.collect())
 
     branches = {
-        "mean": entry.q_temp_sine_mean,
-        "night": entry.q_temp_sine_night,
-        "sunloc": entry.q_temp_sine_sunloc,
-        "sunshift": entry.q_temp_sine_sunshift,
+        "mean": dict(method="sine_mean", min_max_time="fix"),
+        "night": dict(
+            method="sine_min_max", min_max_time="fix", mod_nighttime=True
+        ),
+        "sunloc": dict(
+            method="sine_min_max",
+            min_max_time="sun_loc",
+            stations=stations,
+            polar=False,
+        ),
+        "sunshift": dict(
+            method="sine_min_max",
+            min_max_time="sun_loc_shift",
+            stations=stations,
+            polar=False,
+            max_delta=max_delta,
+        ),
     }
-    for method, fn in branches.items():
+    for method, kwargs in branches.items():
         got = snap(
             q.filter(F.col("method") == method).select(
                 "user_id", "ts", "temp_h"
             )
         )
-        want = snap(fn(spark, sf_dir))
+        want = snap(
+            disaggregate_temperature(
+                daily, keys=["user_id"], **kwargs
+            ).select("user_id", "ts", F.round("temp", 6).alias("temp_h"))
+        )
         assert got == want, f"branch {method} diverged from the public op"

@@ -77,9 +77,8 @@ def main():
     oracles = entry.oracle_sql()
     unknown = only - set(qs)
     if unknown:
-        # a name outside the registry would silently check NOTHING and
-        # print "all green" — the dormant merged-away compounds (e.g.
-        # lang_id) still have q_* functions, so the typo is easy
+        # a name outside the registry would otherwise check nothing
+        # and still print "all green"
         print(f"[FAIL] not in queries(): {sorted(unknown)}")
         sys.exit(2)
     failed = []

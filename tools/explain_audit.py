@@ -21,6 +21,48 @@ def plan_of(df) -> str:
     )
 
 
+def _humidity_lindew(spark, sf_dir):
+    """The public op behind humidity_variants' 'lindew' branch."""
+    import __spark_entry__ as entry
+    from pyspark.sql import functions as F
+
+    from melodist_spark.operators.humidity import (
+        dewpoint_regression,
+        disaggregate_humidity,
+    )
+
+    params = dewpoint_regression(
+        entry._met_hourly(spark, sf_dir), keys=["user_id"]
+    ).withColumn("kr", F.lit(12))
+    out = disaggregate_humidity(
+        entry._met_daily(spark, sf_dir),
+        method="linear_dewpoint_variation",
+        temp_disagg={"method": "sine_min_max", "min_max_time": "fix"},
+        hum_params=params,
+        keys=["user_id"],
+    )
+    return out.select("user_id", "ts", F.round("hum", 6).alias("hum_h"))
+
+
+def _radiation_ssd(spark, sf_dir):
+    """The public op behind radiation_proxy_variants' 'ssd' branch."""
+    import __spark_entry__ as entry
+    from pyspark.sql import functions as F
+
+    from melodist_spark.operators.radiation import disaggregate_radiation
+
+    daily = entry._met_daily(spark, sf_dir).withColumn(
+        "ssd", F.col("hum") - F.floor(F.col("hum") / 10.0) * 10.0
+    )
+    out = disaggregate_radiation(
+        daily,
+        entry._met_stations(daily),
+        method="pot_rad_via_ssd",
+        keys=["user_id"],
+    )
+    return out.select("user_id", "ts", F.round("glob", 6).alias("glob_h"))
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as entry
@@ -28,7 +70,12 @@ def main():
 
     spark = get_spark("explain_audit")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entry.queries()
+    # union-row branches are audited through the public op they run
+    qs = {
+        **entry.queries(),
+        "humidity_lindew": _humidity_lindew,
+        "radiation_ssd": _radiation_ssd,
+    }
 
     checks = [
         # (query, must-contain regexes, must-NOT-contain regexes)
@@ -108,8 +155,7 @@ def main():
 
     failed = []
     for name, must, must_not in checks:
-        fn = qs.get(name) or getattr(entry, f"q_{name}")
-        plan = plan_of(fn(spark, sf_dir))
+        plan = plan_of(qs[name](spark, sf_dir))
         problems = []
         for pat in must:
             if not re.search(pat, plan):
