@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from melodist_spark.functions.solar import sun_times as _sun_times
+from melodist_spark.operators import temperature as _temperature
 from melodist_spark.operators.cascade import disagg_prec_cascade
 from melodist_spark.operators.humidity import disaggregate_humidity
 from melodist_spark.operators.precipitation import disagg_prec
@@ -56,6 +57,8 @@ class Stations:
         self.statistics: StationStatistics | None = None
         self.data_disagg: dict[str, DataFrame] = {}
         self._validate = validate
+        # (meta, polar-night possible) — see _polar
+        self._polar_probe: tuple[DataFrame, bool] | None = None
         if data_daily is not None:
             self.data_daily = data_daily
 
@@ -118,8 +121,21 @@ class Stations:
 
     # -- dispatchers (`station.py:181-401`) -------------------------------
 
+    def _polar(self) -> bool:
+        """Whether any station may see polar night, probed once per
+        ``meta`` table: every temperature build — direct or fused into
+        humidity — gets the answer as an explicit ``polar=``, so a
+        request that plans temperature twice runs one probe job."""
+        cached = self._polar_probe
+        if cached is None or cached[0] is not self.meta:
+            cached = (self.meta, _temperature._polar_possible(self.meta))
+            self._polar_probe = cached
+        return cached[1]
+
     def disaggregate_temperature(self, method="sine_min_max", min_max_time="fix", **kw):
         s = self.statistics
+        if method in _temperature.SINE_METHODS and "polar" not in kw:
+            kw = dict(kw, polar=self._polar())
         spec = dict(
             method=method,
             min_max_time=min_max_time,

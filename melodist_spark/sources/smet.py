@@ -13,6 +13,9 @@ import collections
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+from melodist_spark.util.execution import local_frame
 
 SMET_TO_DAILY = {
     "TA": "tmean",
@@ -165,14 +168,21 @@ def write_smet(
     check_nan: bool = True,
     ts_col: str = "ts",
 ) -> None:
-    """Write one station's frame as a SMET file.
+    """Write one station's frame as a SMET file with one Spark action.
 
     The fixed-format body (`data_io.py:301-305`: %.2f floats,
-    nodata=-999, all-NaN columns dropped) is built with
-    ``format_string`` column expressions; rows are collected in ts
-    order for the single-file ASCII sink (SMET is a per-station
-    format — for fleet-scale output call once per station or use
-    partitioned parquet instead).
+    nodata=-999, all-NaN columns dropped) is formatted on the
+    executors: ``date_format`` for the timestamp and, per data column,
+    ``format_string("%.2f", coalesce(c, nodata))`` with an
+    ``isNotNull`` flag. Java's ``%.2f`` rounds half-up on the shortest
+    decimal (0.125 → 0.13), Python's ``%`` does not (0.12), so the
+    formatting must stay in Spark. One ``collect`` brings the rows to
+    the driver, which orders them by ``ts`` (nulls first, as Spark's
+    ascending sort does), drops the columns that are null in every row
+    when ``check_nan``, and writes the single-file ASCII sink. The plan
+    runs once, with no count pass and no global sort. SMET is a
+    per-station format — for fleet-scale output use
+    :func:`write_smet_partitioned`.
     """
     to_smet = (
         {v: k for k, v in SMET_TO_DAILY.items()}
@@ -181,24 +191,30 @@ def write_smet(
     )
     data_cols = [c for c in df.columns if c not in (ts_col, "station_id")]
 
-    if check_nan:
-        counts = df.select(
-            *[F.count(F.col(c)).alias(c) for c in data_cols]
-        ).collect()[0]
-        data_cols = [c for c in data_cols if counts[c] > 0]
-
     # literal 'T' must be quoted in Spark datetime patterns
     pattern = "yyyy-MM-dd'T'00:00" if mode == "d" else "yyyy-MM-dd'T'HH:mm"
+    nodata = F.lit(float(nodata_value))
+    # sort key: a timestamp orders by its instant (collected as a local
+    # datetime it could step back across a DST change)
+    key = F.col(ts_col)
+    if dict(df.dtypes)[ts_col] == "timestamp":
+        key = F.unix_micros(key)
+    # row layout: key, timestamp text, then (text, non-null) per column
+    cols = [key, F.date_format(ts_col, pattern)]
+    for c in data_cols:
+        cols += [
+            F.format_string("%.2f", F.coalesce(F.col(c), nodata)),
+            F.col(c).isNotNull(),
+        ]
+    rows = df.select(*cols).collect()
+    rows.sort(key=lambda r: (r[0] is not None, r[0] if r[0] is not None else 0))
 
-    line = F.concat_ws(
-        " ",
-        F.date_format(ts_col, pattern),
-        *[
-            F.format_string("%.2f", F.coalesce(F.col(c), F.lit(float(nodata_value))))
-            for c in data_cols
-        ],
-    )
-    rows = df.orderBy(ts_col).select(line.alias("l")).collect()
+    keep = [
+        i
+        for i in range(len(data_cols))
+        if not check_nan or any(r[3 + 2 * i] for r in rows)
+    ]
+    data_cols = [data_cols[i] for i in keep]
 
     fields = ["timestamp"] + [to_smet.get(c, c) for c in data_cols]
     metadata = dict(metadata)
@@ -211,7 +227,10 @@ def write_smet(
             f.write(f"{k} = {v}\n")
         f.write("[DATA]\n")
         for r in rows:
-            f.write(r["l"] + "\n")
+            # concat_ws semantics: a null timestamp is skipped
+            parts = [r[1]] if r[1] is not None else []
+            parts += [r[2 + 2 * i] for i in keep]
+            f.write(" ".join(parts) + "\n")
 
 
 def write_smet_partitioned(
@@ -285,11 +304,20 @@ def write_smet_partitioned(
         lines += [f"{k} = {v}" for k, v in md.items()]
         lines.append("[DATA]")
         header_rows += [
-            (str(sid), 0, f"{i:06d}", text) for i, text in enumerate(lines)
+            {"station_id": str(sid), "__sect": 0, "__ord": f"{i:06d}", "value": text}
+            for i, text in enumerate(lines)
         ]
-    spark = df.sparkSession
-    headers = spark.createDataFrame(
-        header_rows, schema="station_id string, __sect int, __ord string, value string"
+    headers = local_frame(
+        df.sparkSession,
+        header_rows,
+        StructType(
+            [
+                StructField("station_id", StringType()),
+                StructField("__sect", IntegerType()),
+                StructField("__ord", StringType()),
+                StructField("value", StringType()),
+            ]
+        ),
     )
 
     tmp = os.path.join(out_dir, "__smet_parts")

@@ -18,6 +18,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from melodist_spark.operators.aggregations import (
     mean_daily_course_by_month,
@@ -31,12 +40,14 @@ from melodist_spark.operators.radiation import (
 )
 from melodist_spark.operators.temperature import get_shift_by_data
 from melodist_spark.operators.wind import fit_cosine_function
+from melodist_spark.util.execution import local_frame
 
 MONTH_RANGES = {
     "all": [list(range(1, 13))],
     "seasonal": [[3, 4, 5], [6, 7, 8], [9, 10, 11], [12, 1, 2]],
     "monthly": [[m] for m in range(1, 13)],
 }
+_D, _I = DoubleType(), IntegerType()
 
 
 class StationStatistics:
@@ -162,18 +173,26 @@ class StationStatistics:
 
     # -- persistence ------------------------------------------------------
 
+    # column types of every stored parameter table, as calibration
+    # produces them: the JSON layout's columns and the schema
+    # ``from_json`` loads them with
     _FRAME_SPECS = {
-        "wind": ["a", "b", "t_shift"],
-        "hum": ["a0", "a1", "kr"],
-        "hum_month_hour_precip_mean": ["month", "hour", "wet", "hum_mean"],
-        "temp_max_delta": ["month", "max_delta"],
-        "temp_mean_course": ["month", "hour", "value"],
-        "glob_angstroem": ["month", "a", "b"],
-        "glob_bristcamp": ["month", "a", "c"],
-        "glob_mean_course": ["month", "hour", "value"],
-        "precip_stats": [
-            "season", "level", "p01", "p10", "pxx", "wxx", "threshold", "percentile",
-        ],
+        "wind": {"a": _D, "b": _D, "t_shift": _D},
+        "hum": {"a0": _D, "a1": _D, "kr": _I},
+        "hum_month_hour_precip_mean": {
+            "month": _I, "hour": _I, "wet": BooleanType(), "hum_mean": _D,
+        },
+        "temp_max_delta": {"month": _I, "max_delta": _D},
+        "temp_mean_course": {"month": _I, "hour": _I, "value": _D},
+        "glob_angstroem": {"month": _I, "a": _D, "b": _D},
+        "glob_bristcamp": {"month": _I, "a": _D, "c": _D},
+        "glob_mean_course": {"month": _I, "hour": _I, "value": _D},
+        "precip_stats": {
+            "season": _I,
+            "level": _I,
+            **{c: ArrayType(_D) for c in ("p01", "p10", "pxx", "wxx", "threshold")},
+            "percentile": _D,
+        },
     }
 
     def to_json(self, filename: str | None = None) -> str | None:
@@ -205,7 +224,13 @@ class StationStatistics:
     @classmethod
     def from_json(cls, spark: SparkSession, filename: str) -> "StationStatistics":
         """Rebuild the parameter DataFrames (reference:
-        `stationstatistics.py:226-288`)."""
+        `stationstatistics.py:226-288`).
+
+        Each table is a JVM ``LocalRelation`` built from Arrow with the
+        column types of ``_FRAME_SPECS``: it scans without Python
+        workers, loads a family whose parameter is ``1`` for one
+        station and ``0.5`` for another, keeps a null parameter null,
+        and comes back with the dtypes calibration gives."""
         with open(filename) as f:
             bundle = json.load(f)
 
@@ -223,11 +248,9 @@ class StationStatistics:
                     )
         stats.precip_months = months
         for attr, rows in rows_by_attr.items():
-            cols = ["station_id"] + cls._FRAME_SPECS[attr]
-            df = spark.createDataFrame(
-                [[r[c] for c in cols] for r in rows], schema=cols
+            schema = StructType(
+                [StructField("station_id", StringType())]
+                + [StructField(c, t) for c, t in cls._FRAME_SPECS[attr].items()]
             )
-            # ints that json round-trips as ints are fine; force doubles
-            # for the float params
-            setattr(stats, attr, df)
+            setattr(stats, attr, local_frame(spark, rows, schema))
         return stats

@@ -54,6 +54,98 @@ def test_smet_roundtrip(spark, tmp_path):
         np.testing.assert_allclose(a[c].values, b[c].values, atol=0.01, equal_nan=True)
 
 
+# Bytes the writer produced before it became a single collect: rows
+# out of ts order (a null ts sorts first and, as in ``concat_ws``, loses
+# its timestamp), an all-null column dropped, nulls as -999.00, and
+# Java's half-up %.2f where Python's would differ (0.125 → 0.13,
+# -0.125 → -0.13, 2.675 → 2.68, 1.005 → 1.01, 1.115 → 1.12).
+GOLDEN_H = """\
+SMET 1.1 ASCII
+[HEADER]
+station_id = g1
+latitude = 51.0
+fields = timestamp TA RH PSUM
+units_multiplier = 1 1 1 1 
+[DATA]
+1.01 1.00 3.00
+2016-01-01T00:00 273.15 80.00 0.00
+2016-01-01T01:00 -999.00 82.25 0.40
+2016-01-01T02:00 -0.13 85.50 -999.00
+2016-01-01T03:00 0.13 -999.00 2.68
+"""
+GOLDEN_D = """\
+SMET 1.1 ASCII
+[HEADER]
+station_id = g2
+fields = timestamp TA PSUM
+units_multiplier = 1 1 1 
+[DATA]
+2016-01-01T00:00 274.00 0.13
+2016-01-02T00:00 -999.00 1.12
+2016-01-03T00:00 272.80 2.68
+"""
+GOLDEN_D_KEEP = """\
+SMET 1.1 ASCII
+[HEADER]
+station_id = g2
+fields = timestamp TA PSUM ISWR
+units_multiplier = 1 1 1 1 
+[DATA]
+2016-01-01T00:00 274.00 0.13 -999.00
+2016-01-02T00:00 -999.00 1.12 -999.00
+2016-01-03T00:00 272.80 2.68 -999.00
+"""
+
+
+def _last_execution_id(spark) -> int:
+    """Id of the newest SQL execution in the status store (ids count
+    up; the store's size is capped, so its count alone would stall)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    if n == 0:
+        return -1
+    return store.executionsList(n - 1, 1).head().executionId()
+
+
+def test_write_smet_golden_bytes(spark, tmp_path):
+    import datetime as dt
+
+    def t(day, hour):
+        return dt.datetime(2016, 1, day, hour)
+
+    hourly = spark.createDataFrame(
+        [
+            (t(1, 3), 0.125, None, None, 2.675),
+            (t(1, 0), 273.15, 80.0, None, 0.0),
+            (t(1, 2), -0.125, 85.5, None, None),
+            (None, 1.005, 1.0, None, 3.0),
+            (t(1, 1), None, 82.25, None, 0.4),
+        ],
+        "ts timestamp, temp double, hum double, wind double, precip double",
+    )
+    daily = spark.createDataFrame(
+        [(t(3, 0), 272.8, 2.675, None), (t(1, 0), 274.0, 0.125, None),
+         (t(2, 0), None, 1.115, None)],
+        "ts timestamp, tmean double, precip double, glob double",
+    )
+
+    out = tmp_path / "h.smet"
+    before = _last_execution_id(spark)
+    write_smet(hourly, str(out), {"station_id": "g1", "latitude": 51.0}, mode="h")
+    # one pass over the plan: no count job, no sort
+    assert _last_execution_id(spark) - before == 1
+    assert out.read_bytes() == GOLDEN_H.encode()
+
+    write_smet(daily, str(tmp_path / "d.smet"), {"station_id": "g2"}, mode="d")
+    assert (tmp_path / "d.smet").read_bytes() == GOLDEN_D.encode()
+    write_smet(
+        daily, str(tmp_path / "dk.smet"), {"station_id": "g2"}, mode="d",
+        check_nan=False,
+    )
+    assert (tmp_path / "dk.smet").read_bytes() == GOLDEN_D_KEEP.encode()
+
+
 def test_write_smet_partitioned_fleet(spark, tmp_path):
     """Fleet sink: 100 stations → 100 valid SMET files, one job."""
     n_stations, n_hours = 100, 48

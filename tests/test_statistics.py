@@ -63,6 +63,43 @@ def test_json_roundtrip(stats, spark, tmp_path):
         np.testing.assert_allclose(orig[k].threshold, rt[k].threshold)
 
 
+def test_json_roundtrip_types_and_local_relations(stats, spark, tmp_path):
+    """Every loaded table has the calibrated dtypes and is a JVM
+    LocalRelation (no Python-RDD scan behind its broadcasts)."""
+    path = str(tmp_path / "stats.json")
+    stats.to_json(path)
+    back = StationStatistics.from_json(spark, path)
+    for attr in StationStatistics._FRAME_SPECS:
+        loaded = getattr(back, attr)
+        assert dict(loaded.dtypes) == dict(getattr(stats, attr).dtypes), attr
+        plan = loaded._jdf.queryExecution().analyzed().toString()
+        assert plan.startswith("LocalRelation"), (attr, plan)
+
+
+def test_from_json_mixed_int_float_and_null(spark, tmp_path):
+    """``1`` for one station and ``0.5`` for another load as doubles;
+    a null parameter stays null, not NaN."""
+    import json
+
+    bundle = {
+        "x": {"wind": [{"a": 1, "b": 0.5, "t_shift": None}],
+              "hum": [{"a0": -1, "a1": 0.98, "kr": 12}], "precip_months": None},
+        "y": {"wind": [{"a": 0.5, "b": 1, "t_shift": 14}],
+              "hum": [{"a0": 0.25, "a1": 1, "kr": 12}], "precip_months": None},
+    }
+    path = tmp_path / "mixed.json"
+    path.write_text(json.dumps(bundle))
+    back = StationStatistics.from_json(spark, str(path))
+    assert back.wind.dtypes == [
+        ("station_id", "string"), ("a", "double"), ("b", "double"), ("t_shift", "double"),
+    ]
+    assert dict(back.hum.dtypes)["kr"] == "int"
+    rows = {r["station_id"]: r for r in back.wind.collect()}
+    assert rows["x"]["a"] == 1.0 and rows["y"]["a"] == 0.5
+    assert rows["x"]["t_shift"] is None
+    assert rows["y"]["t_shift"] == 14.0
+
+
 def test_stats_feed_disaggregation(stats, met_daily, stations):
     """The calibrated bundle drives the actual operators end-to-end."""
     from melodist_spark.operators.temperature import disaggregate_temperature

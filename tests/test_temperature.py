@@ -233,6 +233,30 @@ def test_polar_kwarg_tristate(met_daily, stations, monkeypatch):
     dec = a["ts"].dt.month == 12
     assert (a.loc[dec, "temp"].fillna(-999) != o.loc[dec, "temp"].fillna(-999)).any()
 
+    # Stations probes once per meta table: a temperature build and the
+    # humidity build that fuses the same temperature share one probe,
+    # and a caller's explicit polar= skips it
+    from melodist_spark.api import Stations
+
+    probes = []
+    real = T._polar_possible
+
+    def _count(st):
+        probes.append(st)
+        return real(st)
+
+    monkeypatch.setattr(T, "_polar_possible", _count)
+    st = Stations(s3m, s3d)
+    temp = st.disaggregate_temperature("sine_min_max", min_max_time="fix")
+    st.disaggregate_humidity("minimal")
+    assert len(probes) == 1
+    explicit = Stations(s3m, s3d)
+    explicit.disaggregate_temperature("sine_min_max", min_max_time="fix", polar=True)
+    explicit.disaggregate_humidity("minimal")
+    assert len(probes) == 1
+    monkeypatch.undo()
+    pd.testing.assert_frame_equal(temp.orderBy("ts").toPandas(), a)
+
 
 def test_q_temp_sine_variants_matches_public_ops(spark):
     """The registry row's shared-scan restructure (round 13): one
