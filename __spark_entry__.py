@@ -695,7 +695,7 @@ def _span_removal_sql(span: int = 6) -> str:
     excision re-aggregated in order. Untouched docs keep their
     ORIGINAL text bytes (the Spark op only re-joins touched docs) —
     the twin mirrors that branch so the md5s agree byte-for-byte.
-    Round 12: unioned with :func:`_span_fixpoint_sql`, the two-round
+    Unioned with :func:`_span_fixpoint_sql`, the two-round
     replay of the junction fixpoint on the engineered template
     corpus — the branch pair mirrors q_span_removal's."""
     return f"""
@@ -877,7 +877,7 @@ def _span_fixpoint_sql(span: int = 6, groups: int = 40) -> str:
 def _radiation_bc_sql(a: float, c: float) -> str:
     """The Bristow-Campbell DuckDB twin, parameterized on (A, C) so
     the default-constant 'bc' branch and the pinned-fit 'bc_fitted'
-    branch (pinned.BC_FITTED, round 11) replay the same pipeline with
+    branch (pinned.BC_FITTED) replay the same pipeline with
     different literals."""
     return f"""
             WITH daily AS ({_MET_DAILY_SQL}),
@@ -1107,7 +1107,7 @@ def oracle_sql() -> dict[str, str]:
     stop_de = "['der','die','das','und','nicht','mit','ist','ein']"
     stop_es = "['el','la','los','que','de','y','en','un']"
 
-    # Pinned model literals (round 6): the apply-only pq_topk /
+    # Pinned model literals: the apply-only pq_topk /
     # quality_classifier rows score with these exact doubles on the
     # Spark side too (pipeline/pinned.py), so the oracle replays the
     # identical literal-weighted arithmetic. repr() round-trips
@@ -2992,7 +2992,7 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
             UNION ALL
             SELECT 'ivf' AS method, v.* FROM ({ivf_sql}) v
         """,
-        # round 6: the APPLY side of PQ / IVF-PQ ANN replayed against
+        # the APPLY side of PQ / IVF-PQ ANN replayed against
         # the pinned codebook/centroid literals — encode (per-subspace
         # L2 argmin, ties to lowest code), ADC scoring (sum of
         # query·centroid gathers), coarse-cell assignment/probing
@@ -3083,7 +3083,7 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
                    round(pq_score, 6) AS pq_score, rank
             FROM ivf WHERE rank <= 5
         """,
-        # round 6: the APPLY side of the quality classifier — the
+        # the APPLY side of the quality classifier — the
         # same single-scan quality features the hash-green
         # text_curation oracle computes, pushed through the sigmoid
         # of the pinned literal-weighted standardized sum
@@ -3329,9 +3329,8 @@ def q_validation_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs from MinHash bands (near-dup join), PLUS
-    the incremental-ingest path hash-checked in the same row (round 7,
-    VERDICT item 4): docs with doc_id % 10 == 0 play the "daily
-    batch", the rest the stored signature index
+    the incremental-ingest path hash-checked in the same row: docs
+    with doc_id % 10 == 0 play the "daily batch", the rest the stored signature index
     (:func:`minhash_index`), and :func:`neardup_against` drops batch
     docs whose signature-agreement estimate against any indexed doc
     reaches 0.8 — one band-equality join against state that is
@@ -3400,7 +3399,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         band_size=4,
     )
     pairs = lsh_candidate_pairs(bands)
-    # arrow=True (round 14, VERDICT r13 item 1): the per-doc shingle
+    # arrow=True: the per-doc shingle
     # arrays come from ONE Arrow kernel instead of the interpreted
     # zip_with/transform HOF tree (413 s vs 18 s at 2M docs in
     # SCALE.md); bit-identical output pinned by
@@ -3504,20 +3503,26 @@ _TEMP_SINE_CORE_SQL = f"""
 
 
 def _humidity_variant_exprs() -> dict:
-    """The by-name column trees of q_humidity_variants (daily dewpoint
-    regression columns, the fused fix-timing sine temperature, the
-    three raw hum_disagg ratios, and the exploded variant-struct
-    column) — context-free, memoized per application via
-    _ENTRY_EXPR_MEMO (round 14; ~3.1k py4j round-trips per build
-    otherwise). Formulas copied term-for-term from
-    disaggregate_humidity / disaggregate_temperature and pinned
-    branch-identical by test_q_humidity_variants_matches_public_ops."""
+    """The by-name column trees of q_humidity_variants: the daily
+    dewpoint regression columns, the fused fix-timing sine
+    temperature, the three raw hum_disagg values and the exploded
+    variant-struct column, all composed from the humidity and
+    temperature formula builders. Context-free, so memoized per
+    application via _ENTRY_EXPR_MEMO (~3.1k py4j round-trips per
+    build otherwise)."""
     from pyspark.sql import Window
 
-    from melodist_spark.functions.meteo import vapor_pressure
-    from melodist_spark.operators.temperature import HOURS_PER_DAY
+    from melodist_spark.operators.humidity import (
+        clip_rh,
+        linear_dewpoint,
+        min_max_rh,
+        rh_from_dewpoint,
+    )
+    from melodist_spark.operators.temperature import (
+        sine_min_max_temp,
+        transition_vals,
+    )
 
-    PI = 3.141592653589793
     wd = Window.partitionBy("user_id").orderBy("date")
     daily_exprs = {
         "tdew_reg": F.col("a0") + F.col("a1") * F.col("tmin"),
@@ -3527,83 +3532,41 @@ def _humidity_variant_exprs() -> dict:
         ),
     }
 
-    h = F.col("hour").cast("double")
-    # the fused fix-timing sine_min_max temperature
-    # (`temperature.py:127-143`)
-    minv = F.when(
-        F.col("hour") < F.col("max_loc"), F.col("min_val_cur")
-    ).otherwise(F.col("min_val_next"))
-    maxv = F.when(
-        F.col("hour") < F.col("min_loc"), F.col("max_val_before")
-    ).otherwise(F.col("max_val_cur"))
-    delta = maxv - minv
-    temp = (
-        minv
-        + delta / 2.0
-        + delta
-        / 2.0
-        * F.cos(F.lit(2 * PI / HOURS_PER_DAY) * (h - F.col("max_loc")))
-    )
-
-    # linear_dewpoint_variation hourly dewpoint: eq. (20)/(21) of
-    # Debele et al. 2007 (`humidity.py:73-86`)
-    tdew_delta = 0.5 * F.sin(
-        (h + 1) * F.lit(PI) / F.col("kr") - F.lit(3.0 * PI / 4.0)
-    )
-    tdew_h = (
-        F.col("tdew_reg")
-        + h / 24.0 * (F.col("tdew_next") - F.col("tdew_reg"))
-        + tdew_delta
-    )
-    # min_max: position of temp within the daily range
-    # (`humidity.py:91-101`), flat-day semantics as the public op
-    num = F.col("__temp") - F.col("tmin")
-    den = F.col("tmax") - F.col("tmin")
-    diff = F.col("hum_min") - F.col("hum_max")
-    flat = F.when(
-        (num == 0) | (diff == 0), F.lit(None).cast("double")
-    ).otherwise(
-        F.when((num > 0) == (diff > 0), F.lit(100.0)).otherwise(F.lit(0.0))
-    )
-    # MATERIALIZE each raw hum_disagg as a column before the clip —
-    # clip/round reference `val` several times, and handing them the
-    # raw trees inlines the vapor-pressure exponentials ~6× into the
-    # generator (measured 2.5× slower than the public-op branches);
-    # the public op materializes hum_disagg the same way
+    hour, max_loc = F.col("hour"), F.col("max_loc")
+    minv, maxv = transition_vals(hour, F.col("min_loc"), max_loc)
+    temp = sine_min_max_temp(minv, maxv, hour, max_loc)
+    t = F.col("__temp")
+    # each raw hum_disagg is MATERIALIZED as a column before the clip:
+    # clip/round reference the value several times, and handing them
+    # the raw trees inlines the vapor-pressure exponentials ~6× into
+    # the generator (measured 2.5× slower); the public op
+    # materializes hum_disagg the same way
     hd_exprs = {
         # minimal: tdew = daily tmin (`humidity.py:63-66`)
-        "__hd_min": 100.0
-        * vapor_pressure(F.col("tmin"), 100.0)
-        / vapor_pressure(F.col("__temp"), 100.0),
-        "__hd_mm": F.when(
-            den != 0, F.col("hum_max") + num / den * diff
-        ).otherwise(flat),
-        "__hd_ld": 100.0
-        * vapor_pressure(tdew_h, 100.0)
-        / vapor_pressure(F.col("__temp"), 100.0),
+        "__hd_min": rh_from_dewpoint(F.col("tmin"), t),
+        "__hd_mm": min_max_rh(
+            t, F.col("tmin"), F.col("tmax"), F.col("hum_min"), F.col("hum_max")
+        ),
+        "__hd_ld": rh_from_dewpoint(
+            linear_dewpoint(
+                F.col("tdew_reg"), F.col("tdew_next"), F.col("kr"), hour
+            ),
+            t,
+        ),
     }
-
-    def clip(name):
-        # null-preserving clip to [0, 100] (`humidity.py:120`)
-        val = F.col(name)
-        return F.when(val.isNull(), val).otherwise(
-            F.least(F.greatest(val, F.lit(0.0)), F.lit(100.0))
-        )
-
     out = F.explode(
         F.array(
-            F.struct(
-                F.lit("minimal").alias("variant"),
-                F.round(clip("__hd_min"), 6).alias("hum_h"),
-            ),
-            F.struct(
-                F.lit("min_max").alias("variant"),
-                F.round(clip("__hd_mm"), 6).alias("hum_h"),
-            ),
-            F.struct(
-                F.lit("lindew").alias("variant"),
-                F.round(clip("__hd_ld"), 6).alias("hum_h"),
-            ),
+            *(
+                F.struct(
+                    F.lit(variant).alias("variant"),
+                    F.round(clip_rh(F.col(hd)), 6).alias("hum_h"),
+                )
+                for variant, hd in (
+                    ("minimal", "__hd_min"),
+                    ("min_max", "__hd_mm"),
+                    ("lindew", "__hd_ld"),
+                )
+            )
         )
     )
     return {"daily": daily_exprs, "temp": temp, "hd": hd_exprs, "out": out}
@@ -3617,19 +3580,13 @@ def q_humidity_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily range) and ``lindew`` (linear_dewpoint_variation,
     `humidity.py:73-86`). A narrow union over the shared
     temperature-sine chain."""
-    # SHARED SCAN (round 13, same treatment as the radiation/temp
-    # union rows): the three public-op branches each paid their own
-    # fused sine-temperature chain (neighbour window + hourly explode
-    # + cosine). All three humidity formulas are row-local functions
-    # of the SAME exploded fix-timing sine temperature, so the row
-    # computes the chain once — one neighbour window (the lindew
-    # tdew_next lead rides the same window spec), one explode — and
-    # emits the three variant rows per hour with one
-    # explode-of-structs. Formulas are copied term-for-term from
-    # disaggregate_humidity / disaggregate_temperature;
-    # test_q_humidity_variants_matches_public_ops pins each branch
-    # row-identical to the public op at the row's round-6 grain; the
-    # DuckDB twin is unchanged.
+    # All three humidity formulas are row-local functions of the same
+    # exploded fix-timing sine temperature, so the row computes that
+    # chain once (one neighbour window, which the lindew tdew_next
+    # lead shares, and one explode) and emits the three variant rows
+    # per hour with one explode-of-structs. The formulas are the
+    # library's builders; test_q_humidity_variants_matches_public_ops
+    # compares each branch with the public op.
     from melodist_spark.operators.humidity import dewpoint_regression
     from melodist_spark.operators.temperature import (
         _loc_exprs,
@@ -3737,7 +3694,7 @@ def q_streaming_daily_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     end precedes ``max(ts) - watermark`` are emitted. The oracle
     replicates the watermark cutoff in SQL.
 
-    Bench convention (round 6): the parquet streaming SOURCE is
+    Bench convention: the parquet streaming SOURCE is
     written once per process per sf_dir and reused — it's harness
     setup (a stream's source exists before the stream in any real
     deployment), so bench.py's min-of-2-runs prices the stream
@@ -3856,33 +3813,40 @@ def q_precip_masterstation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("user_id", "ts", F.round("precip", 6).alias("precip_h"))
 
 
-def q_temp_course_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mean_course_mean temperature (`temperature.py:251-262`): the
-    month-hour mean course centered per month, scaled by the day's
-    range, added to the daily mean.
-
-    Course means are quantized to the dyadic 2^-20 grid so the
-    operator's internal window average (a 24-term double sum whose
-    rounding is summation-order-dependent) becomes exact and
-    engine-portable — power-of-two scaling and floor are lossless in
-    IEEE double on both engines."""
-    from melodist_spark.operators.temperature import disaggregate_temperature
-
+def _dyadic_course(hourly: DataFrame, col: str, name: str = "value") -> DataFrame:
+    """The month-hour mean course of ``col`` as (user_id, month, hour,
+    ``name``), each mean floored to the dyadic 2^-20 grid. A day
+    window's average of such values is then an exact double sum in
+    any summation order, on both engines: power-of-two scaling and
+    floor are lossless in IEEE double."""
     q = 1048576.0  # 2^20
-    m = _met_hourly(spark, sf_dir)
-    mc = (
-        m.withColumn("__td", F.col("temp").cast("decimal(20,10)"))
+    dec = f"__{col[0]}d"  # decimal copy: the sum is exact
+    return (
+        hourly.withColumn(dec, F.col(col).cast("decimal(20,10)"))
         .groupBy(
             "user_id",
             F.month("ts").alias("month"),
             F.hour("ts").alias("hour"),
         )
         .agg(
-            (
-                F.floor((F.sum("__td").cast("double") / F.count("*")) * q) / q
-            ).alias("value")
+            (F.floor((F.sum(dec).cast("double") / F.count("*")) * q) / q).alias(
+                name
+            )
         )
     )
+
+
+def q_temp_course_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """mean_course_mean temperature (`temperature.py:251-262`): the
+    month-hour mean course centered per month, scaled by the day's
+    range, added to the daily mean.
+
+    Course means are quantized to the dyadic grid (_dyadic_course) so
+    the operator's internal window average, a 24-term double sum,
+    is exact and engine-portable."""
+    from melodist_spark.operators.temperature import disaggregate_temperature
+
+    mc = _dyadic_course(_met_hourly(spark, sf_dir), "temp")
     daily = _met_daily(spark, sf_dir)
     out = disaggregate_temperature(
         daily, method="mean_course_mean", mean_course=mc, keys=["user_id"]
@@ -3963,7 +3927,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from melodist_spark.pipeline.similarity import semantic_dedup
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # arrow=True (round 11): the within-cell cosine is ~85% of this
+    # arrow=True: the within-cell cosine is ~85% of this
     # row (stage subs) and the Arrow einsum twin halves it (4.11 →
     # 1.93 s at sf0.1) on the IDENTICAL candidate set; the output is
     # all-integer with the measured ≥9.2e-6 threshold margins, orders
@@ -4144,122 +4108,63 @@ def q_multimodal_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _temp_sine_variant_exprs() -> "F.Column":
-    """The exploded method-struct column of q_temp_sine_variants —
-    every reference is BY NAME over the shared hourly frame
-    (hour/__minl_*/__maxl_*/neighbour extremes), so the tree is
-    context-free and memoized per application via _ENTRY_EXPR_MEMO
-    (round 14; it cost ~1.6k py4j round-trips per build). Formulas
-    are copied term-for-term from disaggregate_temperature and pinned
-    branch-identical to the public op by
-    test_q_temp_sine_variants_matches_public_ops."""
-    from melodist_spark.operators.temperature import HOURS_PER_DAY
+    """The exploded method-struct column of q_temp_sine_variants,
+    composed from the temperature formula builders over each timing
+    policy's ``__minl_*``/``__maxl_*`` columns. Every reference is BY
+    NAME, so the tree is context-free and memoized per application via
+    _ENTRY_EXPR_MEMO (~1.6k py4j round-trips per build otherwise)."""
+    from melodist_spark.operators.temperature import (
+        sine_mean_temp,
+        sine_min_max_temp,
+        sine_night_temp,
+        transition_vals,
+    )
 
-    h = F.col("hour").cast("double")
-    pi = F.lit(3.141592653589793)
-    two_pi_24 = F.lit(2 * 3.141592653589793 / HOURS_PER_DAY)
+    hour = F.col("hour")
 
-    def minmax_vals(min_loc, max_loc):
-        # smooth transitions (`temperature.py:127-137`)
-        min_val = F.when(
-            F.col("hour") < max_loc, F.col("min_val_cur")
-        ).otherwise(F.col("min_val_next"))
-        max_val = F.when(
-            F.col("hour") < min_loc, F.col("max_val_before")
-        ).otherwise(F.col("max_val_cur"))
-        return min_val, max_val
+    def policy(tag):
+        min_loc, max_loc = F.col(f"__minl_{tag}"), F.col(f"__maxl_{tag}")
+        minv, maxv = transition_vals(hour, min_loc, max_loc)
+        return minv, maxv, min_loc, max_loc
 
-    def sine_min_max(min_loc, max_loc):
-        minv, maxv = minmax_vals(min_loc, max_loc)
-        delta = maxv - minv
-        v_trans = minv + delta / 2.0
-        return v_trans + delta / 2.0 * F.cos(two_pi_24 * (h - max_loc))
-
-    def sine_night(min_loc, max_loc):
-        # three-piece cosine (`temperature.py:145-167`)
-        minv, maxv = minmax_vals(min_loc, max_loc)
-        delta = maxv - minv
-        v_trans = minv + delta / 2.0
-        span = max_loc - min_loc
-        before_min = h <= min_loc
-        between = (h > min_loc) & (h < max_loc)
-        t_before = v_trans + delta / 2.0 * F.cos(
-            F.try_divide(pi, HOURS_PER_DAY - span)
-            * (HOURS_PER_DAY - max_loc + h)
-        )
-        t_between = v_trans + delta / 2.0 * F.cos(
-            1.25 * pi + F.try_divide(0.75 * pi, span) * (h - min_loc)
-        )
-        t_after = v_trans + delta / 2.0 * F.cos(
-            F.try_divide(pi, HOURS_PER_DAY - span) * (h - max_loc)
-        )
-        return (
-            F.when(before_min, t_before)
-            .when(between, t_between)
-            .otherwise(t_after)
-        )
-
-    def sine_mean(max_loc):
-        # sine_mean (`temperature.py:172-176`)
-        dtr = F.col("max_val_cur") - F.col("min_val_cur")
-        return F.col("mean_val_cur") + dtr / 2.0 * F.cos(
-            two_pi_24 * (h - max_loc)
-        )
-
-    t_mean = sine_mean(F.col("__maxl_fix"))
-    t_night = sine_night(F.col("__minl_fix"), F.col("__maxl_fix"))
-    t_sunloc = sine_min_max(F.col("__minl_sl"), F.col("__maxl_sl"))
-    t_sunshift = sine_min_max(F.col("__minl_ss"), F.col("__maxl_ss"))
+    minv, maxv, min_loc, max_loc = policy("fix")
+    t_mean = sine_mean_temp(
+        F.col("mean_val_cur"),
+        F.col("min_val_cur"),
+        F.col("max_val_cur"),
+        hour,
+        max_loc,
+    )
+    t_night = sine_night_temp(minv, maxv, hour, min_loc, max_loc)
+    minv, maxv, _, max_loc = policy("sl")
+    t_sunloc = sine_min_max_temp(minv, maxv, hour, max_loc)
+    minv, maxv, _, max_loc = policy("ss")
+    t_sunshift = sine_min_max_temp(minv, maxv, hour, max_loc)
     return F.explode(
         F.array(
-            F.struct(
-                F.lit("mean").alias("method"),
-                F.round(t_mean, 6).alias("temp_h"),
-            ),
-            F.struct(
-                F.lit("night").alias("method"),
-                F.round(t_night, 6).alias("temp_h"),
-            ),
-            F.struct(
-                F.lit("sunloc").alias("method"),
-                F.round(t_sunloc, 6).alias("temp_h"),
-            ),
-            F.struct(
-                F.lit("sunshift").alias("method"),
-                F.round(t_sunshift, 6).alias("temp_h"),
-            ),
+            *(
+                F.struct(
+                    F.lit(method).alias("method"),
+                    F.round(t, 6).alias("temp_h"),
+                )
+                for method, t in (
+                    ("mean", t_mean),
+                    ("night", t_night),
+                    ("sunloc", t_sunloc),
+                    ("sunshift", t_sunshift),
+                )
+            )
         )
     )
 
 
-def q_temp_sine_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Four sine temperature methods in one result, tagged by
-    ``method``: ``mean`` (sine_mean, `temperature.py:172-176`),
-    ``night`` (sine_min_max with mod_nighttime,
-    `temperature.py:145-167`), ``sunloc`` (sine_min_max with
-    sun-geometry timing, `temperature.py:92-99` +
-    `util/util.py:160-246`) and ``sunshift`` (sine_min_max with the
-    data-calibrated sun_loc_shift timing, `temperature.py:97-107`).
-    A narrow union with no join between the hourly branches."""
-    # SHARED SCAN (round 13, same treatment as
-    # q_radiation_proxy_variants): the four public-op branches each
-    # paid their own neighbour-value window, sun-times tree and hourly
-    # explode. The neighbour extremes are policy-independent and every
-    # temp formula is a row-local function of the SAME exploded
-    # calendar, so the row computes the daily frame once (one window,
-    # one sun tree, the sunshift max_delta broadcast-joined in) and
-    # emits the four method rows per hour with one explode-of-structs.
-    # Formulas are copied term-for-term from disaggregate_temperature
-    # (fix/sun_loc/sun_loc_shift loc pairs via the operator's own
-    # _loc_exprs); test_q_temp_sine_variants_matches_public_ops pins
-    # each branch row-identical to the public op at the row's round-6
-    # grain; the DuckDB twin is unchanged.
+def _met_max_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sun_loc_shift calibration of the met fixture: per month,
+    the mean offset of the day's warmest hour (the latest hour on
+    ties) from solar noon, from the cached hourly frame. Returns
+    (user_id, month, max_delta)."""
     from melodist_spark.functions.solar import sun_times_exprs
-    from melodist_spark.operators.temperature import _loc_exprs, _neighbor_exprs
-    from melodist_spark.util.calendar import hourly_calendar
 
-    # the sunshift monthly warmest-hour calibration (mean offset of
-    # the latest warmest hour from solar noon, from the CACHED hourly
-    # frame)
     m = _met_hourly(spark, sf_dir)
     daily_max = m.groupBy("user_id", F.to_date("ts").alias("date")).agg(
         F.max("temp").alias("tmax_h")
@@ -4272,13 +4177,36 @@ def q_temp_sine_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max(F.hour("ts")).alias("max_hour"))
     )
     st = sun_times_exprs("date", LON, LAT, TZ)
-    md = (
+    return (
         at_max.withColumn("sunnoon", st["sunnoon"])
         .withColumn("delta", F.col("max_hour") - F.col("sunnoon"))
         .groupBy("user_id", F.month("date").alias("month"))
         .agg(F.avg("delta").alias("max_delta"))
     )
 
+
+def q_temp_sine_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Four sine temperature methods in one result, tagged by
+    ``method``: ``mean`` (sine_mean, `temperature.py:172-176`),
+    ``night`` (sine_min_max with mod_nighttime,
+    `temperature.py:145-167`), ``sunloc`` (sine_min_max with
+    sun-geometry timing, `temperature.py:92-99` +
+    `util/util.py:160-246`) and ``sunshift`` (sine_min_max with the
+    data-calibrated sun_loc_shift timing, `temperature.py:97-107`).
+    A narrow union with no join between the hourly branches."""
+    # The neighbour extremes are policy-independent and every method
+    # is a row-local function of the same exploded calendar, so the
+    # row builds the daily frame once (one window, one sun tree, the
+    # sunshift max_delta broadcast-joined in) and emits the four
+    # method rows per hour with one explode-of-structs. The formulas
+    # are the library's builders and loc pairs (_loc_exprs);
+    # test_q_temp_sine_variants_matches_public_ops compares each
+    # branch with the public op.
+    from melodist_spark.functions.solar import sun_times_exprs
+    from melodist_spark.operators.temperature import _loc_exprs, _neighbor_exprs
+    from melodist_spark.util.calendar import hourly_calendar
+
+    md = _met_max_delta(spark, sf_dir)
     daily = _met_daily(spark, sf_dir)
     d = daily.join(
         F.broadcast(
@@ -4380,7 +4308,7 @@ def q_dyadic_calendars(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full text-analysis feature set in one narrow projection —
     fingerprint, token/quality stats, language-ID scores, Unicode
-    script detection (round 7) and the 16-bit SimHash are all JVM
+    script detection and the 16-bit SimHash are all JVM
     column expressions over ``documents``, so the compound is
     join-free and single-scan. Script counts + ``script_pred`` run
     over a probe column where every fifth doc is swapped for a
@@ -4433,7 +4361,7 @@ def q_gap_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`util/util.py:249-297`, `300-352`): hourly-step gap count over the
     raw event series, joined with the surviving-hours count and precip
     mass after trimming a ragged grid back to complete midnight-aligned
-    days (the drop_incomplete_days chain). Round 7 additionally anchors
+    days (the drop_incomplete_days chain). The row also anchors
     ``sessionize`` (util/gaps.py:88 — the batch twin of the streaming
     session-window path): per-station session count and longest-session
     row count at a 2-hour gap, hash-checked against DuckDB's running-sum
@@ -4597,11 +4525,8 @@ def q_doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a pruned KenLM-analog). The hash gate checking both against
     one oracle IS the path-equivalence proof.
 
-    SHARED TRAINING (round 13): both deployment shapes score with the
-    SAME bigram model, but each branch used to train its own copy —
-    the join branch's two count aggregations in-plan plus the
-    broadcast branch's two collect-side training passes, four corpus
-    tokenize passes for one model. The row now trains once
+    SHARED TRAINING: both deployment shapes score with the SAME
+    bigram model, so the row trains it once
     (``bigram_lm``), lazily localCheckpoints the two count tables,
     and hands them to both branches via the ops' ``model=`` injection
     point: the broadcast collect materializes the checkpoints at
@@ -4640,8 +4565,7 @@ def q_doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText/DSIR-style quality scoring — the APPLY side of the
-    quality classifier, now fully oracle-checked (round-6 split of
-    the former train+apply compound): ``logreg_score`` with the
+    quality classifier, oracle-checked: ``logreg_score`` with the
     PINNED model literals from ``pipeline/pinned.py`` (IRLS-trained
     once on sf0.001 by tools/gen_pinned.py; the iterative trainer
     itself has no SQL oracle and stays pytest-pinned against the
@@ -4671,8 +4595,7 @@ def q_pq_topk(
     spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
 ) -> DataFrame:
     """Product-quantization ANN, both deployment shapes tagged by
-    ``method`` — the APPLY side, now fully oracle-checked (round-6
-    split of the former train+apply compound): codebooks and coarse
+    ``method`` — the APPLY side, oracle-checked: codebooks and coarse
     centroids are the PINNED literals from ``pipeline/pinned.py``
     (Lloyd-trained once on sf0.001 by tools/gen_pinned.py; the
     iterative trainers stay pytest-pinned —
@@ -4692,11 +4615,8 @@ def q_pq_topk(
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 8)
 
-    # FUSED SCAN (round 14, guide §2.3/§2.4/§4.1): the two branches
-    # used to run the public ops side by side — the corpus encoded
-    # TWICE (one pq_encode per branch) and five Python-boundary
-    # passes for scores that are literally the same numbers (an
-    # ivfpq score is the pq ADC score of a row in a probed cell).
+    # FUSED SCAN: an ivfpq score is the pq ADC score of a row in a
+    # probed cell, so the two branches share one scan.
     # pq_ivfpq_topk normalizes/encodes/assigns each batch once and
     # emits both methods' per-batch top-k partials from one scored
     # scan — bit-identical to the public-op pair by construction
@@ -4705,9 +4625,8 @@ def q_pq_topk(
     # oracle hash at both SFs). The shared-encode checkpoint form
     # was measured SLOWER (barrier job > duplicated 5k-row encode,
     # see OPTIMIZATION_r14.md); this form removes the duplicate
-    # without any barrier. Note for the bench subs: the pq/ivfpq
-    # method filters now price the one fused kernel each (like the
-    # other fused rows — compare the row total round-to-round).
+    # without any barrier. The pq/ivfpq method filters each price
+    # the one fused kernel (like the other fused rows).
     out = pq_ivfpq_topk(
         emb, queries, IVF_CENTROIDS, PQ_CODEBOOKS, k=5, n_probe=2
     )
@@ -4737,10 +4656,9 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     2.5e-4 — far above cross-engine float noise)."""
     from melodist_spark.pipeline.similarity import lsh_topk
 
-    # SHARED SCAN (round 13): the five ANN branches referenced the
-    # embeddings parquet 12 times (db + query sides per method) at
-    # ~0.1 s a scan — over half the union's wall was re-decoding the
-    # same 5,000 vectors. One lazy localCheckpoint materializes the
+    # SHARED SCAN: the five ANN branches reference the embeddings
+    # 12 times (db + query sides per method) at ~0.1 s a parquet
+    # scan. One lazy localCheckpoint materializes the
     # scan once per build; every branch reads the same blocks. Plan
     # shape within each method is unchanged (the per-method subs
     # still constant-fold the other branches away).
@@ -4768,8 +4686,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_weighted_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic training-mixture construction
     (``pipeline/mixing.py::weighted_mixture``) under the DuckDB
-    oracle (round 10 — it was the one operator with no oracle or
-    bench row). Three synthetic sources (the ``doc_id % 3`` slices of
+    oracle. Three synthetic sources (the ``doc_id % 3`` slices of
     ``documents`` standing in for wiki/web/books manifests) are mixed
     at exact-binary weights 0.625/0.25/0.125 toward ``n_total = 2 *
     |documents|``, which forces every draw shape at once: wiki lands
@@ -4835,7 +4752,7 @@ def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM tokenizer training + application (round 10 — the
+    """Unigram-LM tokenizer training + application (the
     SentencePiece-default counterpart of q_bpe_tokenize): EM over the
     corpus word-count table learns a 400-piece model on the driver
     (the same vocabulary-bounded model boundary as the BPE merge
@@ -4861,13 +4778,12 @@ def q_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tokenize_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tokenizer APPLY paths under the DuckDB oracle (round 11,
-    VERDICT r10 item 1 — previously the only operators with no
-    hash-green anchor): encode the corpus with the PINNED trained
-    models (``pinned.BPE_MERGES`` / ``pinned.UNIGRAM_PIECES``,
-    trained once on sf0.001 by tools/gen_pinned.py). Given a fixed
-    model, greedy lowest-rank BPE merging and unigram Viterbi
-    segmentation are pure functions of the text, which DuckDB
+    """The tokenizer APPLY paths under the DuckDB oracle: encode the
+    corpus with the PINNED trained models (``pinned.BPE_MERGES`` /
+    ``pinned.UNIGRAM_PIECES``, trained once on sf0.001 by
+    tools/gen_pinned.py). Given a fixed model, greedy lowest-rank
+    BPE merging and unigram Viterbi segmentation are pure functions
+    of the text, which DuckDB
     replays: a recursive CTE runs the merge loop / the Viterbi DP
     over the BOUNDED word-type table and the per-word segmentations
     join back onto the ordered doc word stream
@@ -4912,9 +4828,9 @@ def q_tokenize_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document repeated-span removal under the oracle (late
-    round 11 — the Lee et al. 2022 ExactSubstr excision,
-    ``dedup.remove_repeated_spans``), two hash-checked branches:
+    """Cross-document repeated-span removal under the oracle (the Lee
+    et al. 2022 ExactSubstr excision, ``dedup.remove_repeated_spans``),
+    three hash-checked branches:
 
     - ``single``: one detect+excise round at span_tokens=6 over the
       real ``documents`` corpus, keep-first keeper policy, PORTABLE
@@ -4922,15 +4838,14 @@ def q_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
       per-position gram hashes, corpus counts, the min-(doc_id, pos)
       keeper, positional coverage, token excision and ordered
       re-aggregation (:func:`_span_removal_sql`).
-    - ``removeall`` (round 12): the same round with
-      ``keep_first=False`` — EVERY occurrence of a duplicated gram
-      excised (the conservative boilerplate-annihilation policy,
-      previously pytest-only) — over the ``doc_id % 5`` slice (its
-      own corpus; the twin drops the keeper CTE and applies the same
-      slice), keeping the policy check out of a second full-corpus
-      gram-scan budget.
-    - ``fixpoint`` (round 12, VERDICT r11 item 5): the CORPUS-WIDE
-      junction fixpoint (``until_clean=True``) on an engineered
+    - ``removeall``: the same round with ``keep_first=False`` —
+      EVERY occurrence of a duplicated gram excised (the conservative
+      boilerplate-annihilation policy) — over the ``doc_id % 5``
+      slice (its own corpus; the twin drops the keeper CTE and applies
+      the same slice), keeping the policy check out of a second
+      full-corpus gram-scan budget.
+    - ``fixpoint``: the CORPUS-WIDE junction fixpoint
+      (``until_clean=True``) on an engineered
       template corpus where round 2 provably fires — G span-owner
       docs (8 shared tokens each, group-unique) and G template pages
       quoting their group's span between GLOBAL 5-token affixes.
@@ -4950,11 +4865,10 @@ def q_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs the single-space re-join). The xxhash64 production hash
     stays pytest-anchored (test_portable_gram_hash_*).
 
-    SHARED GRAM SCAN (round 13, VERDICT r12 item 3): the single and
-    removeall branches previously each ran their own two gram scans
-    over overlapping corpora (2 full + 2 slice tokenization passes
-    per materialization). Both branches' span tables now come out of
-    ONE linear plan: a single groupBy(__gh) computes the full-corpus
+    SHARED GRAM SCAN: rather than two gram scans per branch over
+    overlapping corpora (2 full + 2 slice tokenization passes per
+    materialization), both branches' span tables come out of ONE
+    linear plan: a single groupBy(__gh) computes the full-corpus
     count, the doc_id%5 slice count (counts are slice-local, so the
     slice's duplicate decisions are one conditional count on the same
     shuffle key — not a rescan) AND the keep-first keeper struct; one
@@ -5006,7 +4920,7 @@ def q_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by (method, doc) — per-partition identical to each branch's own
     # window — and the tiny merged span table is eagerly checkpointed
     # so the two excision joins below never recompute the gram scan.
-    # BLOCK LIFETIME (accepted, reviewed round 13): the checkpoint's
+    # BLOCK LIFETIME (accepted): the checkpoint's
     # blocks live until driver GC — they cannot be released here (the
     # returned lazy plan reads them) and no caller hook exists. The
     # table is duplicate-volume-sized (tens of KB per materialization
@@ -5136,7 +5050,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus side is scanned once and never shuffled (the only wide
     op is the map-side-combinable per-doc count).
 
-    Round 7: method-tagged union with the two-phase Bloom path
+    Method-tagged union with the two-phase Bloom path
     (``pipeline/bloom.py::decontaminate_bloom`` — JVM-side Bloom
     prefilter, exact verify on surviving grams only). Bloom filters
     have no false negatives and the verify join strikes every false
@@ -5151,12 +5065,10 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     trickle changes). 2^17 covers the gram count at every tested SF
     with the word table still ~150 KB — broadcast noise.
 
-    SHARED GRAM SCAN (round 13, same treatment as the variant rows):
-    the exact and bloom branches each paid their own full corpus
-    tokenize+explode pass — the CodegenFallback shingle tree is the
-    dominant per-branch cost, and at cluster scale the two passes are
-    pure duplicated work (locally the union overlapped them, hiding
-    the waste in idle cores). The row now runs ONE gram stream;
+    SHARED GRAM SCAN: a full corpus tokenize+explode pass per branch
+    would run the CodegenFallback shingle tree, the dominant
+    per-branch cost, twice — pure duplicated work at cluster scale.
+    The row runs ONE gram stream;
     each gram carries BOTH membership decisions — the exact broadcast
     join hit, and the packed Bloom probe's maybe-verdict struck by
     the same verify join the public bloom op runs — and one per-doc
@@ -5238,7 +5150,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_benchmark_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-benchmark-item leakage audit (round 10 — the complement of
+    """Per-benchmark-item leakage audit (the complement of
     q_decontaminate, on the same deterministic doc_id%41 split): for
     each benchmark document, how many of its distinct 5-grams appear
     in the training corpus, how many training docs share at least one
@@ -5386,7 +5298,7 @@ def q_text_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     counts = pii_counts(F.col("text"))
     cleaned = clean_text(F.col("text"))
-    # round 7: ftfy-style encoding repair, hash-checked. The corpus is
+    # ftfy-style encoding repair, hash-checked. The corpus is
     # synthetic clean ASCII, so a deterministic mojibake'd suffix is
     # appended to every THIRD doc — every class the fixer handles
     # (cp1252 smart quotes/dash, Ã-accents, zero-width, C1 + C0
@@ -5418,7 +5330,7 @@ def q_text_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-side curation primitives (round 7) in one documents
+    """Crawl-side curation primitives in one documents
     scan: each document is wrapped in deterministic messy page markup
     (comments, script/style blocks, block elements, entities) and
     stripped back with ``html_to_text``; a campaign-tracking URL
@@ -5432,7 +5344,7 @@ def q_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange is the domain window's hash partition (skew-safe salted
     variant: ``urls.cap_per_domain(salt=)``).
 
-    Round 7 adds ``domain_pr``: PageRank over the registrable-domain
+    ``domain_pr``: PageRank over the registrable-domain
     link graph (``pipeline/graph.py`` — the Common-Crawl-style host
     ranking signal), 5 fixed power iterations so DuckDB replays it by
     unrolling; the link targets are md5-derived from doc_id (both
@@ -5449,12 +5361,12 @@ def q_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sid = F.col("doc_id").cast("string")
-    # round 8: the paragraph trips each extract_main_content failure
+    # the paragraph trips each extract_main_content failure
     # mode on a deterministic doc slice, so main_md5 hash-checks the
     # block scorer's DECISIONS, not just its happy path — doc_id%9==0
     # gets a 5-word stub (word floor), %9==1 gets its text
     # link-wrapped (link-density cap), the rest keep the paragraph.
-    # Round 9: %9==2 wraps the paragraph in table soup with per-word
+    # %9==2 wraps the paragraph in table soup with per-word
     # inline tags — the nested-layout class where the FLAT scorer's
     # text-to-markup floor deletes real content (main_md5 pins the
     # miss) and the DOM tier recovers it (dom_md5 pins the save).
@@ -5520,14 +5432,12 @@ def q_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = domain_rank(derived, domain_col="domain", url_col="url_norm")
 
-    # round 11 (VERDICT item 4): the synthetic edge targets used to
-    # come from a dense domain id built with an UNPARTITIONED
-    # row_number window — the one global window in the registry. Now
     # each doc links its domain to the domain of an md5-chosen
     # partner doc (doc_id is dense 0..n-1 in the test corpus, so
     # pmod(md5, n_docs) always hits a row), a plain equi-join both
-    # engines replay identically — no global window anywhere in the
-    # registry (asserted by test_global_registry_plan_invariants).
+    # engines replay identically — no UNPARTITIONED dense-id window
+    # anywhere in the registry (asserted by
+    # test_global_registry_plan_invariants).
     n_docs = docs.count()
     partner = F.pmod(
         F.conv(
@@ -5596,9 +5506,9 @@ def q_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_robots_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFC 9309 robots.txt compliance, oracle-green (round 8, VERDICT
-    item 4): deterministic robots BODIES are generated per domain from
-    parquet columns in-query, pushed through the REAL text parser
+    """RFC 9309 robots.txt compliance, oracle-green: deterministic
+    robots BODIES are generated per domain from parquet columns
+    in-query, pushed through the REAL text parser
     (``parse_robots_multi``, Arrow-batched, ONE line-scan of every
     body for both agents) and the packed-rule broadcast
     fold (``apply_robots``), for TWO crawler agents — ``melobot``
@@ -5669,10 +5579,10 @@ def q_robots_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("source").alias("domain"), path.alias("path")
     )
 
-    # ONE parse pass emits both agents' rule groups (round 13: the
-    # two per-agent parse_robots kernels line-scanned every body
-    # twice); the lazy localCheckpoint materializes the tiny rule
-    # table once so the per-agent halves read blocks, not the kernel.
+    # ONE parse pass emits both agents' rule groups (two per-agent
+    # parse_robots kernels would line-scan every body twice); the lazy
+    # localCheckpoint materializes the tiny rule table once so the
+    # per-agent halves read blocks, not the kernel.
     rules_all = parse_robots_multi(
         robots, agents=("melobot", "othercrawler")
     ).localCheckpoint(eager=False)
@@ -5713,27 +5623,22 @@ def q_radiation_proxy_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``course``: the calibrated month-hour mean diurnal shape
       rescaled to observed daily means (`radiation.py:66-73`)
     """
-    # SHARED SCAN (round 13): the four public-op branches each pay
-    # their own station join + sun-times tree + hourly explode +
-    # clear-sky curve + per-day window (4 explodes / 4 windows / 4
-    # codegen pipelines per materialization). All four formulas are
-    # row-local functions of the SAME exploded calendar, so the union
-    # row now computes the shared frame ONCE — one explode, one
-    # clear-sky evaluation, the (a,c)-independent BC daily terms
-    # evaluated once for both parameterizations, two same-key day
-    # windows (pot_rad + course, one exchange/sort) — and emits the
-    # four method rows per hour with a single explode-of-structs.
-    # Branch expressions are copied term-for-term from
-    # `disaggregate_radiation`, and
-    # test_q_radiation_proxy_variants_matches_public_ops pins each
-    # exploded branch row-identical (at the row's own round-6 grain)
-    # to the public op; the DuckDB twin is unchanged.
+    # All four methods are row-local functions of the same exploded
+    # calendar, so the row builds the shared frame once (one explode,
+    # one clear-sky evaluation, the (a, c)-independent BC daily terms
+    # once for both parameterizations, two same-key day windows) and
+    # emits the four method rows per hour with one explode-of-structs.
+    # The formulas are the library's builders;
+    # test_q_radiation_proxy_variants_matches_public_ops compares each
+    # branch with the public op.
     from pyspark.sql import Window
 
     from melodist_spark.operators.radiation import (
         _bc_daily_terms,
         _bc_trans_expr,
         _with_station_meta,
+        angstroem_expr,
+        scaled_glob,
     )
     from melodist_spark.functions.solar import (
         potential_radiation,
@@ -5757,23 +5662,9 @@ def q_radiation_proxy_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bc_trans_expr(BC_FITTED["a"], BC_FITTED["c"]),
     )
 
-    # the calibrated month-hour mean course, from the CACHED hourly
+    # the calibrated month-hour mean course, from the cached hourly
     # frame
-    q = 1048576.0  # 2^20
-    m = _met_hourly(spark, sf_dir)
-    mc = (
-        m.withColumn("__gd", F.col("glob").cast("decimal(20,10)"))
-        .groupBy(
-            "user_id",
-            F.month("ts").alias("month"),
-            F.hour("ts").alias("hour"),
-        )
-        .agg(
-            (
-                F.floor((F.sum("__gd").cast("double") / F.count("*")) * q) / q
-            ).alias("__course")
-        )
-    )
+    mc = _dyadic_course(_met_hourly(spark, sf_dir), "glob", "__course")
 
     hourly = hourly_calendar(d, date_col="date", ts_col="ts")
     hourly = hourly.withColumn(
@@ -5794,27 +5685,19 @@ def q_radiation_proxy_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
             "__course_daily": F.avg("__course").over(wd),
         }
     )
-    prd = F.col("pot_rad_daily")
-    crd = F.col("__course_daily")
-
-    def _floor(g):
-        return F.when(g < 1e-2, 0.0).otherwise(g)
-
-    ratio = F.try_divide(F.col("pot_rad"), prd)
-    gd_ssd = F.when(
-        F.col("daylength") > 0,
-        (
-            F.lit(0.25)
-            + F.lit(0.5) * F.try_divide(F.col("ssd"), F.col("daylength"))
-        )
-        * prd,
-    ).otherwise(F.lit(0.0))
-    g_ssd = _floor(ratio * gd_ssd)
-    g_bc = _floor(ratio * (F.col("__tr_bc") * prd))
-    g_bcf = _floor(ratio * (F.col("__tr_bcf") * prd))
-    g_course = _floor(
-        F.try_divide(F.col("__course"), crd) * F.col("glob")
-    )
+    pot, prd = F.col("pot_rad"), F.col("pot_rad_daily")
+    glob = {
+        "ssd": scaled_glob(
+            pot,
+            prd,
+            angstroem_expr(F.col("ssd"), F.col("daylength"), prd, 0.25, 0.5),
+        ),
+        "bc": scaled_glob(pot, prd, F.col("__tr_bc") * prd),
+        "bc_fitted": scaled_glob(pot, prd, F.col("__tr_bcf") * prd),
+        "course": scaled_glob(
+            F.col("__course"), F.col("__course_daily"), F.col("glob")
+        ),
+    }
 
     return (
         hourly.select(
@@ -5822,22 +5705,13 @@ def q_radiation_proxy_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts",
             F.explode(
                 F.array(
-                    F.struct(
-                        F.lit("ssd").alias("method"),
-                        F.round(g_ssd, 6).alias("glob_h"),
-                    ),
-                    F.struct(
-                        F.lit("bc").alias("method"),
-                        F.round(g_bc, 6).alias("glob_h"),
-                    ),
-                    F.struct(
-                        F.lit("bc_fitted").alias("method"),
-                        F.round(g_bcf, 6).alias("glob_h"),
-                    ),
-                    F.struct(
-                        F.lit("course").alias("method"),
-                        F.round(g_course, 6).alias("glob_h"),
-                    ),
+                    *(
+                        F.struct(
+                            F.lit(method).alias("method"),
+                            F.round(g, 6).alias("glob_h"),
+                        )
+                        for method, g in glob.items()
+                    )
                 )
             ).alias("__mg"),
         )

@@ -203,7 +203,8 @@ class Stations:
         statistics and the outputs unioned."""
         if method == "cascade":
             s = self.statistics
-            assert s is not None and s.precip_stats is not None
+            if s is None or s.precip_stats is None:
+                raise ValueError("cascade needs calibrated precipitation statistics")
             # stats stay a DataFrame — joined into the kernel input per
             # station, never collected to the driver (fleet-scale safe)
             parts = []

@@ -8,7 +8,7 @@ joins with tiny parameter tables.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from melodist_spark.functions.meteo import (
@@ -67,7 +67,8 @@ def disaggregate_humidity(
 
     Result is clipped to [0, 100] (`humidity.py:120`).
     """
-    assert method in METHODS, "Invalid option"
+    if method not in METHODS:
+        raise ValueError("Invalid option")
     keys = list(keys)
 
     daily_cols = [c for c in ("hum", "tmin", "tmax", "hum_min", "hum_max", "precip") if c in daily.columns]
@@ -87,7 +88,8 @@ def disaggregate_humidity(
             # a0=0, a1=1 (`humidity.py:64-66`)
             prep = prep.withColumn("tdew", F.col("tmin"))
         else:
-            assert hum_params is not None, "hum_params (a0, a1, kr) required"
+            if hum_params is None:
+                raise ValueError("hum_params (a0, a1, kr) required")
             prep = prep.join(F.broadcast(hum_params), keys, "left")
             prep = prep.withColumn("tdew", F.col("a0") + F.col("a1") * F.col("tmin"))
         prep_cols.append("tdew")
@@ -102,7 +104,8 @@ def disaggregate_humidity(
             prep_cols += ["tdew_next", "kr"]
 
     if fused:
-        assert hourly_temp is None, "pass either hourly_temp or temp_disagg"
+        if hourly_temp is not None:
+            raise ValueError("pass either hourly_temp or temp_disagg")
         from melodist_spark.operators.temperature import disaggregate_temperature
 
         base = disaggregate_temperature(
@@ -122,18 +125,14 @@ def disaggregate_humidity(
         out = base.withColumn("hum_disagg", F.col("hum"))
 
     elif dew_family:
-        assert fused or hourly_temp is not None, "hourly temperature required"
+        if not fused and hourly_temp is None:
+            raise ValueError("hourly temperature required")
         if method == "linear_dewpoint_variation":
-            # eq. (20)/(21) of Debele et al. (2007) (`humidity.py:73-86`)
-            hour = F.hour(ts_col).cast("double")
-            tdew_delta = 0.5 * F.sin(
-                (hour + 1) * F.lit(PI) / F.col("kr") - F.lit(3.0 * PI / 4.0)
-            )
             base = base.withColumn(
                 "tdew",
-                F.col("tdew")
-                + hour / 24.0 * (F.col("tdew_next") - F.col("tdew"))
-                + tdew_delta,
+                linear_dewpoint(
+                    F.col("tdew"), F.col("tdew_next"), F.col("kr"), F.hour(ts_col)
+                ),
             )
 
         if fused:
@@ -143,42 +142,30 @@ def disaggregate_humidity(
                 hourly_temp.select(*keys, ts_col, "temp"), [*keys, ts_col]
             )
         out = joined.withColumn(
-            "hum_disagg",
-            100.0
-            * vapor_pressure(F.col("tdew"), 100.0)
-            / vapor_pressure(F.col("temp"), 100.0),
+            "hum_disagg", rh_from_dewpoint(F.col("tdew"), F.col("temp"))
         )
 
     elif method == "min_max":
-        assert "hum_min" in daily.columns and "hum_max" in daily.columns, (
-            "Minimum and maximum humidity must be present in data frame"
-        )
-        assert fused or hourly_temp is not None, "hourly temperature required"
+        if "hum_min" not in daily.columns or "hum_max" not in daily.columns:
+            raise ValueError(
+                "Minimum and maximum humidity must be present in data frame"
+            )
+        if not fused and hourly_temp is None:
+            raise ValueError("hourly temperature required")
         if fused:
             joined = base
         else:
             joined = base.join(
                 hourly_temp.select(*keys, ts_col, "temp"), [*keys, ts_col]
             )
-        # flat day (tmax == tmin): the reference's numpy ratio is ±inf
-        # (→ 100/0 after the clip, sign of (temp-tmin)·(hum_min-hum_max))
-        # and NaN only for temp == tmin or hum_min == hum_max (0·inf);
-        # we reproduce that, with NaN expressed as null
-        num = F.col("temp") - F.col("tmin")
-        den = F.col("tmax") - F.col("tmin")
-        diff = F.col("hum_min") - F.col("hum_max")
-        flat = F.when(
-            (num == 0) | (diff == 0), F.lit(None).cast("double")
-        ).otherwise(
-            F.when((num > 0) == (diff > 0), F.lit(100.0)).otherwise(F.lit(0.0))
-        )
         out = joined.withColumn(
             "hum_disagg",
-            F.when(den != 0, F.col("hum_max") + num / den * diff).otherwise(flat),
+            min_max_rh(*(F.col(c) for c in ("temp", "tmin", "tmax", "hum_min", "hum_max"))),
         )
 
     elif method == "month_hour_precip_mean":
-        assert month_hour_precip_mean is not None
+        if month_hour_precip_mean is None:
+            raise ValueError("month_hour_precip_mean table required")
         # the day's wet flag is just daily precip > 0 (`humidity.py:105-110`)
         out = (
             base.withColumns(
@@ -203,13 +190,54 @@ def disaggregate_humidity(
             "hum_disagg", F.col("hum_disagg") - F.coalesce(bias, F.lit(0.0))
         )
 
-    # null-preserving clip: Spark's greatest/least skip nulls, which
-    # would turn a null (the reference's NaN) into 0.0 — keep it null
-    val = F.col("hum_disagg")
-    clipped = F.when(
-        val.isNull(), val
-    ).otherwise(F.least(F.greatest(val, F.lit(0.0)), F.lit(100.0)))
-    return out.select(*keys, ts_col, clipped.alias("hum"))
+    return out.select(*keys, ts_col, clip_rh(F.col("hum_disagg")).alias("hum"))
+
+
+# -- per-hour formula builders: Columns in, Column out ------------------
+
+
+def rh_from_dewpoint(tdew: Column, temp: Column) -> Column:
+    """Relative humidity [%] as the saturation vapor-pressure ratio of
+    dewpoint to air temperature — the dewpoint family's last step
+    (`humidity.py:63-86`)."""
+    return 100.0 * vapor_pressure(tdew, 100.0) / vapor_pressure(temp, 100.0)
+
+
+def min_max_rh(
+    temp: Column, tmin: Column, tmax: Column, hum_min: Column, hum_max: Column
+) -> Column:
+    """min_max: the hour's position within the daily temperature range
+    mapped onto the humidity range (`humidity.py:91-101`).
+
+    Flat day (tmax == tmin): the reference's numpy ratio is ±inf (→
+    100/0 after the clip, sign of (temp-tmin)·(hum_min-hum_max)) and
+    NaN only for temp == tmin or hum_min == hum_max (0·inf); this
+    reproduces that, with NaN expressed as null."""
+    num = temp - tmin
+    den = tmax - tmin
+    diff = hum_min - hum_max
+    flat = F.when((num == 0) | (diff == 0), F.lit(None).cast("double")).otherwise(
+        F.when((num > 0) == (diff > 0), F.lit(100.0)).otherwise(F.lit(0.0))
+    )
+    return F.when(den != 0, hum_max + num / den * diff).otherwise(flat)
+
+
+def linear_dewpoint(tdew: Column, tdew_next: Column, kr: Column, hour: Column) -> Column:
+    """linear_dewpoint_variation hourly dewpoint: linear from today's
+    to the next day's dewpoint plus a sine of period ``kr``, eq.
+    (20)/(21) of Debele et al. (2007) (`humidity.py:73-86`)."""
+    h = hour.cast("double")
+    tdew_delta = 0.5 * F.sin((h + 1) * F.lit(PI) / kr - F.lit(3.0 * PI / 4.0))
+    return tdew + h / 24.0 * (tdew_next - tdew) + tdew_delta
+
+
+def clip_rh(val: Column) -> Column:
+    """Clip to [0, 100] (`humidity.py:120`), keeping null: Spark's
+    greatest/least skip nulls, which would turn a null (the
+    reference's NaN) into 0.0."""
+    return F.when(val.isNull(), val).otherwise(
+        F.least(F.greatest(val, F.lit(0.0)), F.lit(100.0))
+    )
 
 
 def dewpoint_regression(

@@ -45,7 +45,8 @@ def disagg_prec(
     else:
         from melodist_spark.operators.cascade import disagg_prec_cascade
 
-        assert cascade_options is not None
+        if cascade_options is None:
+            raise ValueError("cascade_options required for cascade")
         return disagg_prec_cascade(
             daily,
             cascade_options,

@@ -47,6 +47,10 @@ def bristow_campbell_exprs(
     ).drop("__trans")
 
 
+def _as_col(v) -> Column:
+    return v if isinstance(v, Column) else F.lit(float(v))
+
+
 def _bc_daily_terms(
     daily: DataFrame, keys: list[str], date_col: str = "date"
 ) -> DataFrame:
@@ -68,9 +72,7 @@ def _bc_daily_terms(
 def _bc_trans_expr(a, c) -> Column:
     """``a·(1 − exp(−B·dT^c))`` over the ``__dT``/``__B`` columns
     attached by :func:`_bc_daily_terms`."""
-    a_col = a if isinstance(a, Column) else F.lit(float(a))
-    c_col = c if isinstance(c, Column) else F.lit(float(c))
-    return a_col * (1 - F.exp(-F.col("__B") * F.pow(F.col("__dT"), c_col)))
+    return _as_col(a) * (1 - F.exp(-F.col("__B") * F.pow(F.col("__dT"), _as_col(c))))
 
 
 def _bc_transmissivity(
@@ -86,10 +88,24 @@ def _bc_transmissivity(
 
 def angstroem_expr(ssd, day_length, pot_rad_daily, a, b) -> Column:
     """Angstroem (1924): ``(a + b·ssd/daylength)·pot_rad_daily``
-    (`radiation.py:283-311`)."""
-    a_col = a if isinstance(a, Column) else F.lit(float(a))
-    b_col = b if isinstance(b, Column) else F.lit(float(b))
-    return (a_col + b_col * ssd / day_length) * pot_rad_daily
+    (`radiation.py:283-311`). A polar-night day (daylength 0) gets 0
+    (`radiation.py:79-87`). Arguments are Columns or numbers."""
+    day_length = _as_col(day_length)
+    return F.when(
+        day_length > 0,
+        (_as_col(a) + _as_col(b) * F.try_divide(_as_col(ssd), day_length))
+        * _as_col(pot_rad_daily),
+    ).otherwise(F.lit(0.0))
+
+
+def scaled_glob(pot_rad: Column, pot_rad_daily: Column, glob_daily: Column) -> Column:
+    """Hourly radiation: the day's total spread along the hourly shape,
+    ``pot_rad / pot_rad_daily · glob_daily`` (`radiation.py:98`), with
+    values < 0.01 floored to 0 (`radiation.py:99`). A polar-night day
+    has pot_rad_daily == 0; the reference's numpy 0/0 yields NaN, and
+    try_divide's null matches."""
+    glob = F.try_divide(pot_rad, pot_rad_daily) * glob_daily
+    return F.when(glob < 1e-2, 0.0).otherwise(glob)
 
 
 # keep reference-named aliases for API parity
@@ -156,7 +172,8 @@ def disaggregate_radiation(
     hourly = hourly_calendar(d, date_col=date_col, ts_col=ts_col)
 
     if method == "mean_course":
-        assert mean_course is not None
+        if mean_course is None:
+            raise ValueError("mean_course table required for mean_course")
         hourly = (
             hourly.withColumn("month", F.month(ts_col))
             .withColumn("hour", F.hour(ts_col))
@@ -185,20 +202,13 @@ def disaggregate_radiation(
             a_col, b_col = F.col("a"), F.col("b")
         else:
             a_col, b_col = F.lit(angstr_a), F.lit(angstr_b)
-        # polar nights (daylength <= 0) keep 0 (`radiation.py:79-87`)
-        glob_daily = F.when(
-            F.col("daylength") > 0,
-            (a_col + b_col * F.try_divide(F.col("ssd"), F.col("daylength")))
-            * F.col("pot_rad_daily"),
-        ).otherwise(F.lit(0.0))
+        glob_daily = angstroem_expr(
+            F.col("ssd"), F.col("daylength"), F.col("pot_rad_daily"), a_col, b_col
+        )
     else:  # pot_rad_via_bc — __trans attached pre-explode above
         glob_daily = F.col("__trans") * F.col("pot_rad_daily")
 
-    # polar-night days have pot_rad_daily == 0; the reference's numpy
-    # 0/0 yields NaN (`radiation.py:98`) — try_divide's null matches
-    glob = F.try_divide(F.col("pot_rad"), F.col("pot_rad_daily")) * glob_daily
-    glob = F.when(glob < 1e-2, 0.0).otherwise(glob)
-
+    glob = scaled_glob(F.col("pot_rad"), F.col("pot_rad_daily"), glob_daily)
     return hourly.select(*keys, ts_col, glob.alias("glob"))
 
 

@@ -9,7 +9,7 @@ number of stations; the only shuffle is the per-station window sort.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from melodist_spark.functions.solar import sun_times_exprs
@@ -18,6 +18,7 @@ from melodist_spark.util.interpolate import interpolate_linear
 from melodist_spark.util.planmemo import PlanMemo
 
 HOURS_PER_DAY = 24
+PI = 3.141592653589793
 DEFAULT_SHIFT_HOURS = 2
 DAYLENGTH_THRES = 3
 MIN_LOC_POLAR = 6
@@ -36,8 +37,7 @@ def _loc_exprs(min_max_time: str) -> dict[str, "F.Column"]:
     max_delta (sun_loc_shift) — split out so a multi-policy caller
     (the tagged registry union) derives several policies from ONE
     daily frame. All references are by NAME, so the built dict is
-    context-free and memoized per application (round 14,
-    ``util.planmemo``)."""
+    context-free and memoized per application (``util.planmemo``)."""
     return _EXPR_MEMO.get(
         ("loc", min_max_time), lambda: _loc_exprs_build(min_max_time)
     )
@@ -113,7 +113,6 @@ def _neighbor_exprs_build(keys: list[str], date_col: str) -> dict[str, "F.Column
 
 def _locdf(
     daily: DataFrame,
-    method: str,
     min_max_time: str,
     max_delta: DataFrame | None,
     keys: list[str],
@@ -124,7 +123,8 @@ def _locdf(
     """
     d = daily
     if min_max_time == "sun_loc_shift":
-        assert max_delta is not None, "max_delta table required for sun_loc_shift"
+        if max_delta is None:
+            raise ValueError("max_delta table required for sun_loc_shift")
         d = (
             d.withColumn("month", F.month(date_col))
             .join(F.broadcast(max_delta), [*keys, "month"], "left")
@@ -183,7 +183,8 @@ def disaggregate_temperature(
     out_extras = ([date_col] if keep_date else []) + extras
 
     if method in MEAN_COURSE_METHODS:
-        assert mean_course is not None
+        if mean_course is None:
+            raise ValueError("mean_course table required for mean_course methods")
         carry = [c for c in extras if c not in ("temp", "tmin", "tmax")]
         hourly = hourly_calendar(
             daily.select(*keys, date_col, "temp", "tmin", "tmax", *carry),
@@ -213,11 +214,9 @@ def disaggregate_temperature(
     elif need_sun:
         raise ValueError("stations metadata required for sun-based timing")
 
-    loc = _locdf(d, method, min_max_time, max_delta, keys, date_col)
+    loc = _locdf(d, min_max_time, max_delta, keys, date_col)
 
-    # polar handling only matters above ~64° (daylength < 3 h); a
-    # driver-side peek at the tiny stations table skips the whole
-    # machinery for mid-latitude fleets
+    # polar handling only matters above ~64° (daylength < 3 h):
     # 'auto' probes max |lat| with a tiny driver agg to prune the whole
     # polar subplan for mid-latitude fleets; pass polar=False/True when
     # the fleet's extent is known to skip that job (it is one scan of
@@ -262,56 +261,92 @@ def disaggregate_temperature(
 
 
 def _minmax_val_exprs() -> dict[str, "F.Column"]:
-    """Smooth transitions: before the daily max use today's min, after
-    it next day's; before the daily min use yesterday's max
-    (`temperature.py:127-137`). By-name trees — memoized per
-    application (round 14, ``util.planmemo``)."""
-    min_val = F.when(
-        F.col("hour") < F.col("max_loc"), F.col("min_val_cur")
-    ).otherwise(F.col("min_val_next"))
-    max_val = F.when(
-        F.col("hour") < F.col("min_loc"), F.col("max_val_before")
-    ).otherwise(F.col("max_val_cur"))
+    """:func:`transition_vals` over the ``min_loc``/``max_loc``
+    columns. By-name trees — memoized per application."""
+    min_val, max_val = transition_vals(
+        F.col("hour"), F.col("min_loc"), F.col("max_loc")
+    )
     return {"__minv": min_val, "__maxv": max_val}
 
 
 def _sine_temp_expr(method: str, mod_nighttime: bool) -> "F.Column":
-    """The hourly sine/cosine temperature expression over the
+    """The hourly temperature of a sine method over the
     ``__minv``/``__maxv``/``hour``/``min_loc``/``max_loc`` columns —
     by-name, memoized per (method, mod_nighttime)."""
-    h = F.col("hour").cast("double")
+    hour, min_loc, max_loc = F.col("hour"), F.col("min_loc"), F.col("max_loc")
     if method in ("sine_min_max", "sine"):
-        delta = F.col("__maxv") - F.col("__minv")
-        v_trans = F.col("__minv") + delta / 2.0
+        minv, maxv = F.col("__minv"), F.col("__maxv")
         if mod_nighttime:
-            # three-piece cosine (`temperature.py:145-167`)
-            span = F.col("max_loc") - F.col("min_loc")
-            before_min = h <= F.col("min_loc")
-            between = (h > F.col("min_loc")) & (h < F.col("max_loc"))
-            pi = F.lit(3.141592653589793)
-            t_before = v_trans + delta / 2.0 * F.cos(
-                F.try_divide(pi, HOURS_PER_DAY - span)
-                * (HOURS_PER_DAY - F.col("max_loc") + h)
-            )
-            t_between = v_trans + delta / 2.0 * F.cos(
-                1.25 * pi + F.try_divide(0.75 * pi, span) * (h - F.col("min_loc"))
-            )
-            t_after = v_trans + delta / 2.0 * F.cos(
-                F.try_divide(pi, HOURS_PER_DAY - span) * (h - F.col("max_loc"))
-            )
-            return (
-                F.when(before_min, t_before)
-                .when(between, t_between)
-                .otherwise(t_after)
-            )
-        return v_trans + delta / 2.0 * F.cos(
-            F.lit(2 * 3.141592653589793 / HOURS_PER_DAY) * (h - F.col("max_loc"))
-        )
-    # sine_mean (`temperature.py:172-176`)
-    dtr = F.col("max_val_cur") - F.col("min_val_cur")
-    return F.col("mean_val_cur") + dtr / 2.0 * F.cos(
-        F.lit(2 * 3.141592653589793 / HOURS_PER_DAY) * (h - F.col("max_loc"))
+            return sine_night_temp(minv, maxv, hour, min_loc, max_loc)
+        return sine_min_max_temp(minv, maxv, hour, max_loc)
+    mean, tmin, tmax = F.col("mean_val_cur"), F.col("min_val_cur"), F.col("max_val_cur")
+    return sine_mean_temp(mean, tmin, tmax, hour, max_loc)
+
+
+# -- per-hour formula builders: Columns in, Column out. A caller that
+# evaluates several timing policies over one hourly frame passes each
+# policy's (min_loc, max_loc) columns. --------------------------------
+
+
+def transition_vals(
+    hour: Column, min_loc: Column, max_loc: Column
+) -> tuple[Column, Column]:
+    """Smooth transitions (`temperature.py:127-137`): before the daily
+    max use today's min, after it next day's; before the daily min use
+    yesterday's max. Reads the neighbour extremes of
+    :func:`_neighbor_exprs` by name; returns (min_val, max_val)."""
+    min_val = F.when(hour < max_loc, F.col("min_val_cur")).otherwise(
+        F.col("min_val_next")
     )
+    max_val = F.when(hour < min_loc, F.col("max_val_before")).otherwise(
+        F.col("max_val_cur")
+    )
+    return min_val, max_val
+
+
+def sine_min_max_temp(
+    minv: Column, maxv: Column, hour: Column, max_loc: Column
+) -> Column:
+    """sine_min_max: one cosine through the day's extremes peaking at
+    ``max_loc`` (`temperature.py:141-143`)."""
+    h = hour.cast("double")
+    delta = maxv - minv
+    v_trans = minv + delta / 2.0
+    return v_trans + delta / 2.0 * F.cos(F.lit(2 * PI / HOURS_PER_DAY) * (h - max_loc))
+
+
+def sine_night_temp(
+    minv: Column, maxv: Column, hour: Column, min_loc: Column, max_loc: Column
+) -> Column:
+    """sine_min_max with ``mod_nighttime``: the three-piece cosine
+    (`temperature.py:145-167`)."""
+    h = hour.cast("double")
+    delta = maxv - minv
+    v_trans = minv + delta / 2.0
+    span = max_loc - min_loc
+    before_min = h <= min_loc
+    between = (h > min_loc) & (h < max_loc)
+    pi = F.lit(PI)
+    t_before = v_trans + delta / 2.0 * F.cos(
+        F.try_divide(pi, HOURS_PER_DAY - span) * (HOURS_PER_DAY - max_loc + h)
+    )
+    t_between = v_trans + delta / 2.0 * F.cos(
+        1.25 * pi + F.try_divide(0.75 * pi, span) * (h - min_loc)
+    )
+    t_after = v_trans + delta / 2.0 * F.cos(
+        F.try_divide(pi, HOURS_PER_DAY - span) * (h - max_loc)
+    )
+    return F.when(before_min, t_before).when(between, t_between).otherwise(t_after)
+
+
+def sine_mean_temp(
+    mean: Column, tmin: Column, tmax: Column, hour: Column, max_loc: Column
+) -> Column:
+    """sine_mean: the daily mean plus a cosine of half the diurnal
+    range peaking at ``max_loc`` (`temperature.py:172-176`)."""
+    h = hour.cast("double")
+    dtr = tmax - tmin
+    return mean + dtr / 2.0 * F.cos(F.lit(2 * PI / HOURS_PER_DAY) * (h - max_loc))
 
 
 def _polar_possible(stations: DataFrame) -> bool:

@@ -40,7 +40,8 @@ def disaggregate_wind(
 
     Returns (keys..., ts, wind).
     """
-    assert method in METHODS, "Invalid method"
+    if method not in METHODS:
+        raise ValueError("Invalid method")
     keys = list(keys)
 
     out = hourly_calendar(
@@ -50,7 +51,8 @@ def disaggregate_wind(
     if method == "equal":
         wind = F.col("wind")
     elif method == "cosine":
-        assert wind_params is not None, "wind_params (a, b, t_shift) required"
+        if wind_params is None:
+            raise ValueError("wind_params (a, b, t_shift) required")
         out = out.join(F.broadcast(wind_params), keys, "left")
         h = F.hour(ts_col).cast("double")
         wind = F.col("a") * F.col("wind") * F.cos(

@@ -117,7 +117,8 @@ class StationStatistics:
     def calc_radiation_stats(self, data_daily: DataFrame | None = None, how: str = "all"):
         """`stationstatistics.py:124-192`: mean course always; Angstroem
         and Bristow-Campbell fits per month-range when daily data given."""
-        assert how in MONTH_RANGES
+        if how not in MONTH_RANGES:
+            raise ValueError(f"invalid how {how!r}")
         self.glob_mean_course = mean_daily_course_by_month(self.data, "glob")
 
         if data_daily is None:

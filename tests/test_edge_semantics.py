@@ -1,14 +1,20 @@
 """Edge semantics called out in SURVEY.md §7.4: the 3-piece
 mod_nighttime cosine, the min_loc>max_loc fallback, and the humidity
-'minimal' method — each against exact reference math."""
+'minimal' method — each against exact reference math — plus the
+ValueError raised for missing caller parameters."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from melodist_spark.api import Stations
 from melodist_spark.operators.humidity import disaggregate_humidity
+from melodist_spark.operators.precipitation import disagg_prec
+from melodist_spark.operators.radiation import disaggregate_radiation
 from melodist_spark.operators.temperature import disaggregate_temperature
+from melodist_spark.operators.wind import disaggregate_wind
+from melodist_spark.statistics import StationStatistics
 
 
 def test_mod_nighttime_three_piece(met_daily):
@@ -111,3 +117,55 @@ def test_humidity_minimal_matches_formula(met_daily, met_hourly_pd, spark):
 
     exp = np.clip(100.0 * vp_sat(tdew) / vp_sat(temp), 0, 100)
     np.testing.assert_allclose(got["hum"].values, exp, atol=1e-9)
+
+
+
+FIX = {"method": "sine_min_max", "min_max_time": "fix"}
+MISSING_PARAM_CALLS = {
+    "humidity method": lambda d, st: disaggregate_humidity(d, method="bogus"),
+    "dewpoint_regression without hum_params": lambda d, st: disaggregate_humidity(
+        d, method="dewpoint_regression", temp_disagg=FIX
+    ),
+    "hourly_temp and temp_disagg": lambda d, st: disaggregate_humidity(
+        d, method="minimal", hourly_temp=d, temp_disagg=FIX
+    ),
+    "minimal without temperature": lambda d, st: disaggregate_humidity(
+        d, method="minimal"
+    ),
+    "min_max without hum_min": lambda d, st: disaggregate_humidity(
+        d.drop("hum_min"), method="min_max", temp_disagg=FIX
+    ),
+    "min_max without temperature": lambda d, st: disaggregate_humidity(
+        d, method="min_max"
+    ),
+    "month_hour_precip_mean without table": lambda d, st: disaggregate_humidity(
+        d, method="month_hour_precip_mean"
+    ),
+    "wind method": lambda d, st: disaggregate_wind(d, method="bogus"),
+    "cosine without wind_params": lambda d, st: disaggregate_wind(d, method="cosine"),
+    "sun_loc_shift without max_delta": lambda d, st: disaggregate_temperature(
+        d, min_max_time="sun_loc_shift", stations=st, polar=False
+    ),
+    "mean_course temperature without table": lambda d, st: disaggregate_temperature(
+        d, method="mean_course_min_max"
+    ),
+    "mean_course radiation without table": lambda d, st: disaggregate_radiation(
+        d, st, method="mean_course"
+    ),
+    "cascade without options": lambda d, st: disagg_prec(d, method="cascade"),
+    "Stations cascade without statistics": lambda d, st: Stations(
+        st, d
+    ).disaggregate_precipitation("cascade"),
+    "radiation stats how": lambda d, st: StationStatistics(
+        None, st
+    ).calc_radiation_stats(how="bogus"),
+}
+
+
+@pytest.mark.parametrize("case", MISSING_PARAM_CALLS)
+def test_missing_parameters_raise_value_error(case, met_daily, stations):
+    """Caller-input checks raise ValueError, so ``python -O`` (which
+    strips ``assert``) cannot turn them into a confusing later
+    failure."""
+    with pytest.raises(ValueError):
+        MISSING_PARAM_CALLS[case](met_daily, stations)

@@ -239,11 +239,10 @@ def test_min_max_flat_day_reference_semantics(spark):
 
 
 def test_q_humidity_variants_matches_public_ops(spark):
-    """The registry row's shared-scan restructure (round 13): one
-    fused sine-temperature chain (one neighbour window, one hourly
-    explode) emitting all three variant rows per hour — pins each
-    exploded branch row-identical (at the row's round-6 grain) to the
-    public ``disaggregate_humidity`` pipeline it bypasses."""
+    """The registry row (one fused sine-temperature chain, one hourly
+    explode emitting all three variant rows per hour) matches the
+    public ``disaggregate_humidity`` call of each branch at the row's
+    rounding."""
     import os
     import sys
 

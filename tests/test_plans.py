@@ -60,6 +60,31 @@ def test_registry_oracle_parity(qs):
     assert not dead, f"q_* functions unreachable from queries(): {dead}"
 
 
+def test_entry_owns_no_met_formula():
+    """The met formulas live in the library: registry rows compose the
+    operators' formula builders and never call the trigonometric or
+    exponential column functions themselves (checked without Spark)."""
+    import ast
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "__spark_entry__.py",
+    )
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    hits = sorted(
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and isinstance(n.func.value, ast.Name)
+        and n.func.value.id == "F"
+        and n.func.attr in ("cos", "sin", "exp")
+    )
+    assert not hits, f"F.cos/F.sin/F.exp called at lines {hits}"
+
+
 @pytest.mark.parametrize(
     "name,must,must_not",
     [

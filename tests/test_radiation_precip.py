@@ -201,12 +201,31 @@ def test_skill_scores(spark, met_hourly, met_daily, stations):
     assert (out2["nse"] < 1.0).all() and (out2["nse"] > 0.9).all()
 
 
+def test_angstroem_polar_night_is_zero(spark):
+    """The public Angstroem builder returns 0 on a polar-night day
+    (daylength 0) instead of dividing by zero, as pot_rad_via_ssd
+    does; a day with daylength 8 h gets (a + b·ssd/daylength)·prd."""
+    from melodist_spark import angstroem
+
+    df = spark.createDataFrame(
+        [(0, 3.0, 0.0, 250.0), (1, 4.0, 8.0, 300.0)],
+        "day int, ssd double, daylength double, prd double",
+    )
+    got = dict(
+        df.select(
+            "day",
+            angstroem(F.col("ssd"), F.col("daylength"), F.col("prd"), 0.25, 0.5),
+        ).collect()
+    )
+    assert got[0] == 0.0
+    assert got[1] == pytest.approx((0.25 + 0.5 * 4.0 / 8.0) * 300.0)
+
+
 def test_q_radiation_proxy_variants_matches_public_ops(spark):
-    """The registry row's shared-scan restructure (round 13): one
-    explode / one clear-sky evaluation / fused day windows emitting
-    all four method rows per hour — this pins each exploded branch
-    row-identical (at the row's own round-6 grain) to the public
-    ``disaggregate_radiation`` pipeline it bypasses."""
+    """The registry row (one explode, one clear-sky evaluation, fused
+    day windows emitting all four method rows per hour) matches the
+    public ``disaggregate_radiation`` call of each branch at the row's
+    rounding."""
     import os
     import sys
 
@@ -221,23 +240,8 @@ def test_q_radiation_proxy_variants_matches_public_ops(spark):
     q = entry.q_radiation_proxy_variants(spark, sf_dir)
     daily = entry._met_daily(spark, sf_dir)
     stations = entry._met_stations(daily)
-    # mean_course shape: month-hour glob means quantized to the dyadic
-    # 2^-20 grid, so the per-day window average is an exact double sum
-    # in any summation order
-    grid = 1048576.0
-    course = (
-        entry._met_hourly(spark, sf_dir)
-        .withColumn("__gd", F.col("glob").cast("decimal(20,10)"))
-        .groupBy(
-            "user_id", F.month("ts").alias("month"), F.hour("ts").alias("hour")
-        )
-        .agg(
-            (
-                F.floor((F.sum("__gd").cast("double") / F.count("*")) * grid)
-                / grid
-            ).alias("value")
-        )
-    )
+    # mean_course shape: the row's dyadic month-hour glob means
+    course = entry._dyadic_course(entry._met_hourly(spark, sf_dir), "glob")
 
     def snap(df):
         # negative-dT winter days yield NaN globs by design (the

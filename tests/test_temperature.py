@@ -259,11 +259,10 @@ def test_polar_kwarg_tristate(met_daily, stations, monkeypatch):
 
 
 def test_q_temp_sine_variants_matches_public_ops(spark):
-    """The registry row's shared-scan restructure (round 13): one
-    neighbour-value window / one sun tree / one hourly explode
-    emitting all four method rows per hour — pins each exploded
-    branch row-identical (at the row's round-6 grain) to the public
-    ``disaggregate_temperature`` pipeline it bypasses."""
+    """The registry row (one neighbour window, one sun tree, one
+    hourly explode emitting all four method rows per hour) matches
+    the public ``disaggregate_temperature`` call of each branch at the
+    row's rounding."""
     import os
     import sys
 
@@ -274,32 +273,12 @@ def test_q_temp_sine_variants_matches_public_ops(spark):
     )
     import __spark_entry__ as entry
 
-    from melodist_spark.functions.solar import sun_times_exprs
-
     sf_dir = "/root/testdata/sf0.001"
     q = entry.q_temp_sine_variants(spark, sf_dir)
     daily = entry._met_daily(spark, sf_dir)
     stations = entry._met_stations(daily)
-    # sun_loc_shift calibration: the monthly mean offset of the
-    # observed warmest hour (latest hour on ties) from solar noon
-    m = entry._met_hourly(spark, sf_dir)
-    daily_max = m.groupBy("user_id", F.to_date("ts").alias("date")).agg(
-        F.max("temp").alias("tmax_h")
-    )
-    at_max = (
-        m.withColumn("date", F.to_date("ts"))
-        .join(daily_max, ["user_id", "date"])
-        .filter(F.col("temp") == F.col("tmax_h"))
-        .groupBy("user_id", "date")
-        .agg(F.max(F.hour("ts")).alias("max_hour"))
-    )
-    st = sun_times_exprs("date", entry.LON, entry.LAT, entry.TZ)
-    max_delta = (
-        at_max.withColumn("sunnoon", st["sunnoon"])
-        .withColumn("delta", F.col("max_hour") - F.col("sunnoon"))
-        .groupBy("user_id", F.month("date").alias("month"))
-        .agg(F.avg("delta").alias("max_delta"))
-    )
+    # the row's sun_loc_shift calibration (latest warmest hour on ties)
+    max_delta = entry._met_max_delta(spark, sf_dir)
 
     def snap(df):
         def norm(v):
