@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..util.execution import pin_partitions
+from ..util.execution import key_schema, pin_partitions
 
 #: class boundaries of the weight histogram (`precipitation.py:143`)
 WCLASSBOUNDS = np.array([0.0, 0.1429, 0.2857, 0.4286, 0.5714, 0.7143, 0.8571, 1.0])
@@ -121,28 +121,28 @@ class CascadeStatistics:
             percentile=self.percentile,
         )
 
-    @classmethod
-    def from_dict(cls, d: dict) -> "CascadeStatistics":
-        casc = cls()
-        casc.p01 = np.array(d["p01"])
-        casc.p10 = np.array(d["p10"])
-        casc.pxx = np.array(d["pxx"])
-        casc.wxx = np.array(d["wxx"])
-        casc.threshold = np.array(d["threshold"])
-        casc.percentile = d["percentile"]
-        assert casc.p01.shape == (2, 4)
-        assert casc.wxx.shape == (7, 2, 4)
-        return casc
-
-    def __eq__(self, other):
-        return (
-            np.array_equal(self.p01, other.p01)
-            and np.array_equal(self.p10, other.p10)
-            and np.array_equal(self.pxx, other.pxx)
-            and np.array_equal(self.wxx, other.wxx)
-            and np.array_equal(self.threshold, other.threshold)
-            and self.percentile == other.percentile
+    def to_row(self) -> dict:
+        """The flat :func:`build_casc` row layout: raveled arrays."""
+        return dict(
+            p01=self.p01.ravel().tolist(),
+            p10=self.p10.ravel().tolist(),
+            pxx=self.pxx.ravel().tolist(),
+            wxx=self.wxx.ravel().tolist(),
+            threshold=np.asarray(self.threshold).ravel().tolist(),
+            percentile=float(self.percentile),
         )
+
+    @classmethod
+    def from_row(cls, r) -> "CascadeStatistics":
+        """Inverse of :meth:`to_row`; ``r`` is a dict, Row or struct."""
+        s = cls()
+        s.p01 = np.array(r["p01"]).reshape(2, 4)
+        s.p10 = np.array(r["p10"]).reshape(2, 4)
+        s.pxx = np.array(r["pxx"]).reshape(2, 4)
+        s.wxx = np.array(r["wxx"]).reshape(7, 2, 4)
+        s.threshold = np.array(r["threshold"])
+        s.percentile = r["percentile"]
+        return s
 
 
 def _box_types(x: np.ndarray) -> np.ndarray:
@@ -275,38 +275,54 @@ def build_casc_values(
 
 
 # ---------------------------------------------------------------------------
-# Spark-facing calibration
+# Spark-facing kernels
 # ---------------------------------------------------------------------------
 
-def _key_schema(df: DataFrame, keys: list[str]) -> str:
-    """Schema fragment matching the key columns' actual types."""
-    types = dict(df.dtypes)
-    return ", ".join(f"{k} {types[k]}" for k in keys)
+_STATS_SCHEMA = (
+    ", season int, level int, p01 array<double>, p10 array<double>, "
+    "pxx array<double>, wxx array<double>, threshold array<double>, "
+    "percentile double"
+)
 
 
-def _stats_schema(df: DataFrame, keys: list[str]) -> str:
-    return (
-        _key_schema(df, keys)
-        + ", season int, level int, p01 array<double>, p10 array<double>, "
-        "pxx array<double>, wxx array<double>, threshold array<double>, "
-        "percentile double"
-    )
+def _station_slices(pdf: pd.DataFrame, keys: list[str], order: str):
+    """Sort ``pdf`` by (keys, order) and find each station's rows.
+
+    Returns the sorted frame, the key columns as arrays and one
+    ``(start, end)`` row range per station. One sort plus numpy
+    boundary detection on the FULL key tuple (``keys[0]`` alone would
+    merge stations sharing the first component): pandas ``groupby``
+    sub-frames per station dominated the kernel wall time on short
+    series, where the cascade math itself is ~20% of it.
+    """
+    pdf = pdf.sort_values([*keys, order], kind="mergesort")
+    karrs = [pdf[k].to_numpy() for k in keys]
+    n = len(pdf)
+    change = np.zeros(n, dtype=bool)
+    change[0] = True
+    for a in karrs:
+        change[1:] |= a[1:] != a[:-1]
+    starts = np.flatnonzero(change)
+    return pdf, karrs, list(zip(starts, np.r_[starts[1:], n]))
 
 
-def _default_buckets(df: DataFrame) -> int:
-    """Default: 0 = direct ``groupBy(keys)`` grouped-map.
+def _grouped(df: DataFrame, keys: list[str], station_buckets: int):
+    """What a station-slicing kernel groups by.
 
-    Measured crossover (local[32]): with long per-station series
-    (≥ ~1000 rows/station — the cluster-scale regime) direct grouping
-    is 4–8× faster than hash-bucketing, because the input's existing
-    station partitioning is reused (no extra exchange) and Spark's
-    grouped-map handles many small groups efficiently. Bucketing
-    (``station_buckets > 0``) wins only on tiny-group corpora (tens of
-    rows per station, e.g. short test extracts), where it amortizes
-    the per-group Python-worker round-trip across stations — callers
-    in that regime should pass an explicit bucket count of roughly
-    ``n_stations / 20``."""
-    return 0
+    ``0`` groups by ``keys`` unpinned, reusing the input's existing
+    station partitioning (a bucketed scan skips its exchange). ``> 0``
+    hash-buckets stations into that many groups behind an explicit
+    REPARTITION_BY_NUM exchange, which AQE may not coalesce onto one
+    task; each group then holds many stations, amortizing the
+    per-group Arrow and pandas costs of tiny series. Results are
+    per-station, so they do not depend on the choice.
+    """
+    if station_buckets and station_buckets > 0:
+        bucket = F.pmod(F.xxhash64(*keys), F.lit(station_buckets))
+        return pin_partitions(
+            df.withColumn("__bucket", bucket), ["__bucket"], n=station_buckets
+        ).groupBy("__bucket")
+    return df.groupBy(*keys)
 
 
 def build_casc(
@@ -319,132 +335,76 @@ def build_casc(
     keys: list[str] = ("station_id",),
     ts_col: str = "ts",
     precip_col: str = "precip",
-    station_buckets: int | None = None,
+    station_buckets: int = 0,
 ) -> DataFrame:
     """Distributed cascade calibration.
 
-    Default is a direct ``groupBy(keys)`` grouped-map — reuses any
-    existing station partitioning and is the fast path for
-    cluster-scale series (see :func:`_default_buckets`). With
-    ``station_buckets > 0`` stations are instead hash-bucketed into
-    that many tasks (kernel loops stations inside — amortizes
-    Arrow/pandas fixed costs on tiny-group corpora; results are
-    per-station and bucket-invariant). Seasons are
-    month subsets as in `precipitation.py:631-702`. Output rows carry
-    the flattened statistics arrays; ``level = -1`` marks the averaged
-    statistics (``avg_stats=True``), otherwise one row per level.
-    The result DataFrame feeds :func:`disagg_prec_cascade` directly
-    (stats join, nothing on the driver); :func:`collect_cascade_stats`
-    remains for the small-fleet broadcast-dict path.
+    One grouped-map kernel per season runs :func:`build_casc_values`
+    over each station's time-ordered series; ``station_buckets`` only
+    sets what it groups by (see :func:`_grouped`). Values are paired
+    by position, so the series must have a row (null for a gap) at
+    every step; ``StationStatistics.calc_precipitation_stats`` fills
+    absent hours before calling this. Seasons are month subsets as in
+    `precipitation.py:631-702`. Output rows carry the flattened
+    statistics arrays (:meth:`CascadeStatistics.to_row`); ``level =
+    -1`` marks the averaged statistics (``avg_stats=True``), otherwise
+    one row per level. The result DataFrame feeds
+    :func:`disagg_prec_cascade` directly (stats join, nothing on the
+    driver).
     """
     keys = list(keys)
-    if station_buckets is None:
-        station_buckets = _default_buckets(hourly_df)
     if months is None:
         months = [list(range(1, 13))]
-    schema = _stats_schema(hourly_df, keys)
+    schema = key_schema(hourly_df, keys) + _STATS_SCHEMA
 
-    parts = []
+    def kernel(season_idx: int):
+        def fit(pdf: pd.DataFrame) -> pd.DataFrame:
+            pdf, karrs, slices = _station_slices(pdf, keys, ts_col)
+            precip = pdf[precip_col].to_numpy()
+            rows = []
+            for s0, s1 in slices:
+                avg, per_level = build_casc_values(
+                    precip[s0:s1], hourly=hourly, level=level, percentile=percentile
+                )
+                keyvals = {k: a[s0] for k, a in zip(keys, karrs)}
+                entries = [(-1, avg)] if avg_stats else enumerate(per_level)
+                rows += [
+                    dict(keyvals, season=season_idx, level=lvl, **s.to_row())
+                    for lvl, s in entries
+                ]
+            return pd.DataFrame(rows)
+
+        return fit
+
+    out = None
     for season_idx, season_months in enumerate(months):
         sub = hourly_df.filter(F.month(ts_col).isin(list(season_months))).select(
             *keys, ts_col, precip_col
         )
-
-        def make_fit(season_idx=season_idx):
-            def fit_one(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values(ts_col)
-                x = pdf[precip_col].to_numpy()
-                avg, per_level = build_casc_values(
-                    x, hourly=hourly, level=level, percentile=percentile
-                )
-                rows = []
-                keyvals = {k: pdf[k].iloc[0] for k in keys}
-                if avg_stats:
-                    entries = [(-1, avg)]
-                else:
-                    entries = list(enumerate(per_level))
-                for lvl, s in entries:
-                    rows.append(
-                        dict(
-                            **keyvals,
-                            season=season_idx,
-                            level=lvl,
-                            p01=s.p01.ravel().tolist(),
-                            p10=s.p10.ravel().tolist(),
-                            pxx=s.pxx.ravel().tolist(),
-                            wxx=s.wxx.ravel().tolist(),
-                            threshold=np.asarray(s.threshold).ravel().tolist(),
-                            percentile=float(percentile),
-                        )
-                    )
-                return pd.DataFrame(rows)
-
-            def fit_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-                # group by the FULL key tuple — grouping by keys[0]
-                # alone would silently merge distinct stations that
-                # share the first key component
-                return pd.concat(
-                    [fit_one(g) for _, g in pdf.groupby(keys, sort=True)],
-                    ignore_index=True,
-                )
-
-            return fit_one, fit_bucket
-
-        fit_one, fit_bucket = make_fit()
-        if station_buckets and station_buckets > 0:
-
-            def debucketed(f):
-                # NB: must stay a 1-arg callable — a default-arg capture
-                # would make pyspark pass (key, pdf) instead
-                def run(pdf: pd.DataFrame) -> pd.DataFrame:
-                    return f(pdf.drop(columns="__bucket"))
-
-                return run
-
-            bucket = F.pmod(F.xxhash64(*keys), F.lit(station_buckets))
-            parts.append(
-                pin_partitions(
-                    sub.withColumn("__bucket", bucket),
-                    ["__bucket"],
-                    n=station_buckets,
-                )
-                .groupBy("__bucket")
-                .applyInPandas(debucketed(fit_bucket), schema=schema)
-            )
-        else:
-            # direct path: unpinned on purpose (reuses existing station
-            # partitioning, e.g. bucketed scans — see disagg_prec_cascade)
-            parts.append(sub.groupBy(*keys).applyInPandas(fit_one, schema=schema))
-
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+        part = _grouped(sub, keys, station_buckets).applyInPandas(
+            kernel(season_idx), schema=schema
+        )
+        out = part if out is None else out.unionByName(part)
     return out
+
+
+def _stats_from_rows(rows) -> "CascadeStatistics | list[CascadeStatistics]":
+    """Rebuild CascadeStatistics from one station-season's build_casc
+    rows: the averaged statistics, or the per-level list."""
+    rows = sorted(rows, key=lambda r: r["level"])
+    if len(rows) == 1 and rows[0]["level"] == -1:
+        return CascadeStatistics.from_row(rows[0])
+    return [CascadeStatistics.from_row(r) for r in rows]
 
 
 def collect_cascade_stats(stats_df: DataFrame, key_col: str = "station_id") -> dict:
     """Collect a ``build_casc`` result into
     ``{(station_id, season): CascadeStatistics | [CascadeStatistics]}``
-    for broadcasting into the disaggregation kernel."""
-    rows = stats_df.collect()
-    out: dict = {}
-    per_level: dict = {}
-    for r in rows:
-        s = CascadeStatistics()
-        s.p01 = np.array(r["p01"]).reshape(2, 4)
-        s.p10 = np.array(r["p10"]).reshape(2, 4)
-        s.pxx = np.array(r["pxx"]).reshape(2, 4)
-        s.wxx = np.array(r["wxx"]).reshape(7, 2, 4)
-        s.threshold = np.array(r["threshold"])
-        s.percentile = r["percentile"]
-        key = (r[key_col], r["season"])
-        if r["level"] == -1:
-            out[key] = s
-        else:
-            per_level.setdefault(key, {})[r["level"]] = s
-    for key, lv in per_level.items():
-        out[key] = [lv[i] for i in sorted(lv)]
-    return out
+    for inspection on the driver."""
+    by_key: dict = {}
+    for r in stats_df.collect():
+        by_key.setdefault((r[key_col], r["season"]), []).append(r)
+    return {k: _stats_from_rows(rows) for k, rows in by_key.items()}
 
 
 # ---------------------------------------------------------------------------
@@ -545,26 +505,6 @@ def _station_seed(station_id, seed: int) -> int:
     return (zlib.crc32(str(station_id).encode()) ^ seed) & 0xFFFFFFFF
 
 
-def _stats_from_rows(rows) -> "CascadeStatistics | list[CascadeStatistics]":
-    """Rebuild CascadeStatistics from build_casc stats rows (dict-like
-    structs carried per group through the stats join)."""
-
-    def mk(r):
-        s = CascadeStatistics()
-        s.p01 = np.array(r["p01"]).reshape(2, 4)
-        s.p10 = np.array(r["p10"]).reshape(2, 4)
-        s.pxx = np.array(r["pxx"]).reshape(2, 4)
-        s.wxx = np.array(r["wxx"]).reshape(7, 2, 4)
-        s.threshold = np.array(r["threshold"])
-        s.percentile = r["percentile"]
-        return s
-
-    rows = sorted(rows, key=lambda r: r["level"])
-    if len(rows) == 1 and rows[0]["level"] == -1:
-        return mk(rows[0])
-    return [mk(r) for r in rows]
-
-
 def disagg_prec_cascade(
     daily: DataFrame,
     cascade_options,
@@ -576,7 +516,7 @@ def disagg_prec_cascade(
     date_col: str = "date",
     ts_col: str = "ts",
     season: int = 0,
-    station_buckets: int | None = None,
+    station_buckets: int = 0,
     emit: str = "steps",
 ) -> DataFrame:
     """Distributed cascade disaggregation.
@@ -584,26 +524,22 @@ def disagg_prec_cascade(
     ``cascade_options`` may be:
 
     - the **DataFrame returned by** :func:`build_casc` — the scale
-      path: the per-station statistics are joined into the kernel
-      input as columns (co-partitioned with the subsequent grouping),
-      so the driver never materializes the fleet's statistics;
+      path: each station's ``season`` statistics are joined into the
+      kernel input as one column, so the driver never materializes the
+      fleet's statistics;
     - a single :class:`CascadeStatistics` (or per-level list) applied
-      to every station — broadcast;
-    - the dict from :func:`collect_cascade_stats` keyed
-      ``(station_id, season)`` — broadcast; fine to ~10⁵ stations,
-      driver-memory-bound beyond that (prefer the DataFrame form).
+      to every station. It is a few hundred doubles and rides in the
+      kernel's closure.
 
     Missing daily values are zeroed before and restored to null after
     (`precipitation.py:96-99`, `313-315`); ``shift`` relabels the
     result by N steps (`precipitation.py:317-319`).
 
-    Default is a direct ``groupBy(keys)`` grouped-map (the
-    cluster-scale fast path, see :func:`_default_buckets`). With
-    ``station_buckets > 0`` stations are hash-bucketed and looped
-    inside the kernel: per-group Arrow + pandas fixed costs dominate
-    when station series are short (a 2× win measured at 1500 stations
-    × 30 days), and per-station seeding keeps results identical for
-    any bucket count.
+    One grouped-map kernel loops the stations of its group, each
+    seeded by its own id, so results are identical for any grouping;
+    ``station_buckets`` only sets what it groups by (see
+    :func:`_grouped`). Bucketing wins when station series are short (a
+    2× win measured at 1500 stations × 30 days).
 
     ``emit='steps'`` (default) returns (keys..., ts, precip) at hourly
     or 5-minute resolution. ``emit='daily'`` runs the same stochastic
@@ -621,40 +557,27 @@ def disagg_prec_cascade(
         # a shifted grid moves mass across day boundaries; daily totals
         # would no longer be the input totals — refuse rather than lie
         raise ValueError("emit='daily' requires shift=0")
+    stats_in_col = isinstance(cascade_options, DataFrame)
+    if not stats_in_col and not isinstance(cascade_options, (CascadeStatistics, list)):
+        raise TypeError(
+            "cascade_options must be a build_casc DataFrame, a "
+            f"CascadeStatistics or a per-level list, got {type(cascade_options)}"
+        )
+    # the kernel must not close over a DataFrame (unpicklable)
+    fleet_opts = None if stats_in_col else cascade_options
     keys = list(keys)
-    spark = daily.sparkSession
-    if station_buckets is None:
-        station_buckets = _default_buckets(daily)
-    stats_df = cascade_options if isinstance(cascade_options, DataFrame) else None
-    bc = (
-        None
-        if stats_df is not None
-        else spark.sparkContext.broadcast(cascade_options)
-    )
     out_step_us = 3_600_000_000 if hourly else 300_000_000
     steps_per_day = 24 if hourly else 288
     box_step_us = LEVEL11_STEP_US * (2 ** (11 - level))
     boxes_per_day = 2**level
 
     if emit == "daily":
-        schema = _key_schema(daily, keys) + f", {date_col} date, n_steps long, precip double"
+        schema = key_schema(daily, keys) + f", {date_col} date, n_steps long, precip double"
     else:
-        schema = _key_schema(daily, keys) + f", {ts_col} timestamp, precip double"
-
-    # the kernel must not close over the DataFrame itself (unpicklable)
-    stats_in_col = stats_df is not None
-
-    def _opts_for(sid, stats_cell):
-        if stats_in_col:
-            return _stats_from_rows(stats_cell)
-        opts = bc.value
-        if isinstance(opts, dict):
-            opts = opts[(sid, season)]
-        return opts
+        schema = key_schema(daily, keys) + f", {ts_col} timestamp, precip double"
 
     def disagg_core(sid, opts, x_raw, dates):
-        """Arrays in (date-sorted), (ts, vals) out — shared by the
-        per-group path and the numpy-sliced bucket path."""
+        """One station's date-sorted arrays in, (ts, vals) out."""
         missing = np.isnan(x_raw)
         x = np.nan_to_num(x_raw, nan=0.0)
 
@@ -699,28 +622,39 @@ def disagg_prec_cascade(
         ts = (dates[:, None] + offs[None, :]).ravel()
         return ts, vals
 
-    def disagg_one(sid, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(date_col)
-        opts = _opts_for(sid, pdf["__stats"].iloc[0] if stats_in_col else None)
-        dates = pd.to_datetime(pdf[date_col]).to_numpy().astype("datetime64[us]")
-        ts, vals = disagg_core(
-            sid, opts, pdf["precip"].to_numpy(dtype=float), dates
-        )
-        res = {k: np.repeat(pdf[k].iloc[0], len(vals)) for k in keys}
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf, karrs, slices = _station_slices(pdf, keys, date_col)
+        precip = pdf["precip"].to_numpy(dtype=float)
+        date_np = pd.to_datetime(pdf[date_col]).to_numpy().astype("datetime64[us]")
+        stats_np = pdf["__stats"].to_numpy() if stats_in_col else None
+
+        key_parts = [[] for _ in keys]
+        ts_parts, val_parts = [], []
+        for s0, s1 in slices:
+            sid = karrs[0][s0] if len(keys) == 1 else tuple(a[s0] for a in karrs)
+            opts = _stats_from_rows(stats_np[s0]) if stats_in_col else fleet_opts
+            ts, vals = disagg_core(sid, opts, precip[s0:s1], date_np[s0:s1])
+            for i, a in enumerate(karrs):
+                key_parts[i].append(np.repeat(a[s0], len(vals)))
+            ts_parts.append(ts)
+            val_parts.append(vals)
+        res = {k: np.concatenate(key_parts[i]) for i, k in enumerate(keys)}
         if emit == "daily":
+            # stations are contiguous in the sorted frame, so the
+            # concatenated per-station day rows line up with pdf's
             res[date_col] = pdf[date_col].to_numpy()
-            res["n_steps"] = np.full(len(vals), steps_per_day, dtype=np.int64)
+            res["n_steps"] = np.full(len(pdf), steps_per_day, dtype=np.int64)
         else:
-            res[ts_col] = ts
-        res["precip"] = vals
+            res[ts_col] = np.concatenate(ts_parts)
+        res["precip"] = np.concatenate(val_parts)
         return pd.DataFrame(res)
 
     selected = daily.select(*keys, date_col, "precip")
-    if stats_df is not None:
+    if stats_in_col:
         # one struct-array column per station, joined on the same keys
-        # the grouped-map shuffles on — no driver materialization
+        # the grouped map shuffles on — no driver materialization
         per_station = (
-            stats_df.filter(F.col("season") == F.lit(season))
+            cascade_options.filter(F.col("season") == F.lit(season))
             .groupBy(*keys)
             .agg(
                 F.sort_array(
@@ -734,84 +668,4 @@ def disagg_prec_cascade(
             )
         )
         selected = selected.join(per_station, keys)
-
-    def group_key(pdf: pd.DataFrame):
-        # full key tuple — keys[0] alone would merge distinct stations
-        # sharing the first component (and mis-key seed/stats lookups)
-        if len(keys) == 1:
-            return pdf[keys[0]].iloc[0]
-        return tuple(pdf[k].iloc[0] for k in keys)
-
-    if station_buckets and station_buckets > 0:
-
-        def disagg_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            # ONE sort + numpy boundary slicing + ONE output frame per
-            # bucket: pandas groupby materializing ~25-row sub-frames
-            # and per-station DataFrames dominated the kernel wall time
-            # (the cascade math itself is ~20% of it)
-            pdf = pdf.sort_values([*keys, date_col], kind="mergesort")
-            karrs = [pdf[k].to_numpy() for k in keys]
-            n = len(pdf)
-            change = np.zeros(n, dtype=bool)
-            change[0] = True
-            for a in karrs:
-                change[1:] |= a[1:] != a[:-1]
-            starts = np.flatnonzero(change)
-            ends = np.r_[starts[1:], n]
-
-            precip = pdf["precip"].to_numpy(dtype=float)
-            date_np = (
-                pd.to_datetime(pdf[date_col]).to_numpy().astype("datetime64[us]")
-            )
-            stats_np = pdf["__stats"].to_numpy() if stats_in_col else None
-
-            key_parts = [[] for _ in keys]
-            ts_parts, val_parts = [], []
-            for s0, s1 in zip(starts, ends):
-                sid = (
-                    karrs[0][s0]
-                    if len(keys) == 1
-                    else tuple(a[s0] for a in karrs)
-                )
-                opts = _opts_for(
-                    sid, stats_np[s0] if stats_in_col else None
-                )
-                ts, vals = disagg_core(
-                    sid, opts, precip[s0:s1], date_np[s0:s1]
-                )
-                for i, a in enumerate(karrs):
-                    key_parts[i].append(np.repeat(a[s0], len(vals)))
-                ts_parts.append(ts)
-                val_parts.append(vals)
-            res = {
-                k: np.concatenate(key_parts[i]) for i, k in enumerate(keys)
-            }
-            if emit == "daily":
-                # groups are contiguous in the sorted frame, so the
-                # concatenated per-group day rows line up with pdf's
-                res[date_col] = pdf[date_col].to_numpy()
-                res["n_steps"] = np.full(n, steps_per_day, dtype=np.int64)
-            else:
-                res[ts_col] = np.concatenate(ts_parts)
-            res["precip"] = np.concatenate(val_parts)
-            return pd.DataFrame(res)
-
-        bucket = F.pmod(F.xxhash64(*keys), F.lit(station_buckets))
-        return (
-            pin_partitions(
-                selected.withColumn("__bucket", bucket),
-                ["__bucket"],
-                n=station_buckets,
-            )
-            .groupBy("__bucket")
-            .applyInPandas(lambda pdf: disagg_bucket(pdf.drop(columns="__bucket")), schema=schema)
-        )
-
-    def disagg(pdf: pd.DataFrame) -> pd.DataFrame:
-        return disagg_one(group_key(pdf), pdf)
-
-    # direct path: NO pin — the point of station_buckets=0 is reusing
-    # the table's existing station partitioning (bucketed scans skip
-    # their exchange entirely); tiny-group corpora where AQE would
-    # coalesce-and-serialize belong on the pinned bucket path above
-    return selected.groupBy(*keys).applyInPandas(disagg, schema=schema)
+    return _grouped(selected, keys, station_buckets).applyInPandas(kernel, schema=schema)

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from melodist_spark.functions.solar import potential_radiation, sun_times_exprs
 from melodist_spark.util.calendar import hourly_calendar
+from melodist_spark.util.execution import key_schema, pin_partitions
 
 METHODS = ("pot_rad", "pot_rad_via_ssd", "pot_rad_via_bc", "mean_course")
 
@@ -252,7 +253,6 @@ def fit_bristow_campbell_params(
     daily: DataFrame,
     keys: list[str] = ("station_id",),
     date_col: str = "date",
-    pin: bool = True,
 ) -> DataFrame:
     """Fit Bristow-Campbell (A, C) by minimizing |mean bias|.
 
@@ -265,8 +265,7 @@ def fit_bristow_campbell_params(
     from melodist_spark.util.optimize import minimize2
 
     keys = list(keys)
-    types = dict(daily.dtypes)
-    schema = ", ".join(f"{k} {types[k]}" for k in keys) + ", a double, c double"
+    schema = key_schema(daily, keys) + ", a double, c double"
 
     prepared = (
         daily.select(*keys, date_col, "tmin", "tmax", "pot_rad_daily", "obs_rad_daily")
@@ -297,7 +296,4 @@ def fit_bristow_campbell_params(
         out.update(a=[float(x[0])], c=[float(x[1])])
         return pd.DataFrame(out)
 
-    from ..util.execution import pin_partitions
-
-    grouped = pin_partitions(prepared, keys) if pin else prepared
-    return grouped.groupBy(*keys).applyInPandas(fit, schema=schema)
+    return pin_partitions(prepared, keys).groupBy(*keys).applyInPandas(fit, schema=schema)

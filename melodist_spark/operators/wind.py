@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from melodist_spark.util.calendar import hourly_calendar
+from melodist_spark.util.execution import key_schema, pin_partitions
 
 PI = 3.141592653589793
 
@@ -69,7 +70,6 @@ def fit_cosine_function(
     keys: list[str] = ("station_id",),
     ts_col: str = "ts",
     wind_col: str = "wind",
-    pin: bool = True,
 ) -> DataFrame:
     """Fit (a, b, t_shift) of the diurnal cosine per station.
 
@@ -93,11 +93,7 @@ def fit_cosine_function(
         .na.drop(subset=[wind_col, "daily_mean"])
     )
 
-    types = dict(hourly.dtypes)
-    schema = (
-        ", ".join(f"{k} {types[k]}" for k in keys)
-        + ", a double, b double, t_shift double"
-    )
+    schema = key_schema(hourly, keys) + ", a double, b double, t_shift double"
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
         m = pdf["daily_mean"].to_numpy()
@@ -112,7 +108,4 @@ def fit_cosine_function(
         res.update(a=[a], b=[float(b)], t_shift=[t_shift])
         return pd.DataFrame(res)
 
-    from ..util.execution import pin_partitions
-
-    grouped = pin_partitions(prepared, keys) if pin else prepared
-    return grouped.groupBy(*keys).applyInPandas(fit, schema=schema)
+    return pin_partitions(prepared, keys).groupBy(*keys).applyInPandas(fit, schema=schema)

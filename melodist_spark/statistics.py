@@ -40,6 +40,7 @@ from melodist_spark.operators.radiation import (
 )
 from melodist_spark.operators.temperature import get_shift_by_data
 from melodist_spark.operators.wind import fit_cosine_function
+from melodist_spark.util.calendar import fill_hourly_calendar
 from melodist_spark.util.execution import local_frame
 
 MONTH_RANGES = {
@@ -105,12 +106,15 @@ class StationStatistics:
     def calc_precipitation_stats(
         self, months=None, avg_stats: bool = True, percentile: float = 50
     ):
-        """`stationstatistics.py:75-94`."""
+        """`stationstatistics.py:75-94`. The cascade pairs hours by
+        position, so absent hours are filled with nulls first: a missing
+        row then counts as the dry hour a null one does."""
         if months is None:
             months = MONTH_RANGES["all"]
         self.precip_months = [list(m) for m in months]
+        hourly = fill_hourly_calendar(self.data.select("station_id", "ts", "precip"))
         self.precip_stats = build_casc(
-            self.data, months=months, avg_stats=avg_stats, percentile=percentile
+            hourly, months=months, avg_stats=avg_stats, percentile=percentile
         )
         return self
 

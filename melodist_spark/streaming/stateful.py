@@ -6,10 +6,12 @@ The batch sine kernel (`operators/temperature.py`, reference
 and the PREVIOUS day's tmax (pre-dawn branch) — a lead/lag window in
 batch. On an unbounded stream of daily observations that window
 becomes per-station state: each day is buffered until its successor
-arrives, then emitted as 24 hourly rows. ``applyInPandasWithState``
-keeps the state per station on the shuffle-partitioned executors, so
-a fleet of millions of stations holds ~5 doubles each — no driver
-involvement, no global sort.
+arrives, then emitted as one row carrying its neighbour extremes.
+``applyInPandasWithState`` keeps the state per station on the
+shuffle-partitioned executors, so a fleet of millions of stations
+holds ~5 doubles each — no driver involvement, no global sort. The
+day rows then expand to hours through the batch calendar and sine
+builders, so the formula has one implementation.
 
 Semantics match ``disaggregate_temperature(method='sine_min_max',
 min_max_time='fix')`` exactly:
@@ -28,7 +30,7 @@ min_max_time='fix')`` exactly:
 
 from __future__ import annotations
 
-import math
+import datetime
 from typing import Any, Iterator, Tuple
 
 import numpy as np
@@ -37,38 +39,16 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import DateType, DoubleType, IntegerType, StructField, StructType
+
+from melodist_spark.operators.temperature import sine_min_max_temp, transition_vals
+from melodist_spark.util.calendar import hourly_calendar
 
 MIN_LOC_FIX = 7
 MAX_LOC_FIX = 14
 
-
-def _sine_day(
-    epoch_day: int,
-    tmin_cur: float,
-    tmax_cur: float,
-    tmax_before: float,
-    tmin_next: float,
-) -> pd.DataFrame:
-    """24 hourly sine values for one day (numpy mirror of the batch
-    column expressions; property-tested equal to the batch plan)."""
-    hours = np.arange(24)
-    minv = np.where(hours < MAX_LOC_FIX, tmin_cur, tmin_next)
-    maxv = np.where(hours < MIN_LOC_FIX, tmax_before, tmax_cur)
-    delta = maxv - minv
-    temp = minv + delta / 2.0 + delta / 2.0 * np.cos(
-        2.0 * math.pi / 24.0 * (hours - MAX_LOC_FIX)
-    )
-    base = pd.Timestamp(epoch_day, unit="D")
-    return pd.DataFrame(
-        {"ts": base + pd.to_timedelta(hours, unit="h"), "temp": temp}
-    )
+_EPOCH = datetime.date(1970, 1, 1)
+_DAY_COLS = ["date", "min_val_cur", "max_val_cur", "max_val_before", "min_val_next"]
 
 
 def _emit(
@@ -76,12 +56,22 @@ def _emit(
     keys: list[str],
     pend: Tuple[int, float, float, float],
     tmin_next: float,
-) -> pd.DataFrame:
+) -> dict:
+    """The day row of the buffered day ``pend`` once its next-day tmin
+    is known: the neighbour extremes the batch window would give it."""
     day, tmin_cur, tmax_cur, tmax_before = pend
-    out = _sine_day(day, tmin_cur, tmax_cur, tmax_before, tmin_next)
-    for k, v in zip(keys, key):
-        out[k] = v
-    return out[[*keys, "ts", "temp"]]
+    vals = (_EPOCH + datetime.timedelta(days=day), tmin_cur, tmax_cur, tmax_before, tmin_next)
+    return {**dict(zip(keys, key)), **dict(zip(_DAY_COLS, vals))}
+
+
+def _hourly(days: DataFrame, keys: list[str]) -> DataFrame:
+    """24 hourly rows per day row: the batch sine_min_max builders with
+    the fixed 7 h / 14 h extremes."""
+    hourly = hourly_calendar(days).withColumn("hour", F.hour("ts"))
+    hour, min_loc, max_loc = F.col("hour"), F.lit(MIN_LOC_FIX), F.lit(MAX_LOC_FIX)
+    minv, maxv = transition_vals(hour, min_loc, max_loc)
+    temp = sine_min_max_temp(minv, maxv, hour, max_loc)
+    return hourly.select(*keys, "ts", temp.alias("temp"))
 
 
 def streaming_disaggregate_temperature(
@@ -126,10 +116,9 @@ def streaming_disaggregate_temperature(
         raise ValueError("set at most one of idle_flush / flush_after")
     keys = list(keys)
     key_fields = [daily_stream.schema[k] for k in keys]
-    out_schema = StructType(
-        [*key_fields,
-         StructField("ts", TimestampType()),
-         StructField("temp", DoubleType())]
+    day_schema = StructType(
+        [*key_fields, StructField("date", DateType())]
+        + [StructField(c, DoubleType()) for c in _DAY_COLS[1:]]
     )
     # (pend_day epoch-days, pend_tmin, pend_tmax, pend_tmax_before)
     state_schema = StructType(
@@ -142,6 +131,9 @@ def streaming_disaggregate_temperature(
     horizon_ms = _duration_ms(flush_after) if flush_after is not None else None
     _DAY_MS = 86_400_000
 
+    def frame(day_rows: list[dict]) -> pd.DataFrame:
+        return pd.DataFrame(day_rows, columns=[*keys, *_DAY_COLS])
+
     def fn(
         key: Tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
@@ -151,7 +143,7 @@ def streaming_disaggregate_temperature(
             if state.exists:
                 pend = state.get
                 # batch is_last fallback: next tmin := own tmin
-                yield _emit(key, keys, pend, pend[1])
+                yield frame([_emit(key, keys, pend, pend[1])])
             state.remove()
             return
 
@@ -186,7 +178,7 @@ def streaming_disaggregate_temperature(
         if not chunks:
             em = arm_or_flush(state.get if state.exists else None)
             if em is not None:
-                yield em
+                yield frame([em])
             return
         rows = pd.concat(chunks, ignore_index=True)
         rows = rows.sort_values(date_col)
@@ -220,7 +212,7 @@ def streaming_disaggregate_temperature(
         if em is not None:
             outs.append(em)
         if outs:
-            yield pd.concat(outs, ignore_index=True)
+            yield frame(outs)
 
     if flush_ms is not None:
         timeout = GroupStateTimeout.ProcessingTimeTimeout
@@ -233,16 +225,14 @@ def streaming_disaggregate_temperature(
         ).withWatermark("__evt", watermark_delay)
     else:
         timeout = GroupStateTimeout.NoTimeout
-    return (
-        daily_stream.groupBy(*keys)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=timeout,
-        )
+    days = daily_stream.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=day_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=timeout,
     )
+    return _hourly(days, keys)
 
 
 _UNIT_MS = {

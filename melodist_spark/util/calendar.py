@@ -138,6 +138,26 @@ def fill_daily_calendar(
     return cal.join(daily, [*keys, date_col], "left")
 
 
+def fill_hourly_calendar(
+    hourly: DataFrame,
+    keys: list[str] = ("station_id",),
+    ts_col: str = "ts",
+) -> DataFrame:
+    """Add a null row for every hour absent between each station's
+    first and last observation, so positional kernels (the cascade's
+    dyadic pairing) see a gap where it is instead of shifting every
+    later value. The hourly twin of :func:`fill_daily_calendar`; the
+    join back is a full join, so no observed row is dropped, even one
+    off the hourly grid."""
+    keys = list(keys)
+    rng = hourly.groupBy(*keys).agg(
+        F.min(ts_col).alias("__t0"), F.max(ts_col).alias("__t1")
+    )
+    step = F.expr("INTERVAL 1 HOUR")
+    cal = rng.select(*keys, F.explode(F.sequence("__t0", "__t1", step)).alias(ts_col))
+    return cal.join(hourly, [*keys, ts_col], "full")
+
+
 def prepare_interpolation_data(
     daily: DataFrame,
     column_hours: dict[str, int],

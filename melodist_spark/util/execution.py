@@ -32,6 +32,13 @@ def pin_partitions(df: DataFrame, cols, n: int | None = None) -> DataFrame:
     return df.repartition(n, *[F.col(c) if isinstance(c, str) else c for c in cols])
 
 
+def key_schema(df: DataFrame, keys) -> str:
+    """DDL fragment declaring ``keys`` with their types in ``df``: the
+    key part of a grouped map's output schema."""
+    types = dict(df.dtypes)
+    return ", ".join(f"{k} {types[k]}" for k in keys)
+
+
 def local_frame(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:
     """A small driver-side table as a JVM ``LocalRelation``.
 

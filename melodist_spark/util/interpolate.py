@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .execution import pin_partitions
+
 
 def interpolate_linear(
     df: DataFrame,
@@ -215,7 +217,6 @@ def interpolate_spline(
     ts_col: str = "ts",
     method: str = "cubic",
     out_col: str | None = None,
-    pin: bool = True,
 ) -> DataFrame:
     """Fill interior nulls of ``value_col`` by positional cubic spline.
 
@@ -233,12 +234,9 @@ def interpolate_spline(
     extrapolation is numerically explosive and never meaningful for
     met series).
 
-    ``pin=True`` (default) repartitions by ``keys`` with an explicit
-    count so AQE cannot coalesce a small fleet onto one task in front
-    of the spline kernel (see ``util.execution.pin_partitions``); pass
-    ``pin=False`` when ``df`` is a table bucketed/partitioned by
-    ``keys`` whose existing layout should carry the grouped map with
-    no exchange at all.
+    The input is repartitioned by ``keys`` with an explicit count so
+    AQE cannot coalesce a small fleet onto one task in front of the
+    spline kernel (see ``util.execution.pin_partitions``).
     """
     if method not in ("cubic", "spline", "cubicspline"):
         raise NotImplementedError(
@@ -263,7 +261,4 @@ def interpolate_spline(
         pdf[ocol] = _spline_fill(pdf[vcol].to_numpy(dtype=float))
         return pdf[names]
 
-    from .execution import pin_partitions
-
-    grouped = pin_partitions(df, keys) if pin else df
-    return grouped.groupBy(*keys).applyInPandas(fill, schema=out_schema)
+    return pin_partitions(df, keys).groupBy(*keys).applyInPandas(fill, schema=out_schema)

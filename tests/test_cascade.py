@@ -70,12 +70,30 @@ def test_build_casc_spark_matches_kernel(spark, met_hourly, met_hourly_pd):
 
 
 @pytest.fixture(scope="module")
-def casc_stats(spark, met_hourly):
-    return collect_cascade_stats(build_casc(met_hourly, percentile=50))
+def casc_df(spark, met_hourly):
+    return build_casc(met_hourly, percentile=50)
 
 
-def test_disagg_cascade_conserves_daily_sums(met_daily, casc_stats):
-    out = disagg_prec_cascade(met_daily, casc_stats, hourly=True, seed=11)
+@pytest.fixture(scope="module")
+def casc_s1(casc_df):
+    return collect_cascade_stats(casc_df)[("s1", 0)]
+
+
+def test_to_row_from_row_round_trip():
+    s, _ = build_casc_values(
+        np.where(np.arange(4096) % 5 == 0, np.arange(4096) % 7, 0.0), hourly=True
+    )
+    row = s.to_row()
+    assert len(row["p01"]) == 8 and len(row["wxx"]) == 56 and len(row["threshold"]) == 5
+    back = CascadeStatistics.from_row(row)
+    for a in ("p01", "p10", "pxx", "wxx", "threshold"):
+        np.testing.assert_array_equal(getattr(back, a), getattr(s, a))
+    assert back.percentile == s.percentile
+    assert back.to_row() == row
+
+
+def test_disagg_cascade_conserves_daily_sums(met_daily, casc_df):
+    out = disagg_prec_cascade(met_daily, casc_df, hourly=True, seed=11)
     assert out.count() == met_daily.count() * 24
     re = out.groupBy("station_id", F.to_date("ts").alias("date")).agg(
         F.sum("precip").alias("s")
@@ -87,17 +105,17 @@ def test_disagg_cascade_conserves_daily_sums(met_daily, casc_stats):
     assert out.filter(F.col("precip") < 0).count() == 0
 
 
-def test_disagg_cascade_seeded_reproducible(met_daily, casc_stats):
-    a = disagg_prec_cascade(met_daily, casc_stats, seed=5).orderBy("station_id", "ts").toPandas()
-    b = disagg_prec_cascade(met_daily, casc_stats, seed=5).orderBy("station_id", "ts").toPandas()
-    c = disagg_prec_cascade(met_daily, casc_stats, seed=6).orderBy("station_id", "ts").toPandas()
+def test_disagg_cascade_seeded_reproducible(met_daily, casc_df):
+    a = disagg_prec_cascade(met_daily, casc_df, seed=5).orderBy("station_id", "ts").toPandas()
+    b = disagg_prec_cascade(met_daily, casc_df, seed=5).orderBy("station_id", "ts").toPandas()
+    c = disagg_prec_cascade(met_daily, casc_df, seed=6).orderBy("station_id", "ts").toPandas()
     np.testing.assert_allclose(a["precip"].values, b["precip"].values, equal_nan=True)
     assert not np.allclose(
         np.nan_to_num(a["precip"].values), np.nan_to_num(c["precip"].values)
     )
 
 
-def test_disagg_cascade_missing_days_masked(spark, casc_stats):
+def test_disagg_cascade_missing_days_masked(spark, casc_s1):
     pdf = pd.DataFrame(
         dict(
             station_id="s1",
@@ -106,14 +124,14 @@ def test_disagg_cascade_missing_days_masked(spark, casc_stats):
         )
     )
     daily = spark.createDataFrame(pdf)
-    out = disagg_prec_cascade(daily, casc_stats[("s1", 0)], seed=3)
+    out = disagg_prec_cascade(daily, casc_s1, seed=3)
     got = out.toPandas()
     got["date"] = got["ts"].dt.date
     nan_days = got[got.precip.isna()]["date"].unique()
     assert sorted(nan_days) == sorted(pdf[pdf.precip.isna()]["date"].unique())
 
 
-def test_disagg_cascade_shift(spark, casc_stats):
+def test_disagg_cascade_shift(spark, casc_s1):
     pdf = pd.DataFrame(
         dict(
             station_id="s1",
@@ -122,9 +140,9 @@ def test_disagg_cascade_shift(spark, casc_stats):
         )
     )
     daily = spark.createDataFrame(pdf)
-    base = disagg_prec_cascade(daily, casc_stats[("s1", 0)], seed=3).orderBy("ts").toPandas()
+    base = disagg_prec_cascade(daily, casc_s1, seed=3).orderBy("ts").toPandas()
     shifted = (
-        disagg_prec_cascade(daily, casc_stats[("s1", 0)], seed=3, shift=7)
+        disagg_prec_cascade(daily, casc_s1, seed=3, shift=7)
         .orderBy("ts")
         .toPandas()
     )
@@ -192,17 +210,18 @@ def test_multi_season_calibration_and_disagg(spark, met_hourly, met_daily, stati
     assert j.filter(F.abs(F.col("s") - F.col("precip")) > 1e-3).count() == 0
 
 
-def test_disagg_stats_dataframe_matches_dict(met_hourly, met_daily, casc_stats):
+def test_disagg_stats_dataframe_matches_dict(met_daily, casc_df, casc_s1):
     """The DataFrame stats path (per-station join, nothing collected to
-    the driver) must reproduce the broadcast-dict path exactly."""
-    stats_df = build_casc(met_hourly, percentile=50)
+    the driver) must reproduce station s1's collected statistics
+    passed as one fleet-wide CascadeStatistics exactly."""
+    s1 = met_daily.filter(F.col("station_id") == "s1")
     via_df = (
-        disagg_prec_cascade(met_daily, stats_df, seed=11)
+        disagg_prec_cascade(s1, casc_df, seed=11)
         .orderBy("station_id", "ts")
         .toPandas()
     )
     via_dict = (
-        disagg_prec_cascade(met_daily, casc_stats, seed=11)
+        disagg_prec_cascade(s1, casc_s1, seed=11)
         .orderBy("station_id", "ts")
         .toPandas()
     )
@@ -215,14 +234,15 @@ def test_disagg_stats_dataframe_per_level(met_hourly, met_daily):
     """Per-level stats rows (avg_stats=False) reconstruct the 5-element
     list inside the kernel via the stats join."""
     stats_df = build_casc(met_hourly, avg_stats=False)
-    d = collect_cascade_stats(stats_df)
+    lv = collect_cascade_stats(stats_df)[("s1", 0)]
+    s1 = met_daily.filter(F.col("station_id") == "s1")
     via_df = (
-        disagg_prec_cascade(met_daily, stats_df, seed=2)
+        disagg_prec_cascade(s1, stats_df, seed=2)
         .orderBy("station_id", "ts")
         .toPandas()
     )
     via_dict = (
-        disagg_prec_cascade(met_daily, d, seed=2)
+        disagg_prec_cascade(s1, lv, seed=2)
         .orderBy("station_id", "ts")
         .toPandas()
     )
@@ -260,14 +280,12 @@ def test_multi_key_stations_not_merged(spark):
     np.testing.assert_allclose(b, 5.0, atol=1e-9)
 
 
-def test_emit_daily_matches_fullgrid_reagg(met_daily, casc_stats):
+def test_emit_daily_matches_fullgrid_reagg(met_daily, casc_df, casc_s1):
     """emit='daily' is the in-kernel partial aggregation of the exact
     same stochastic grid: per (station, date) it must equal the
     shuffle re-aggregation of the steps path, null-for-null."""
     for hourly, level, steps in ((True, 9, 24), (False, 9, 288)):
-        opts = casc_stats if hourly else {
-            k: [v] * 9 for k, v in casc_stats.items()
-        }
+        opts = casc_df if hourly else [casc_s1] * 9
         full = disagg_prec_cascade(
             met_daily, opts, hourly=hourly, level=level, seed=13
         )
@@ -299,3 +317,68 @@ def test_emit_daily_rejects_shift():
     stats.fill_with_sample_data()
     with pytest.raises(ValueError, match="shift"):
         disagg_prec_cascade(None, stats, shift=2, emit="daily")
+
+
+def test_dict_stats_rejected():
+    """Statistics come as the build_casc DataFrame or one fleet-wide
+    CascadeStatistics / per-level list; anything else fails at call
+    time, not inside a task."""
+    with pytest.raises(TypeError, match="cascade_options"):
+        disagg_prec_cascade(None, {("s1", 0): CascadeStatistics()})
+
+
+def test_results_do_not_depend_on_station_buckets(met_hourly, met_daily, casc_df, casc_s1):
+    """The bucket count only sets what the kernels group by (README,
+    "station_buckets"): every result is row-identical for 0 and 3."""
+    from melodist_spark.statistics import MONTH_RANGES
+
+    seasonal = MONTH_RANGES["seasonal"]
+    cases = {
+        "calibrate avg": lambda b: build_casc(
+            met_hourly, months=seasonal, station_buckets=b
+        ),
+        "calibrate per level": lambda b: build_casc(
+            met_hourly, months=seasonal, avg_stats=False, station_buckets=b
+        ),
+        "disagg stats frame": lambda b: disagg_prec_cascade(
+            met_daily, casc_df, seed=11, station_buckets=b
+        ),
+        "disagg fleet-wide shift": lambda b: disagg_prec_cascade(
+            met_daily, casc_s1, seed=5, shift=5, station_buckets=b
+        ),
+        "disagg 5-min list daily": lambda b: disagg_prec_cascade(
+            met_daily, [casc_s1] * 9, hourly=False, level=9, seed=7,
+            emit="daily", station_buckets=b,
+        ),
+    }
+    for name, run in cases.items():
+        direct, bucketed = (sorted(map(repr, run(b).collect())) for b in (0, 3))
+        assert len(direct) > 0, name
+        assert direct == bucketed, name
+
+
+def test_absent_hour_calibrates_like_null_hour(spark, met_hourly_pd):
+    """An hour missing from the calibration data must count as the null
+    hour it stands for, not shift the dyadic pairing of every later
+    hour."""
+    from melodist_spark.statistics import StationStatistics
+
+    pdf = (
+        met_hourly_pd[met_hourly_pd.station_id == "s1"][["station_id", "ts", "precip"]]
+        .sort_values("ts")
+        .head(24 * 120)
+        .reset_index(drop=True)
+    )
+    gone = [101, 2000]
+    absent = pdf.drop(index=gone)
+    nulled = pdf.assign(precip=pdf["precip"].where(~pdf.index.isin(gone)))
+    got = [
+        collect_cascade_stats(
+            StationStatistics(spark.createDataFrame(f))
+            .calc_precipitation_stats()
+            .precip_stats
+        )[("s1", 0)]
+        for f in (absent, nulled)
+    ]
+    for attr in ("p01", "p10", "pxx", "wxx", "threshold"):
+        np.testing.assert_array_equal(getattr(got[0], attr), getattr(got[1], attr), attr)

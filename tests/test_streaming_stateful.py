@@ -9,6 +9,8 @@ batches.
 
 from __future__ import annotations
 
+import datetime
+
 import numpy as np
 import pandas as pd
 
@@ -182,14 +184,32 @@ def test_duration_parser():
         _duration_ms("fast")
 
 
-def test_timeout_flush_matches_batch_last_row():
+def test_timeout_flush_matches_batch_last_row(spark):
     """The processing-time-timeout branch emits the buffered tail day
-    with the batch is_last fallback (next tmin := own tmin)."""
-    from melodist_spark.streaming.stateful import _emit, _sine_day
+    with the batch is_last fallback (next tmin := own tmin); expanded
+    to hours it equals the batch operator on that lone day."""
+    from melodist_spark.streaming.stateful import _emit, _hourly
 
-    pend = (16700, 280.0, 290.0, 289.0)  # (day, tmin, tmax, tmax_before)
-    out = _emit(("s1",), ["station_id"], pend, pend[1])
-    exp = _sine_day(16700, 280.0, 290.0, 289.0, 280.0)
+    pend = (16700, 280.0, 290.0, 290.0)  # (day, tmin, tmax, tmax_before)
+    row = _emit(("s1",), ["station_id"], pend, pend[1])
+    assert row["min_val_next"] == row["min_val_cur"] == 280.0
+    assert row["date"] == datetime.date(2015, 9, 22)
+    out = (
+        _hourly(spark.createDataFrame(pd.DataFrame([row])), ["station_id"])
+        .toPandas()
+        .sort_values("ts")
+    )
+    day = pd.DataFrame(
+        dict(station_id=["s1"], date=[row["date"]], tmin=[280.0], tmax=[290.0], temp=[285.0])
+    )
+    exp = (
+        disaggregate_temperature(
+            spark.createDataFrame(day), method="sine_min_max", min_max_time="fix"
+        )
+        .toPandas()
+        .sort_values("ts")
+    )
+    assert (out["ts"].values == exp["ts"].values).all()
     assert (out["temp"].values == exp["temp"].values).all()
     assert out["station_id"].eq("s1").all() and len(out) == 24
 
