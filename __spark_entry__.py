@@ -3879,10 +3879,9 @@ def q_angstroem_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_wind_cosine_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact wind-cosine calibration (`wind.py:75-93`): after the
-    harmonic reparametrization the 3-parameter curve_fit is plain OLS;
-    the grouped-map lstsq must agree with the closed-form normal
-    equations the oracle solves (rounded to 4 decimals — the two
-    solvers agree to ~1e-10 on well-conditioned data)."""
+    harmonic reparametrization the 3-parameter curve_fit is plain OLS,
+    solved as the same normal equations the oracle solves (rounded to
+    4 decimals)."""
     from melodist_spark.operators.wind import fit_cosine_function
 
     m = _met_hourly(spark, sf_dir)

@@ -39,19 +39,3 @@ def dewpoint_temperature(temp, hum) -> Column:
     ice = F.lit(272.62) * ln_ratio / (F.lit(22.46) - ln_ratio)
     return F.when(t >= T0, water).otherwise(ice) + F.lit(T0)
 
-
-def linregress_agg(x: str | Column, y: str | Column) -> list[Column]:
-    """Closed-form OLS slope/intercept as aggregate expressions.
-
-    scipy.stats.linregress (`util/util.py:137-157`) reduces to
-    ``a1 = cov(x,y)/var(x)``, ``a0 = mean(y) - a1*mean(x)`` — one
-    distributed aggregation instead of a driver-side fit.
-
-    Returns [slope_expr, intercept_expr] aliased ``a1``/``a0``.
-    """
-    xc, yc = _col(x) if not isinstance(x, str) else F.col(x), (
-        _col(y) if not isinstance(y, str) else F.col(y)
-    )
-    slope = F.covar_samp(xc, yc) / F.var_samp(xc)
-    intercept = F.avg(yc) - slope * F.avg(xc)
-    return [slope.alias("a1"), intercept.alias("a0")]

@@ -11,12 +11,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from melodist_spark.functions.meteo import (
-    dewpoint_temperature,
-    linregress_agg,
-    vapor_pressure,
-)
+from melodist_spark.functions.meteo import dewpoint_temperature, vapor_pressure
 from melodist_spark.util.calendar import hourly_calendar
+from melodist_spark.util.ols import linregress_agg
 
 METHODS = (
     "equal",
@@ -244,7 +241,6 @@ def dewpoint_regression(
     hourly: DataFrame,
     keys: list[str] = ("station_id",),
     ts_col: str = "ts",
-    return_stats: bool = False,
 ) -> DataFrame:
     """Per-station OLS of daily-mean dewpoint on daily-min temperature.
 
@@ -259,7 +255,4 @@ def dewpoint_regression(
         .agg(F.avg("tdew").alias("tdew"), F.min("temp").alias("tmin"))
         .na.drop(subset=["tdew", "tmin"])
     )
-    aggs = linregress_agg("tmin", "tdew")
-    if return_stats:
-        aggs = aggs + [F.corr("tmin", "tdew").alias("r_value")]
-    return daily.groupBy(*keys).agg(*aggs)
+    return daily.groupBy(*keys).agg(*linregress_agg("tmin", "tdew"))

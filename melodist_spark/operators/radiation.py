@@ -3,9 +3,9 @@
 Reference: `radiation.py:32-344`. The hourly scaling
 ``glob = pot_rad / pot_rad_daily · glob_daily`` is a window average
 per (station, day) — no join against a separately aggregated daily
-frame. Angstroem is linear in (a, b) so its "curve fit" collapses to a
-closed-form two-regressor OLS aggregation; Bristow-Campbell's (A, C)
-fit is genuinely nonlinear → grouped-map pandas UDF per station.
+frame. Angstroem is linear in (a, b) so its "curve fit" is a
+two-regressor OLS aggregation (`util/ols.py`); Bristow-Campbell's
+(A, C) fit is genuinely nonlinear → grouped-map pandas UDF per group.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from melodist_spark.functions.solar import potential_radiation, sun_times_exprs
 from melodist_spark.util.calendar import hourly_calendar
 from melodist_spark.util.execution import key_schema, pin_partitions
+from melodist_spark.util.ols import normal_equations_fit
 
 METHODS = ("pot_rad", "pot_rad_via_ssd", "pot_rad_via_bc", "mean_course")
 
@@ -216,37 +217,21 @@ def disaggregate_radiation(
 def fit_angstroem_params(
     daily_with_sun: DataFrame,
     keys: list[str] = ("station_id",),
-    months: list[int] | None = None,
-    date_col: str = "date",
 ) -> DataFrame:
     """Closed-form least squares for the Angstroem (a, b).
 
     The model ``obs = a·pot + b·(ssd/daylength·pot)`` is linear in
     (a, b), so scipy's ``curve_fit`` (`radiation.py:314-344`) reduces
-    to the 2×2 normal equations — exact, distributed, no UDF. Input
-    needs columns ssd, daylength, pot_rad_daily, obs_rad_daily.
-    Returns (keys..., a, b).
+    to the 2×2 normal equations — exact, distributed, no UDF. A group
+    whose system is singular (e.g. a month without sunshine) gets null
+    (a, b). Input needs columns ssd, daylength, pot_rad_daily,
+    obs_rad_daily. Returns (keys..., a, b).
     """
-    keys = list(keys)
     d = daily_with_sun.na.drop(
         subset=["ssd", "daylength", "pot_rad_daily", "obs_rad_daily"]
     ).filter(F.col("daylength") > 0)  # polar nights carry no information
-    if months is not None:
-        d = d.filter(F.month(date_col).isin(months))
-    x1 = F.col("pot_rad_daily")
-    x2 = F.try_divide(F.col("ssd"), F.col("daylength")) * F.col("pot_rad_daily")
-    y = F.col("obs_rad_daily")
-    agg = d.groupBy(*keys).agg(
-        F.sum(x1 * x1).alias("s11"),
-        F.sum(x1 * x2).alias("s12"),
-        F.sum(x2 * x2).alias("s22"),
-        F.sum(x1 * y).alias("s1y"),
-        F.sum(x2 * y).alias("s2y"),
-    )
-    det = F.col("s11") * F.col("s22") - F.col("s12") * F.col("s12")
-    a = (F.col("s1y") * F.col("s22") - F.col("s2y") * F.col("s12")) / det
-    b = (F.col("s2y") * F.col("s11") - F.col("s1y") * F.col("s12")) / det
-    return agg.select(*keys, a.alias("a"), b.alias("b"))
+    xs = ["pot_rad_daily", "try_divide(ssd, daylength) * pot_rad_daily"]
+    return normal_equations_fit(d, list(keys), "obs_rad_daily", xs, ["a", "b"])
 
 
 def fit_bristow_campbell_params(
@@ -257,7 +242,8 @@ def fit_bristow_campbell_params(
     """Fit Bristow-Campbell (A, C) by minimizing |mean bias|.
 
     Non-convex scalar optimization (`radiation.py:251-280`) run per
-    station over its ~365-row daily frame in a grouped-map pandas UDF
+    group (a station, or a station's month range) over its daily rows
+    in a grouped-map pandas UDF
     (scipy.optimize.minimize when available, else our Nelder-Mead —
     same |mean bias| objective). Input needs tmin, tmax,
     pot_rad_daily, obs_rad_daily. Returns (keys..., a, c).
@@ -278,12 +264,14 @@ def fit_bristow_campbell_params(
         tmax = pdf["tmax"].to_numpy()
         pot = pdf["pot_rad_daily"].to_numpy()
         obs = pdf["obs_rad_daily"].to_numpy()
-        months = pd.DatetimeIndex(pd.to_datetime(pdf[date_col])).month
+        dates = pd.DatetimeIndex(pd.to_datetime(pdf[date_col]))
 
-        tmin_next = np.append(tmin[1:], tmin[-1])
+        # the next calendar day's tmin, else the day's own (as _bc_daily_terms)
+        nxt_ok = np.diff(dates.to_numpy()) == np.timedelta64(1, "D")
+        tmin_next = np.append(np.where(nxt_ok, tmin[1:], tmin[:-1]), tmin[-1])
         dT = tmax - (tmin + tmin_next) / 2.0
-        dT_m = pd.Series(dT).groupby(months).mean()
-        B = 0.036 * np.exp(-0.154 * dT_m.loc[months].to_numpy())
+        dT_m = pd.Series(dT).groupby(dates.month).mean()
+        B = 0.036 * np.exp(-0.154 * dT_m.loc[dates.month].to_numpy())
 
         def absbias(ac):
             with np.errstate(invalid="ignore", over="ignore"):

@@ -3,20 +3,17 @@
 Reference: `wind.py:28-93`. equal/cosine are pure column expressions;
 ``random`` uses Spark's seedable ``rand()`` (the reference draws from
 an unseeded global RNG — we define reproducible behavior instead, see
-SURVEY.md §4.2). The scipy ``curve_fit`` calibration runs per station
-inside ``applyInPandas`` over the small calibration frame.
+SURVEY.md §4.2). The scipy ``curve_fit`` calibration is an exact OLS,
+one grouped aggregation (`util/ols.py`).
 """
 
 from __future__ import annotations
-
-import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from melodist_spark.util.calendar import hourly_calendar
-from melodist_spark.util.execution import key_schema, pin_partitions
+from melodist_spark.util.ols import normal_equations_fit
 
 PI = 3.141592653589793
 
@@ -77,8 +74,8 @@ def fit_cosine_function(
     ``a·w̄·cos(π(t-t_shift)/12) + b·w̄`` is linear after the harmonic
     reparametrization ``α=a·cos(πt_s/12), β=a·sin(πt_s/12)``:
     ``w̄·(α·cos(πt/12) + β·sin(πt/12) + b)`` — so the *exact* least
-    squares solution is a 3-regressor OLS (numpy lstsq per station in
-    a grouped-map UDF; a = hypot(α,β), t_shift = 12/π·atan2(β,α)).
+    squares solution is a 3-regressor OLS (:func:`normal_equations_fit`;
+    a = hypot(α,β), t_shift = 12/π·atan2(β,α)).
     Returns (keys..., a, b, t_shift).
     """
     keys = list(keys)
@@ -93,19 +90,12 @@ def fit_cosine_function(
         .na.drop(subset=[wind_col, "daily_mean"])
     )
 
-    schema = key_schema(hourly, keys) + ", a double, b double, t_shift double"
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = pdf["daily_mean"].to_numpy()
-        t = pdf["hour"].to_numpy(dtype=float)
-        y = pdf[wind_col].to_numpy()
-        ang = np.pi * t / 12.0
-        X = np.column_stack([m * np.cos(ang), m * np.sin(ang), m])
-        (alpha, beta, b), *_ = np.linalg.lstsq(X, y, rcond=None)
-        a = float(np.hypot(alpha, beta))
-        t_shift = float(12.0 / np.pi * np.arctan2(beta, alpha))
-        res = {k: [pdf[k].iloc[0]] for k in keys}
-        res.update(a=[a], b=[float(b)], t_shift=[t_shift])
-        return pd.DataFrame(res)
-
-    return pin_partitions(prepared, keys).groupBy(*keys).applyInPandas(fit, schema=schema)
+    ang = "pi() * hour / 12"
+    fit = normal_equations_fit(
+        prepared, keys, wind_col,
+        [f"daily_mean * cos({ang})", f"daily_mean * sin({ang})", "daily_mean"],
+        ["alpha", "beta", "b"],
+    )
+    return fit.selectExpr(
+        *keys, "hypot(alpha, beta) AS a", "b", "12 / pi() * atan2(beta, alpha) AS t_shift"
+    )

@@ -28,6 +28,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from melodist_spark.functions.solar import potential_radiation, sun_times_exprs
 from melodist_spark.operators.aggregations import (
     mean_daily_course_by_month,
     month_hour_precip_mean,
@@ -40,7 +41,7 @@ from melodist_spark.operators.radiation import (
 )
 from melodist_spark.operators.temperature import get_shift_by_data
 from melodist_spark.operators.wind import fit_cosine_function
-from melodist_spark.util.calendar import fill_hourly_calendar
+from melodist_spark.util.calendar import fill_hourly_calendar, hourly_calendar
 from melodist_spark.util.execution import local_frame
 
 MONTH_RANGES = {
@@ -120,16 +121,13 @@ class StationStatistics:
 
     def calc_radiation_stats(self, data_daily: DataFrame | None = None, how: str = "all"):
         """`stationstatistics.py:124-192`: mean course always; Angstroem
-        and Bristow-Campbell fits per month-range when daily data given."""
+        and Bristow-Campbell fits per month range when daily data given."""
         if how not in MONTH_RANGES:
             raise ValueError(f"invalid how {how!r}")
         self.glob_mean_course = mean_daily_course_by_month(self.data, "glob")
 
         if data_daily is None:
             return self
-
-        from melodist_spark.functions.solar import potential_radiation, sun_times_exprs
-        from melodist_spark.util.calendar import hourly_calendar
 
         d = data_daily.join(
             F.broadcast(self.stations.select("station_id", "lon", "lat", "timezone")),
@@ -147,33 +145,21 @@ class StationStatistics:
         obs_daily = self.data.groupBy(
             "station_id", F.to_date("ts").alias("date")
         ).agg(F.avg("glob").alias("obs_rad_daily"))
+
+        ranges = MONTH_RANGES[how]
+        month_to_range = ", ".join(f"{m}, {i}" for i, ms in enumerate(ranges) for m in ms)
+        range_months = ", ".join(f"array({', '.join(map(str, ms))})" for ms in ranges)
         full = d.join(pot_daily, ["station_id", "date"]).join(
             obs_daily, ["station_id", "date"], "left"
-        )
-
-        ang_parts, bc_parts = [], []
-        for months in MONTH_RANGES[how]:
-            if "ssd" in data_daily.columns:
-                a = fit_angstroem_params(full, months=months)
-                ang_parts.append(
-                    a.withColumn("month", F.explode(F.array(*[F.lit(m) for m in months])))
-                )
-            if "tmin" in data_daily.columns and "tmax" in data_daily.columns:
-                sub = full.filter(F.month("date").isin(months))
-                b = fit_bristow_campbell_params(sub)
-                bc_parts.append(
-                    b.withColumn("month", F.explode(F.array(*[F.lit(m) for m in months])))
-                )
-        if ang_parts:
-            out = ang_parts[0]
-            for p in ang_parts[1:]:
-                out = out.unionByName(p)
-            self.glob_angstroem = out.select("station_id", "month", "a", "b")
-        if bc_parts:
-            out = bc_parts[0]
-            for p in bc_parts[1:]:
-                out = out.unionByName(p)
-            self.glob_bristcamp = out.select("station_id", "month", "a", "c")
+        ).withColumn("__range", F.expr(f"map({month_to_range})[month(`date`)]"))
+        month = f"explode(array({range_months})[__range]) AS month"
+        keys = ["station_id", "__range"]
+        if "ssd" in data_daily.columns:
+            ang = fit_angstroem_params(full, keys)
+            self.glob_angstroem = ang.selectExpr("station_id", month, "a", "b")
+        if "tmin" in data_daily.columns and "tmax" in data_daily.columns:
+            bc = fit_bristow_campbell_params(full, keys)
+            self.glob_bristcamp = bc.selectExpr("station_id", month, "a", "c")
         return self
 
     # -- persistence ------------------------------------------------------

@@ -1,6 +1,8 @@
 """Humidity and wind disaggregation: reference invariants
 (`tests/test_humidity.py`, `tests/test_wind.py`) + pandas oracles."""
 
+import datetime as dt
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -176,6 +178,49 @@ def test_wind_cosine_fit_roundtrip(spark, met_daily):
     got = fit["a"] * np.cos(np.pi * (h - fit["t_shift"]) / 12) + fit["b"]
     exp = a_true * np.cos(np.pi * (h - t_true) / 12) + b_true
     np.testing.assert_allclose(got, exp, atol=1e-6)
+
+
+def test_dewpoint_regression_constant_tmin_is_null(spark, met_hourly):
+    """A station whose daily minimum never changes has no slope: its
+    (a1, a0) is null and the other stations still calibrate (ANSI
+    division by zero used to fail the whole call)."""
+    stuck = spark.createDataFrame(
+        [
+            ("stuck", dt.datetime(2014, 1, d, h), 270.0 + h % 5, 80.0)
+            for d in range(1, 8)
+            for h in range(24)
+        ],
+        "station_id string, ts timestamp, temp double, hum double",
+    )
+    hourly = met_hourly.select(*stuck.columns).unionByName(stuck)
+    fit = {r["station_id"]: r for r in dewpoint_regression(hourly).collect()}
+    assert fit["stuck"]["a1"] is None and fit["stuck"]["a0"] is None
+    assert all(fit[s]["a1"] is not None for s in ("s1", "s2", "s3"))
+
+
+def test_wind_cosine_fit_matches_lstsq(met_hourly):
+    """The JVM normal-equation fit equals numpy's lstsq per station, on
+    three stations, one of them with missing hours."""
+    gappy = (
+        (F.col("station_id") == "s2")
+        & F.hour("ts").isin(3, 4, 17)
+        & (F.dayofyear("ts") % 3 == 0)
+    )
+    hourly = met_hourly.select("station_id", "ts", "wind").filter(~gappy)
+    got = fit_cosine_function(hourly).toPandas().set_index("station_id")
+    pdf = hourly.select(
+        "station_id", "wind", F.hour("ts").alias("hour"), F.to_date("ts").alias("date")
+    ).toPandas()
+    assert len(got) == 3
+    for sid, g in pdf.groupby("station_id"):
+        m = g.groupby("date")["wind"].transform("mean").to_numpy()
+        ang = np.pi * g["hour"].to_numpy(dtype=float) / 12.0
+        X = np.column_stack([m * np.cos(ang), m * np.sin(ang), m])
+        (alpha, beta, b), *_ = np.linalg.lstsq(X, g["wind"].to_numpy(), rcond=None)
+        exp = [np.hypot(alpha, beta), b, 12.0 / np.pi * np.arctan2(beta, alpha)]
+        np.testing.assert_allclose(
+            got.loc[sid, ["a", "b", "t_shift"]].to_numpy(dtype=float), exp, rtol=1e-9
+        )
 
 
 @pytest.mark.parametrize(

@@ -728,8 +728,8 @@ def test_registry_python_eval_counts_pinned(spark, qs):
     fails here and must be either fixed or consciously re-pinned with
     a justification.
 
-    The non-zero rows, audited this round: wind_cosine_fit 1 fit
-    kernel; cascade_disagg/calibration 2 DIFFERENT
+    The non-zero rows, audited this round (wind_cosine_fit is an OLS
+    aggregate, so its ceiling is 0): cascade_disagg/calibration 2 DIFFERENT
     FlatMapGroupsInPandas kernels each (hourly + level-9 / per-season
     — verified against the plan arguments); embedding_neardup 2 =
     the same _bucket once per self-join side (runtime exchange reuse
@@ -744,7 +744,6 @@ def test_registry_python_eval_counts_pinned(spark, qs):
     session (the plan then reads Scan ExistingRDD), so the pin is a
     CEILING per row at SF_DIR, not an equality."""
     ceiling = {
-        "wind_cosine_fit": 1,
         "cascade_disagg": 2,
         "cascade_calibration": 2,
         "embedding_neardup": 2,

@@ -123,6 +123,101 @@ def test_fit_bristow_campbell_reduces_bias(spark, met_daily, stations):
     assert mean_bias(fit["a"], fit["c"]) <= mean_bias(0.75, 2.4) + 1e-6
 
 
+def test_fit_angstroem_singular_range_is_null(spark):
+    """A station without sunshine (ssd = 0 on every day) has a singular
+    system: its (a, b) is null, and the other station's fit is the one
+    it gets alone. ANSI division by zero used to fail the whole call."""
+    days = pd.date_range("2014-12-01", periods=28, freq="D").date
+    rows = [
+        dict(
+            station_id=sid,
+            date=d,
+            ssd=sun * (1.0 + i % 5),
+            daylength=7.5,
+            pot_rad_daily=60.0 + i,
+            obs_rad_daily=20.0 + 3.0 * (i % 7),
+        )
+        for sid, sun in (("dark", 0.0), ("lit", 1.0))
+        for i, d in enumerate(days)
+    ]
+    df = spark.createDataFrame(pd.DataFrame(rows))
+    fit = {r["station_id"]: r for r in fit_angstroem_params(df).collect()}
+    assert fit["dark"]["a"] is None and fit["dark"]["b"] is None
+    alone = fit_angstroem_params(df.filter(F.col("station_id") == "lit")).collect()[0]
+    assert fit["lit"]["a"] == pytest.approx(alone["a"], rel=1e-12)
+    assert fit["lit"]["b"] == pytest.approx(alone["b"], rel=1e-12)
+
+
+def test_fit_bristow_campbell_pairs_next_calendar_day(spark):
+    """The fit pairs each day with the next CALENDAR day's tmin, or the
+    day's own where that day is absent, as disaggregation does: on a
+    frame with a one-day gap its (a, c) is minimize2 on |mean bias|
+    over the dT and B of _bc_daily_terms."""
+    from melodist_spark.operators.radiation import _bc_daily_terms
+    from melodist_spark.util.optimize import minimize2
+
+    rng = np.random.default_rng(5)
+    n = 45
+    tmin = 275.0 + 6.0 * rng.random(n)
+    pdf = pd.DataFrame(
+        dict(
+            station_id="g",
+            date=pd.date_range("2014-03-10", periods=n, freq="D").date,
+            tmin=tmin,
+            tmax=tmin + 4.0 + 8.0 * rng.random(n),
+            pot_rad_daily=150.0 + 2.0 * np.arange(n),
+            obs_rad_daily=60.0 + 40.0 * rng.random(n),
+        )
+    ).drop(index=20)  # one-day gap
+    df = spark.createDataFrame(pdf)
+    fit = fit_bristow_campbell_params(df).collect()[0]
+
+    t = _bc_daily_terms(df, ["station_id"]).orderBy("date").toPandas()
+    dT, B = t["__dT"].to_numpy(), t["__B"].to_numpy()
+    pot, obs = t["pot_rad_daily"].to_numpy(), t["obs_rad_daily"].to_numpy()
+
+    def absbias(ac):
+        with np.errstate(invalid="ignore", over="ignore"):
+            v = np.abs(np.mean(ac[0] * (1 - np.exp(-B * dT ** ac[1])) * pot - obs))
+        return v if np.isfinite(v) else 1e12
+
+    exp = minimize2(absbias, [0.75, 2.4])
+    assert fit["a"] == pytest.approx(exp[0], rel=1e-9)
+    assert fit["c"] == pytest.approx(exp[1], rel=1e-9)
+
+
+@pytest.mark.parametrize("how", ["seasonal", "monthly"])
+def test_radiation_range_pass_matches_per_range_fits(how, met_hourly, met_daily, stations):
+    """calc_radiation_stats fits all month ranges in one grouped pass
+    per family; each range's rows equal the fit on that range's days
+    alone (how="all" over the subset is fit_angstroem_params /
+    fit_bristow_campbell_params on it)."""
+    from melodist_spark.statistics import MONTH_RANGES, StationStatistics
+
+    s = StationStatistics(met_hourly, stations)
+    s.calc_radiation_stats(data_daily=met_daily, how=how)
+    ang = s.glob_angstroem.toPandas().set_index(["station_id", "month"])
+    bc = s.glob_bristcamp.toPandas().set_index(["station_id", "month"])
+    n_ang = n_bc = 0
+    for months in MONTH_RANGES[how]:
+        sub = StationStatistics(met_hourly, stations)
+        sub.calc_radiation_stats(
+            data_daily=met_daily.filter(F.month("date").isin(months)), how="all"
+        )
+        for r in sub.glob_angstroem.filter(F.col("month").isin(months)).collect():
+            got = ang.loc[(r["station_id"], r["month"])]
+            assert got["a"] == pytest.approx(r["a"], rel=1e-12)
+            assert got["b"] == pytest.approx(r["b"], rel=1e-12)
+            n_ang += 1
+        for r in sub.glob_bristcamp.filter(F.col("month").isin(months)).collect():
+            got = bc.loc[(r["station_id"], r["month"])]
+            assert (got["a"], got["c"]) == (r["a"], r["c"])
+            n_bc += 1
+    # a polar-night month has no Angstroem fit, with or without ranges
+    assert (len(ang), len(bc)) == (n_ang, n_bc)
+    assert n_bc == 3 * 12
+
+
 def test_precip_equal_conserves(met_daily):
     out = disagg_prec(met_daily, method="equal")
     re = out.groupBy("station_id", F.to_date("ts").alias("date")).agg(
