@@ -242,11 +242,10 @@ def fit_bristow_campbell_params(
     """Fit Bristow-Campbell (A, C) by minimizing |mean bias|.
 
     Non-convex scalar optimization (`radiation.py:251-280`) run per
-    group (a station, or a station's month range) over its daily rows
-    in a grouped-map pandas UDF
-    (scipy.optimize.minimize when available, else our Nelder-Mead —
-    same |mean bias| objective). Input needs tmin, tmax,
-    pot_rad_daily, obs_rad_daily. Returns (keys..., a, c).
+    group (a station, or a station's month range) over its daily rows in
+    a grouped-map pandas UDF (scipy.optimize.minimize when available,
+    else our Nelder-Mead — same |mean bias| objective). Input needs
+    tmin, tmax, pot_rad_daily, obs_rad_daily. Returns (keys..., a, c).
     """
     from melodist_spark.util.optimize import minimize2
 

@@ -75,8 +75,10 @@ def fit_cosine_function(
     reparametrization ``α=a·cos(πt_s/12), β=a·sin(πt_s/12)``:
     ``w̄·(α·cos(πt/12) + β·sin(πt/12) + b)`` — so the *exact* least
     squares solution is a 3-regressor OLS (:func:`normal_equations_fit`;
-    a = hypot(α,β), t_shift = 12/π·atan2(β,α)).
-    Returns (keys..., a, b, t_shift).
+    a = hypot(α,β), t_shift = 12/π·atan2(β,α)). A calm station gets
+    a = b = t_shift = 0; one seen at fewer than three distinct hours gets
+    nulls, so :func:`disaggregate_wind` gives it null hourly wind, as for
+    a station missing from ``wind_params``. Returns (keys..., a, b, t_shift).
     """
     keys = list(keys)
 

@@ -135,16 +135,12 @@ class StationStatistics:
         ).withColumns(sun_times_exprs("date", "lon", "lat", "timezone"))
         pot_daily = (
             hourly_calendar(d.select("station_id", "date", "lon", "lat", "timezone"))
-            .withColumn(
-                "pr",
-                potential_radiation("ts", "lon", "lat", "timezone"),
-            )
             .groupBy("station_id", "date")
-            .agg(F.avg("pr").alias("pot_rad_daily"))
+            .agg(F.avg(potential_radiation("ts", "lon", "lat", "timezone")).alias("pot_rad_daily"))
         )
-        obs_daily = self.data.groupBy(
-            "station_id", F.to_date("ts").alias("date")
-        ).agg(F.avg("glob").alias("obs_rad_daily"))
+        obs_daily = self.data.groupBy("station_id", F.to_date("ts").alias("date")).agg(
+            F.avg("glob").alias("obs_rad_daily")
+        )
 
         ranges = MONTH_RANGES[how]
         month_to_range = ", ".join(f"{m}, {i}" for i, ms in enumerate(ranges) for m in ms)

@@ -23,13 +23,13 @@ def normal_equations_fit(
     df: DataFrame, keys: list[str], y: str, xs: list[str], names: list[str]
 ) -> DataFrame:
     """Per-group OLS of the SQL expression ``y`` on the SQL expressions
-    ``xs`` (no implicit intercept).
-
-    One ``groupBy(keys)`` sums the upper triangle of X'X and X'y; Cramer's
-    rule solves the k×k system with ``try_divide``, so a group whose
-    system is singular gets null coefficients. Returns (keys..., names...).
-    Everything is SQL text: built from Column operators, a 3×3 fit sent
-    ~1,200 py4j commands to build, as text ~70.
+    ``xs`` (no implicit intercept): one ``groupBy(keys)`` sums the upper
+    triangle of X'X and X'y, Cramer's rule solves the k×k system. A group
+    with X'y = 0 gets coefficients 0, lstsq's minimum-norm answer; one
+    with det(X'X) ≤ 1e-12·Π diag(X'X) gets nulls (the ratio lies in
+    [0, 1]: collinear columns leave ~1e-16, three adjacent wind hours of
+    24 ~3e-4). Returns (keys..., names...). All SQL text: from Column
+    operators a 3×3 fit took ~1,200 py4j commands to build, as text ~70.
     """
     k = len(xs)
     sums = [f"sum(__x{i} * __x{j}) AS __xx{i}_{j}" for i in range(k) for j in range(i, k)]
@@ -42,9 +42,12 @@ def normal_equations_fit(
     xtx = [[f"__xx{min(i, j)}_{max(i, j)}" for j in range(k)] for i in range(k)]
     xty = [f"__xy{i}" for i in range(k)]
     det = _det(xtx)
+    no_signal = " AND ".join(f"{b} = 0" for b in xty)
+    diag = " * ".join(xtx[i][i] for i in range(k))
     return agg.selectExpr(*keys, *[
-        f"try_divide({_det([row[:i] + [b] + row[i + 1:] for row, b in zip(xtx, xty)])}, {det})"
-        f" AS {name}"
+        f"CASE WHEN {no_signal} THEN 0D WHEN {det} <= 1e-12 * {diag} THEN NULL"
+        f" ELSE try_divide({_det([row[:i] + [b] + row[i + 1:] for row, b in zip(xtx, xty)])},"
+        f" {det}) END AS {name}"
         for i, name in enumerate(names)
     ])
 

@@ -223,6 +223,43 @@ def test_wind_cosine_fit_matches_lstsq(met_hourly):
         )
 
 
+def test_wind_cosine_fit_rank_deficient_stations(spark, met_hourly):
+    """A calm station (wind 0 throughout) gets a = b = t_shift = 0, the
+    minimum-norm answer numpy's lstsq gives, so its cosine wind stays 0.
+    A station observed at two hours only cannot fix three parameters:
+    it gets null ones and null hourly wind, like a station missing
+    from the parameter table. The other stations are unaffected."""
+    odd = spark.createDataFrame(
+        [
+            (sid, dt.datetime(2014, 1, d, h), 0.0 if sid == "calm" else 2.0 + d + h / 6)
+            for sid, hours in (("calm", range(24)), ("twohour", (6, 18)))
+            for d in range(1, 8)
+            for h in hours
+        ],
+        "station_id string, ts timestamp, wind double",
+    )
+    base = met_hourly.select(*odd.columns)
+    hourly = base.unionByName(odd)
+    wind_params = fit_cosine_function(hourly)
+    got = {r["station_id"]: r for r in wind_params.collect()}
+    assert (got["calm"]["a"], got["calm"]["b"], got["calm"]["t_shift"]) == (0.0, 0.0, 0.0)
+    assert (got["twohour"]["a"], got["twohour"]["b"], got["twohour"]["t_shift"]) == (None,) * 3
+    for r in fit_cosine_function(base).collect():
+        assert got[r["station_id"]] == r
+
+    daily = hourly.groupBy("station_id", F.to_date("ts").alias("date")).agg(
+        F.avg("wind").alias("wind")
+    )
+    out = disaggregate_wind(daily, method="cosine", wind_params=wind_params)
+    vals = {
+        r["station_id"]: r["v"]
+        for r in out.groupBy("station_id").agg(F.collect_set("wind").alias("v")).collect()
+    }
+    assert vals["calm"] == [0.0]
+    assert vals["twohour"] == []
+    assert vals["s1"]
+
+
 @pytest.mark.parametrize(
     "method", ["minimal", "dewpoint_regression", "linear_dewpoint_variation", "min_max"]
 )
