@@ -5340,8 +5340,7 @@ def q_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     its domain in md5 order — the per-domain corpus-diversity cap is
     returned as a ``kept`` flag so every row (survivor or not) stays
     hash-checked. All columns are JVM codegen expressions; the only
-    exchange is the domain window's hash partition (skew-safe salted
-    variant: ``urls.cap_per_domain(salt=)``).
+    exchange is the domain window's hash partition.
 
     ``domain_pr``: PageRank over the registrable-domain
     link graph (``pipeline/graph.py`` — the Common-Crawl-style host
@@ -5415,13 +5414,10 @@ def q_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `derived` ~6 times (domain window, distinct-domain CTE + count
     # action, edges + PageRank collect, final join), and Catalyst
     # INLINES the domain expression into every window/join/distinct
-    # key — measured: the PSL broadcast-join path pays ~0.7 s of
-    # broadcast build per materialization (2.6 s -> 7.3 s row) and
-    # the PSL literal-map path re-runs its linear rule scan in every
-    # duplicated key (-> 11.9 s). The PSL operators are the corpus
-    # tools (crawl_corpus_smoke runs the join path at 1.27M rows;
-    # both pinned value-identical to this head on its suffixes in
-    # test_urls), and this query's synthetic TLDs live in the head.
+    # key — measured: a public-suffix-list broadcast join pays ~0.7 s
+    # of broadcast build per materialization (2.6 s -> 7.3 s row) and
+    # a literal-map rule scan re-runs in every duplicated key
+    # (-> 11.9 s). This query's synthetic TLDs live in the head.
     derived = docs.select(
         "doc_id",
         html_to_text(html).alias("clean"),
@@ -5467,8 +5463,7 @@ def q_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # main-content columns ride their own documents scan + broadcast
     # join (evaluated ONCE), deliberately NOT inside `derived`: this
     # plan re-references `derived` ~6 times and Catalyst would inline
-    # the whole nested-HOF extractor into each copy (the same
-    # duplication hazard psl.py documents)
+    # the whole nested-HOF extractor into each copy
     from melodist_spark.pipeline.text import (
         extract_main_content,
         extract_main_content_dom,

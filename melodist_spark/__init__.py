@@ -55,9 +55,19 @@ from melodist_spark.operators.precipitation import (
 from melodist_spark.operators.cascade import (
     CascadeStatistics,
     build_casc,
+    collect_cascade_stats,
     disagg_prec_cascade,
 )
 from melodist_spark.operators.asof import asof_join
+from melodist_spark.functions.stats import skill_scores
+from melodist_spark.sources.dwd import read_dwd, read_dwd_metadata
+from melodist_spark.sources.knmi import read_knmi
+from melodist_spark.streaming.daily_agg import (
+    streaming_daily_from_hourly,
+    streaming_gap_monitor,
+    streaming_sessions,
+)
+from melodist_spark.streaming.stateful import streaming_disaggregate_temperature
 
 __all__ = [
     "get_spark",
@@ -89,6 +99,15 @@ __all__ = [
     "precip_master_station",
     "CascadeStatistics",
     "build_casc",
+    "collect_cascade_stats",
     "disagg_prec_cascade",
     "asof_join",
+    "skill_scores",
+    "read_dwd",
+    "read_dwd_metadata",
+    "read_knmi",
+    "streaming_daily_from_hourly",
+    "streaming_gap_monitor",
+    "streaming_sessions",
+    "streaming_disaggregate_temperature",
 ]

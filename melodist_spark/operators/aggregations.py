@@ -9,8 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-KEYS = ["station_id"]
-
 
 def daily_from_hourly(
     df: DataFrame,

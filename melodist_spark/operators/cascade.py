@@ -24,11 +24,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..util.execution import key_schema, pin_partitions
+from ..util.execution import key_schema
 
 #: class boundaries of the weight histogram (`precipitation.py:143`)
 WCLASSBOUNDS = np.array([0.0, 0.1429, 0.2857, 0.4286, 0.5714, 0.7143, 0.8571, 1.0])
-WLOWER = WCLASSBOUNDS[:7]
 WUPPER = WCLASSBOUNDS[1:]
 
 #: µs per box at cascade level 11 (`precipitation.py:706`)
@@ -319,9 +318,11 @@ def _grouped(df: DataFrame, keys: list[str], station_buckets: int):
     """
     if station_buckets and station_buckets > 0:
         bucket = F.pmod(F.xxhash64(*keys), F.lit(station_buckets))
-        return pin_partitions(
-            df.withColumn("__bucket", bucket), ["__bucket"], n=station_buckets
-        ).groupBy("__bucket")
+        return (
+            df.withColumn("__bucket", bucket)
+            .repartition(station_buckets, "__bucket")
+            .groupBy("__bucket")
+        )
     return df.groupBy(*keys)
 
 

@@ -169,13 +169,6 @@ def bpe_train(
     return bpe_train_from_counts(pairs, num_merges)
 
 
-def merges_to_df(spark, merges: list[tuple[str, str]]) -> DataFrame:
-    """Merge table as a DataFrame ``(rank, left, right)`` — the
-    persistable model artifact."""
-    rows = [(i, a, b) for i, (a, b) in enumerate(merges)]
-    return spark.createDataFrame(rows, "rank long, left string, right string")
-
-
 def _encode_word(word: str, rank: dict) -> list[str]:
     syms = list(word) + [END_OF_WORD]
     while len(syms) > 1:

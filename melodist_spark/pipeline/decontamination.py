@@ -368,7 +368,7 @@ def decontaminate_stateless(
             [_audit_one(t) for t in s], columns=["n_ngrams", "n_hits"]
         )
 
-    # collision-proof staging name (same policy as psl.py round 9)
+    # collision-proof staging name
     tmp = "__aud"
     while tmp in docs.columns:
         tmp += "_"

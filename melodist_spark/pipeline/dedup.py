@@ -22,58 +22,6 @@ from pyspark.sql import functions as F
 _logger = logging.getLogger(__name__)
 
 
-def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Group identical texts by md5 digest.
-
-    Returns (digest, n_docs, keep_id) for groups with >1 member; the
-    kept representative is the minimum id (deterministic).
-    """
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("digest"))
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keep_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one representative (min id) per distinct text."""
-    keep = (
-        df.groupBy(F.md5(F.col(text_col)).alias("digest"))
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
-    )
-    return df.join(keep, id_col, "left_semi")
-
-
-def digest_index(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-column (digest) index of a corpus's distinct text md5s —
-    the durable state an incremental ingest deduplicates against.
-    Map-side-combined distinct; store it partitioned/bucketed by
-    digest and it grows by one row per new distinct document."""
-    return df.select(F.md5(F.col(text_col)).alias("digest")).distinct()
-
-
-def dedup_against(
-    df: DataFrame, index: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Incremental exact dedup: drop documents whose text digest
-    already exists in ``index`` (from :func:`digest_index` — e.g. the
-    digest table of everything previously ingested).
-
-    One left-anti equi-join on the digest; combined with
-    :func:`dedup_exact` on the batch itself this gives exactly-once
-    ingest across corpus snapshots without ever re-scanning the
-    historical corpus. Union the surviving batch's
-    :func:`digest_index` into the stored index to advance the state.
-    """
-    keyed = df.withColumn("__digest", F.md5(F.col(text_col)))
-    return keyed.join(
-        index.select(F.col("digest").alias("__digest")),
-        "__digest",
-        "left_anti",
-    ).drop("__digest")
-
-
 def repeated_spans(
     df: DataFrame,
     span_tokens: int = 50,
@@ -578,338 +526,6 @@ def remove_repeated_spans(
     return _finalize_span_audit(cur, text_col)
 
 
-def _gram_meta(span_tokens: int, portable: bool) -> dict:
-    """Schema metadata stamped on a gram index's ``gh`` column: the
-    hash family and gram width the index was built with. Both hash
-    families live in the same 64-bit space, so WITHOUT the stamp a
-    family or span_tokens mismatch between a stored index and a later
-    incremental call reads as zero historical hits — silently missed
-    duplicates, the worst failure mode a dedup gate has. Field
-    metadata survives select/groupBy/union and the parquet round trip
-    (Spark persists its schema in the footer), so the stamp travels
-    with the stored state."""
-    return {
-        "family": "md5_60" if portable else "xxhash64",
-        "span_tokens": span_tokens,
-    }
-
-
-def stamp_gram_index(
-    df: DataFrame, span_tokens: int, portable: bool = False
-) -> DataFrame:
-    """Attach gram-hash metadata to an externally produced ``(gh, c)``
-    frame (e.g. counts assembled outside :func:`gram_index`) so the
-    incremental span ops accept it. The caller asserts the family —
-    the values themselves cannot be distinguished."""
-    return df.select(
-        F.col("gh").alias("gh", metadata=_gram_meta(span_tokens, portable)),
-        "c",
-    )
-
-
-def _check_gram_meta(
-    df: DataFrame, span_tokens: int, portable: bool, what: str
-) -> None:
-    """Fail loudly when a stored gram index was built with a different
-    hash family or gram width than the caller now claims."""
-    for col in ("gh", "c"):
-        if col not in df.columns:
-            raise ValueError(
-                f"{what} is not a gram_index frame — missing column "
-                f"'{col}' (columns: {df.columns})"
-            )
-    meta = dict(df.schema["gh"].metadata or {})
-    want = _gram_meta(span_tokens, portable)
-    got = {k: meta.get(k) for k in want}
-    if got["family"] is None:
-        raise ValueError(
-            f"{what} carries no gram-hash metadata on 'gh' — it was "
-            "built outside gram_index() (or the schema was rebuilt "
-            "without metadata). Rebuild it with gram_index(), or "
-            "assert its provenance with stamp_gram_index(df, "
-            "span_tokens, portable); matching blindly would read a "
-            "family/width mismatch as zero historical hits."
-        )
-    if got != want:
-        raise ValueError(
-            f"{what} was built with {got} but this call asks for "
-            f"{want} — a mismatch reads as zero historical hits "
-            "(silently missed duplicates). Pass the values the index "
-            "was built with."
-        )
-
-
-def gram_index(
-    df: DataFrame,
-    span_tokens: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    portable: bool = False,
-    max_count: int | None = None,
-) -> DataFrame:
-    """Durable repeated-span state ``(gh, c)``: corpus-wide counts of
-    the per-position ``span_tokens``-gram hashes — the SUFFICIENT
-    STATISTIC for cross-document span dedup, and the ExactSubstr
-    analogue of :func:`digest_index` (exact) / :func:`minhash_index`
-    (near-dup). 16 B per DISTINCT gram, no text retained; store as
-    parquet bucketed by ``gh`` so the incremental check's count join
-    is the only shuffle. Advance the state after each batch with
-    :func:`merge_gram_index` over the SURVIVING batch's index (the
-    retained corpus is what future keepers are drawn from).
-
-    The ``gh`` field carries the hash family + gram width as schema
-    metadata (:func:`_gram_meta`); :func:`remove_repeated_spans_against`
-    and :func:`merge_gram_index` validate it, so a ``portable`` /
-    ``span_tokens`` mismatch against stored state raises instead of
-    silently missing every historical duplicate.
-
-    ``max_count`` saturates the counts (``least(c, max_count)``).
-    The count is only ever compared against the removal threshold, so
-    capping at ``min_occurrences`` loses nothing while keeping the
-    durable value bounded under adversarial re-quoting (a
-    billion-fold boilerplate gram stores the same 16 B either way,
-    but bounded counts make repeated merges idempotent-safe — a
-    replayed delta cannot push an already-saturated gram anywhere).
-
-    STREAMING REPLAY: unlike the set-valued indexes (digest, MinHash,
-    embedding — where a replayed foreachBatch append merely
-    duplicates rows that joins/distinct absorb), SUMMED counts are
-    corrupted by replay: re-appending a batch's delta inflates totals
-    past ``min_occurrences`` and excises text that was never
-    duplicated. Advance this state with batch-id-keyed OVERWRITE
-    writes (``.../delta_batch={bid}``) and read it as of
-    ``delta_batch < bid`` — the exactly-once shape
-    ``test_streaming_span_increment_foreach_batch`` pins, including a
-    literal replay of the last batch leaving state and output
-    byte-identical. ``max_count`` bounds the damage of a violated
-    discipline; it does not remove the need for it below the cap."""
-    if max_count is not None and max_count < 1:
-        raise ValueError(f"max_count must be >= 1, got {max_count}")
-    pos = _gram_positions(df, span_tokens, text_col, id_col, portable)
-    c = F.count("*")
-    if max_count is not None:
-        c = F.least(c, F.lit(max_count).cast("long"))
-    return pos.groupBy(
-        F.col("__gh").alias("gh", metadata=_gram_meta(span_tokens, portable))
-    ).agg(c.alias("c"))
-
-
-def merge_gram_index(
-    index: DataFrame, delta: DataFrame, max_count: int | None = None
-) -> DataFrame:
-    """Advance the repeated-span state: sum the per-gram counts of
-    the stored index and a new batch's :func:`gram_index`. Both sides
-    must carry MATCHING hash-family/width metadata (a cross-family
-    merge would interleave incompatible 64-bit spaces and corrupt the
-    counts invisibly). ``max_count`` saturates the merged counts —
-    cap at the ``min_occurrences`` the removal gate uses and the
-    stored state stays bounded with identical removal decisions
-    (``c`` is only ever compared to that threshold, and a cap ≥ 1
-    keeps zero/nonzero intact for the keeper rule)."""
-    if max_count is not None and max_count < 1:
-        raise ValueError(f"max_count must be >= 1, got {max_count}")
-    im = dict(index.schema["gh"].metadata or {}) if "gh" in index.columns else {}
-    dm = dict(delta.schema["gh"].metadata or {}) if "gh" in delta.columns else {}
-    keys = ("family", "span_tokens")
-    got_i = {k: im.get(k) for k in keys}
-    got_d = {k: dm.get(k) for k in keys}
-    if got_i["family"] is None or got_d["family"] is None:
-        raise ValueError(
-            "merge_gram_index requires gram-hash metadata on both "
-            f"sides (index: {got_i}, delta: {got_d}) — build them with "
-            "gram_index() or assert provenance with stamp_gram_index()"
-        )
-    if got_i != got_d:
-        raise ValueError(
-            f"gram_index merge mismatch: index was built with {got_i} "
-            f"but delta with {got_d} — merging incompatible hash "
-            "families/widths corrupts the counts invisibly"
-        )
-    c = F.sum("c")
-    if max_count is not None:
-        c = F.least(c, F.lit(max_count).cast("long"))
-    return index.unionByName(delta).groupBy("gh").agg(c.alias("c"))
-
-
-def remove_repeated_spans_against(
-    batch: DataFrame,
-    index: DataFrame,
-    span_tokens: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_occurrences: int = 2,
-    until_clean: bool = True,
-    max_rounds: int = 20,
-    portable: bool = False,
-    checkpoint_dir: str | None = None,
-    resume: bool = False,
-) -> DataFrame:
-    """Incremental cross-document repeated-span removal: excise from
-    a new batch every token span whose gram reaches
-    ``min_occurrences`` counting BOTH the stored :func:`gram_index`
-    history and the batch itself — the daily-crawl increment of
-    :func:`remove_repeated_spans`, without ever re-scanning (or even
-    retaining) the historical text.
-
-    Keeper policy mirrors the batch op's ``keep_first`` under the
-    history-first convention: a gram already present in the index
-    holds its keeper in the retained corpus, so every batch
-    occurrence is excised; a batch-only duplicated gram keeps its
-    minimal ``(id, position)`` batch occurrence. With history ids
-    ordered before batch ids this reproduces the full-corpus op's
-    output on the batch slice exactly (differential-tested).
-
-    ``until_clean`` fixpoints junction residuals against the STATIC
-    index plus the current batch (the cross-batch analogue of the
-    batch op's corpus-wide fixpoint); ``max_rounds`` is the same
-    hard failure bound. Returns the batch with ``text_col`` replaced
-    plus the ``n_tokens_removed`` / ``n_tokens_kept`` audit columns;
-    union :func:`gram_index` of the RESULT into the store via
-    :func:`merge_gram_index` afterwards.
-
-    Scale shape: per round, the batch-side gram scans + one
-    map-side-combined batch count, ONE count join against the stored
-    index (index-sized state never broadcast, never rebuilt), then
-    the same semi/anti joins, window merge and JVM excision as the
-    batch op. History cost is the join, not a re-scan — the same
-    contract as :func:`neardup_against` / :func:`dedup_against`.
-
-    Checkpointing follows :func:`remove_repeated_spans`:
-    ``checkpoint_dir=None`` → localCheckpoint rounds with prior-round
-    block release (executor-local — NOT fault-tolerant); a directory
-    → alternating scratch-parquet slots, so executor loss replays at
-    most one round from durable state. The same directory-lifetime
-    rule applies: reliable-mode results lazily read the live scratch
-    parquet, so the directory must outlive their full consumption,
-    and sequential calls must not share a directory.
-
-    ``resume=True`` (round 13) follows the batch op's driver-loss
-    discipline: reliable mode records each completed round in an
-    alternating manifest, and a resumed call validates the semantic
-    parameters and continues the fixpoint from the recorded docs slot
-    — assuming the SAME batch and the SAME stored index (the manifest
-    cannot verify either). Requires ``checkpoint_dir`` +
-    ``until_clean``."""
-    if span_tokens < 1:
-        raise ValueError(f"span_tokens must be >= 1, got {span_tokens}")
-    if max_rounds < 1:
-        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    if resume and (checkpoint_dir is None or not until_clean):
-        raise ValueError(
-            "resume=True requires checkpoint_dir (the durable slots "
-            "ARE the resume state) and until_clean=True (single-round "
-            "mode has no rounds to resume)"
-        )
-    # the stored state must have been built with THIS family and gram
-    # width — both families live in the same 64-bit space, so an
-    # unchecked mismatch would read as zero historical hits (silently
-    # missed duplicates); gram_index stamps the metadata this reads
-    _check_gram_meta(index, span_tokens, portable, "stored gram_index")
-
-    spark = batch.sparkSession
-    _OP = "remove_repeated_spans_against"
-    params = {
-        "span_tokens": span_tokens,
-        "text_col": text_col,
-        "id_col": id_col,
-        "min_occurrences": min_occurrences,
-        "portable": portable,
-    }
-
-    hist = index.select("gh", F.col("c").alias("__ch"))
-    audit_removed = F.lit(0).cast("long")
-    cur = batch
-    rounds = 0
-    manifests = checkpoint_dir is not None and until_clean
-    if manifests:
-        manifest = _manifest_read_latest(spark, checkpoint_dir) if resume else None
-        if manifest is not None:
-            _manifest_validate(manifest, _OP, params)
-            rounds = manifest["seq"]
-            if rounds >= 1:
-                cur = spark.read.parquet(
-                    f"{checkpoint_dir.rstrip('/')}/docs_{rounds % 2}"
-                )
-                audit_removed = F.col("__cum_removed")
-            if manifest.get("done"):
-                return _finalize_span_audit(cur, text_col)
-        else:
-            for s in (0, 1):
-                _manifest_write(
-                    spark, checkpoint_dir, s,
-                    {"op": _OP, "params": params, "seq": 0, "done": False},
-                )
-            rounds = 0
-    prev_frames: list[DataFrame] = []
-    while True:
-        pos = _gram_positions(cur, span_tokens, text_col, id_col, portable)
-        counts = (
-            pos.groupBy("__gh")
-            .agg(F.count("*").alias("__cb"))
-            .join(hist.withColumnRenamed("gh", "__gh"), "__gh", "left")
-            .withColumn("__ch", F.coalesce("__ch", F.lit(0)))
-        )
-        dup = counts.filter(
-            F.col("__cb") + F.col("__ch") >= min_occurrences
-        ).select("__gh", "__ch")
-        hits = pos.join(dup, "__gh")
-        # batch-only duplicated grams (no history copy) keep their
-        # minimal batch occurrence — history-held grams excise ALL
-        # batch occurrences (the keeper lives in the retained corpus)
-        keepers = (
-            hits.filter(F.col("__ch") == 0)
-            .groupBy("__gh")
-            .agg(F.min(F.struct(id_col, "__pos")).alias("__k"))
-            .select(
-                "__gh",
-                F.col(f"__k.{id_col}").alias(id_col),
-                F.col("__k.__pos").alias("__pos"),
-            )
-        )
-        hits = hits.select(id_col, "__pos", "__gh").join(
-            keepers, ["__gh", id_col, "__pos"], "left_anti"
-        )
-        spans = _merge_hit_positions(hits, span_tokens, id_col)
-        if until_clean:
-            spans = _truncate_round(
-                spans, checkpoint_dir, f"spans_{rounds % 2}", eager=True
-            )
-            for f in prev_frames:
-                _local_ck_release(f)
-            prev_frames = []
-            if spans.isEmpty():
-                if manifests:
-                    _manifest_write(
-                        spark, checkpoint_dir, rounds,
-                        {"op": _OP, "params": params, "seq": rounds,
-                         "done": True},
-                    )
-                break
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(
-                f"remove_repeated_spans_against did not converge in "
-                f"{max_rounds} rounds — junction residuals keep "
-                "re-forming; raise max_rounds or re-examine span_tokens"
-            )
-        prev_cur = cur
-        cur, audit_removed = _excise_spans(
-            cur, spans, text_col, id_col, audit_removed,
-            checkpoint_dir, f"docs_{rounds % 2}",
-        )
-        if manifests:
-            _manifest_write(
-                spark, checkpoint_dir, rounds,
-                {"op": _OP, "params": params, "seq": rounds,
-                 "done": False},
-            )
-        if not until_clean:
-            break
-        prev_frames = [spans] + ([prev_cur] if rounds > 1 else [])
-
-    return _finalize_span_audit(cur, text_col)
-
-
 def _excise_spans(
     cur: DataFrame,
     spans: DataFrame,
@@ -920,12 +536,12 @@ def _excise_spans(
     slot: str = "docs_0",
     truncate: bool = True,
 ) -> tuple[DataFrame, "Column"]:
-    """One excision round shared by the batch and incremental span
-    removers: join the merged spans back, cut covered token positions
-    with a JVM filter-with-index, accumulate the removed-count audit,
-    truncate lineage (lazy localCheckpoint, or the ``slot`` parquet
-    under ``checkpoint_dir`` in reliable mode). Returns the updated
-    frame and the running audit column (``__cum_removed``).
+    """One excision round of the span remover: join the merged spans
+    back, cut covered token positions with a JVM filter-with-index,
+    accumulate the removed-count audit, truncate lineage (lazy
+    localCheckpoint, or the ``slot`` parquet under ``checkpoint_dir``
+    in reliable mode). Returns the updated frame and the running audit
+    column (``__cum_removed``).
 
     ``truncate=False`` skips the lineage cut and returns the lazy
     plan: single-round callers that UNION several excisions over one
@@ -1277,10 +893,9 @@ def lsh_bands(
     PIPELINE ORDER (round-13 advisor note): because signature-less
     docs emit no bands, near-dup ALONE no longer collapses
     byte-identical empty/blank documents (pre-round-12 they collided
-    through the accidental shared NULL bucket). Run exact dedup
-    (:func:`dedup_exact` / :func:`dedup_against` on the md5 digest)
-    in front — the standard cascade order — so identical empties are
-    collapsed before banding.
+    through the accidental shared NULL bucket). Run exact dedup on the
+    md5 digest in front — the standard cascade order — so identical
+    empties are collapsed before banding.
     """
     df_with_sigs = df_with_sigs.filter(F.col("sig_0").isNotNull())
     n_bands = num_hashes // band_size
@@ -1839,8 +1454,7 @@ def minhash_index(
     needs (the
     band table is a cheap narrow derivation via :func:`lsh_bands`,
     so it is NOT stored). Store partitioned/bucketed by id; union
-    each surviving batch's index in to advance the state — the
-    near-dup analogue of :func:`digest_index`. The ``sig_i`` fields
+    each surviving batch's index in to advance the state. The ``sig_i`` fields
     carry family/num_hashes/shingle as schema metadata (stamped by
     :func:`minhash_signature`, parquet-round-tripped), which
     :func:`neardup_against` validates — a shingle-width mismatch
@@ -1879,9 +1493,9 @@ def neardup_against(
     (the self-join salting of :func:`lsh_candidate_pairs` does not
     apply here).
 
-    Returns the surviving batch rows. Exact-dup ingest
-    (:func:`dedup_against`) composes in front; union the survivors'
-    :func:`minhash_index` into the stored index afterwards.
+    Returns the surviving batch rows. Exact-dup ingest composes in
+    front; union the survivors' :func:`minhash_index` into the stored
+    index afterwards.
 
     The stored index (and ``batch_sig`` when passed) must carry the
     signature metadata :func:`minhash_signature` stamps, and it must

@@ -96,8 +96,10 @@ def pagerank(
     real cluster pass ``checkpoint_dir``: each cut writes the rank
     table to alternating scratch-parquet slots under that reliable
     path (the ``duplicate_clusters`` / span-removal discipline), so
-    executor loss replays at most ``checkpoint_every`` iterations
-    from durable state.
+    executor loss before the last cut replays at most
+    ``checkpoint_every`` iterations from durable state. The last
+    ``n_iter % checkpoint_every`` iterations are never cut: they are
+    always recomputed from the last cut.
 
     ``driver_below`` > 0 enables the small-graph fast path: when the
     node count is at or below it, edges are collected and the SAME

@@ -658,147 +658,3 @@ def pmi_collocations(
         .orderBy(F.col("pmi").desc(), "w1", "w2")
         .limit(top_k)
     )
-
-
-def stupid_backoff_scores(
-    df: DataFrame,
-    train_df: DataFrame | None = None,
-    order: int = 3,
-    rho: float = 0.4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_count: int = 1,
-) -> DataFrame:
-    """Stupid backoff scoring (Brants et al. 2007) — the heuristic
-    that replaced smoothed probabilities for web-scale LMs:
-
-    ``S(w | ctx_k) = c(gram_{k+1}) / c(ctx_k)`` when the (k+1)-gram
-    was seen, else ``rho · S(w | ctx_{k-1})``, bottoming out at the
-    unigram relative frequency ``c(w)/N``. No normalization — it's a
-    score, which is exactly why it needs only raw count tables and
-    scales to arbitrary corpora.
-
-    Deployment shape = the broadcast n-gram scorer's: one count
-    aggregation per order 1..n trains the model (map-side combined;
-    ``min_count`` prunes orders ≥ 2), all tables ship as sorted
-    (hash, count) arrays, and scoring is a single shuffle-free
-    ``mapInPandas`` scan resolving each position at the longest seen
-    order (vectorized: one searchsorted per order over the still-
-    unresolved positions). Adds ``n_scored`` (positions with full
-    left context), ``mean_log_score`` (nats, higher = more fluent)
-    — documents shorter than ``order`` tokens get nulls.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    if order < 2:
-        raise ValueError(f"order must be >= 2, got {order}")
-    spark = df.sparkSession
-    train = df if train_df is None else train_df
-
-    tables = []  # tables[k] = sorted (hash, count) for (k+1)-grams
-    total_tokens = None
-    for k in range(1, order + 1):
-        if k == 1:
-            cnt = _unigram_counts(train, text_col)
-        else:
-            names = [f"w{i + 1}" for i in range(k)]
-            cnt = (
-                _ngram_stream(train, text_col, None, k)
-                .groupBy(*names)
-                .agg(F.count("*").alias("c"))
-            )
-            if min_count > 1:
-                cnt = cnt.filter(F.col("c") >= min_count)
-        pdf_k = cnt.toPandas()
-        if k == 1:
-            total_tokens = float(pdf_k["c"].sum()) if len(pdf_k) else 0.0
-        tables.append(_sorted_table(_fold_keys(pdf_k, k), pdf_k["c"]))
-
-    bc = spark.sparkContext.broadcast((tables, total_tokens))
-    ord_n = int(order)
-    rho_f = float(rho)
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("n_scored", LongType()),
-            StructField("mean_log_score", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        tbls, n_tok = bc.value
-
-        def lookup(q, k):
-            return _lookup_sorted(q, tbls[k - 1])
-
-        for pdf in batches:
-            n = len(pdf)
-            ns = np.zeros(n, dtype=np.float64)
-            ms = np.full(n, np.nan)
-            lists = _arrow_token_lists(pdf[text_col])
-            lens = lists.value_lengths().to_numpy(zero_copy_only=False)
-            lens = np.nan_to_num(lens.astype(np.float64), nan=0.0).astype(
-                np.int64
-            )
-            flat = lists.flatten().to_numpy(zero_copy_only=False)
-            # n_tok == 0 (empty/degenerate training corpus): no model
-            # exists — every document scores NULL, matching the other
-            # degenerate cases instead of emitting log(0) = -inf
-            if len(flat) and n_tok:
-                th = pd.util.hash_array(flat)
-                ends = np.cumsum(lens)
-                doc_of = np.repeat(np.arange(n), lens)
-                pos = np.arange(len(flat))
-                # score the word at position p+order-1 given its full
-                # left context: one scored position per n-gram start
-                starts = np.flatnonzero(pos + (ord_n - 1) < ends[doc_of])
-                m = len(starts)
-                s_val = np.zeros(m, np.float64)
-                unresolved = np.ones(m, dtype=bool)
-                backoff = np.ones(m, np.float64)
-                # longest order first; target word is starts + order-1,
-                # a k-gram ending there spans [starts+order-k, ...]
-                for k in range(ord_n, 1, -1):
-                    if not unresolved.any():
-                        break
-                    u = np.flatnonzero(unresolved)
-                    first = starts[u] + (ord_n - k)
-                    gk = th[first]
-                    for i in range(1, k):
-                        gk = _mix(gk, th[first + i])
-                    pk = th[first]
-                    for i in range(1, k - 1):
-                        pk = _mix(pk, th[first + i])
-                    cg = lookup(gk, k)
-                    cp = lookup(pk, k - 1)  # k >= 2 here, so k-1 >= 1
-                    seen = (cg > 0) & (cp > 0)
-                    res = u[seen]
-                    s_val[res] = backoff[res] * (cg[seen] / cp[seen])
-                    unresolved[res] = False
-                    backoff[u[~seen]] *= rho_f
-                if unresolved.any():
-                    u = np.flatnonzero(unresolved)
-                    last = starts[u] + (ord_n - 1)
-                    c1 = lookup(th[last], 1)
-                    # unseen unigram: floor at 1/(2N) so log stays finite
-                    s_val[u] = backoff[u] * np.maximum(c1, 0.5) / n_tok
-                nb = np.maximum(lens - (ord_n - 1), 0)
-                offsets = np.concatenate([[0], np.cumsum(nb)])
-                logs = np.log(s_val)
-                sums = np.add.reduceat(
-                    np.concatenate([logs, [0.0]]), offsets[:-1]
-                )
-                has = nb > 0
-                ns[has] = nb[has]
-                ms[has] = sums[has] / nb[has]
-            res_pdf = pdf.copy()
-            res_pdf["n_scored"] = pd.array(
-                np.where(ns > 0, ns, np.nan), dtype="Int64"
-            )
-            res_pdf["mean_log_score"] = pd.array(ms, dtype="Float64")
-            yield res_pdf
-
-    return df.mapInPandas(score, out_schema)

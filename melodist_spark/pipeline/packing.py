@@ -40,82 +40,6 @@ from .sampling import _hash01
 from .text import token_count
 
 
-def chunk_tokens(
-    df: DataFrame,
-    max_tokens: int,
-    overlap: int = 0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Split documents into ``max_tokens``-token chunks with
-    ``overlap`` tokens of left context carried into each following
-    chunk (the RAG / long-document-pretraining prep step).
-
-    Entirely narrow JVM expressions: tokenize once, build chunk
-    start offsets with ``sequence``, slice per chunk, posexplode —
-    no shuffle, no Python. Chunk starts advance by
-    ``max_tokens - overlap``; every token of the original document
-    appears in at least one chunk and the non-overlap prefix of each
-    chunk reconstructs the document in order. Empty/blank documents
-    yield no chunks.
-
-    Output: (all input columns minus ``text_col``) + ``chunk_id``,
-    ``chunk_text``, ``chunk_tokens``.
-    """
-    if max_tokens < 1:
-        raise ValueError(f"max_tokens must be >= 1, got {max_tokens}")
-    if not 0 <= overlap < max_tokens:
-        raise ValueError(
-            f"overlap must be in [0, max_tokens), got {overlap}"
-        )
-    step = max_tokens - overlap
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    staged = df.withColumn("__toks", toks).withColumn(
-        "__n", token_count(F.col(text_col))
-    )
-    # chunk start offsets 0, step, 2*step, ...; a start s > 0 only
-    # earns a chunk if it contributes tokens beyond the previous
-    # chunk's end (s < n - overlap) — otherwise the trailing chunk
-    # would be a pure suffix-duplicate of its predecessor (e.g. an
-    # 8-token doc at max=10/overlap=3 must yield ONE chunk, not a
-    # redundant second chunk of its last token)
-    starts = F.sequence(
-        F.lit(0),
-        F.greatest(
-            F.floor((F.col("__n") - overlap - 1) / step).cast("int"),
-            F.lit(0),
-        )
-        * step,
-        F.lit(step),
-    )
-    chunks = F.transform(
-        starts,
-        lambda s: F.struct(
-            F.array_join(
-                F.slice(F.col("__toks"), s + 1, F.lit(max_tokens)), " "
-            ).alias("chunk_text"),
-            F.least(F.col("__n") - s, F.lit(max_tokens))
-            .cast("long")
-            .alias("chunk_tokens"),
-        ),
-    )
-    # posexplode over the struct array yields (pos, struct)
-    out = (
-        staged.filter(F.col("__n") > 0)
-        .select(
-            "*",
-            F.posexplode(chunks).alias("chunk_id", "__c"),
-        )
-        .select(
-            *[c for c in df.columns if c != text_col],
-            F.col("chunk_id").cast("long").alias("chunk_id"),
-            F.col("__c.chunk_text").alias("chunk_text"),
-            F.col("__c.chunk_tokens").alias("chunk_tokens"),
-        )
-    )
-    return out
-
-
 def pack_sequences(
     df: DataFrame,
     seq_len: int,
@@ -196,52 +120,3 @@ def pack_sequences(
         )
     )
     return out.drop("__h", "__ntok", "__bucket", "__bucket_off")
-
-
-def assign_shards(
-    manifest: DataFrame, seqs_per_shard: int, out_col: str = "shard"
-) -> DataFrame:
-    """Attach the output-shard id to a :func:`pack_sequences`
-    manifest: ``shard = seq_first // seqs_per_shard`` — contiguous
-    runs of sequences land in the same shard, so every shard holds
-    ~``seqs_per_shard × seq_len`` tokens by construction (the last
-    document of a shard may spill its tail into the next shard's
-    first sequence, exactly as sequence packing splits documents).
-    A narrow expression — no shuffle."""
-    if seqs_per_shard < 1:
-        raise ValueError(f"seqs_per_shard must be >= 1, got {seqs_per_shard}")
-    # integer `div`, not float division: seq_first at 100 TB scale
-    # exceeds double's exact-integer range
-    return manifest.withColumn(
-        out_col, F.expr(f"seq_first div {int(seqs_per_shard)}")
-    )
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    seq_len: int,
-    seqs_per_shard: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    salt: str = "",
-    n_buckets: int = 1024,
-) -> None:
-    """Materialize the corpus as size-balanced training shards:
-    pack → assign shards → one file per shard
-    (``repartition(shard)`` + ``partitionBy(shard)``), so a loader
-    streams shard directories of near-identical token counts in
-    manifest order. Token balance is by construction (not by file
-    size), which is what a fixed-batch trainer actually needs."""
-    manifest = pack_sequences(
-        df, seq_len, text_col=text_col, id_col=id_col, salt=salt,
-        n_buckets=n_buckets,
-    )
-    sharded = assign_shards(manifest, seqs_per_shard)
-    (
-        sharded.repartition(F.col("shard"))
-        .sortWithinPartitions("shard", "begin_offset")
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(path)
-    )

@@ -55,62 +55,6 @@ def hash_sample(
     return df.filter(_hash01(key) < F.lit(fraction))
 
 
-def mixture_sample(
-    df: DataFrame,
-    weights: dict[str, float],
-    by: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "",
-) -> DataFrame:
-    """Deterministic domain-mixture resampling (training-mix
-    assembly): downsample groups so the kept corpus matches the
-    target proportions in ``weights``, keeping as many rows as the
-    mix allows (no group is ever upsampled).
-
-    With group counts ``n_g`` and target shares ``p_g`` (normalized),
-    the largest achievable total is ``N = min_g(n_g / p_g)``; each
-    group keeps the deterministic hash-fraction ``N * p_g / n_g`` of
-    its rows (same id-hash family as :func:`hash_sample`, so the
-    selection is engine-portable and re-runnable). Groups absent from
-    ``weights`` are dropped — the blocklist behaviour a curated mix
-    wants.
-
-    Scale shape: one map-side-combined count per group (the per-group
-    fractions are a driver scalar map — the model boundary, like the
-    k-means centroids), then a stateless narrow hash filter; no
-    shuffle of the corpus itself.
-    """
-    if not weights:
-        raise ValueError("weights must be a non-empty mapping")
-    if any(w < 0 for w in weights.values()):
-        raise ValueError("weights must be non-negative")
-    tot = float(sum(weights.values()))
-    if tot <= 0:
-        raise ValueError("weights must sum to > 0")
-    shares = {k: w / tot for k, w in weights.items() if w > 0}
-
-    counts = {
-        r["g"]: r["n"]
-        for r in df.filter(F.col(by).isin(*shares))
-        .groupBy(F.col(by).alias("g"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    missing = [g for g in shares if g not in counts]
-    if missing:
-        raise ValueError(f"groups absent from the corpus: {missing}")
-    n_total = min(counts[g] / p for g, p in shares.items())
-    frac = {g: min(1.0, n_total * p / counts[g]) for g, p in shares.items()}
-
-    key = F.concat(F.col(id_col).cast("string"), F.lit(f"|{salt}"))
-    h = _hash01(key)
-    keep = None
-    for g, fr in frac.items():
-        cond = (F.col(by) == g) & (h < F.lit(fr))
-        keep = cond if keep is None else keep | cond
-    return df.filter(keep)
-
-
 def stratified_sample_n(
     df: DataFrame,
     strata_cols: list[str],

@@ -371,16 +371,13 @@ def embedding_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Durable embedding near-dup state for incremental ingest:
+    """LSH index of an embedding table:
     ``(id, embedding, bucket_0..bucket_{T-1})`` — the embedding-side
     analogue of :func:`dedup.minhash_index`. Unlike MinHash (where
     the signature suffices), the exact cosine re-check needs the
-    vector itself, so the state is the embedding plus its
+    vector itself, so the index is the embedding plus its
     precomputed hyperplane buckets (~4·dim + 8·T B per doc — i.e.
-    the vector store IS the index, which is how production embedding
-    dedup works anyway). Store partitioned/bucketed BY ``bucket_0``:
-    the incremental check's only shuffle is the bucket equi-join.
-    Union each surviving batch's index in to advance the state.
+    the vector store IS the index).
 
     ``num_planes`` / ``num_tables`` are the standard LSH AND-OR
     knobs (the cosine analogue of MinHash banding): each table ANDs
@@ -398,11 +395,9 @@ def embedding_index(
 
     Every ``bucket_t`` field carries ``num_planes`` / ``num_tables``
     / the plane-family tag as schema metadata (:func:`_emb_meta`) —
-    it survives select/union and the parquet round trip, so
-    :func:`embedding_neardup_against` can verify a stored index was
-    built with the parameters the caller now claims instead of
-    silently missing duplicates on a planes mismatch (the bucket
-    values of different plane counts live in the same long space)."""
+    it survives select/union and the parquet round trip, so a stored
+    index records the parameters it was built with (the bucket values
+    of different plane counts live in the same long space)."""
     planes = np.array(
         [_hyperplane(dim, p) for p in range(num_tables * num_planes)],
         dtype=np.float64,
@@ -465,175 +460,19 @@ def _emb_meta(num_planes: int, num_tables: int) -> dict:
     }
 
 
-def stamp_embedding_index(
-    df: DataFrame, num_planes: int, num_tables: int
-) -> DataFrame:
-    """Attach plane/table metadata to an index frame that lost it
-    (schema rebuilt by an external writer). The caller asserts the
-    parameters — bucket values of different plane counts are
-    indistinguishable, so only use this for frames whose provenance
-    is known."""
-    meta = _emb_meta(num_planes, num_tables)
-    others = [c for c in df.columns if not c.startswith("bucket_")]
-    return df.select(
-        *others,
-        *[
-            F.col(f"bucket_{t}").alias(f"bucket_{t}", metadata=meta)
-            for t in range(num_tables)
-        ],
-    )
-
-
-def _check_index_tables(
-    df: DataFrame, num_tables: int, what: str, num_planes: int | None = None
-) -> None:
-    """Fail loudly when an :func:`embedding_index` frame was built
-    with different parameters than the caller now claims — a mismatch
-    would otherwise degrade SILENTLY into missed duplicates (too few
-    tables read → lost OR-amplification recall; a planes mismatch →
-    disjoint bucket spaces, zero collisions) or an AnalysisException
-    naming an internal column (too many tables). Two layers: the
-    bucket COLUMNS pin T structurally (``bucket_0 .. bucket_{T-1}``
-    present, ``bucket_T`` absent), and the schema METADATA stamped by
-    :func:`embedding_index` pins ``num_planes`` + the plane family —
-    the half no column shape can reveal. Metadata-less frames (built
-    outside :func:`embedding_index`) fail the planes check with a
-    pointer to :func:`stamp_embedding_index`."""
-    missing = [
-        f"bucket_{t}" for t in range(num_tables) if f"bucket_{t}" not in df.columns
-    ]
-    if missing:
-        raise ValueError(
-            f"{what} is missing bucket columns {missing}: it was built "
-            f"with fewer than num_tables={num_tables} tables (columns: "
-            f"{df.columns})"
-        )
-    if f"bucket_{num_tables}" in df.columns:
-        raise ValueError(
-            f"{what} has column bucket_{num_tables}: it was built with "
-            f"MORE than num_tables={num_tables} tables — pass the value "
-            "the index was built with or duplicates will be missed "
-            f"(columns: {df.columns})"
-        )
-    if num_planes is None:
-        return
-    want = _emb_meta(num_planes, num_tables)
-    meta = dict(df.schema["bucket_0"].metadata or {})
-    got = {k: meta.get(k) for k in want}
-    if got["num_planes"] is None:
-        raise ValueError(
-            f"{what} carries no plane metadata on bucket_0 — it was "
-            "built outside embedding_index() (or its schema was "
-            "rebuilt without metadata). Rebuild it, or assert its "
-            "provenance with stamp_embedding_index(df, num_planes, "
-            "num_tables); matching blindly would read a planes "
-            "mismatch as zero collisions (silently missed duplicates)."
-        )
-    if got != want:
-        raise ValueError(
-            f"{what} was built with {got} but this call asks for "
-            f"{want} — buckets from different plane parameters share "
-            "the long space, so a mismatch reads as missed duplicates. "
-            "Pass the values the index was built with."
-        )
-
-
 def _bucket_long_form(
     df: DataFrame, tag: str, id_col: str, num_tables: int
 ) -> DataFrame:
     """(id, table, bucket) long form of an :func:`embedding_index`
     frame — one narrow posexplode of the T bucket columns; vectors
-    deliberately left behind (joined back per candidate). Shared by
-    the AND-OR candidate joins of :func:`embedding_neardup_against`
-    and :func:`lsh_topk`."""
+    deliberately left behind (joined back per candidate). Feeds the
+    AND-OR candidate join of :func:`lsh_topk`."""
     return df.select(
         F.col(id_col).alias(tag),
         F.posexplode(
             F.array(*[f"bucket_{t}" for t in range(num_tables)])
         ).alias("__tbl", "__bucket"),
     )
-
-
-def embedding_neardup_against(
-    batch: DataFrame,
-    index: DataFrame,
-    dim: int,
-    threshold: float = 0.9,
-    num_planes: int = 8,
-    num_tables: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    arrow: bool = False,
-    batch_index: DataFrame | None = None,
-) -> DataFrame:
-    """Incremental embedding near-dup: drop batch documents whose
-    cosine against any previously-indexed embedding reaches
-    ``threshold`` — the daily-ingest increment for semantic dedup,
-    without re-comparing the historical corpus against itself (the
-    analogue of :func:`dedup.neardup_against`, with the exact-cosine
-    re-check MinHash can't give).
-
-    Candidates come from the batch buckets equi-joined against the
-    stored index buckets (a two-table join, NOT the self-join — AQE
-    skew splitting covers hot buckets; there is no quadratic term in
-    the index size, only in per-bucket collision counts). Matches
-    re-check exact cosine (``arrow=True`` for the einsum kernel) and
-    hit batch ids are anti-joined away.
-
-    ``num_planes`` / ``num_tables`` must match the values the index
-    was built with — the planes are deterministic, so any session
-    reproduces the same buckets. BOTH are verified against the index
-    frame itself and a mismatch raises (silently it would read as
-    missed duplicates): ``num_tables`` structurally from the bucket
-    columns, ``num_planes`` + the plane family from the schema
-    metadata :func:`embedding_index` stamps on them (parquet
-    round-trips it). With T tables a pair is a candidate
-    when ANY table's buckets agree (OR-amplification); the candidate
-    id pairs are deduplicated BEFORE the vectors join in, so a pair
-    colliding in several tables pays one cosine. ``batch_index``
-    passes the batch's own :func:`embedding_index` when already in
-    hand (computed for the index advance); streaming ingest composes
-    this per micro-batch via ``foreachBatch``, the standard
-    stream-vs-index shape (same policy as the minhash incremental
-    path).
-
-    Returns the surviving batch rows; union their
-    :func:`embedding_index` into the store afterwards."""
-    _check_index_tables(index, num_tables, "stored index", num_planes)
-    bidx = (
-        batch_index
-        if batch_index is not None
-        else embedding_index(
-            batch, dim, num_planes, num_tables, id_col, vec_col
-        )
-    )
-    if batch_index is not None:
-        _check_index_tables(bidx, num_tables, "batch_index", num_planes)
-
-    cand = (
-        _bucket_long_form(bidx, "__bid", id_col, num_tables)
-        .join(
-            _bucket_long_form(index, "__iid", id_col, num_tables),
-            ["__tbl", "__bucket"],
-        )
-        .select("__bid", "__iid")
-        .distinct()
-    )
-    bs = bidx.select(
-        F.col(id_col).alias("__bid"), F.col(vec_col).alias("__bv")
-    )
-    isx = index.select(
-        F.col(id_col).alias("__iid"), F.col(vec_col).alias("__iv")
-    )
-    hits = (
-        cand.join(bs, "__bid")
-        .join(isx, "__iid")
-        .withColumn("__cos", _pair_cosine(F.col("__bv"), F.col("__iv"), arrow))
-        .filter(F.col("__cos") >= float(threshold))
-        .select(F.col("__bid").alias(id_col))
-        .distinct()
-    )
-    return batch.join(hits, id_col, "left_anti")
 
 
 def semantic_dedup(
@@ -821,8 +660,7 @@ def lsh_topk(
     deduplicated candidates. At 100 TB the bucket join replaces the
     full cross product; ``num_planes`` prices candidate work (bucket
     size halves per plane), ``num_tables`` buys recall back — the
-    same knobs, measured in `tools/embedding_increment_smoke.py` and
-    `tools/ann_scale_smoke.py`."""
+    same knobs, measured in `tools/ann_scale_smoke.py`."""
     c = embedding_index(corpus, dim, num_planes, num_tables, id_col, vec_col)
     q = embedding_index(queries, dim, num_planes, num_tables, id_col, vec_col)
 
@@ -910,8 +748,7 @@ def train_kmeans_centroids(
     xn = _normalize_rows(x)
 
     for _ in range(iters):
-        cn = _normalize_rows(cents)
-        cell = (xn @ cn.T).argmax(axis=1)  # ties -> lowest index
+        cell = _nearest_cell(xn, _normalize_rows(cents))
         nxt = cents.copy()
         for c in range(len(cents)):
             pts = x[cell == c]
@@ -939,9 +776,8 @@ def ivf_assign(
     def _cell(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="int32")
-        x = np.vstack(v.to_numpy()).astype(np.float64)
-        xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-30)
-        return pd.Series((xn @ cn.T).argmax(axis=1).astype("int32"))
+        xn = _normalize_rows(np.vstack(v.to_numpy()).astype(np.float64))
+        return pd.Series(_nearest_cell(xn, cn).astype("int32"))
 
     # NOTE: deliberately NOT asNondeterministic (unlike lsh_bucket_udf
     # and pq_encode): semantic_dedup's salted window path relies on its
@@ -956,6 +792,29 @@ def ivf_assign(
 
 def _normalize_rows(x: np.ndarray) -> np.ndarray:
     return x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-30)
+
+
+def _nearest_cell(xn: np.ndarray, cn: np.ndarray) -> np.ndarray:
+    """Cosine argmax of normalized rows ``xn`` over normalized
+    centroids ``cn``; ties break to the lowest cell index."""
+    return (xn @ cn.T).argmax(axis=1)
+
+
+def _pq_codes(xn: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m) uint8 PQ codes of normalized rows ``xn``: per subspace,
+    the nearest sub-centroid by L2 (ties to the lowest code)."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(xn), m), dtype=np.uint8)
+    for s in range(m):
+        xs = xn[:, s * dsub : (s + 1) * dsub]
+        cs = books[s]
+        d2 = (
+            (xs * xs).sum(axis=1, keepdims=True)
+            - 2.0 * xs @ cs.T
+            + (cs * cs).sum(axis=1)
+        )
+        codes[:, s] = d2.argmin(axis=1).astype(np.uint8)
+    return codes
 
 
 def train_pq_codebooks(
@@ -1031,7 +890,6 @@ def pq_encode(
     64-dim float corpus compresses 32× before any index is built.
     One Arrow-batched distance matmul per subspace per batch; ties
     break to the lowest code (argmin), deterministically."""
-    m, ksub, dsub = codebooks.shape
     books = codebooks.copy()
 
     @pandas_udf("binary")
@@ -1039,17 +897,7 @@ def pq_encode(
         if len(v) == 0:
             return pd.Series([], dtype=object)
         x = _normalize_rows(np.vstack(v.to_numpy()).astype(np.float64))
-        codes = np.empty((len(x), m), dtype=np.uint8)
-        for s in range(m):
-            xs = x[:, s * dsub : (s + 1) * dsub]
-            cents = books[s]
-            d2 = (
-                (xs * xs).sum(axis=1, keepdims=True)
-                - 2.0 * xs @ cents.T
-                + (cents * cents).sum(axis=1)
-            )
-            codes[:, s] = d2.argmin(axis=1).astype(np.uint8)
-        return pd.Series([c.tobytes() for c in codes])
+        return pd.Series([c.tobytes() for c in _pq_codes(x, books)])
 
     # asNondeterministic: see lsh_bucket_udf — stops filter-pushdown
     # duplication of the encode matmuls
@@ -1307,16 +1155,16 @@ def pq_ivfpq_topk(
     times (two encode evals, one cell eval, two scoring scans) for
     scores that are literally the same numbers — an ivfpq score is
     the pq ADC score of a row whose cell the query probes. This
-    kernel normalizes each batch once, derives codes (``pq_encode``
-    math), cells (``ivf_assign`` math) and the per-query ADC scores
-    once, and emits BOTH methods' per-batch top-k partials; one
-    window per (method, query) ranks the tiny partial frame.
+    kernel normalizes each batch once, derives codes and cells with
+    the helpers ``pq_encode`` and ``ivf_assign`` call
+    (:func:`_pq_codes`, :func:`_nearest_cell`) and the per-query ADC
+    scores once, and emits BOTH methods' per-batch top-k partials;
+    one window per (method, query) ranks the tiny partial frame.
 
-    Bit-identical to the pair of public ops by construction — same
-    normalize/argmin/argmax/LUT-gather float ops in the same order
-    over the same batch boundaries (the scan partitioning is the
-    same; the per-batch argpartition tie behavior is identical on
-    identical score arrays) — and pin-tested so
+    Identical to the pair of public ops up to within-batch ties: the
+    codes, cells and scores are the same float ops, but when several
+    rows tie at a batch's k-th score, ``argpartition`` may keep a
+    different one than the public op's scan does. Pin-tested
     (``test_pq_ivfpq_fused_matches_public_ops``). The fused form is
     the bench/deployment shape; the public ops remain the
     composable API (and the ``cell_col``/``code_col`` injection
@@ -1374,19 +1222,8 @@ def pq_ivfpq_topk(
             xn = _normalize_rows(
                 np.vstack(pdf[vcol].to_numpy()).astype(np.float64)
             )
-            # codes: pq_encode's exact per-subspace argmin
-            codes = np.empty((n, m), dtype=np.uint8)
-            for s in range(m):
-                xs = xn[:, s * dsub : (s + 1) * dsub]
-                cs = books[s]
-                d2 = (
-                    (xs * xs).sum(axis=1, keepdims=True)
-                    - 2.0 * xs @ cs.T
-                    + (cs * cs).sum(axis=1)
-                )
-                codes[:, s] = d2.argmin(axis=1).astype(np.uint8)
-            # cells: ivf_assign's exact cosine argmax
-            cell = (xn @ cents_n.T).argmax(axis=1)
+            codes = _pq_codes(xn, books)
+            cell = _nearest_cell(xn, cents_n)
             nid = pdf["neighbor_id"].to_numpy(np.int64)
             out_m, out_q, out_n, out_s = [], [], [], []
             for qi in range(nq):

@@ -4,7 +4,6 @@ All hot-path logic is built-in column expressions (regex, split,
 md5) — JVM-side, codegen-friendly, no Python workers — so a 100 TB
 documents table is one scan with map-side-only work. The exceptions
 are Arrow-batched kernels, never row-at-a-time Python:
-:func:`compression_ratio` (DEFLATE has no SQL expression),
 :func:`simhash16_arrow_udf` (replaces 16 per-row aggregate
 expressions), and the per-document repetition metrics
 :func:`gopher_repetition` and :func:`repetition_stats` (higher-order
@@ -54,20 +53,6 @@ def token_count(text: Column) -> Column:
     return F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(
         F.size(_tokens(text))
     )
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """A BPE-ish proxy: count word pieces after splitting on
-    whitespace and punctuation, plus one piece per 4 chars of long
-    words (subword pressure)."""
-    words = F.split(F.trim(text), r"[\s\p{Punct}]+")
-    extra = F.aggregate(
-        words,
-        F.lit(0),
-        lambda acc, w: acc
-        + F.when(F.length(w) > 8, (F.length(w) / 4).cast("int")).otherwise(0),
-    )
-    return token_count(text) + extra
 
 
 def char_class_counts(text: Column) -> dict[str, Column]:
@@ -177,8 +162,7 @@ def script_counts(text: Column) -> dict[str, Column]:
 
 def detect_script(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Argmax script per document (``script_pred``): highest character
-    count, ties to the alphabetically last script name (same
-    deterministic rule as :func:`detect_language`), 'und' when no
+    count, ties to the alphabetically last script name, 'und' when no
     script character occurs at all."""
     counts = script_counts(F.col(text_col))
     df = df.withColumns(counts)
@@ -192,45 +176,11 @@ def detect_script(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("script_pred", F.coalesce(best["l"], F.lit("und")))
 
 
-def detect_language(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Argmax of language stopword scores with deterministic
-    (alphabetical) tie-break; 'und' (undetermined) when no hits."""
-    scores = language_scores(F.col(text_col))
-    df = df.withColumns(scores)
-    langs = sorted(LANG_STOPWORDS)
-    pairs = F.array(
-        *[F.struct(F.col(f"score_{l}").alias("s"), F.lit(l).alias("l")) for l in langs]
-    )
-    best = F.array_max(F.filter(pairs, lambda p: p["s"] > 0))
-    # array_max on structs orders by (s, l); ties pick the
-    # lexicographically largest lang — invert for a stable, documented
-    # rule: highest score, then alphabetically last
-    return df.withColumn("lang_pred", F.coalesce(best["l"], F.lit("und")))
-
-
 def fingerprint(text: Column) -> Column:
     """Order-insensitive document fingerprint: md5 over the sorted
     distinct token set (word-shingle content signature)."""
     canon = F.concat_ws(" ", F.array_sort(F.array_distinct(_tokens(text))))
     return F.md5(canon)
-
-
-def simhash16_from_hashes(hashes: Column) -> Column:
-    """16-bit SimHash from a pre-computed array of md5 hex digests.
-
-    Each token contributes ±1 to 16 bit positions via the parity of
-    its first 16 hex digits (portable across engines — no
-    engine-specific hash function); the sign of each accumulated
-    position is the output bit.
-
-    One traversal: the digest's two 8-digit halves are parsed to
-    integers once per token and the 16 digit parities fall out as
-    shifted nibble low-bits — replacing 16 separate aggregate passes
-    of substring+isin (measured 3× slower on the sf0.1 corpus; the
-    parities, and therefore the output, are identical).
-    """
-
-    return _simhash_from_masks(_parity_masks(hashes))
 
 
 def _parity_masks(hashes: Column) -> Column:
@@ -428,23 +378,6 @@ def pii_counts(text: Column) -> dict[str, Column]:
     }
 
 
-def redact_pii(
-    text: Column,
-    email_token: str = "<EMAIL>",
-    phone_token: str = "<PHONE>",
-    ip_token: str = "<IP>",
-) -> Column:
-    """Span-level PII redaction: replace email/phone/IPv4-shaped
-    spans with placeholder tokens (the release-time counterpart of
-    :func:`pii_counts`, which only measures). Order matters: emails
-    first, so the digits inside one are never half-eaten by the phone
-    pattern. Same Java/RE2-portable patterns, pure codegen — a
-    scan-speed pass over 100 TB like every other rule here."""
-    t = F.regexp_replace(text, EMAIL_RE, email_token)
-    t = F.regexp_replace(t, PHONE_RE, phone_token)
-    return F.regexp_replace(t, IPV4_RE, ip_token)
-
-
 def _sloppy_cp1252(ch: str) -> str:
     """What ``ch`` becomes when its UTF-8 bytes are mis-decoded as
     Windows-1252 with the five undefined bytes passed through as C1
@@ -578,68 +511,6 @@ def fix_text_sql(expr: str, chunk: int = 56) -> str:
     return f"(select translate({name}, {frm}, {to}) from {inner})"
 
 
-def chunk_chars(
-    df: DataFrame,
-    size: int = 512,
-    overlap: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Split documents into overlapping character windows — the
-    embedding/RAG front door (a 100 TB corpus is embedded in chunks,
-    never whole docs): one row per chunk with exact provenance
-    ``(id, chunk_idx, char_start, chunk)``, so any downstream match
-    maps back to a byte range of its source document.
-
-    Stride is ``size - overlap``; the final window is whatever
-    remains (never padded, never dropped — a 1-char tail is still
-    retrievable text). JVM-side, zero Python: ``sequence`` over the
-    window count, ``transform`` to (offset, substring), one
-    ``explode`` (HOFs run interpreted — CodegenFallback — but the
-    per-window work is one substring, so the pass stays scan-class) —
-    the only row multiplication is the intended ~len/stride fan-out,
-    there is no shuffle, and empty/NULL docs produce no rows.
-    Token-boundary snapping is deliberately absent: char offsets stay
-    exact and engine-portable (the DuckDB twin is the same
-    arithmetic); snap downstream if a tokenizer needs it."""
-    if size < 1:
-        raise ValueError(f"size must be >= 1, got {size}")
-    if not (0 <= overlap < size):
-        raise ValueError(f"overlap must be in [0, size), got {overlap}")
-    stride = size - overlap
-    n = F.length(F.col(text_col))
-    # windows start at 0, stride, 2*stride, ... while start < len;
-    # a start inside the last `overlap` chars would duplicate the
-    # previous window's tail, so only starts with NEW content count:
-    # n_windows = 1 + floor(max(len - size, 0) / stride), but when
-    # len > size the last window may be short — ceil semantics via
-    # integer arithmetic on (len - overlap)
-    n_win = F.when(n <= size, F.lit(1)).otherwise(
-        F.ceil((n - F.lit(overlap)) / F.lit(stride)).cast("int")
-    )
-    windows = F.transform(
-        F.sequence(F.lit(0), n_win - 1),
-        lambda i: F.struct(
-            i.cast("long").alias("chunk_idx"),
-            (i * stride).cast("long").alias("char_start"),
-            F.substring(
-                F.col(text_col), (i * stride + 1).cast("int"), size
-            ).alias("chunk"),
-        ),
-    )
-    return (
-        df.filter(F.col(text_col).isNotNull() & (n > 0))
-        .select(F.col(id_col), F.explode(windows).alias("__w"))
-        .select(
-            id_col,
-            F.col("__w.chunk_idx").alias("chunk_idx"),
-            F.col("__w.char_start").alias("char_start"),
-            F.col("__w.chunk").alias("chunk"),
-        )
-    )
-
-
-
 def clean_text(text: Column) -> Column:
     """Boilerplate scrub: drop HTML-ish tags, URLs and emails, then
     collapse whitespace — the C4-style normalization pass before
@@ -648,69 +519,6 @@ def clean_text(text: Column) -> Column:
     t = F.regexp_replace(t, URL_RE, " ")
     t = F.regexp_replace(t, EMAIL_RE, " ")
     return F.trim(F.regexp_replace(t, r"\s+", " "))
-
-
-def compression_ratio(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    level: int = 6,
-) -> DataFrame:
-    """Per-document zlib compressibility — the Gopher/RedPajama
-    quality signal built-in expressions cannot express (DEFLATE needs
-    a real compressor): ``(id, n_bytes, n_zlib, ratio)`` where ratio
-    = compressed/raw UTF-8 bytes. Boilerplate and template spam
-    compress far below prose (~0.1-0.3 vs ~0.4-0.6), and
-    near-incompressible rows (~1.0) are usually binary junk mis-typed
-    as text — both ends are drop candidates.
-
-    This is the module's one non-codegen operator: an Arrow-batched
-    ``mapInPandas`` pass (bytes never become Python row objects), so
-    at corpus scale it is a scan-speed map like the codec kernels in
-    ``multimodal.py``. NULL text stays NULL; empty text gets ratio
-    NULL (no meaningful denominator)."""
-    import zlib
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("n_bytes", LongType()),
-            StructField("n_zlib", LongType()),
-            StructField("ratio", DoubleType()),
-        ]
-    )
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None:
-                    rows.append((i, None, None, None))
-                    continue
-                raw = t.encode("utf-8")
-                comp = len(zlib.compress(raw, level))
-                rows.append(
-                    (
-                        i,
-                        len(raw),
-                        comp,
-                        comp / len(raw) if raw else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "n_bytes", "n_zlib", "ratio"]
-            )
-
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
 
 
 #: elements whose CONTENT is never prose — dropped wholesale
@@ -1425,121 +1233,3 @@ def gopher_repetition_col(
         )
 
     return _kern(text)
-
-
-#: Published Gopher repetition-filter thresholds (Rae et al. 2021,
-#: table A1): a document is dropped when the signal EXCEEDS the value.
-GOPHER_REPETITION_THRESHOLDS: dict[str, float] = {
-    "dup_line_frac": 0.30,
-    "dup_para_frac": 0.30,
-    "dup_line_char_frac": 0.20,
-    "dup_para_char_frac": 0.20,
-    "top_2gram_char_frac": 0.20,
-    "top_3gram_char_frac": 0.18,
-    "top_4gram_char_frac": 0.16,
-    "dup_5gram_char_frac": 0.15,
-    "dup_6gram_char_frac": 0.14,
-    "dup_7gram_char_frac": 0.13,
-    "dup_8gram_char_frac": 0.12,
-    "dup_9gram_char_frac": 0.11,
-    "dup_10gram_char_frac": 0.10,
-}
-
-
-def resolve_repetition_thresholds(
-    overrides: dict[str, float] | None = None,
-) -> dict[str, float]:
-    """The full table-A1 threshold set with ``overrides`` applied on
-    top — the ONE resolution rule shared by :func:`repetition_flags`
-    and ``streaming.ingest.streaming_curate``, so a subset dict means
-    the same thing (override, never restrict) on both paths. Unknown
-    signal names raise."""
-    th = dict(GOPHER_REPETITION_THRESHOLDS)
-    if overrides:
-        unknown = set(overrides) - set(th)
-        if unknown:
-            raise ValueError(
-                f"unknown repetition signals: {sorted(unknown)}"
-            )
-        th.update(overrides)
-    return th
-
-
-def repetition_flags(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    thresholds: dict[str, float] | None = None,
-    **gopher_kwargs,
-) -> DataFrame:
-    """Gopher repetition keep/drop rules over
-    :func:`gopher_repetition`, in the :func:`quality_flags` audit
-    style: one boolean ``ok_<signal>`` per table-A1 threshold
-    (true = signal at or under the paper's published cutoff) plus
-    the conjunction ``keep`` — drop *reasons* retained for auditing
-    rather than filtering in place. ``thresholds`` overrides any
-    subset of :data:`GOPHER_REPETITION_THRESHOLDS`; the filter stays
-    a column predicate on the single Arrow-kernel pass.
-    """
-    th = resolve_repetition_thresholds(thresholds)
-    out = gopher_repetition(
-        df, text_col=text_col, id_col=id_col, **gopher_kwargs
-    )
-    flags = {
-        f"ok_{sig}": F.col(sig) <= F.lit(cut)
-        for sig, cut in th.items()
-        if sig in out.columns
-    }
-    out = out.withColumns(flags)
-    keep = None
-    for name in flags:
-        keep = F.col(name) if keep is None else keep & F.col(name)
-    return out.withColumn("keep", keep)
-
-
-def tfidf_top_terms(
-    df: DataFrame,
-    k: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_df: int = 1,
-) -> DataFrame:
-    """Top-``k`` TF-IDF terms per document — the standard keyword /
-    topic-tagging signal for corpus exploration and mixture design.
-
-    Scores are ``tf * (ln((1 + N) / (1 + df)) + 1)`` (smoothed IDF, N
-    = corpus size as a driver scalar — the model boundary); ``min_df``
-    prunes hapax noise from the vocabulary. Ties break by term for a
-    deterministic ranking.
-
-    Scale shape: one token explode feeding two map-side-combined
-    aggregations (per-doc term counts; document frequencies), one
-    equi-join on the term, and a per-document window top-k (documents
-    are small groups — no skew). Nothing touches the driver but N.
-
-    Returns (id, term, tf, score, rank).
-    """
-    from pyspark.sql import Window
-
-    n_docs = df.count()
-    terms = df.select(
-        F.col(id_col), F.explode(_tokens(F.lower(F.col(text_col)))).alias("term")
-    ).filter(F.col("term") != "")
-    tf = terms.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    dfreq = (
-        tf.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") >= min_df)
-    )
-    idf = F.log((1.0 + float(n_docs)) / (1.0 + F.col("df"))) + 1.0
-    scored = tf.join(dfreq, "term").withColumn(
-        "score", F.col("tf") * idf
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("score").desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(id_col, "term", "tf", "score", "rank")
-    )

@@ -232,8 +232,7 @@ def unigram_train(
 def pieces_to_df(spark, logp: dict[str, float]) -> DataFrame:
     """Piece table as a DataFrame ``(piece, logp)`` — the persistable
     model artifact (write as parquet, reload with
-    ``{r["piece"]: r["logp"] for r in df.collect()}``), mirroring
-    :func:`bpe.merges_to_df`."""
+    ``{r["piece"]: r["logp"] for r in df.collect()}``)."""
     rows = sorted(logp.items())
     return spark.createDataFrame(rows, "piece string, logp double")
 

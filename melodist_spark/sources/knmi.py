@@ -51,8 +51,3 @@ def read_knmi(spark: SparkSession, path: str) -> DataFrame:
     return out.withColumn(
         "precip", F.when(F.col("precip") < 0, 0.0).otherwise(F.col("precip"))
     )
-
-
-# alias matching the reference's API names
-read_single_knmi_file = read_knmi
-read_knmi_dataset = read_knmi

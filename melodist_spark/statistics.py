@@ -14,7 +14,6 @@ parity; matrix-valued params are stored long-form.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

@@ -1,21 +1,13 @@
 from melodist_spark.streaming.daily_agg import (
     streaming_daily_from_hourly,
     streaming_gap_monitor,
-)
-from melodist_spark.streaming.increments import (
-    EmbeddingIncrementSink,
-    MinhashIncrementSink,
-    ProfileIncrementSink,
-    SpanIncrementSink,
+    streaming_sessions,
 )
 from melodist_spark.streaming.stateful import streaming_disaggregate_temperature
 
 __all__ = [
     "streaming_daily_from_hourly",
     "streaming_gap_monitor",
+    "streaming_sessions",
     "streaming_disaggregate_temperature",
-    "EmbeddingIncrementSink",
-    "MinhashIncrementSink",
-    "ProfileIncrementSink",
-    "SpanIncrementSink",
 ]

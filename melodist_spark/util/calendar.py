@@ -19,8 +19,6 @@ from pyspark.sql import functions as F
 #: of the reference's dyadic grids (`precipitation.py:706`)
 LEVEL11_STEP_US = 42_187_500
 
-DAY_US = 86_400_000_000
-
 
 def _date_ts(date_col: Column) -> Column:
     return F.to_timestamp(date_col)

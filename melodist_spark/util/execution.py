@@ -7,8 +7,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
-def pin_partitions(df: DataFrame, cols, n: int | None = None) -> DataFrame:
-    """Hash-repartition by ``cols`` with an EXPLICIT partition count.
+def pin_partitions(df: DataFrame, cols) -> DataFrame:
+    """Hash-repartition by ``cols`` into the session's
+    ``spark.sql.shuffle.partitions``, an EXPLICIT partition count.
 
     AQE's ``coalescePartitions`` sizes post-shuffle partitions by
     *bytes*, which is the wrong signal in front of a compute-bound
@@ -21,14 +22,12 @@ def pin_partitions(df: DataFrame, cols, n: int | None = None) -> DataFrame:
     HashPartitioning satisfies the downstream ``groupBy(cols)``
     distribution, so no second exchange is inserted.
 
-    ``n`` defaults to the session's ``spark.sql.shuffle.partitions`` —
-    exactly the pre-AQE plan. On byte-heavy inputs (cluster scale)
-    that is what the shuffle would have used anyway, so pinning is
-    never a regression; it only matters when the input is small and
-    the kernel is not.
+    That count is exactly the pre-AQE plan. On byte-heavy inputs
+    (cluster scale) it is what the shuffle would have used anyway, so
+    pinning is never a regression; it only matters when the input is
+    small and the kernel is not.
     """
-    if n is None:
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *[F.col(c) if isinstance(c, str) else c for c in cols])
 
 

@@ -9,8 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from melodist_spark.pipeline.dedup import (
-    dedup_exact,
-    exact_duplicates,
     jaccard_pairs,
     lsh_bands,
     lsh_candidate_pairs,
@@ -18,8 +16,6 @@ from melodist_spark.pipeline.dedup import (
 )
 from melodist_spark.pipeline.similarity import brute_force_topk, ivf_topk, lsh_topk, neardup_pairs
 from melodist_spark.pipeline.text import (
-    bpe_ish_token_count,
-    detect_language,
     quality_features,
     simhash,
     token_count,
@@ -42,15 +38,6 @@ def docs(spark):
     near = base[:36] + list(rng.choice(vocab, size=4))
     rows.append((102, " ".join(near)))
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_dedup(docs):
-    groups = exact_duplicates(docs).collect()
-    assert len(groups) == 2
-    assert {g["keep_id"] for g in groups} == {0, 1}
-    kept = dedup_exact(docs)
-    assert kept.count() == docs.count() - 2
-    assert kept.filter(F.col("doc_id").isin(100, 101)).count() == 0
 
 
 def test_minhash_estimates_jaccard(docs):
@@ -117,13 +104,11 @@ def test_token_counts(spark):
         "doc_id long, text string",
     )
     got = df.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n"),
-        bpe_ish_token_count(F.col("text")).alias("nb"),
+        "doc_id", token_count(F.col("text")).alias("n")
     ).toPandas().set_index("doc_id")
     assert got.loc[0, "n"] == 3
     assert got.loc[1, "n"] == 0 and got.loc[2, "n"] == 0
-    assert got.loc[3, "nb"] > got.loc[3, "n"]  # long word → extra pieces
+    assert got.loc[3, "n"] == 2
 
 
 def test_quality_features_ranges(docs):
@@ -131,23 +116,6 @@ def test_quality_features_ranges(docs):
     assert (out["punct_ratio"].between(0, 1)).all()
     assert (out["stopword_ratio"].fillna(0).between(0, 1)).all()
     assert (out["n_tokens"] > 0).all()
-
-
-def test_detect_language(spark):
-    df = spark.createDataFrame(
-        [
-            (0, "the cat and the dog of the house"),
-            (1, "der hund und die katze ist ein tier"),
-            (2, "el perro y la casa de los gatos"),
-            (3, "zzz qqq xxx"),
-        ],
-        "doc_id long, text string",
-    )
-    got = detect_language(df).toPandas().set_index("doc_id")["lang_pred"]
-    assert got[0] == "en"
-    assert got[1] == "de"
-    assert got[2] == "es"
-    assert got[3] == "und"
 
 
 def test_lsh_topk_recall(spark):
@@ -593,27 +561,6 @@ def test_repetition_stats_sql_twin_tokenization(spark):
     np.testing.assert_allclose(out.loc[2, "top_bigram_frac"], 1.0)
 
 
-def test_resolve_repetition_thresholds_override_semantics():
-    """Shared batch/streaming resolution: a subset dict OVERRIDES the
-    published table (the other rules still apply), {} and None mean
-    the published defaults, unknown names raise."""
-    import pytest
-
-    from melodist_spark.pipeline.text import (
-        GOPHER_REPETITION_THRESHOLDS,
-        resolve_repetition_thresholds,
-    )
-
-    assert resolve_repetition_thresholds(None) == GOPHER_REPETITION_THRESHOLDS
-    assert resolve_repetition_thresholds({}) == GOPHER_REPETITION_THRESHOLDS
-    th = resolve_repetition_thresholds({"dup_line_frac": 0.9})
-    assert th["dup_line_frac"] == 0.9
-    assert th["top_2gram_char_frac"] == 0.20  # rest still present
-    assert len(th) == len(GOPHER_REPETITION_THRESHOLDS)
-    with pytest.raises(ValueError, match="unknown repetition signals"):
-        resolve_repetition_thresholds({"nope": 0.5})
-
-
 def test_gopher_repetition_hand_computed(spark):
     """The full Gopher table-A1 family against hand-worked examples."""
     from melodist_spark.pipeline.text import gopher_repetition
@@ -689,54 +636,6 @@ def test_gopher_repetition_coverage_monotone(spark):
     assert (np.diff(vals, axis=1) <= 1e-12).all()
     # the planting makes the family non-vacuous
     assert (vals[:, 0] > 0).any()
-
-
-def test_repetition_flags_published_thresholds(spark):
-    """Table-A1 keep/drop rules: a clean doc keeps, a doc over one
-    threshold trips exactly that rule, overrides apply, unknown
-    signal names are rejected."""
-    import pytest
-
-    from melodist_spark.pipeline.text import repetition_flags
-
-    clean = " ".join(f"w{i} x{i} y{i}" for i in range(20))
-    # >30% duplicate lines
-    dup_lines = "\n".join(["same line here"] * 5 + [f"u{i} v{i}" for i in range(5)])
-    df = spark.createDataFrame(
-        [(1, clean), (2, dup_lines)], ["doc_id", "text"]
-    )
-    out = repetition_flags(df).toPandas().set_index("doc_id")
-    assert bool(out.loc[1, "keep"])
-    assert not bool(out.loc[2, "ok_dup_line_frac"])
-    assert not bool(out.loc[2, "keep"])
-    # the clean doc trips nothing
-    assert all(out.loc[1, c] for c in out.columns if c.startswith("ok_"))
-
-    # override: make the line rule lenient enough to keep doc 2
-    out2 = (
-        repetition_flags(
-            df,
-            thresholds={
-                "dup_line_frac": 1.0,
-                "dup_line_char_frac": 1.0,
-                "dup_5gram_char_frac": 1.0,
-                "dup_6gram_char_frac": 1.0,
-                "dup_7gram_char_frac": 1.0,
-                "dup_8gram_char_frac": 1.0,
-                "dup_9gram_char_frac": 1.0,
-                "dup_10gram_char_frac": 1.0,
-                "top_2gram_char_frac": 1.0,
-                "top_3gram_char_frac": 1.0,
-                "top_4gram_char_frac": 1.0,
-            },
-        )
-        .toPandas()
-        .set_index("doc_id")
-    )
-    assert bool(out2.loc[2, "keep"])
-
-    with pytest.raises(ValueError, match="unknown repetition signals"):
-        repetition_flags(df, thresholds={"dup_42gram_char_frac": 0.5})
 
 
 def test_kmeans_ivf_end_to_end(spark):
@@ -1333,101 +1232,6 @@ def test_hyperplane_family_full_rank():
     assert (np.abs(frac - 0.5) < 0.05).all()  # balanced cuts
 
 
-def test_embedding_neardup_against_increment(spark):
-    """Incremental embedding dedup: batch vectors near-identical to
-    indexed ones are dropped, novel ones survive and advance the
-    index; the Arrow kernel agrees with the expr kernel."""
-    from melodist_spark.pipeline.similarity import (
-        embedding_index,
-        embedding_neardup_against,
-    )
-
-    rng = np.random.default_rng(13)
-    dim = 16
-    base = [rng.normal(size=dim) for _ in range(40)]
-    corpus = spark.createDataFrame(
-        pd.DataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(base)],
-            columns=["vec_id", "embedding"],
-        )
-    )
-    idx = embedding_index(corpus, dim=dim, num_planes=4)
-    # batch: 5 noisy twins of indexed vectors (cos > 0.999) + 5 novel
-    twins = [(100 + j, [float(x) for x in base[j] + rng.normal(size=dim) * 1e-3]) for j in range(5)]
-    novel = [(200 + j, [float(x) for x in rng.normal(size=dim)]) for j in range(5)]
-    batch = spark.createDataFrame(
-        pd.DataFrame(twins + novel, columns=["vec_id", "embedding"])
-    )
-    for arrow in (False, True):
-        surv = embedding_neardup_against(
-            batch, idx, dim=dim, threshold=0.999, num_planes=4, arrow=arrow
-        )
-        got = sorted(r["vec_id"] for r in surv.collect())
-        assert got == [200, 201, 202, 203, 204], (arrow, got)
-    # advancing the state: survivors' index unions in, and the same
-    # batch re-checked against the advanced index now fully drops
-    adv = idx.unionByName(
-        embedding_index(
-            embedding_neardup_against(
-                batch, idx, dim=dim, threshold=0.999, num_planes=4
-            ),
-            dim=dim,
-            num_planes=4,
-        )
-    )
-    assert (
-        embedding_neardup_against(
-            batch, adv, dim=dim, threshold=0.999, num_planes=4
-        ).count()
-        == 0
-    )
-
-
-def test_embedding_index_or_amplification_recall(spark):
-    """The LSH AND-OR construction: at a plane count where a single
-    table misses some planted twins (a sign flip in any of the k
-    planes hides the pair), adding tables recovers them — recall is
-    monotone in num_tables and hits 100% well before the per-table
-    collision probability does."""
-    from melodist_spark.pipeline.similarity import (
-        embedding_index,
-        embedding_neardup_against,
-    )
-
-    rng = np.random.default_rng(17)
-    dim, n = 16, 120
-    base = [rng.normal(size=dim) for _ in range(n)]
-    corpus = spark.createDataFrame(
-        pd.DataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(base)],
-            columns=["vec_id", "embedding"],
-        )
-    )
-    # twins noisy enough that 10 planes flip at least one sign for a
-    # fair fraction of pairs
-    batch = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                (1000 + j, [float(x) for x in base[j] + rng.normal(size=dim) * 0.05])
-                for j in range(n)
-            ],
-            columns=["vec_id", "embedding"],
-        )
-    )
-    dropped = {}
-    for tables in (1, 4):
-        idx = embedding_index(corpus, dim=dim, num_planes=10, num_tables=tables)
-        surv = embedding_neardup_against(
-            batch, idx, dim=dim, threshold=0.99, num_planes=10,
-            num_tables=tables,
-        ).count()
-        dropped[tables] = n - surv
-    assert dropped[4] >= dropped[1]
-    assert dropped[4] > n * 0.9  # OR-amplified recall is near-total
-    # and at this noise a single 10-plane table genuinely misses some
-    assert dropped[1] < n
-
-
 def test_bucketed_cosine_arrow_matches_expr(spark):
     """The Arrow cosine kernel (batched einsum over the joined pair
     batches) must produce the SAME candidate pair set as the JVM
@@ -1579,42 +1383,6 @@ def test_pair_cosine_kernels_degrade_identically_on_malformed(spark):
     assert [r["neighbor_id"] for r in top] == [1, 2]
     assert top[0]["cos_sim"] == pytest.approx(1.0, abs=1e-6)
     assert top[1]["cos_sim"] is None  # NaN vector sinks to the bottom
-
-
-def test_embedding_index_num_tables_mismatch_raises(spark):
-    """embedding_neardup_against must refuse an index whose stored
-    bucket_T columns disagree with the caller's num_tables — a
-    silent mismatch reads as missed duplicates (lost recall), never
-    an error, which is the worst failure mode for a dedup gate."""
-    import pytest
-
-    from melodist_spark.pipeline.similarity import (
-        embedding_index,
-        embedding_neardup_against,
-    )
-
-    rng = np.random.default_rng(3)
-    dim = 8
-    corpus = spark.createDataFrame(
-        pd.DataFrame(
-            [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(6)],
-            columns=["vec_id", "embedding"],
-        )
-    )
-    idx2 = embedding_index(corpus, dim, num_planes=4, num_tables=2)
-    with pytest.raises(ValueError, match="MORE than num_tables=1"):
-        embedding_neardup_against(corpus, idx2, dim, num_planes=4, num_tables=1)
-    with pytest.raises(ValueError, match="missing bucket columns"):
-        embedding_neardup_against(corpus, idx2, dim, num_planes=4, num_tables=3)
-    with pytest.raises(ValueError, match="batch_index"):
-        embedding_neardup_against(
-            corpus,
-            idx2,
-            dim,
-            num_planes=4,
-            num_tables=2,
-            batch_index=embedding_index(corpus, dim, num_planes=4, num_tables=1),
-        )
 
 
 def test_decontaminate_stateless_matches_joined_path(spark):
@@ -1880,101 +1648,6 @@ def test_pack_sequences_no_global_window(spark):
     assert "hashpartitioning(__bucket" in plan
 
 
-def test_mixture_sample_hits_target_proportions(spark):
-    from melodist_spark.pipeline.sampling import mixture_sample
-
-    rows = [(i, "web") for i in range(8000)]
-    rows += [(10_000 + i, "code") for i in range(1000)]
-    rows += [(20_000 + i, "forums") for i in range(1000)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-
-    out = mixture_sample(df, {"web": 0.5, "code": 0.25, "forums": 0.25})
-    got = {r["source"]: r["n"] for r in out.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    # binding group: code/forums (1000 docs each at 25%) -> N = 4000,
-    # web keeps ~2000 of 8000 (hash threshold is approximate), the
-    # small groups keep everything
-    assert got["code"] == 1000
-    assert got["forums"] == 1000
-    assert abs(got["web"] - 2000) < 200
-    # deterministic: same call, same selection
-    a = sorted(r["doc_id"] for r in out.collect())
-    b = sorted(r["doc_id"] for r in mixture_sample(
-        df, {"web": 0.5, "code": 0.25, "forums": 0.25}).collect())
-    assert a == b
-
-    # scale shape: the returned frame is a narrow filter — no Exchange
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-    # groups not in the mix are dropped; unknown groups raise
-    out2 = mixture_sample(df, {"web": 1.0})
-    assert out2.filter(F.col("source") != "web").count() == 0
-    with pytest.raises(ValueError):
-        mixture_sample(df, {"books": 1.0})
-    with pytest.raises(ValueError):
-        mixture_sample(df, {})
-
-
-def test_chunk_documents_reconstruction(spark):
-    from melodist_spark.pipeline.packing import chunk_tokens
-
-    rows = [
-        (1, " ".join(f"t{i}" for i in range(25))),  # 25 tokens
-        (2, "a b c"),                               # shorter than a chunk
-        (3, ""),                                    # no chunks
-        (4, " ".join(f"u{i}" for i in range(10))),  # exact multiple
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = chunk_tokens(df, max_tokens=10, overlap=0).toPandas()
-
-    assert set(out[out.doc_id == 3].chunk_id) == set()
-    d1 = out[out.doc_id == 1].sort_values("chunk_id")
-    assert list(d1.chunk_tokens) == [10, 10, 5]
-    # concatenating non-overlapping chunks reconstructs the document
-    assert " ".join(d1.chunk_text) == rows[0][1]
-    d4 = out[out.doc_id == 4].sort_values("chunk_id")
-    assert list(d4.chunk_tokens) == [10]
-
-    # with overlap: starts advance by step, every chunk except the
-    # first repeats `overlap` tokens of left context
-    ov = chunk_tokens(df.filter("doc_id = 1"), max_tokens=10, overlap=3)
-    d = ov.toPandas().sort_values("chunk_id")
-    toks = rows[0][1].split()
-    for _, r in d.iterrows():
-        s = int(r.chunk_id) * 7
-        assert r.chunk_text == " ".join(toks[s:s + 10])
-    # full coverage of the token stream
-    assert int(d.chunk_id.max()) * 7 + int(d.chunk_tokens.iloc[-1]) == 25
-
-
-def test_dedup_against_incremental_index(spark):
-    """Exactly-once ingest across snapshots: batch 2 drops docs whose
-    digests batch 1 already indexed, and unioning the survivors'
-    digests advances the index for batch 3."""
-    from melodist_spark.pipeline.dedup import (
-        dedup_against,
-        dedup_exact,
-        digest_index,
-    )
-
-    b1 = spark.createDataFrame(
-        [(1, "alpha doc"), (2, "beta doc")], "doc_id long, text string"
-    )
-    b2 = spark.createDataFrame(
-        [(10, "alpha doc"), (11, "gamma doc"), (12, "gamma doc")],
-        "doc_id long, text string",
-    )
-    idx = digest_index(b1)
-    fresh = dedup_exact(dedup_against(b2, idx))
-    assert {r["doc_id"] for r in fresh.collect()} == {11}
-
-    idx2 = idx.unionByName(digest_index(fresh)).distinct()
-    b3 = spark.createDataFrame(
-        [(20, "gamma doc"), (21, "delta doc")], "doc_id long, text string"
-    )
-    assert {r["doc_id"] for r in dedup_against(b3, idx2).collect()} == {21}
-
-
 def test_repeated_spans_finds_planted_passages(spark):
     """A passage planted in several documents at different offsets is
     reported as a span with exact token bounds; unique docs report
@@ -2238,106 +1911,6 @@ def test_portable_gram_hash_matches_xxhash_path(spark):
     assert len(a) == 120 and (a["n_tokens_removed"] > 0).any()
 
 
-def test_remove_repeated_spans_against_index_differential(spark):
-    """The incremental span remover against a stored gram_index must
-    reproduce the FULL-corpus remover's output on the batch slice
-    exactly (single round, dense-collision corpus): with history ids
-    ordered before batch ids, the full op's min-(id,pos) keepers are
-    history occurrences whenever the gram has one — precisely the
-    incremental op's history-holds-the-keeper rule — and batch-only
-    grams keep the same minimal batch occurrence."""
-    import random
-
-    from melodist_spark.pipeline.dedup import (
-        gram_index,
-        remove_repeated_spans,
-        remove_repeated_spans_against,
-    )
-
-    r = random.Random(29)
-    vocab = ["a", "b", "c", "d", "e"]
-    rows = [
-        (i, " ".join(r.choice(vocab) for _ in range(r.randint(0, 14))))
-        for i in range(140)
-    ]
-    hist_rows, batch_rows = rows[:90], rows[90:]
-    hist = spark.createDataFrame(hist_rows, "doc_id long, text string")
-    batch = spark.createDataFrame(batch_rows, "doc_id long, text string")
-    full = spark.createDataFrame(rows, "doc_id long, text string")
-
-    want = (
-        remove_repeated_spans(
-            full, span_tokens=3, until_clean=False
-        )
-        .filter(F.col("doc_id") >= 90)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    got = (
-        remove_repeated_spans_against(
-            batch, gram_index(hist, span_tokens=3), span_tokens=3,
-            until_clean=False,
-        )
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want)
-    # non-vacuity: the batch really was cut by history-held grams
-    assert (got["n_tokens_removed"] > 0).any()
-
-
-def test_remove_repeated_spans_against_advances_state(spark):
-    """The incremental contract end-to-end: ingest two batches
-    against an evolving gram_index (merge_gram_index over each
-    SURVIVING batch); a passage first seen in batch 1 keeps its one
-    copy there, and batch 2's re-occurrence is excised even though
-    the batch-2 corpus alone never repeats it. The advanced state's
-    counts equal a fresh index over the retained corpus."""
-    from melodist_spark.pipeline.dedup import (
-        gram_index,
-        merge_gram_index,
-        remove_repeated_spans_against,
-    )
-
-    passage = " ".join(f"p{i}" for i in range(10))
-    b1 = spark.createDataFrame(
-        [(0, f"one {passage} alpha beta"), (1, "x y z w v u t s")],
-        "doc_id long, text string",
-    )
-    b2 = spark.createDataFrame(
-        [(10, f"two {passage} gamma delta"), (11, "k l m n o p q r")],
-        "doc_id long, text string",
-    )
-    empty = gram_index(b1.limit(0), span_tokens=5)
-
-    s1 = remove_repeated_spans_against(b1, empty, span_tokens=5)
-    out1 = {r["doc_id"]: r for r in s1.collect()}
-    assert out1[0]["text"] == f"one {passage} alpha beta"  # nothing dup yet
-    idx = merge_gram_index(
-        empty, gram_index(s1.select("doc_id", "text"), span_tokens=5)
-    )
-
-    s2 = remove_repeated_spans_against(b2, idx, span_tokens=5)
-    out2 = {r["doc_id"]: r for r in s2.collect()}
-    assert passage not in out2[10]["text"]  # history holds the keeper
-    assert out2[10]["text"] == "two gamma delta"
-    assert out2[10]["n_tokens_removed"] == 10
-    assert out2[11]["text"] == "k l m n o p q r"
-
-    idx2 = merge_gram_index(
-        idx, gram_index(s2.select("doc_id", "text"), span_tokens=5)
-    )
-    retained = s1.select("doc_id", "text").unionByName(
-        s2.select("doc_id", "text")
-    )
-    fresh = gram_index(retained, span_tokens=5)
-    a = {(r["gh"], r["c"]) for r in idx2.collect()}
-    b = {(r["gh"], r["c"]) for r in fresh.collect()}
-    assert a == b
-
-
 def test_remove_repeated_spans_checkpoint_dir_matches_local(spark, tmp_path):
     """Reliable-checkpoint mode (round 12, VERDICT r11 item 1): the
     span-removal fixpoint run with ``checkpoint_dir`` set — every
@@ -2369,43 +1942,6 @@ def test_remove_repeated_spans_checkpoint_dir_matches_local(spark, tmp_path):
     # the returned frame reads from durable parquet, not blocks
     assert (tmp_path / "ck").exists()
     assert want.loc[3, "text"] == ""  # the fixpoint really ran twice
-
-
-def test_remove_repeated_spans_against_checkpoint_dir_matches_local(
-    spark, tmp_path
-):
-    """Incremental-op twin of the reliable-checkpoint differential:
-    same batch, same stored gram_index, outputs identical with and
-    without ``checkpoint_dir``."""
-    import random
-
-    from melodist_spark.pipeline.dedup import (
-        gram_index,
-        remove_repeated_spans_against,
-    )
-
-    r = random.Random(53)
-    vocab = ["a", "b", "c", "d", "e"]
-    rows = [
-        (i, " ".join(r.choice(vocab) for _ in range(r.randint(0, 14))))
-        for i in range(140)
-    ]
-    hist = spark.createDataFrame(rows[:90], "doc_id long, text string")
-    batch = spark.createDataFrame(rows[90:], "doc_id long, text string")
-    idx = gram_index(hist, span_tokens=3)
-    want = (
-        remove_repeated_spans_against(batch, idx, span_tokens=3)
-        .toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    got = (
-        remove_repeated_spans_against(
-            batch, idx, span_tokens=3,
-            checkpoint_dir=str(tmp_path / "ck_inc"),
-        )
-        .toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want)
-    assert (want["n_tokens_removed"] > 0).any()
 
 
 def test_remove_repeated_spans_fixpoint_releases_round_blocks(spark):
@@ -2446,133 +1982,12 @@ def test_remove_repeated_spans_max_rounds_validated_unconditionally(spark):
     'did not converge in 0 rounds' RuntimeError."""
     import pytest
 
-    from melodist_spark.pipeline.dedup import (
-        gram_index,
-        remove_repeated_spans,
-        remove_repeated_spans_against,
-    )
+    from melodist_spark.pipeline.dedup import remove_repeated_spans
 
     df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
-    idx = gram_index(df, span_tokens=3)
     for kw in ({"until_clean": False}, {"until_clean": True}):
         with pytest.raises(ValueError, match="max_rounds"):
             remove_repeated_spans(df, span_tokens=3, max_rounds=0, **kw)
-        with pytest.raises(ValueError, match="max_rounds"):
-            remove_repeated_spans_against(
-                df, idx, span_tokens=3, max_rounds=0, **kw
-            )
-
-
-def test_gram_index_metadata_guards_family_and_width(spark, tmp_path):
-    """ADVICE r11 (medium): the stored gram_index carries its hash
-    family + gram width as schema metadata — surviving the parquet
-    round trip — and the incremental remover REFUSES a mismatched
-    ``portable`` flag or ``span_tokens`` instead of silently reading
-    zero historical hits. Metadata-less frames are refused with a
-    pointer to stamp_gram_index, which restores acceptance."""
-    import pytest
-
-    from melodist_spark.pipeline.dedup import (
-        gram_index,
-        merge_gram_index,
-        remove_repeated_spans_against,
-        stamp_gram_index,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "a b c d e f g"), (1, "a b c d e f g")],
-        "doc_id long, text string",
-    )
-    idx = gram_index(docs, span_tokens=3)
-    path = str(tmp_path / "gram_idx")
-    idx.write.parquet(path)
-    stored = spark.read.parquet(path)
-    m = dict(stored.schema["gh"].metadata)
-    assert m["family"] == "xxhash64" and m["span_tokens"] == 3
-
-    batch = spark.createDataFrame([(9, "a b c d e")], "doc_id long, text string")
-    # family mismatch: index is xxhash64, call claims portable
-    with pytest.raises(ValueError, match="md5_60"):
-        remove_repeated_spans_against(
-            batch, stored, span_tokens=3, portable=True
-        )
-    # width mismatch
-    with pytest.raises(ValueError, match="span_tokens"):
-        remove_repeated_spans_against(batch, stored, span_tokens=4)
-    # matching call still works and cuts the historical passage
-    ok = remove_repeated_spans_against(batch, stored, span_tokens=3)
-    assert ok.collect()[0]["n_tokens_removed"] == 5
-
-    # a schema-rebuilt (metadata-less) frame is refused loudly...
-    bare = spark.createDataFrame(
-        [(r["gh"], r["c"]) for r in stored.collect()], "gh long, c long"
-    )
-    with pytest.raises(ValueError, match="stamp_gram_index"):
-        remove_repeated_spans_against(batch, bare, span_tokens=3)
-    # ...and stamping restores acceptance
-    restamped = stamp_gram_index(bare, span_tokens=3)
-    got = remove_repeated_spans_against(batch, restamped, span_tokens=3)
-    assert got.collect()[0]["n_tokens_removed"] == 5
-
-    # merge refuses cross-family/width unions
-    with pytest.raises(ValueError, match="mismatch"):
-        merge_gram_index(stored, gram_index(docs, span_tokens=3, portable=True))
-    with pytest.raises(ValueError, match="mismatch"):
-        merge_gram_index(stored, gram_index(docs, span_tokens=4))
-    with pytest.raises(ValueError, match="stamp_gram_index"):
-        merge_gram_index(stored, bare)
-
-
-def test_gram_index_count_cap_preserves_removal_decisions(spark):
-    """VERDICT r11 item 6: counts are only ever compared to
-    ``min_occurrences``, so saturating the durable state at that
-    threshold (``max_count``) must yield byte-identical removal
-    output — while bounding the stored value under adversarial
-    re-quoting and making replayed merges idempotent-safe."""
-    import random
-
-    from melodist_spark.pipeline.dedup import (
-        gram_index,
-        merge_gram_index,
-        remove_repeated_spans_against,
-    )
-
-    r = random.Random(61)
-    vocab = ["a", "b", "c", "d"]
-    rows = [
-        (i, " ".join(r.choice(vocab) for _ in range(r.randint(0, 12))))
-        for i in range(160)
-    ]
-    hist = spark.createDataFrame(rows[:120], "doc_id long, text string")
-    batch = spark.createDataFrame(rows[120:], "doc_id long, text string")
-
-    k = 2  # min_occurrences
-    full = gram_index(hist, span_tokens=3)
-    capped = merge_gram_index(
-        gram_index(hist.filter("doc_id < 60"), span_tokens=3, max_count=k),
-        gram_index(hist.filter("doc_id >= 60"), span_tokens=3, max_count=k),
-        max_count=k,
-    )
-    assert capped.agg(F.max("c")).first()[0] <= k
-    # saturation: re-merging the same delta moves nothing
-    again = merge_gram_index(
-        capped, gram_index(hist.filter("doc_id >= 60"), span_tokens=3),
-        max_count=k,
-    )
-    assert again.agg(F.max("c")).first()[0] <= k
-
-    want = (
-        remove_repeated_spans_against(
-            batch, full, span_tokens=3, min_occurrences=k
-        ).toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    got = (
-        remove_repeated_spans_against(
-            batch, capped, span_tokens=3, min_occurrences=k
-        ).toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want)
-    assert (want["n_tokens_removed"] > 0).any()
 
 
 def test_minhash_index_shingle_metadata_guard(spark, tmp_path):
@@ -2638,19 +2053,10 @@ def test_minhash_index_shingle_metadata_guard(spark, tmp_path):
 
 
 def test_embedding_index_planes_metadata_guard(spark, tmp_path):
-    """VERDICT r11 item 2 (second half of the r10 advisor finding):
-    ``num_planes`` is now recoverable from the index frame — schema
-    metadata stamped by embedding_index, parquet-round-tripped — and
-    a planes mismatch raises instead of silently missing duplicates.
-    Metadata-less frames are refused with a stamp_embedding_index
-    pointer, and stamping restores acceptance."""
-    import pytest
-
-    from melodist_spark.pipeline.similarity import (
-        embedding_index,
-        embedding_neardup_against,
-        stamp_embedding_index,
-    )
+    """``num_planes`` and ``num_tables`` are recoverable from an index
+    frame: schema metadata stamped by embedding_index survives the
+    parquet round trip."""
+    from melodist_spark.pipeline.similarity import embedding_index
 
     dim = 8
     rows = [(i, [float((i >> b) & 1) for b in range(dim)]) for i in range(12)]
@@ -2659,71 +2065,9 @@ def test_embedding_index_planes_metadata_guard(spark, tmp_path):
     path = str(tmp_path / "emb_idx")
     idx.write.parquet(path)
     stored = spark.read.parquet(path)
-    m = dict(stored.schema["bucket_0"].metadata)
-    assert m["num_planes"] == 4 and m["num_tables"] == 2
-
-    # vec_id 0 is the all-zeros vector — cosine NULL by design, so it
-    # can never re-check as a duplicate; exclude it from the re-ingest
-    batch = corpus.filter("vec_id >= 1").limit(3)
-    with pytest.raises(ValueError, match="num_planes"):
-        embedding_neardup_against(
-            batch, stored, dim, num_planes=6, num_tables=2
-        )
-    # matching parameters pass the guard and drop the exact re-ingest
-    surv = embedding_neardup_against(
-        batch, stored, dim, num_planes=4, num_tables=2
-    )
-    assert surv.count() == 0
-
-    # metadata-less frame (schema rebuilt by an external writer) is
-    # refused, stamp restores — strip the metadata via a bare schema
-    from pyspark.sql.types import StructField, StructType
-
-    clean = StructType(
-        [StructField(f.name, f.dataType, f.nullable) for f in stored.schema]
-    )
-    bare = spark.createDataFrame(stored.toPandas(), clean)
-    assert dict(bare.schema["bucket_0"].metadata or {}) == {}
-    with pytest.raises(ValueError, match="stamp_embedding_index"):
-        embedding_neardup_against(
-            batch, bare, dim, num_planes=4, num_tables=2
-        )
-    restamped = stamp_embedding_index(bare, num_planes=4, num_tables=2)
-    assert embedding_neardup_against(
-        batch, restamped, dim, num_planes=4, num_tables=2
-    ).count() == 0
-
-
-def test_tfidf_top_terms_ranks_distinctive_words(spark):
-    from melodist_spark.pipeline.text import tfidf_top_terms
-
-    common = "shared background words appearing everywhere always"
-    rows = [
-        (1, f"{common} zebra zebra zebra"),
-        (2, f"{common} quartz quartz"),
-        (3, common),
-        (4, common),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = tfidf_top_terms(df, k=2).toPandas()
-
-    top = out[out["rank"] == 1].set_index("doc_id")["term"]
-    # distinctive terms beat the corpus-wide background vocabulary
-    assert top[1] == "zebra"
-    assert top[2] == "quartz"
-    # background-only docs still get a deterministic (alphabetical
-    # among equals) ranking
-    assert set(out[out.doc_id == 3]["term"]) <= set(common.split())
-    # hand-check one score: tf=3, df=1, N=4
-    import math
-
-    z = out[(out.doc_id == 1) & (out.term == "zebra")]
-    assert math.isclose(
-        z.score.iloc[0], 3 * (math.log(5 / 2) + 1), rel_tol=1e-9
-    )
-    # min_df prunes singletons
-    pruned = tfidf_top_terms(df, k=2, min_df=2).toPandas()
-    assert "zebra" not in set(pruned.term)
+    for t in range(2):
+        m = dict(stored.schema[f"bucket_{t}"].metadata)
+        assert m["num_planes"] == 4 and m["num_tables"] == 2
 
 
 def test_unigram_em_matches_brute_enumeration():
@@ -3214,35 +2558,6 @@ def test_importance_resample_steers_to_target(spark):
     assert {"log_importance", "gumbel_key"} <= set(got.columns)
 
 
-def test_training_shards_token_balance(spark, tmp_path):
-    """Shards hold ~seqs_per_shard*seq_len tokens each (boundary doc
-    spillover bounded by one document), cover every document exactly
-    once, and read back in manifest order."""
-    from melodist_spark.pipeline.packing import (
-        assign_shards,
-        pack_sequences,
-        write_training_shards,
-    )
-
-    rows = [(i, "tok " * ((i % 13) + 1)) for i in range(500)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    path = str(tmp_path / "shards")
-    write_training_shards(df, path, seq_len=32, seqs_per_shard=4)
-
-    back = spark.read.parquet(path).toPandas()
-    assert sorted(back["doc_id"]) == list(range(500))
-    target = 32 * 4
-    sums = back.groupby("shard")["n_tokens"].sum()
-    max_doc = 13
-    full = sums.iloc[:-1] if len(sums) > 1 else sums
-    assert (full >= target - max_doc).all() and (full <= target + max_doc).all()
-
-    # shard assignment is a pure expression over the manifest
-    man = pack_sequences(df, 32)
-    sh = assign_shards(man, 4).toPandas()
-    assert (sh["shard"] == sh["seq_first"] // 4).all()
-
-
 def test_lm_broadcast_trigram_hand_model(spark):
     """order=3 checked against a hand-computed additively-smoothed
     trigram model (prefix = bigram counts, V = distinct unigrams)."""
@@ -3266,54 +2581,6 @@ def test_lm_broadcast_trigram_hand_model(spark):
     assert out[1]["n_bigrams"] == 4  # n-gram instances at order 3
     assert math.isclose(out[1]["cross_entropy"], h1, rel_tol=1e-12)
     assert out[2]["cross_entropy"] is None  # < 3 tokens, no trigram
-
-
-def test_stupid_backoff_hand_computed(spark):
-    """Brants et al. stupid backoff against hand-computed scores:
-    full trigram hit, backoff-to-bigram-to-unigram for unseen words,
-    and the unseen-unigram floor."""
-    import math
-
-    from melodist_spark.pipeline.lm import stupid_backoff_scores
-
-    train = spark.createDataFrame(
-        [(0, "a b c a b c")], "doc_id long, text string"
-    )
-    # train counts: uni a=2 b=2 c=2 (N=6); bi ab=2 bc=2 ca=1;
-    # tri abc=2 bca=1 cab=1
-    df = spark.createDataFrame(
-        [(1, "a b c a b c"), (2, "a b x"), (3, "b c a b"), (4, "a b")],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in stupid_backoff_scores(df, train_df=train, order=3).collect()
-    }
-    # doc1: S = [2/2, 1/2, 1/1, 2/2] -> mean log = ln(.5)/4
-    assert out[1]["n_scored"] == 4
-    assert math.isclose(
-        out[1]["mean_log_score"], math.log(0.5) / 4, rel_tol=1e-12
-    )
-    # doc2: "a b x": tri unseen, bi "b x" unseen, uni x unseen ->
-    # 0.4 * 0.4 * (0.5/6)
-    assert out[2]["n_scored"] == 1
-    assert math.isclose(
-        out[2]["mean_log_score"], math.log(0.4 * 0.4 * 0.5 / 6), rel_tol=1e-12
-    )
-    # doc3: [c(bca)/c(bc)=1/2, c(cab)/c(ca)=1/1]
-    assert math.isclose(
-        out[3]["mean_log_score"], math.log(0.5) / 2, rel_tol=1e-12
-    )
-    # doc4: shorter than order -> nulls
-    assert out[4]["n_scored"] is None and out[4]["mean_log_score"] is None
-
-    # degenerate training corpus with zero tokens (all-null texts):
-    # NULLs, never log(0) = -inf
-    empty_train = spark.createDataFrame(
-        [(9, None), (10, None)], "doc_id long, text string"
-    )
-    deg = stupid_backoff_scores(df, train_df=empty_train, order=3).collect()
-    assert all(r["mean_log_score"] is None for r in deg)
 
 
 def test_logreg_separable_data_stays_bounded(spark):
@@ -3656,55 +2923,6 @@ def test_detect_script(spark):
     assert out[7]["script_pred"] == "latin" and out[7]["n_cyrillic"] == 6
     assert out[8]["script_pred"] == "und"
     assert out[9]["script_pred"] == "und"
-
-
-def test_chunk_documents(spark):
-    """Chunk reconstruction properties: concatenating chunks with the
-    overlap removed reproduces the document exactly; offsets are
-    exact; short docs yield one chunk; empty/NULL docs yield none."""
-    import random
-
-    from melodist_spark.pipeline.text import chunk_chars
-
-    rng = random.Random(7)
-    docs = [
-        (1, "".join(rng.choice("abcdef ") for _ in range(1237))),
-        (2, "short"),
-        (3, "x" * 512),           # exactly one window
-        (4, "y" * 513),           # one full + one 1-char tail
-        (5, ""),
-        (6, None),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = chunk_chars(df, size=512, overlap=64)
-    rows = sorted(
-        ((r["doc_id"], r["chunk_idx"], r["char_start"], r["chunk"])
-         for r in out.collect())
-    )
-    by_doc = {}
-    for d, i, s, c in rows:
-        by_doc.setdefault(d, []).append((i, s, c))
-
-    assert set(by_doc) == {1, 2, 3, 4}
-    assert len(by_doc[2]) == 1 and by_doc[2][0] == (0, 0, "short")
-    assert len(by_doc[3]) == 1
-    assert len(by_doc[4]) == 2 and by_doc[4][1] == (1, 448, "y" * 65)
-
-    text1 = docs[0][1]
-    chunks1 = by_doc[1]
-    # offsets exact + every byte covered: reconstruct by stripping
-    # each subsequent chunk's 64-char overlap
-    rebuilt = chunks1[0][2] + "".join(c[64:] for _, _, c in chunks1[1:])
-    assert rebuilt == text1
-    for i, s, c in chunks1:
-        assert s == i * 448
-        assert text1[s : s + len(c)] == c
-        assert len(c) == 512 or (i == len(chunks1) - 1 and len(c) >= 1)
-    # no window starts past the end; the ceil((len-overlap)/stride)
-    # count guarantees every window carries >overlap NEW characters,
-    # so no chunk is a pure duplicate of its predecessor's tail
-    assert chunks1[-1][1] < len(text1)
-    assert all(len(c) > 64 for _, _, c in chunks1[1:])
 
 
 def test_weighted_mixture_epochs_and_fractions(spark):
@@ -4229,55 +3447,6 @@ def test_q_span_removal_branches_match_public_op(spark):
     )
 
 
-def test_remove_repeated_spans_against_resume_after_crash(spark, tmp_path):
-    """The incremental fixpoint's driver-loss resume: a junction
-    corpus whose batch needs two rounds against the stored index, run
-    with max_rounds=1 (dies after round 1's durable commit), resumed
-    with the full budget — output identical to the uninterrupted
-    incremental run; parameter mismatch refused."""
-    from melodist_spark.pipeline.dedup import (
-        gram_index,
-        remove_repeated_spans_against,
-    )
-
-    # history holds S and T; the batch quotes each between the SAME
-    # global affixes, so round-1 excisions junction both batch docs
-    # onto a new batch-internal duplicate that round 2 drains
-    hist = spark.createDataFrame(
-        [(0, "S1 S2 S3"), (1, "T1 T2 T3")], "doc_id long, text string"
-    )
-    batch = spark.createDataFrame(
-        [(10, "a b S1 S2 S3 c d"), (11, "a b T1 T2 T3 c d")],
-        "doc_id long, text string",
-    )
-    idx = gram_index(hist, span_tokens=3)
-    kw = dict(span_tokens=3)
-    want = (
-        remove_repeated_spans_against(
-            batch, idx, checkpoint_dir=str(tmp_path / "full"), **kw
-        ).toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    assert (want["n_tokens_removed"] > 0).any()
-
-    ck = str(tmp_path / "crash")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        remove_repeated_spans_against(
-            batch, idx, checkpoint_dir=ck, max_rounds=1, **kw
-        ).collect()
-    got = (
-        remove_repeated_spans_against(
-            batch, idx, checkpoint_dir=ck, resume=True, **kw
-        ).toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want)
-
-    with pytest.raises(ValueError, match="parameter mismatch"):
-        remove_repeated_spans_against(
-            batch, gram_index(hist, span_tokens=4), span_tokens=4,
-            checkpoint_dir=ck, resume=True,
-        )
-
-
 def test_cc_fast_path_invalidates_stale_manifests(spark, tmp_path):
     """Round-13 review finding: the driver union-find fast path wrote
     no manifests, so a directory reused after a distributed run kept
@@ -4445,11 +3614,10 @@ def test_degenerate_vectors_bucket_to_null(spark):
     bucket 0 in every table — a quadratic candidate clique whose
     pairs the cosine re-check then NULLs out (pure wasted join work
     at crawl scale). All three bucket producers now emit NULL for
-    zero / non-finite / null vectors: no candidates, near-dup retains
-    them, expr and Arrow forms stay identical."""
+    zero / non-finite / null vectors: no candidates, and the expr and
+    Arrow forms stay identical."""
     from melodist_spark.pipeline.similarity import (
         embedding_index,
-        embedding_neardup_against,
         lsh_bucket_signature,
         lsh_bucket_udf,
         neardup_pairs,
@@ -4482,14 +3650,6 @@ def test_degenerate_vectors_bucket_to_null(spark):
     assert sorted((r["id_a"], r["id_b"]) for r in pairs.collect()) == [
         (10, 11)
     ]
-    # against a store that itself holds degenerate vectors: the batch
-    # degenerates are all retained (exact dedup upstream owns them)
-    surv = embedding_neardup_against(
-        df.filter(F.col("vec_id") < 10),
-        idx.filter(F.col("vec_id") >= 10),
-        4, threshold=0.99, num_planes=4, num_tables=2,
-    )
-    assert sorted(r["vec_id"] for r in surv.collect()) == [0, 1, 2, 3, 4]
 
 
 def test_lm_model_injection_matches_self_training(spark):

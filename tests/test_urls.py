@@ -4,8 +4,7 @@ text.html_to_text) — crawl-side primitives beyond the reference.
 The web_curation registry row hash-checks the full derivation against
 a DuckDB replay; these tests pin the individual operators' semantics
 on hand-crafted edge cases (userinfo, default/explicit ports,
-multi-part TLDs, IPv4 hosts, scheme-less rows, nested/cased markup)
-and the skew-safe salted cap's equivalence to the exact one.
+multi-part TLDs, IPv4 hosts, scheme-less rows, nested/cased markup).
 """
 
 from __future__ import annotations
@@ -16,9 +15,7 @@ from pyspark.sql import functions as F
 
 from melodist_spark.pipeline.text import html_to_text
 from melodist_spark.pipeline.urls import (
-    cap_per_domain,
     domain_rank,
-    filter_url_blocklist,
     normalize_url,
     registered_domain,
     url_host,
@@ -146,98 +143,12 @@ def _domains_df(spark, n=400):
     )
 
 
-def test_cap_per_domain_exact_and_salted_agree(spark):
-    df = _domains_df(spark)
-    exact = cap_per_domain(df, 7, "domain", "url")
-    salted = cap_per_domain(df, 7, "domain", "url", salt=8)
-    a = sorted((r["domain"], r["id"], r["domain_rank"])
-               for r in exact.collect())
-    b = sorted((r["domain"], r["id"], r["domain_rank"])
-               for r in salted.collect())
-    assert a == b
-    # every domain capped at 7, ranks are 1..7
-    per = {}
-    for d, _, rk in a:
-        per.setdefault(d, []).append(rk)
-    assert set(per) == {"mega.com", "mid.org", "small.net", "tiny.io"}
-    for d, ranks in per.items():
-        assert sorted(ranks) == list(range(1, min(7, len(ranks)) + 1))
-
-
 def test_domain_rank_is_md5_deterministic(spark):
     df = _domains_df(spark, n=50)
     r1 = {r["id"]: r["domain_rank"] for r in domain_rank(df).collect()}
     r2 = {r["id"]: r["domain_rank"]
           for r in domain_rank(df.repartition(7)).collect()}
     assert r1 == r2  # rank never depends on physical layout
-
-
-def test_filter_url_blocklist(spark):
-    pdf = pd.DataFrame({
-        "host": [
-            "ads.example.com", "example.com", "sub.deep.spam.net",
-            "spam.net", "notspam.net", "fine.org",
-        ]
-    })
-    kept = filter_url_blocklist(
-        spark.createDataFrame(pdf), ["example.com", "spam.net"]
-    )
-    assert sorted(r["host"] for r in kept.collect()) == [
-        "fine.org", "notspam.net",
-    ]
-
-
-def test_compression_ratio_signal(spark):
-    """zlib compressibility separates template spam from prose-like
-    text; null/empty rows degrade to null ratios, and the raw byte
-    count is UTF-8 (multi-byte chars counted as encoded)."""
-    import pandas as pd
-
-    from melodist_spark.pipeline.text import compression_ratio
-
-    rng_text = " ".join(f"w{i * 7919 % 5003}" for i in range(200))
-    pdf = pd.DataFrame({
-        "doc_id": [0, 1, 2, 3],
-        "text": ["spam " * 200, rng_text, None, ""],
-    })
-    got = {
-        r["doc_id"]: r
-        for r in compression_ratio(spark.createDataFrame(pdf)).collect()
-    }
-    assert got[0]["ratio"] < 0.05 < got[1]["ratio"]
-    assert got[2]["ratio"] is None and got[2]["n_bytes"] is None
-    assert got[3]["ratio"] is None and got[3]["n_bytes"] == 0
-    assert got[0]["n_bytes"] == 1000
-
-    uni = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [9], "text": ["héllo"]})
-    )
-    assert compression_ratio(uni).first()["n_bytes"] == 6
-
-
-def test_redact_pii_spans(spark):
-    """Emails are redacted before phones (digits inside an email must
-    not be half-eaten), IPv4 quads get their own token, and clean
-    prose passes through byte-identical."""
-    from melodist_spark.pipeline.text import redact_pii
-
-    pdf = pd.DataFrame({
-        "i": [0, 1, 2],
-        "text": [
-            "mail bob12345678@ex.com or call +1 (555) 123-4567 now",
-            "server at 10.0.0.1 and 192.168.1.100:8080",
-            "no pii in this sentence at all",
-        ],
-    })
-    got = (
-        spark.createDataFrame(pdf)
-        .select("i", redact_pii(F.col("text")).alias("t"))
-        .orderBy("i")
-        .collect()
-    )
-    assert got[0]["t"] == "mail <EMAIL> or call <PHONE> now"
-    assert got[1]["t"] == "server at <IP> and <IP>:8080"
-    assert got[2]["t"] == "no pii in this sentence at all"
 
 
 def test_paragraph_dedup_via_sep_params(spark):
@@ -270,32 +181,11 @@ def test_paragraph_dedup_via_sep_params(spark):
     assert out[2] == "another unique para"
 
 
-def test_surt_urlkey(spark):
-    """SURT sort keys match the CDX urlkey convention: reversed
-    comma-joined host, non-default port kept, lowercased path, sorted
-    query, www/fragment/default-port dropped; scheme-less rows
-    degrade like normalize_url."""
-    from melodist_spark.pipeline.urls import surt
-
-    cases = [
-        ("https://www.Example.com/Path/x?b=2&a=1#f", "com,example)/path/x?a=1&b=2"),
-        ("http://sub.test.co.uk:8080/", "uk,co,test,sub:8080)/"),
-        ("https://example.com:443/a", "com,example)/a"),
-        ("https://example.com", "com,example)/"),
-        ("no-scheme-here", "no-scheme-here"),
-    ]
-    df = spark.createDataFrame([(u,) for u, _ in cases], ["u"])
-    got = [r[0] for r in df.select(surt(F.col("u"))).collect()]
-    assert got == [k for _, k in cases], got
-
-
 def test_surt_and_normalize_never_raise(spark):
-    """surt() and normalize_url() are total functions over junk input
+    """normalize_url() is a total function over junk input
     (hypothesis): no exception for any printable string — malformed
     crawl rows must degrade, not kill a task."""
     from hypothesis import given, settings, strategies as st
-
-    from melodist_spark.pipeline.urls import normalize_url, surt
 
     collected = []
 
@@ -306,7 +196,7 @@ def test_surt_and_normalize_never_raise(spark):
 
     case()
     df = spark.createDataFrame([(s,) for s in set(collected) if s is not None] or [("x",)], ["u"])
-    out = df.select(surt(F.col("u")).alias("k"), normalize_url(F.col("u")).alias("n")).collect()
+    out = df.select(normalize_url(F.col("u")).alias("n")).collect()
     assert len(out) >= 1  # the job completing IS the assertion
 
 
@@ -347,176 +237,6 @@ PSL_CASES = [
     ("acct.blob.core.windows.net", "acct.blob.core.windows.net"),
     ("x.acct.blob.core.windows.net", "acct.blob.core.windows.net"),
 ]
-
-
-def test_registered_domain_psl_cases(spark):
-    from melodist_spark.pipeline.psl import registered_domain_psl
-
-    df = spark.createDataFrame([(h,) for h, _ in PSL_CASES], ["host"])
-    got = {
-        r["host"]: r["domain"]
-        for r in registered_domain_psl(df).collect()
-    }
-    want = dict(PSL_CASES)
-    assert got == want
-
-
-def test_registered_domain_psl_plan_no_shuffle(spark):
-    """Scale contract: the PSL lookup is K chained BROADCAST hash
-    joins on the scan — zero exchanges on the host side, no Python
-    workers, no explode (a shuffle here would re-partition the whole
-    corpus just to label domains)."""
-    from melodist_spark.pipeline.psl import registered_domain_psl
-
-    df = spark.createDataFrame([("x.example.co.uk",)], ["host"])
-    plan = (
-        registered_domain_psl(df)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "Exchange hashpartitioning" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_psl_parser_full_grammar():
-    """parse_psl accepts the upstream file's grammar (comments,
-    trailing-comment lines, wildcards, exceptions) and resolves
-    key collisions longest-first."""
-    from melodist_spark.pipeline.psl import parse_psl
-
-    rules = parse_psl(
-        """
-// comment
-com
-*.ck
-!www.ck
-co.uk
-uk
-"""
-    )
-    assert rules["com"] == (1, False)
-    assert rules["ck"] == (2, False)  # wildcard base, ps = 2
-    assert rules["www.ck"] == (1, True)
-    assert rules["co.uk"] == (2, False)
-    assert rules["uk"] == (1, False)
-
-
-def test_psl_agrees_with_regex_head_on_its_own_turf(spark):
-    """On hosts the regex head handles (plain two-label and the
-    hardcoded {co,com,...}.<cc> suffixes), the PSL path returns the
-    identical registrable domain — the fallback and the data path
-    can be swapped without moving any existing grouping."""
-    from melodist_spark.pipeline.psl import registered_domain_psl
-    from melodist_spark.pipeline.urls import registered_domain
-
-    hosts = [
-        "a.example.com", "example.com", "b.example.co.uk",
-        "x.y.example.com.au", "sub.example.org", "192.168.0.1",
-    ]
-    df = spark.createDataFrame([(h,) for h in hosts], ["host"])
-    both = registered_domain_psl(df, out_col="psl").select(
-        "host", "psl", registered_domain(F.col("host")).alias("rex")
-    )
-    for r in both.collect():
-        assert r["psl"] == r["rex"], r["host"]
-
-
-def test_psl_top_private_suffixes_present():
-    """VERDICT r8 item 2: the hosting platforms and CDN subtrees a
-    real crawl hits hardest must all be in the packaged rule table —
-    each of these groups MILLIONS of unrelated parties, so a miss
-    means one platform swallows a per-domain diversity cap."""
-    from melodist_spark.pipeline.psl import _resolved_rules
-
-    rules = _resolved_rules()
-    top_private = [
-        # code/pages hosting
-        "github.io", "gitlab.io", "bitbucket.io", "readthedocs.io",
-        "neocities.org",
-        # blogs / site builders
-        "blogspot.com", "wordpress.com", "wixsite.com", "webflow.io",
-        "notion.site", "hatenablog.com", "hatenablog.jp", "web.fc2.com",
-        "edublogs.org",
-        # clouds / paas
-        "appspot.com", "web.app", "firebaseapp.com", "run.app",
-        "herokuapp.com", "netlify.app", "vercel.app", "fly.dev",
-        "onrender.com", "pages.dev", "workers.dev", "deno.dev",
-        "up.railway.app", "replit.app", "csb.app", "streamlit.app",
-        "hf.space", "myshopify.com", "azurewebsites.net",
-        "azurestaticapps.net", "azurecontainer.io",
-        "blob.core.windows.net", "s3.amazonaws.com",
-        "elasticbeanstalk.com", "amplifyapp.com", "ondigitalocean.app",
-        # cdn subtrees
-        "cloudfront.net", "azureedge.net", "global.ssl.fastly.net",
-        "akamaized.net", "akamaihd.net", "edgekey.net", "edgesuite.net",
-        "b-cdn.net",
-        # tunnels / dynamic dns
-        "ngrok.io", "ngrok-free.app", "trycloudflare.com", "loca.lt",
-        "duckdns.org", "ddns.net", "dynv6.net",
-    ]
-    missing = [s for s in top_private if s not in rules]
-    assert not missing, f"missing private suffixes: {missing}"
-    # wildcard subtrees keyed by their base
-    assert rules["compute.amazonaws.com"][0] == 4  # *.compute.amazonaws.com
-    assert rules["elb.amazonaws.com"][0] == 4
-
-
-def test_psl_single_label_exception_both_paths(spark):
-    """ADVICE r8: a grammar-legal single-label exception `!foo` is
-    strip-leading-label ps=0 (registrable domain = the last label
-    itself), not clamped to ps=1 — and the literal-map path's signed
-    encoding must keep ps=0 distinguishable from 'no entry' (-0 == 0
-    would silently fall through to the default rule)."""
-    from melodist_spark.pipeline.psl import (
-        parse_psl,
-        registered_domain_psl,
-        registered_domain_psl_expr,
-    )
-
-    text = "*.foo\n!foo\ncom\n"
-    assert parse_psl(text)["foo"] == (0, True)
-
-    hosts = ["foo", "x.foo", "a.x.foo", "a.example.com"]
-    want = {
-        "foo": "foo",            # exception: ps=0, last 1 label
-        "x.foo": "foo",          # exception beats the *.foo wildcard
-        "a.x.foo": "foo",
-        "a.example.com": "example.com",
-    }
-    df = spark.createDataFrame([(h,) for h in hosts], ["host"])
-    got_join = {
-        r["host"]: r["domain"]
-        for r in registered_domain_psl(df, psl_text=text).collect()
-    }
-    got_expr = {
-        r["host"]: r["d"]
-        for r in df.select(
-            "host",
-            registered_domain_psl_expr("host", psl_text=text).alias("d"),
-        ).collect()
-    }
-    assert got_join == want
-    assert got_expr == want
-
-
-def test_psl_temp_columns_survive_caller_collision(spark):
-    """ADVICE r8: the join variant's staging columns must not collide
-    with (or silently drop) caller columns that happen to share the
-    `_psl*` prefix."""
-    from melodist_spark.pipeline.psl import registered_domain_psl
-
-    df = spark.createDataFrame(
-        [("a.example.co.uk", "keep-me", 7)],
-        ["host", "_psl_s1", "_psl_ps"],
-    )
-    out = registered_domain_psl(df)
-    assert set(out.columns) == {"host", "_psl_s1", "_psl_ps", "domain"}
-    row = out.collect()[0]
-    assert row["domain"] == "example.co.uk"
-    assert row["_psl_s1"] == "keep-me" and row["_psl_ps"] == 7
 
 
 # ------------------------------------------------- main-content extraction
@@ -751,55 +471,3 @@ def test_extract_main_content_dom_plan_arrow_only(spark):
     assert "ArrowEvalPython" in plan
     for bad in ("BatchEvalPython", "Exchange", "Generate"):
         assert bad not in plan, bad
-
-
-def test_registered_domain_psl_expr_matches_join_path(spark):
-    """The literal-map expression variant and the broadcast-join
-    variant must give identical registrable domains on every PSL
-    algorithm case, and the expression must constant-fold the rule
-    table (no per-row map construction) with zero exchanges and no
-    Python stage."""
-    from melodist_spark.pipeline.psl import (
-        registered_domain_psl,
-        registered_domain_psl_expr,
-    )
-
-    df = spark.createDataFrame([(h,) for h, _ in PSL_CASES], ["host"])
-    joined = registered_domain_psl(df, out_col="dj")
-    both = joined.withColumn(
-        "de", registered_domain_psl_expr(F.col("host"))
-    )
-    for r in both.collect():
-        assert r["de"] == r["dj"] == dict(PSL_CASES)[r["host"]], r["host"]
-
-    plan = (
-        df.select(registered_domain_psl_expr(F.col("host")).alias("d"))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan
-    # folded: the str_to_map call is gone from the plan, leaving a
-    # map LITERAL (which prints as map(keys: [...]))
-    assert "str_to_map" not in plan
-
-
-def test_psl_parser_totality_fuzz():
-    """parse_psl over arbitrary text (the production upgrade path is
-    'drop in the upstream file verbatim', so the parser sees whatever
-    that file becomes): never raises, always returns a sane
-    {suffix: (ps >= 0, bool)} dict."""
-    import random
-
-    from melodist_spark.pipeline.psl import parse_psl
-
-    frag = ["com", "*.x", "!a.b", "//c", "*.", "!", ".", "..", "a..b",
-            " x y ", "\t", "UPPER.Case", "*.*.deep", "!*.odd", ""]
-    for seed in range(200):
-        r = random.Random(seed)
-        text = "\n".join(r.choice(frag) for _ in range(r.randint(0, 30)))
-        rules = parse_psl(text)
-        for k, (ps, exc) in rules.items():
-            assert isinstance(k, str) and k
-            assert ps >= 0 and isinstance(exc, bool)

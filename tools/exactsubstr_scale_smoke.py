@@ -126,55 +126,6 @@ def main() -> None:
     print(f"resume-after-done: {rres} tokens in {t3rr - t3r:.1f}s")
     assert rres == rt, (rres, rt)
 
-    # incremental: treat the cleaned corpus as history (its gram_index
-    # is the durable state) and ingest a 5%-sized fresh batch, half of
-    # whose docs re-quote the planted passages — the daily-crawl shape:
-    # one count join against the state, never a history re-scan
-    from melodist_spark.pipeline.dedup import (
-        gram_index,
-        remove_repeated_spans_against,
-    )
-
-    t3b = time.perf_counter()
-    idx = gram_index(clean.select("doc_id", "text"), span_tokens=SPAN)
-    idx.write.mode("overwrite").parquet("/tmp/exactsubstr_smoke_index")
-    idx = spark.read.parquet("/tmp/exactsubstr_smoke_index")
-    t4 = time.perf_counter()
-    n_grams = idx.count()
-    print(f"gram_index build: {n_grams} distinct grams in {t4 - t3b:.1f}s")
-
-    n_batch = max(n_docs // 20, 1000)
-    batch_rows = []
-    for i in range(n_batch):
-        toks = list(rng.choice(vocab, size=n_tokens, p=zipf))
-        if i % 2 == 0:
-            p = passages[i % N_PASSAGES].split()
-            at = int(rng.integers(0, n_tokens - len(p)))
-            toks[at : at + len(p)] = p
-        batch_rows.append((10_000_000 + i, " ".join(toks)))
-    batch = spark.createDataFrame(
-        pd.DataFrame(batch_rows, columns=["doc_id", "text"])
-    ).repartition(32)
-    surv = remove_repeated_spans_against(
-        batch, idx, span_tokens=SPAN
-    ).persist()
-    rb = surv.agg(F.sum("n_tokens_removed")).collect()[0][0]
-    t5 = time.perf_counter()
-    print(
-        f"increment ({n_batch} docs vs {n_grams}-gram state): "
-        f"{rb} tokens removed in {t5 - t4:.1f}s"
-    )
-    # every re-quoted passage must be excised (its keeper is history's
-    # surviving copy), every fresh doc untouched
-    quoted = surv.filter(F.col("doc_id") % 2 == 0)
-    assert quoted.filter(F.col("n_tokens_removed") < 60).count() == 0
-    assert (
-        surv.filter(F.col("doc_id") % 2 == 1)
-        .filter(F.col("n_tokens_removed") != 0)
-        .count()
-        == 0
-    )
-
     # gates
     residual = repeated_spans(
         clean.select("doc_id", "text"), span_tokens=SPAN
