@@ -899,7 +899,7 @@ def test_remove_contaminated_spans_surgery(spark):
     assert all(not r["contaminated"] for r in flags)
 
     # caller columns sharing the staging name survive (ADVICE-class
-    # collision-proofing, same policy as psl.py)
+    # collision-proofing)
     with_clash = docs.withColumn("__sg", F.lit("keep"))
     clash = remove_contaminated_spans(with_clash, grams, ngram=13)
     assert "__sg" in clash.columns
