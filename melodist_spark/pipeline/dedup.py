@@ -22,6 +22,58 @@ from pyspark.sql import functions as F
 _logger = logging.getLogger(__name__)
 
 
+def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Group identical texts by md5 digest.
+
+    Returns (digest, n_docs, keep_id) for groups with >1 member; the
+    kept representative is the minimum id (deterministic).
+    """
+    return (
+        df.groupBy(F.md5(F.col(text_col)).alias("digest"))
+        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keep_id"))
+        .filter(F.col("n_docs") > 1)
+    )
+
+
+def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Keep one representative (min id) per distinct text."""
+    keep = (
+        df.groupBy(F.md5(F.col(text_col)).alias("digest"))
+        .agg(F.min(id_col).alias(id_col))
+        .select(id_col)
+    )
+    return df.join(keep, id_col, "left_semi")
+
+
+def digest_index(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """One-column (digest) index of a corpus's distinct text md5s —
+    the durable state an incremental ingest deduplicates against.
+    Map-side-combined distinct; store it partitioned/bucketed by
+    digest and it grows by one row per new distinct document."""
+    return df.select(F.md5(F.col(text_col)).alias("digest")).distinct()
+
+
+def dedup_against(
+    df: DataFrame, index: DataFrame, text_col: str = "text"
+) -> DataFrame:
+    """Incremental exact dedup: drop documents whose text digest
+    already exists in ``index`` (from :func:`digest_index` — e.g. the
+    digest table of everything previously ingested).
+
+    One left-anti equi-join on the digest; combined with
+    :func:`dedup_exact` on the batch itself this gives exactly-once
+    ingest across corpus snapshots without ever re-scanning the
+    historical corpus. Union the surviving batch's
+    :func:`digest_index` into the stored index to advance the state.
+    """
+    keyed = df.withColumn("__digest", F.md5(F.col(text_col)))
+    return keyed.join(
+        index.select(F.col("digest").alias("__digest")),
+        "__digest",
+        "left_anti",
+    ).drop("__digest")
+
+
 def repeated_spans(
     df: DataFrame,
     span_tokens: int = 50,
@@ -893,9 +945,10 @@ def lsh_bands(
     PIPELINE ORDER (round-13 advisor note): because signature-less
     docs emit no bands, near-dup ALONE no longer collapses
     byte-identical empty/blank documents (pre-round-12 they collided
-    through the accidental shared NULL bucket). Run exact dedup on the
-    md5 digest in front — the standard cascade order — so identical
-    empties are collapsed before banding.
+    through the accidental shared NULL bucket). Run exact dedup
+    (:func:`dedup_exact` / :func:`dedup_against` on the md5 digest)
+    in front — the standard cascade order — so identical empties are
+    collapsed before banding.
     """
     df_with_sigs = df_with_sigs.filter(F.col("sig_0").isNotNull())
     n_bands = num_hashes // band_size
@@ -1454,7 +1507,8 @@ def minhash_index(
     needs (the
     band table is a cheap narrow derivation via :func:`lsh_bands`,
     so it is NOT stored). Store partitioned/bucketed by id; union
-    each surviving batch's index in to advance the state. The ``sig_i`` fields
+    each surviving batch's index in to advance the state — the
+    near-dup analogue of :func:`digest_index`. The ``sig_i`` fields
     carry family/num_hashes/shingle as schema metadata (stamped by
     :func:`minhash_signature`, parquet-round-tripped), which
     :func:`neardup_against` validates — a shingle-width mismatch
@@ -1493,9 +1547,9 @@ def neardup_against(
     (the self-join salting of :func:`lsh_candidate_pairs` does not
     apply here).
 
-    Returns the surviving batch rows. Exact-dup ingest composes in
-    front; union the survivors' :func:`minhash_index` into the stored
-    index afterwards.
+    Returns the surviving batch rows. Exact-dup ingest
+    (:func:`dedup_against`) composes in front; union the survivors'
+    :func:`minhash_index` into the stored index afterwards.
 
     The stored index (and ``batch_sig`` when passed) must carry the
     signature metadata :func:`minhash_signature` stamps, and it must

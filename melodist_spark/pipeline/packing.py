@@ -40,6 +40,82 @@ from .sampling import _hash01
 from .text import token_count
 
 
+def chunk_tokens(
+    df: DataFrame,
+    max_tokens: int,
+    overlap: int = 0,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Split documents into ``max_tokens``-token chunks with
+    ``overlap`` tokens of left context carried into each following
+    chunk (the RAG / long-document-pretraining prep step).
+
+    Entirely narrow JVM expressions: tokenize once, build chunk
+    start offsets with ``sequence``, slice per chunk, posexplode —
+    no shuffle, no Python. Chunk starts advance by
+    ``max_tokens - overlap``; every token of the original document
+    appears in at least one chunk and the non-overlap prefix of each
+    chunk reconstructs the document in order. Empty/blank documents
+    yield no chunks.
+
+    Output: (all input columns minus ``text_col``) + ``chunk_id``,
+    ``chunk_text``, ``chunk_tokens``.
+    """
+    if max_tokens < 1:
+        raise ValueError(f"max_tokens must be >= 1, got {max_tokens}")
+    if not 0 <= overlap < max_tokens:
+        raise ValueError(
+            f"overlap must be in [0, max_tokens), got {overlap}"
+        )
+    step = max_tokens - overlap
+    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    staged = df.withColumn("__toks", toks).withColumn(
+        "__n", token_count(F.col(text_col))
+    )
+    # chunk start offsets 0, step, 2*step, ...; a start s > 0 only
+    # earns a chunk if it contributes tokens beyond the previous
+    # chunk's end (s < n - overlap) — otherwise the trailing chunk
+    # would be a pure suffix-duplicate of its predecessor (e.g. an
+    # 8-token doc at max=10/overlap=3 must yield ONE chunk, not a
+    # redundant second chunk of its last token)
+    starts = F.sequence(
+        F.lit(0),
+        F.greatest(
+            F.floor((F.col("__n") - overlap - 1) / step).cast("int"),
+            F.lit(0),
+        )
+        * step,
+        F.lit(step),
+    )
+    chunks = F.transform(
+        starts,
+        lambda s: F.struct(
+            F.array_join(
+                F.slice(F.col("__toks"), s + 1, F.lit(max_tokens)), " "
+            ).alias("chunk_text"),
+            F.least(F.col("__n") - s, F.lit(max_tokens))
+            .cast("long")
+            .alias("chunk_tokens"),
+        ),
+    )
+    # posexplode over the struct array yields (pos, struct)
+    out = (
+        staged.filter(F.col("__n") > 0)
+        .select(
+            "*",
+            F.posexplode(chunks).alias("chunk_id", "__c"),
+        )
+        .select(
+            *[c for c in df.columns if c != text_col],
+            F.col("chunk_id").cast("long").alias("chunk_id"),
+            F.col("__c.chunk_text").alias("chunk_text"),
+            F.col("__c.chunk_tokens").alias("chunk_tokens"),
+        )
+    )
+    return out
+
+
 def pack_sequences(
     df: DataFrame,
     seq_len: int,

@@ -371,13 +371,16 @@ def embedding_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """LSH index of an embedding table:
+    """Durable embedding near-dup state for incremental ingest:
     ``(id, embedding, bucket_0..bucket_{T-1})`` — the embedding-side
     analogue of :func:`dedup.minhash_index`. Unlike MinHash (where
     the signature suffices), the exact cosine re-check needs the
-    vector itself, so the index is the embedding plus its
+    vector itself, so the state is the embedding plus its
     precomputed hyperplane buckets (~4·dim + 8·T B per doc — i.e.
-    the vector store IS the index).
+    the vector store IS the index, which is how production embedding
+    dedup works anyway). Store partitioned/bucketed BY ``bucket_0``:
+    the incremental check's only shuffle is the bucket equi-join.
+    Union each surviving batch's index in to advance the state.
 
     ``num_planes`` / ``num_tables`` are the standard LSH AND-OR
     knobs (the cosine analogue of MinHash banding): each table ANDs
@@ -395,9 +398,11 @@ def embedding_index(
 
     Every ``bucket_t`` field carries ``num_planes`` / ``num_tables``
     / the plane-family tag as schema metadata (:func:`_emb_meta`) —
-    it survives select/union and the parquet round trip, so a stored
-    index records the parameters it was built with (the bucket values
-    of different plane counts live in the same long space)."""
+    it survives select/union and the parquet round trip, so
+    :func:`embedding_neardup_against` can verify a stored index was
+    built with the parameters the caller now claims instead of
+    silently missing duplicates on a planes mismatch (the bucket
+    values of different plane counts live in the same long space)."""
     planes = np.array(
         [_hyperplane(dim, p) for p in range(num_tables * num_planes)],
         dtype=np.float64,
@@ -460,19 +465,175 @@ def _emb_meta(num_planes: int, num_tables: int) -> dict:
     }
 
 
+def stamp_embedding_index(
+    df: DataFrame, num_planes: int, num_tables: int
+) -> DataFrame:
+    """Attach plane/table metadata to an index frame that lost it
+    (schema rebuilt by an external writer). The caller asserts the
+    parameters — bucket values of different plane counts are
+    indistinguishable, so only use this for frames whose provenance
+    is known."""
+    meta = _emb_meta(num_planes, num_tables)
+    others = [c for c in df.columns if not c.startswith("bucket_")]
+    return df.select(
+        *others,
+        *[
+            F.col(f"bucket_{t}").alias(f"bucket_{t}", metadata=meta)
+            for t in range(num_tables)
+        ],
+    )
+
+
+def _check_index_tables(
+    df: DataFrame, num_tables: int, what: str, num_planes: int | None = None
+) -> None:
+    """Fail loudly when an :func:`embedding_index` frame was built
+    with different parameters than the caller now claims — a mismatch
+    would otherwise degrade SILENTLY into missed duplicates (too few
+    tables read → lost OR-amplification recall; a planes mismatch →
+    disjoint bucket spaces, zero collisions) or an AnalysisException
+    naming an internal column (too many tables). Two layers: the
+    bucket COLUMNS pin T structurally (``bucket_0 .. bucket_{T-1}``
+    present, ``bucket_T`` absent), and the schema METADATA stamped by
+    :func:`embedding_index` pins ``num_planes`` + the plane family —
+    the half no column shape can reveal. Metadata-less frames (built
+    outside :func:`embedding_index`) fail the planes check with a
+    pointer to :func:`stamp_embedding_index`."""
+    missing = [
+        f"bucket_{t}" for t in range(num_tables) if f"bucket_{t}" not in df.columns
+    ]
+    if missing:
+        raise ValueError(
+            f"{what} is missing bucket columns {missing}: it was built "
+            f"with fewer than num_tables={num_tables} tables (columns: "
+            f"{df.columns})"
+        )
+    if f"bucket_{num_tables}" in df.columns:
+        raise ValueError(
+            f"{what} has column bucket_{num_tables}: it was built with "
+            f"MORE than num_tables={num_tables} tables — pass the value "
+            "the index was built with or duplicates will be missed "
+            f"(columns: {df.columns})"
+        )
+    if num_planes is None:
+        return
+    want = _emb_meta(num_planes, num_tables)
+    meta = dict(df.schema["bucket_0"].metadata or {})
+    got = {k: meta.get(k) for k in want}
+    if got["num_planes"] is None:
+        raise ValueError(
+            f"{what} carries no plane metadata on bucket_0 — it was "
+            "built outside embedding_index() (or its schema was "
+            "rebuilt without metadata). Rebuild it, or assert its "
+            "provenance with stamp_embedding_index(df, num_planes, "
+            "num_tables); matching blindly would read a planes "
+            "mismatch as zero collisions (silently missed duplicates)."
+        )
+    if got != want:
+        raise ValueError(
+            f"{what} was built with {got} but this call asks for "
+            f"{want} — buckets from different plane parameters share "
+            "the long space, so a mismatch reads as missed duplicates. "
+            "Pass the values the index was built with."
+        )
+
+
 def _bucket_long_form(
     df: DataFrame, tag: str, id_col: str, num_tables: int
 ) -> DataFrame:
     """(id, table, bucket) long form of an :func:`embedding_index`
     frame — one narrow posexplode of the T bucket columns; vectors
-    deliberately left behind (joined back per candidate). Feeds the
-    AND-OR candidate join of :func:`lsh_topk`."""
+    deliberately left behind (joined back per candidate). Shared by
+    the AND-OR candidate joins of :func:`embedding_neardup_against`
+    and :func:`lsh_topk`."""
     return df.select(
         F.col(id_col).alias(tag),
         F.posexplode(
             F.array(*[f"bucket_{t}" for t in range(num_tables)])
         ).alias("__tbl", "__bucket"),
     )
+
+
+def embedding_neardup_against(
+    batch: DataFrame,
+    index: DataFrame,
+    dim: int,
+    threshold: float = 0.9,
+    num_planes: int = 8,
+    num_tables: int = 1,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    arrow: bool = False,
+    batch_index: DataFrame | None = None,
+) -> DataFrame:
+    """Incremental embedding near-dup: drop batch documents whose
+    cosine against any previously-indexed embedding reaches
+    ``threshold`` — the daily-ingest increment for semantic dedup,
+    without re-comparing the historical corpus against itself (the
+    analogue of :func:`dedup.neardup_against`, with the exact-cosine
+    re-check MinHash can't give).
+
+    Candidates come from the batch buckets equi-joined against the
+    stored index buckets (a two-table join, NOT the self-join — AQE
+    skew splitting covers hot buckets; there is no quadratic term in
+    the index size, only in per-bucket collision counts). Matches
+    re-check exact cosine (``arrow=True`` for the einsum kernel) and
+    hit batch ids are anti-joined away.
+
+    ``num_planes`` / ``num_tables`` must match the values the index
+    was built with — the planes are deterministic, so any session
+    reproduces the same buckets. BOTH are verified against the index
+    frame itself and a mismatch raises (silently it would read as
+    missed duplicates): ``num_tables`` structurally from the bucket
+    columns, ``num_planes`` + the plane family from the schema
+    metadata :func:`embedding_index` stamps on them (parquet
+    round-trips it). With T tables a pair is a candidate
+    when ANY table's buckets agree (OR-amplification); the candidate
+    id pairs are deduplicated BEFORE the vectors join in, so a pair
+    colliding in several tables pays one cosine. ``batch_index``
+    passes the batch's own :func:`embedding_index` when already in
+    hand (computed for the index advance); streaming ingest composes
+    this per micro-batch via ``foreachBatch``, the standard
+    stream-vs-index shape (same policy as the minhash incremental
+    path).
+
+    Returns the surviving batch rows; union their
+    :func:`embedding_index` into the store afterwards."""
+    _check_index_tables(index, num_tables, "stored index", num_planes)
+    bidx = (
+        batch_index
+        if batch_index is not None
+        else embedding_index(
+            batch, dim, num_planes, num_tables, id_col, vec_col
+        )
+    )
+    if batch_index is not None:
+        _check_index_tables(bidx, num_tables, "batch_index", num_planes)
+
+    cand = (
+        _bucket_long_form(bidx, "__bid", id_col, num_tables)
+        .join(
+            _bucket_long_form(index, "__iid", id_col, num_tables),
+            ["__tbl", "__bucket"],
+        )
+        .select("__bid", "__iid")
+        .distinct()
+    )
+    bs = bidx.select(
+        F.col(id_col).alias("__bid"), F.col(vec_col).alias("__bv")
+    )
+    isx = index.select(
+        F.col(id_col).alias("__iid"), F.col(vec_col).alias("__iv")
+    )
+    hits = (
+        cand.join(bs, "__bid")
+        .join(isx, "__iid")
+        .withColumn("__cos", _pair_cosine(F.col("__bv"), F.col("__iv"), arrow))
+        .filter(F.col("__cos") >= float(threshold))
+        .select(F.col("__bid").alias(id_col))
+        .distinct()
+    )
+    return batch.join(hits, id_col, "left_anti")
 
 
 def semantic_dedup(
@@ -660,7 +821,8 @@ def lsh_topk(
     deduplicated candidates. At 100 TB the bucket join replaces the
     full cross product; ``num_planes`` prices candidate work (bucket
     size halves per plane), ``num_tables`` buys recall back — the
-    same knobs, measured in `tools/ann_scale_smoke.py`."""
+    same knobs, measured in `tools/embedding_increment_smoke.py` and
+    `tools/ann_scale_smoke.py`."""
     c = embedding_index(corpus, dim, num_planes, num_tables, id_col, vec_col)
     q = embedding_index(queries, dim, num_planes, num_tables, id_col, vec_col)
 

@@ -162,7 +162,8 @@ def script_counts(text: Column) -> dict[str, Column]:
 
 def detect_script(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Argmax script per document (``script_pred``): highest character
-    count, ties to the alphabetically last script name, 'und' when no
+    count, ties to the alphabetically last script name (same
+    deterministic rule as :func:`detect_language`), 'und' when no
     script character occurs at all."""
     counts = script_counts(F.col(text_col))
     df = df.withColumns(counts)
@@ -174,6 +175,22 @@ def detect_script(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
     best = F.array_max(F.filter(pairs, lambda p: p["s"] > 0))
     return df.withColumn("script_pred", F.coalesce(best["l"], F.lit("und")))
+
+
+def detect_language(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Argmax of language stopword scores with deterministic
+    (alphabetical) tie-break; 'und' (undetermined) when no hits."""
+    scores = language_scores(F.col(text_col))
+    df = df.withColumns(scores)
+    langs = sorted(LANG_STOPWORDS)
+    pairs = F.array(
+        *[F.struct(F.col(f"score_{l}").alias("s"), F.lit(l).alias("l")) for l in langs]
+    )
+    best = F.array_max(F.filter(pairs, lambda p: p["s"] > 0))
+    # array_max on structs orders by (s, l); ties pick the
+    # lexicographically largest lang — invert for a stable, documented
+    # rule: highest score, then alphabetically last
+    return df.withColumn("lang_pred", F.coalesce(best["l"], F.lit("und")))
 
 
 def fingerprint(text: Column) -> Column:
@@ -378,6 +395,23 @@ def pii_counts(text: Column) -> dict[str, Column]:
     }
 
 
+def redact_pii(
+    text: Column,
+    email_token: str = "<EMAIL>",
+    phone_token: str = "<PHONE>",
+    ip_token: str = "<IP>",
+) -> Column:
+    """Span-level PII redaction: replace email/phone/IPv4-shaped
+    spans with placeholder tokens (the release-time counterpart of
+    :func:`pii_counts`, which only measures). Order matters: emails
+    first, so the digits inside one are never half-eaten by the phone
+    pattern. Same Java/RE2-portable patterns, pure codegen — a
+    scan-speed pass over 100 TB like every other rule here."""
+    t = F.regexp_replace(text, EMAIL_RE, email_token)
+    t = F.regexp_replace(t, PHONE_RE, phone_token)
+    return F.regexp_replace(t, IPV4_RE, ip_token)
+
+
 def _sloppy_cp1252(ch: str) -> str:
     """What ``ch`` becomes when its UTF-8 bytes are mis-decoded as
     Windows-1252 with the five undefined bytes passed through as C1
@@ -509,6 +543,67 @@ def fix_text_sql(expr: str, chunk: int = 56) -> str:
     frm = "||".join(f"chr({ord(c)})" for c in SPACE_CHARS + DROP_CHARS)
     to = "'" + " " * len(SPACE_CHARS) + "'"
     return f"(select translate({name}, {frm}, {to}) from {inner})"
+
+
+def chunk_chars(
+    df: DataFrame,
+    size: int = 512,
+    overlap: int = 64,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Split documents into overlapping character windows — the
+    embedding/RAG front door (a 100 TB corpus is embedded in chunks,
+    never whole docs): one row per chunk with exact provenance
+    ``(id, chunk_idx, char_start, chunk)``, so any downstream match
+    maps back to a byte range of its source document.
+
+    Stride is ``size - overlap``; the final window is whatever
+    remains (never padded, never dropped — a 1-char tail is still
+    retrievable text). JVM-side, zero Python: ``sequence`` over the
+    window count, ``transform`` to (offset, substring), one
+    ``explode`` (HOFs run interpreted — CodegenFallback — but the
+    per-window work is one substring, so the pass stays scan-class) —
+    the only row multiplication is the intended ~len/stride fan-out,
+    there is no shuffle, and empty/NULL docs produce no rows.
+    Token-boundary snapping is deliberately absent: char offsets stay
+    exact and engine-portable (the DuckDB twin is the same
+    arithmetic); snap downstream if a tokenizer needs it."""
+    if size < 1:
+        raise ValueError(f"size must be >= 1, got {size}")
+    if not (0 <= overlap < size):
+        raise ValueError(f"overlap must be in [0, size), got {overlap}")
+    stride = size - overlap
+    n = F.length(F.col(text_col))
+    # windows start at 0, stride, 2*stride, ... while start < len;
+    # a start inside the last `overlap` chars would duplicate the
+    # previous window's tail, so only starts with NEW content count:
+    # n_windows = 1 + floor(max(len - size, 0) / stride), but when
+    # len > size the last window may be short — ceil semantics via
+    # integer arithmetic on (len - overlap)
+    n_win = F.when(n <= size, F.lit(1)).otherwise(
+        F.ceil((n - F.lit(overlap)) / F.lit(stride)).cast("int")
+    )
+    windows = F.transform(
+        F.sequence(F.lit(0), n_win - 1),
+        lambda i: F.struct(
+            i.cast("long").alias("chunk_idx"),
+            (i * stride).cast("long").alias("char_start"),
+            F.substring(
+                F.col(text_col), (i * stride + 1).cast("int"), size
+            ).alias("chunk"),
+        ),
+    )
+    return (
+        df.filter(F.col(text_col).isNotNull() & (n > 0))
+        .select(F.col(id_col), F.explode(windows).alias("__w"))
+        .select(
+            id_col,
+            F.col("__w.chunk_idx").alias("chunk_idx"),
+            F.col("__w.char_start").alias("char_start"),
+            F.col("__w.chunk").alias("chunk"),
+        )
+    )
 
 
 def clean_text(text: Column) -> Column:
@@ -1204,7 +1299,7 @@ def gopher_repetition_col(
     a struct-typed expression (one field per signal), attachable with
     ``withColumn`` — no join needed to keep the caller's payload
     columns, which also makes it usable mid-stream (stateless, so
-    Structured-Streaming-safe; see ``streaming.ingest``)."""
+    Structured-Streaming-safe)."""
     import re as _re
 
     import pandas as pd
@@ -1233,3 +1328,71 @@ def gopher_repetition_col(
         )
 
     return _kern(text)
+
+
+#: Published Gopher repetition-filter thresholds (Rae et al. 2021,
+#: table A1): a document is dropped when the signal EXCEEDS the value.
+GOPHER_REPETITION_THRESHOLDS: dict[str, float] = {
+    "dup_line_frac": 0.30,
+    "dup_para_frac": 0.30,
+    "dup_line_char_frac": 0.20,
+    "dup_para_char_frac": 0.20,
+    "top_2gram_char_frac": 0.20,
+    "top_3gram_char_frac": 0.18,
+    "top_4gram_char_frac": 0.16,
+    "dup_5gram_char_frac": 0.15,
+    "dup_6gram_char_frac": 0.14,
+    "dup_7gram_char_frac": 0.13,
+    "dup_8gram_char_frac": 0.12,
+    "dup_9gram_char_frac": 0.11,
+    "dup_10gram_char_frac": 0.10,
+}
+
+
+def resolve_repetition_thresholds(
+    overrides: dict[str, float] | None = None,
+) -> dict[str, float]:
+    """The full table-A1 threshold set with ``overrides`` applied on
+    top — the resolution rule of :func:`repetition_flags`: a subset
+    dict overrides, never restricts. Unknown signal names raise."""
+    th = dict(GOPHER_REPETITION_THRESHOLDS)
+    if overrides:
+        unknown = set(overrides) - set(th)
+        if unknown:
+            raise ValueError(
+                f"unknown repetition signals: {sorted(unknown)}"
+            )
+        th.update(overrides)
+    return th
+
+
+def repetition_flags(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    thresholds: dict[str, float] | None = None,
+    **gopher_kwargs,
+) -> DataFrame:
+    """Gopher repetition keep/drop rules over
+    :func:`gopher_repetition`, in the :func:`quality_flags` audit
+    style: one boolean ``ok_<signal>`` per table-A1 threshold
+    (true = signal at or under the paper's published cutoff) plus
+    the conjunction ``keep`` — drop *reasons* retained for auditing
+    rather than filtering in place. ``thresholds`` overrides any
+    subset of :data:`GOPHER_REPETITION_THRESHOLDS`; the filter stays
+    a column predicate on the single Arrow-kernel pass.
+    """
+    th = resolve_repetition_thresholds(thresholds)
+    out = gopher_repetition(
+        df, text_col=text_col, id_col=id_col, **gopher_kwargs
+    )
+    flags = {
+        f"ok_{sig}": F.col(sig) <= F.lit(cut)
+        for sig, cut in th.items()
+        if sig in out.columns
+    }
+    out = out.withColumns(flags)
+    keep = None
+    for name in flags:
+        keep = F.col(name) if keep is None else keep & F.col(name)
+    return out.withColumn("keep", keep)

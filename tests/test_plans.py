@@ -584,6 +584,61 @@ def test_plan_contract_apply_robots_zero_url_shuffle(spark):
         assert not re.search(pat, plan), f"found forbidden /{pat}/"
 
 
+def test_plan_contract_perceptual_neardup_no_cartesian(spark):
+    """The banded perceptual-hash self-join (images AND the video
+    frame variant) must stay an equi-join on (band_idx, band_hash) —
+    no CartesianProduct / BroadcastNestedLoopJoin, and the Hamming
+    verify must be codegen bit_count, not a Python stage."""
+    from melodist_spark.pipeline.multimodal import (
+        dhash_neardup_pairs,
+        video_neardup_pairs,
+    )
+
+    hashes = spark.createDataFrame(
+        [(1, 7), (2, 8)], "media_id long, dhash long"
+    )
+    plan = _plan(dhash_neardup_pairs(hashes))
+    assert re.search(r"bit_count", plan)
+    frame_hashes = spark.createDataFrame(
+        [(1, 0, 7), (2, 0, 8)], "media_id long, frame_idx long, phash long"
+    )
+    vplan = _plan(video_neardup_pairs(frame_hashes))
+    for p in (plan, vplan):
+        for pat in (r"CartesianProduct", r"BroadcastNestedLoopJoin",
+                    r"BatchEvalPython", r"ArrowEvalPython"):
+            assert not re.search(pat, p), f"found forbidden /{pat}/"
+
+
+def test_plan_contract_embedding_increment(spark):
+    """The incremental embedding near-dup (outside the registry, so
+    the global invariants never see it) must stay: bucket UDF as
+    ArrowEvalPython (never BatchEvalPython), candidates from keyed
+    joins only (no CartesianProduct / BroadcastNestedLoopJoin), and
+    the survivor filter a LeftAnti join."""
+    from melodist_spark.pipeline.similarity import (
+        embedding_index,
+        embedding_neardup_against,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, [0.5] * 8), (2, [0.25] * 8)], "vec_id long, embedding array<double>"
+    )
+    batch = spark.createDataFrame(
+        [(10, [0.5] * 8)], "vec_id long, embedding array<double>"
+    )
+    idx = embedding_index(corpus, dim=8, num_planes=4, num_tables=3)
+    plan = _plan(
+        embedding_neardup_against(
+            batch, idx, dim=8, num_planes=4, num_tables=3
+        )
+    )
+    assert re.search(r"ArrowEvalPython", plan)
+    assert re.search(r"LeftAnti", plan)
+    for pat in (r"CartesianProduct", r"BroadcastNestedLoopJoin",
+                r"BatchEvalPython"):
+        assert not re.search(pat, plan), f"found forbidden /{pat}/"
+
+
 def test_plan_contract_gopher_repetition_pure_map(spark):
     """gopher_repetition is a per-document metric: its plan must be
     scan + one Arrow-batched eval — NO Exchange (the relational

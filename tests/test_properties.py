@@ -94,6 +94,42 @@ def test_cascade_stats_always_valid(x, pct):
     assert np.allclose(wsum[valid], 1.0, atol=1e-9)
 
 
+@given(
+    h=st.integers(1, 24),
+    w=st.integers(1, 24),
+    gray=st.booleans(),
+    seed=st.integers(0, 2**31 - 1),
+)
+@settings(max_examples=40, deadline=None)
+def test_ppm_roundtrip_property(h, w, gray, seed):
+    """encode→decode is the identity for any image shape."""
+    from melodist_spark.pipeline.multimodal import decode_ppm, encode_ppm
+
+    rng = np.random.default_rng(seed)
+    shape = (h, w) if gray else (h, w, 3)
+    img = rng.integers(0, 256, size=shape, dtype=np.uint8)
+    np.testing.assert_array_equal(decode_ppm(encode_ppm(img)), img)
+
+
+@given(
+    out_h=st.integers(1, 16),
+    out_w=st.integers(1, 16),
+    h=st.integers(1, 32),
+    w=st.integers(1, 32),
+)
+@settings(max_examples=40, deadline=None)
+def test_resize_nearest_property(out_h, out_w, h, w):
+    """Any resize: output shape exact, every pixel comes from the
+    source, and identity resize is a no-op."""
+    from melodist_spark.pipeline.multimodal import resize_nearest
+
+    img = np.arange(h * w, dtype=np.int64).reshape(h, w)
+    out = resize_nearest(img, out_h, out_w)
+    assert out.shape == (out_h, out_w)
+    assert np.isin(out, img).all()
+    np.testing.assert_array_equal(resize_nearest(img, h, w), img)
+
+
 def test_decontaminate_verbatim_inclusion_property(spark):
     """Deterministic small-case sweep (batched into one job): any doc
     containing a verbatim >=n-token window of a benchmark doc must be
@@ -191,6 +227,39 @@ def test_pack_sequences_token_conservation(spark):
         assert (srt["begin_offset"].to_numpy()[1:] == ends[:-1]).all()
 
 
+def test_chunk_documents_never_redundant(spark):
+    """For a grid of (n_tokens, max_tokens, overlap): every chunk after
+    the first contributes at least one new token, all tokens are
+    covered, and concatenating the step-prefixes reconstructs the
+    document."""
+    from melodist_spark.pipeline.packing import chunk_tokens
+
+    cases = []
+    did = 0
+    for n in (1, 2, 5, 8, 10, 11, 24, 25, 40):
+        cases.append((did, " ".join(f"t{i}" for i in range(n)), n))
+        did += 1
+    df = spark.createDataFrame(
+        [(d, t) for d, t, _ in cases], "doc_id long, text string"
+    )
+    for max_tokens, overlap in ((10, 0), (10, 3), (10, 9), (7, 2)):
+        step = max_tokens - overlap
+        out = chunk_tokens(df, max_tokens=max_tokens, overlap=overlap).toPandas()
+        for did, text, n in cases:
+            d = out[out.doc_id == did].sort_values("chunk_id")
+            toks = text.split()
+            # coverage: last chunk reaches the last token
+            last_start = int(d.chunk_id.max()) * step
+            assert last_start + int(d.chunk_tokens.iloc[-1]) == n
+            # no redundant chunks: every start beyond 0 adds new tokens
+            for cid in d.chunk_id:
+                assert cid == 0 or cid * step < n - overlap
+            # chunk contents are the expected token windows
+            for _, r in d.iterrows():
+                s = int(r.chunk_id) * step
+                assert r.chunk_text == " ".join(toks[s:s + max_tokens])
+
+
 def test_lm_broadcast_tokenizer_parity_property(spark):
     """Adversarial whitespace corpus, batched into one job: the
     Arrow-kernel tokenizer must agree with the JVM split on every
@@ -253,6 +322,118 @@ def test_bpe_roundtrip_property(spark):
             assert rebuilt == norm, (n_merges, r["doc_id"])
 
 
+@settings(max_examples=120, deadline=None, derandomize=True)
+@given(data=st.binary(min_size=0, max_size=400), seed=st.integers(0, 2**32 - 1))
+def test_codec_fuzz_never_crashes(data, seed):
+    """Poison-blob contract for every pure-python codec: arbitrary
+    bytes — including byte strings that START with a valid magic —
+    must either raise ValueError (the resize/feature paths catch
+    exactly that) or return a well-formed array. Anything else
+    (IndexError, OverflowError, segfault-shaped numpy errors, hangs)
+    would kill a 100 TB media pass on one corrupt payload."""
+    import numpy as np
+
+    from melodist_spark.pipeline.flac import decode_flac
+    from melodist_spark.pipeline.jpeg import decode_jpeg
+    from melodist_spark.pipeline.multimodal import (
+        _PNG_SIG,
+        decode_bmp,
+        decode_gif,
+        decode_png,
+        decode_ppm,
+        decode_wav,
+    )
+
+    rng = np.random.default_rng(seed)
+    magics = [
+        b"", b"P6", b"P5", b"BM", _PNG_SIG, b"\xff\xd8",
+        b"RIFF" + bytes(4) + b"WAVE", b"GIF89a", b"fLaC",
+    ]
+    payload = magics[seed % len(magics)] + data
+    for dec in (decode_ppm, decode_bmp, decode_png, decode_jpeg, decode_gif):
+        try:
+            out = dec(payload)
+            assert isinstance(out, np.ndarray)
+        except ValueError:
+            pass
+        except Exception as e:  # normalize what the kernels catch
+            raise AssertionError(
+                f"{dec.__name__} leaked {type(e).__name__}: {e}"
+            ) from e
+    for adec in (decode_wav, decode_flac):
+        try:
+            out = adec(payload)
+            assert isinstance(out[0], np.ndarray)
+        except ValueError:
+            pass
+        except Exception as e:
+            raise AssertionError(
+                f"{adec.__name__} leaked {type(e).__name__}: {e}"
+            ) from e
+
+
+@settings(max_examples=40, deadline=None, derandomize=True)
+@given(seed=st.integers(0, 2**32 - 1), flip=st.integers(0, 10**9))
+def test_codec_fuzz_bitflips_on_valid_streams(seed, flip):
+    """Single byte corruptions of VALID PNG/JPEG streams (past the
+    magic) must also resolve to ValueError or an array — corrupt
+    Huffman/zlib streams are the realistic poison case."""
+    import numpy as np
+
+    from melodist_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
+    from melodist_spark.pipeline.multimodal import decode_png, encode_png
+
+    rng = np.random.default_rng(seed)
+    img = rng.integers(0, 256, size=(9, 7, 3), dtype=np.uint8)
+    for enc, dec in ((encode_png, decode_png), (lambda a: encode_jpeg(a, quality=70), decode_jpeg)):
+        raw = bytearray(enc(img))
+        pos = 8 + flip % max(len(raw) - 9, 1)
+        raw[pos] ^= 1 + (flip % 255)
+        try:
+            out = dec(bytes(raw))
+            assert isinstance(out, np.ndarray)
+        except ValueError:
+            pass
+        except Exception as e:
+            raise AssertionError(
+                f"{dec.__name__} leaked {type(e).__name__} on bitflip: {e}"
+            ) from e
+
+
+@settings(max_examples=25, deadline=None, derandomize=True)
+@given(
+    h=st.integers(1, 12),
+    w=st.integers(1, 12),
+    k=st.integers(1, 6),
+    levels=st.integers(2, 6),
+    seed=st.integers(0, 2**31 - 1),
+)
+def test_gif_animation_roundtrip_property(h, w, k, levels, seed):
+    """encode_gif_frames ∘ decode_gif_frames is the identity for
+    full-canvas disposal-1 animations (each frame fully covers the
+    canvas, so every composited canvas equals its input frame), with
+    delays preserved — pins the animation walk against the encoder
+    the same way the single-frame round trip pins decode_gif."""
+    import numpy as np
+
+    from melodist_spark.pipeline.multimodal import (
+        decode_gif_frames,
+        encode_gif_frames,
+    )
+
+    rng = np.random.default_rng(seed)
+    frames = [
+        rng.integers(0, levels, size=(h, w, 3), dtype=np.uint8) * (255 // levels)
+        for _ in range(k)
+    ]
+    delays = [int(d) for d in rng.integers(0, 1000, size=k)]
+    got = decode_gif_frames(encode_gif_frames(frames, delays_cs=delays))
+    assert [g[0] for g in got] == list(range(k))
+    assert [g[1] for g in got] == delays
+    for (_, _, canvas), f in zip(got, frames):
+        assert (canvas == f).all()
+
+
 def test_normalize_url_idempotent_and_total(spark):
     """Canonicalization must be IDEMPOTENT (a canonical form that
     changes on re-canonicalization isn't canonical — and incremental
@@ -297,6 +478,34 @@ def test_normalize_url_idempotent_and_total(spark):
         assert r["n2"] == r["n1"], (
             f"not idempotent: {r['url']!r} -> {r['n1']!r} -> {r['n2']!r}"
         )
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    h=st.integers(min_value=9, max_value=24),
+    w=st.integers(min_value=9, max_value=24),
+    seed=st.integers(min_value=0, max_value=10**6),
+)
+def test_dhash_container_invariance_property(h, w, seed):
+    """dHash depends on pixels, not bytes: the same image through the
+    PNG and PPM encoders (entirely different byte streams) must hash
+    identically, for arbitrary sizes down past the 9x8 sample grid."""
+    from melodist_spark.pipeline.multimodal import (
+        dhash64,
+        encode_png,
+        encode_ppm,
+    )
+
+    img = np.random.default_rng(seed).integers(
+        0, 256, size=(h, w, 3), dtype=np.uint8
+    )
+    hp = dhash64(encode_png(img))
+    assert hp is not None
+    assert hp == dhash64(encode_ppm(img))
 
 
 @settings(max_examples=200, deadline=None, derandomize=True)

@@ -4,7 +4,8 @@ text.html_to_text) — crawl-side primitives beyond the reference.
 The web_curation registry row hash-checks the full derivation against
 a DuckDB replay; these tests pin the individual operators' semantics
 on hand-crafted edge cases (userinfo, default/explicit ports,
-multi-part TLDs, IPv4 hosts, scheme-less rows, nested/cased markup).
+multi-part TLDs, IPv4 hosts, scheme-less rows, nested/cased markup)
+and the skew-safe salted cap's equivalence to the exact one.
 """
 
 from __future__ import annotations
@@ -15,7 +16,9 @@ from pyspark.sql import functions as F
 
 from melodist_spark.pipeline.text import html_to_text
 from melodist_spark.pipeline.urls import (
+    cap_per_domain,
     domain_rank,
+    filter_url_blocklist,
     normalize_url,
     registered_domain,
     url_host,
@@ -143,12 +146,70 @@ def _domains_df(spark, n=400):
     )
 
 
+def test_cap_per_domain_exact_and_salted_agree(spark):
+    df = _domains_df(spark)
+    exact = cap_per_domain(df, 7, "domain", "url")
+    salted = cap_per_domain(df, 7, "domain", "url", salt=8)
+    a = sorted((r["domain"], r["id"], r["domain_rank"])
+               for r in exact.collect())
+    b = sorted((r["domain"], r["id"], r["domain_rank"])
+               for r in salted.collect())
+    assert a == b
+    # every domain capped at 7, ranks are 1..7
+    per = {}
+    for d, _, rk in a:
+        per.setdefault(d, []).append(rk)
+    assert set(per) == {"mega.com", "mid.org", "small.net", "tiny.io"}
+    for d, ranks in per.items():
+        assert sorted(ranks) == list(range(1, min(7, len(ranks)) + 1))
+
+
 def test_domain_rank_is_md5_deterministic(spark):
     df = _domains_df(spark, n=50)
     r1 = {r["id"]: r["domain_rank"] for r in domain_rank(df).collect()}
     r2 = {r["id"]: r["domain_rank"]
           for r in domain_rank(df.repartition(7)).collect()}
     assert r1 == r2  # rank never depends on physical layout
+
+
+def test_filter_url_blocklist(spark):
+    pdf = pd.DataFrame({
+        "host": [
+            "ads.example.com", "example.com", "sub.deep.spam.net",
+            "spam.net", "notspam.net", "fine.org",
+        ]
+    })
+    kept = filter_url_blocklist(
+        spark.createDataFrame(pdf), ["example.com", "spam.net"]
+    )
+    assert sorted(r["host"] for r in kept.collect()) == [
+        "fine.org", "notspam.net",
+    ]
+
+
+def test_redact_pii_spans(spark):
+    """Emails are redacted before phones (digits inside an email must
+    not be half-eaten), IPv4 quads get their own token, and clean
+    prose passes through byte-identical."""
+    from melodist_spark.pipeline.text import redact_pii
+
+    pdf = pd.DataFrame({
+        "i": [0, 1, 2],
+        "text": [
+            "mail bob12345678@ex.com or call +1 (555) 123-4567 now",
+            "server at 10.0.0.1 and 192.168.1.100:8080",
+            "no pii in this sentence at all",
+        ],
+    })
+    got = (
+        spark.createDataFrame(pdf)
+        .select("i", redact_pii(F.col("text")).alias("t"))
+        .orderBy("i")
+        .collect()
+    )
+    assert got[0]["t"] == "mail <EMAIL> or call <PHONE> now"
+    assert got[1]["t"] == "server at <IP> and <IP>:8080"
+    assert got[2]["t"] == "no pii in this sentence at all"
 
 
 def test_paragraph_dedup_via_sep_params(spark):
@@ -181,11 +242,32 @@ def test_paragraph_dedup_via_sep_params(spark):
     assert out[2] == "another unique para"
 
 
+def test_surt_urlkey(spark):
+    """SURT sort keys match the CDX urlkey convention: reversed
+    comma-joined host, non-default port kept, lowercased path, sorted
+    query, www/fragment/default-port dropped; scheme-less rows
+    degrade like normalize_url."""
+    from melodist_spark.pipeline.urls import surt
+
+    cases = [
+        ("https://www.Example.com/Path/x?b=2&a=1#f", "com,example)/path/x?a=1&b=2"),
+        ("http://sub.test.co.uk:8080/", "uk,co,test,sub:8080)/"),
+        ("https://example.com:443/a", "com,example)/a"),
+        ("https://example.com", "com,example)/"),
+        ("no-scheme-here", "no-scheme-here"),
+    ]
+    df = spark.createDataFrame([(u,) for u, _ in cases], ["u"])
+    got = [r[0] for r in df.select(surt(F.col("u"))).collect()]
+    assert got == [k for _, k in cases], got
+
+
 def test_surt_and_normalize_never_raise(spark):
-    """normalize_url() is a total function over junk input
+    """surt() and normalize_url() are total functions over junk input
     (hypothesis): no exception for any printable string — malformed
     crawl rows must degrade, not kill a task."""
     from hypothesis import given, settings, strategies as st
+
+    from melodist_spark.pipeline.urls import normalize_url, surt
 
     collected = []
 
@@ -196,7 +278,7 @@ def test_surt_and_normalize_never_raise(spark):
 
     case()
     df = spark.createDataFrame([(s,) for s in set(collected) if s is not None] or [("x",)], ["u"])
-    out = df.select(normalize_url(F.col("u")).alias("n")).collect()
+    out = df.select(surt(F.col("u")).alias("k"), normalize_url(F.col("u")).alias("n")).collect()
     assert len(out) >= 1  # the job completing IS the assertion
 
 

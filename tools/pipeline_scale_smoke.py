@@ -1,7 +1,7 @@
 """Scale smoke for the training-data pipeline: N synthetic documents
 (with planted duplicate groups and near-duplicates) generated
 DISTRIBUTED, then the curation chain end-to-end — quality flags,
-cleaning, MinHash LSH candidates, connected-component
+cleaning, exact dedup, MinHash LSH candidates, connected-component
 clusters, stratified sample, vocabulary. Validates the shapes the
 100 TB story depends on: narrow feature scans, map-side-combined gram
 aggregates, equi-join (not quadratic) candidate generation, and
@@ -93,6 +93,7 @@ def main():
 
     from melodist_spark.pipeline.dedup import (
         duplicate_clusters,
+        exact_duplicates,
         lsh_bands,
         lsh_candidate_pairs,
         minhash_signature,
@@ -144,6 +145,10 @@ def main():
     t2 = time.perf_counter()
     print(f"clean_text: {t2 - t1b:.1f}s")
 
+    n_exact = exact_duplicates(docs).count()
+    t3 = time.perf_counter()
+    print(f"exact_duplicates: {t3 - t2:.1f}s ({n_exact} dup groups)")
+
     bands = lsh_bands(
         minhash_signature(docs, num_hashes=16, shingle=3),
         num_hashes=16,
@@ -157,7 +162,7 @@ def main():
     pairs = lsh_candidate_pairs(bands).persist(StorageLevel.MEMORY_AND_DISK)
     n_pairs = pairs.count()
     t4 = time.perf_counter()
-    print(f"minhash LSH candidates: {t4 - t2:.1f}s ({n_pairs} pairs)")
+    print(f"minhash LSH candidates: {t4 - t3:.1f}s ({n_pairs} pairs)")
 
     clusters = duplicate_clusters(pairs)
     n_clustered = clusters.count()
