@@ -7,7 +7,9 @@ on src) + one map-side-combinable aggregation on dst. The iteration
 count is FIXED (power iteration converges geometrically at rate
 ``damping``; 10-20 iterations is the industry default), which keeps
 the operator deterministic — given the edge set, every rank is a
-pure function DuckDB can replay by unrolling the iterations, so
+pure function DuckDB can replay by unrolling the iterations, up to
+float round-off (double sums add their terms in whatever order the
+plan groups them; the registry row rounds ranks to 6 decimals), so
 PageRank can sit under a value oracle unlike tolerance-terminated
 variants.
 
@@ -99,7 +101,12 @@ def pagerank(
     executor loss before the last cut replays at most
     ``checkpoint_every`` iterations from durable state. The last
     ``n_iter % checkpoint_every`` iterations are never cut: they are
-    always recomputed from the last cut.
+    always recomputed from the last cut. Reliable and local cuts agree
+    to float round-off, not bit for bit: a parquet cut carries size
+    statistics and is broadcast at once, a local cut is hash-exchanged
+    first, so the double sums may group their terms differently. A
+    resume within reliable mode is bit-identical to the uninterrupted
+    reliable run (test_graph pins that by exact equality).
 
     ``driver_below`` > 0 enables the small-graph fast path: when the
     node count is at or below it, edges are collected and the SAME
