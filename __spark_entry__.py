@@ -3973,13 +3973,11 @@ def q_cascade_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(wxx_m1, 6).alias("wxx_m1"),
         )
 
-    # ~67 hourly rows/station at this SF → tiny-group regime, bucket
-    # to amortize per-group Arrow costs (results are bucket-invariant)
-    per_level = build_casc(m, avg_stats=False, keys=["user_id"], station_buckets=64)
+    per_level = build_casc(m, avg_stats=False, keys=["user_id"])
     # the avg_stats=True row (level = -1) anchors the count-weighted
     # level averaging (_weighted_stats / reference __add__+__mul__,
     # cascade.py:111-122) against the oracle's weighted-sum CTE
-    averaged = build_casc(m, avg_stats=True, keys=["user_id"], station_buckets=64)
+    averaged = build_casc(m, avg_stats=True, keys=["user_id"])
     return proj(per_level).unionByName(proj(averaged))
 
 

@@ -10,7 +10,7 @@ one-station case.
 Design principles (see SURVEY.md §7):
 - declarative DataFrame plans; Catalyst handles pushdown/pruning/joins
 - parameter tables are tiny → always broadcast-joined
-- Python only inside `applyInPandas` kernels (cascade, Bristow-Campbell fit)
+- Python only inside `applyInPandas` kernels (cascade disaggregation, spline fill)
 - deterministic, seedable randomness (the reference is unseeded)
 """
 

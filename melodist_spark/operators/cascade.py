@@ -4,14 +4,16 @@ Reference: `cascade.py` (statistics container), `precipitation.py:74-372`
 (disaggregation), `precipitation.py:416-604` (calibration),
 `precipitation.py:631-702` (build_casc).
 
-Spark mapping (SURVEY.md §2.8): both directions run as grouped-map
-pandas UDFs partitioned by station — a station-season of hourly data is
-~10^4 rows, far below a task's memory, and stations are embarrassingly
-parallel. Inside the kernel the reference's per-box Python loops are
-replaced by numpy vectorization over whole levels (every box of a level
-branches simultaneously with pre-drawn random arrays). Randomness is
-seeded per station (crc32 of the id XOR a user seed) — the reference
-uses an unseeded global RNG; we define reproducible behavior.
+Spark mapping (SURVEY.md §2.8): calibration is windows and
+aggregations over each station-season's numbered steps, in the JVM
+(:func:`build_casc`). Disaggregation is a grouped-map pandas UDF
+partitioned by station — a station's daily series is far below a
+task's memory, and stations are embarrassingly parallel. Inside the
+kernel the reference's per-box Python loops are replaced by numpy
+vectorization over whole levels (every box of a level branches
+simultaneously with pre-drawn random arrays). Randomness is seeded per
+station (crc32 of the id XOR a user seed) — the reference uses an
+unseeded global RNG; we define reproducible behavior.
 """
 
 from __future__ import annotations
@@ -158,130 +160,157 @@ def _box_types(x: np.ndarray) -> np.ndarray:
     return bt
 
 
-def aggregate_precipitation_values(
-    x: np.ndarray, percentile: float = 50
-) -> tuple[CascadeStatistics, np.ndarray]:
-    """One dyadic aggregation step with branching statistics.
-
-    Vectorized equivalent of `precipitation.py:416-604`: pair adjacent
-    steps, classify the upper-level boxes, count branch types and the
-    left-weight histogram, normalize to probabilities, and fall back to
-    sample statistics when the series is too short.
-    Returns (stats, paired_values).
-    """
-    stats = CascadeStatistics()
-    stats.percentile = percentile
-
-    n = len(x) // 2
-    r1 = x[0 : 2 * n : 2].astype(float)
-    r2 = x[1 : 2 * n : 2].astype(float)
-    v = r1 + r2
-
-    wet = v > 0
-    if not wet.any():
-        stats.fill_with_sample_data()
-        stats.threshold = np.array([0.0])
-        return stats, v
-
-    meanvol = np.percentile(v[wet], percentile)
-    stats.threshold = np.array([meanvol])
-
-    bt = _box_types(v)
-    ba = (v > meanvol).astype(np.int64)
-    cell = ba * 4 + (bt - 1)  # flat (intensity, boxtype) cell, wet only
-
-    nb = np.bincount(cell[wet], minlength=8).astype(float).reshape(2, 4)
-
-    m01 = wet & (r1 == 0) & (r2 > 0)
-    m10 = wet & (r1 > 0) & (r2 == 0)
-    mxx = wet & (r1 > 0) & (r2 > 0)
-
-    c01 = np.bincount(cell[m01], minlength=8).astype(float).reshape(2, 4)
-    c10 = np.bincount(cell[m10], minlength=8).astype(float).reshape(2, 4)
-    cxx = np.bincount(cell[mxx], minlength=8).astype(float).reshape(2, 4)
-
-    w = r1[mxx] / (r1[mxx] + r2[mxx])
-    # bins are (wlower, wupper] (`precipitation.py:549-551`)
-    k = np.searchsorted(WUPPER, w, side="left")
-    k = np.clip(k, 0, 6)
-    wxx_counts = np.zeros((7, 8))
-    np.add.at(wxx_counts, (k, cell[mxx]), 1.0)
-    wxx_counts = wxx_counts.reshape(7, 2, 4)
-
-    with np.errstate(divide="ignore", invalid="ignore"):
-        stats.p01 = c01 / nb
-        stats.p10 = c10 / nb
-        stats.pxx = cxx / nb
-        stats.wxx = wxx_counts / cxx[None, :, :]
-
-    if (
-        np.isnan(stats.p01).any()
-        or np.isnan(stats.p10).any()
-        or np.isnan(stats.pxx).any()
-    ):
-        # too-sparse series → published sample statistics
-        # (`precipitation.py:566-579`)
-        thr = stats.threshold
-        stats.fill_with_sample_data()
-        stats.threshold = thr
-    elif np.isnan(stats.wxx).any():
-        # undefined weight bins → uniform 1/7 (`precipitation.py:584-602`)
-        stats.wxx = np.where(np.isnan(stats.wxx), 1.0 / 7.0, stats.wxx)
-
-    return stats, v
+# ---------------------------------------------------------------------------
+# Calibration
+# ---------------------------------------------------------------------------
 
 
-def _weighted_stats(stats_list, counts) -> CascadeStatistics:
-    """Level-weighted average (`precipitation.py:678-688`)."""
-    out = CascadeStatistics()
-    total = float(sum(counts))
-    out.p01 = sum(s.p01 * c for s, c in zip(stats_list, counts)) / total
-    out.p10 = sum(s.p10 * c for s, c in zip(stats_list, counts)) / total
-    out.pxx = sum(s.pxx * c for s, c in zip(stats_list, counts)) / total
-    out.wxx = sum(s.wxx * c for s, c in zip(stats_list, counts)) / total
-    return out
+def _level_row(lv: str, sample: CascadeStatistics) -> str:
+    """SQL struct of one level's statistics (`precipitation.py:536-602`)
+    from ``lv`` = (l, cells: its sorted wet-cell counts, n0: the step
+    count): ratios when all 8 cells hold a wet box, else the sample
+    data; weight 1/7 for an x/x cell without boxes; threshold 0 without
+    a wet box."""
+    cells = f"{lv}.cells"
+    stats = {n: f"transform({cells}, c -> c.{c} / c.nb)" for n, c in
+             (("p01", "c01"), ("p10", "c10"), ("pxx", "cxx"))}
+    stats["wxx"] = (f"flatten(transform(sequence(0, 6), k -> transform({cells}, "
+                    f"c -> IF(c.cxx > 0, c.wc[k] / c.cxx, {1 / 7!r}D))))")
+    return (
+        f"named_struct('level', {lv}.l, 'cnt', shiftright({lv}.n0, {lv}.l + 1), "
+        f"'thr', coalesce(try_element_at({cells}, 1).thr, 0D), " + ", ".join(
+            f"'{n}', IF(size({cells}) = 8, {e}, array("
+            + ", ".join(f"{v!r}D" for v in getattr(sample, n).ravel()) + "))"
+            for n, e in stats.items()
+        ) + ")"
+    )
 
 
-def build_casc_values(
-    x: np.ndarray,
+def build_casc(
+    hourly_df: DataFrame,
+    months: list[list[int]] | None = None,
+    avg_stats: bool = True,
+    percentile: float = 50,
     hourly: bool = True,
     level: int = 9,
-    percentile: float = 50,
-) -> tuple[CascadeStatistics, list[CascadeStatistics]]:
-    """Run the full calibration for one station-season value series.
+    keys: list[str] = ("station_id",),
+    ts_col: str = "ts",
+    precip_col: str = "precip",
+) -> DataFrame:
+    """Distributed cascade calibration (`precipitation.py:416-702`) in
+    the partitions of one shuffle. Each station-season's steps (null and
+    NaN count as dry; a gap needs a null row, see
+    ``StationStatistics.calc_precipitation_stats``) are numbered by
+    time. Box ``j`` of level ``l`` sits on step ``j·2^(l+1)`` and adds
+    the level ``l - 1`` box there to the one ``2^l`` steps on
+    (``lead``): the reference's two-term sums, and no box without a
+    partner, as numpy's ``len(x) // 2``. ``lag``/``lead`` by one box
+    give the box types, an exact ``percentile`` of the wet boxes the
+    threshold, one aggregation the branch counts and (wlower, wupper]
+    weight bins. 5 levels when ``hourly``, else ``level``.
 
-    Returns (averaged_stats, per_level_stats) — the reference's
-    ``avg_stats`` flag simply chooses which of the two to use
-    (`precipitation.py:631-702`).
+    Rows hold the :meth:`CascadeStatistics.to_row` arrays, one per
+    level, or with ``avg_stats`` one with ``level = -1``: the levels
+    weighted by box count, summed in level order
+    (`precipitation.py:678-688`). They feed :func:`disagg_prec_cascade`.
     """
-    aggre_level = 5 if hourly else level
-    x = np.nan_to_num(np.asarray(x, dtype=float), nan=0.0)
+    part = [f"`{c}`" for c in (*keys, "season")]
+    over = f"OVER (PARTITION BY {', '.join(part)} ORDER BY"
+    ordered = f"{over} __rn)"
+    # whole-partition frames share the ordered windows' passes
+    whole = "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
+    months = months or [list(range(1, 13))]
+    seasons = ", ".join(
+        f"{m}, array({', '.join(str(i) for i, ms in enumerate(months) if m in ms)})"
+        for m in sorted({m for ms in months for m in ms})
+    )
+    steps = hourly_df.selectExpr(
+        *part[:-1], f"`{ts_col}`",
+        f"explode(map({seasons})[month(`{ts_col}`)]) AS season",
+        f"nanvl(coalesce(double(`{precip_col}`), 0D), 0D) AS __v",
+    ).selectExpr(
+        *part, "__v",
+        f"row_number() {over} `{ts_col}`) - 1 AS __rn",
+        f"count(*) {over} `{ts_col}` {whole} AS __n0",
+    )
+    # level -1 anchors a station-season without any wet box
+    boxes, below = ["named_struct('level', -1, 'r1', 0D, 'r2', 0D, 'v', 0D, "
+                    "'prev', false, 'next', false, 'thr', 0D)"], "__v"
+    for lvl in range(5 if hourly else level):
+        half, v = 1 << lvl, f"__v_{lvl}"
+        r2 = f"lead({below}, {half}) {ordered}"
+        steps = steps.selectExpr(
+            "*", f"{r2} AS __r2_{lvl}", f"IF(__rn % {2 * half} = 0, {below} + {r2}, NULL) AS {v}"
+        )
+        boxes.append(
+            f"named_struct('level', {lvl}, 'r1', {below}, 'r2', __r2_{lvl}, 'v', {v}, "
+            f"'prev', coalesce(lag({v}, {2 * half}) {ordered} > 0, false), "
+            f"'next', coalesce(lead({v}, {2 * half}) {ordered} > 0, false), "
+            f"'thr', percentile(IF({v} > 0, {v}, NULL), {percentile / 100.0!r}) {over} __rn {whole})"
+        )
+        below = v
+    wclass = " + ".join(f"int(try_divide(b.r1, b.v) > {u!r}D)" for u in WUPPER[:-1])
+    xx = "b.r1 > 0 AND b.r2 > 0"
+    bt = BoxTypes
+    cell = (f"IF(b.v > b.thr, 4, 0) - 1 + CASE WHEN b.prev AND b.next THEN {bt.enclosed} "
+            f"WHEN b.next THEN {bt.starting} WHEN b.prev THEN {bt.ending} ELSE {bt.isolated} END")
+    counts = ["count_if(b.r1 = 0 AND b.r2 > 0) AS c01", "count_if(b.r1 > 0 AND b.r2 = 0) AS c10",
+              f"count_if({xx}) AS cxx", "count(*) AS nb", "array("
+              + ", ".join(f"count_if({xx} AND {wclass} = {k})" for k in range(7)) + ") AS wc"]
+    sample = CascadeStatistics()
+    sample.fill_with_sample_data()
+    levels = (
+        steps.selectExpr(*part, "__n0", "__rn", f"array({', '.join(boxes)}) AS __b")
+        .filter("__rn % 2 = 0")
+        .selectExpr(*part, "__n0", "__rn", "explode(__b) AS b")
+        .filter("b.v > 0 OR (b.level = -1 AND __rn = 0)")
+        .groupBy(*part, "__n0", F.expr("b.level AS level"), F.expr("b.thr AS thr"), F.expr(f"{cell} AS cell"))
+        .agg(*map(F.expr, counts))
+        .groupBy(*part, "__n0")
+        .agg(F.expr("sort_array(collect_list(struct(level, cell, thr, nb, c01, c10, cxx, wc))) AS __cs"))
+        .selectExpr(*part, f"transform(sequence(0, {len(boxes) - 2}), l -> named_struct("
+                    "'l', l, 'n0', __n0, 'cells', filter(__cs, c -> c.level = l))) AS __lv")
+        .selectExpr(*part, f"transform(__lv, x -> {_level_row('x', sample)}) AS __lv")
+    )
+    pct = f"{float(percentile)!r}D AS percentile"
+    if not avg_stats:
+        return levels.selectExpr(*part, "inline(__lv)").selectExpr(
+            *part, "level", "p01", "p10", "pxx", "wxx", "array(thr) AS threshold", pct
+        )
+    total = "double(aggregate(__lv, 0L, (t, s) -> t + s.cnt))"
 
-    per_level: list[CascadeStatistics] = []
-    counts: list[int] = []
-    thresholds = np.zeros(aggre_level)
-    v = x
-    for i in range(aggre_level):
-        stats_i, v = aggregate_precipitation_values(v, percentile)
-        thresholds[i] = stats_i.threshold[0]
-        per_level.append(stats_i)
-        counts.append(len(v))
+    def mean(n, k):
+        return (f"transform(aggregate(__lv, array_repeat(0D, {k}), (acc, s) -> zip_with(acc, s.{n}, "
+                f"(a, x) -> a + x * s.cnt)), a -> IF({total} > 0, a / {total}, double('NaN'))) AS {n}")
 
-    avg = _weighted_stats(per_level, counts)
-    avg.threshold = thresholds
-    avg.percentile = percentile
-    return avg, per_level
+    return levels.selectExpr(
+        *part, "-1 AS level", *[mean(n, k) for n, k in (("p01", 8), ("p10", 8), ("pxx", 8), ("wxx", 56))],
+        "transform(__lv, s -> s.thr) AS threshold", pct,
+    )
+
+
+def _stats_from_rows(rows) -> "CascadeStatistics | list[CascadeStatistics]":
+    """Rebuild CascadeStatistics from one station-season's build_casc
+    rows: the averaged statistics, or the per-level list."""
+    rows = sorted(rows, key=lambda r: r["level"])
+    if len(rows) == 1 and rows[0]["level"] == -1:
+        return CascadeStatistics.from_row(rows[0])
+    return [CascadeStatistics.from_row(r) for r in rows]
+
+
+def collect_cascade_stats(stats_df: DataFrame, key_col: str = "station_id") -> dict:
+    """Collect a ``build_casc`` result into
+    ``{(station_id, season): CascadeStatistics | [CascadeStatistics]}``
+    for inspection on the driver."""
+    by_key: dict = {}
+    for r in stats_df.collect():
+        by_key.setdefault((r[key_col], r["season"]), []).append(r)
+    return {k: _stats_from_rows(rows) for k, rows in by_key.items()}
 
 
 # ---------------------------------------------------------------------------
-# Spark-facing kernels
+# Disaggregation
 # ---------------------------------------------------------------------------
-
-_STATS_SCHEMA = (
-    ", season int, level int, p01 array<double>, p10 array<double>, "
-    "pxx array<double>, wxx array<double>, threshold array<double>, "
-    "percentile double"
-)
 
 
 def _station_slices(pdf: pd.DataFrame, keys: list[str], order: str):
@@ -324,93 +353,6 @@ def _grouped(df: DataFrame, keys: list[str], station_buckets: int):
             .groupBy("__bucket")
         )
     return df.groupBy(*keys)
-
-
-def build_casc(
-    hourly_df: DataFrame,
-    months: list[list[int]] | None = None,
-    avg_stats: bool = True,
-    percentile: float = 50,
-    hourly: bool = True,
-    level: int = 9,
-    keys: list[str] = ("station_id",),
-    ts_col: str = "ts",
-    precip_col: str = "precip",
-    station_buckets: int = 0,
-) -> DataFrame:
-    """Distributed cascade calibration.
-
-    One grouped-map kernel per season runs :func:`build_casc_values`
-    over each station's time-ordered series; ``station_buckets`` only
-    sets what it groups by (see :func:`_grouped`). Values are paired
-    by position, so the series must have a row (null for a gap) at
-    every step; ``StationStatistics.calc_precipitation_stats`` fills
-    absent hours before calling this. Seasons are month subsets as in
-    `precipitation.py:631-702`. Output rows carry the flattened
-    statistics arrays (:meth:`CascadeStatistics.to_row`); ``level =
-    -1`` marks the averaged statistics (``avg_stats=True``), otherwise
-    one row per level. The result DataFrame feeds
-    :func:`disagg_prec_cascade` directly (stats join, nothing on the
-    driver).
-    """
-    keys = list(keys)
-    if months is None:
-        months = [list(range(1, 13))]
-    schema = key_schema(hourly_df, keys) + _STATS_SCHEMA
-
-    def kernel(season_idx: int):
-        def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf, karrs, slices = _station_slices(pdf, keys, ts_col)
-            precip = pdf[precip_col].to_numpy()
-            rows = []
-            for s0, s1 in slices:
-                avg, per_level = build_casc_values(
-                    precip[s0:s1], hourly=hourly, level=level, percentile=percentile
-                )
-                keyvals = {k: a[s0] for k, a in zip(keys, karrs)}
-                entries = [(-1, avg)] if avg_stats else enumerate(per_level)
-                rows += [
-                    dict(keyvals, season=season_idx, level=lvl, **s.to_row())
-                    for lvl, s in entries
-                ]
-            return pd.DataFrame(rows)
-
-        return fit
-
-    out = None
-    for season_idx, season_months in enumerate(months):
-        sub = hourly_df.filter(F.month(ts_col).isin(list(season_months))).select(
-            *keys, ts_col, precip_col
-        )
-        part = _grouped(sub, keys, station_buckets).applyInPandas(
-            kernel(season_idx), schema=schema
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def _stats_from_rows(rows) -> "CascadeStatistics | list[CascadeStatistics]":
-    """Rebuild CascadeStatistics from one station-season's build_casc
-    rows: the averaged statistics, or the per-level list."""
-    rows = sorted(rows, key=lambda r: r["level"])
-    if len(rows) == 1 and rows[0]["level"] == -1:
-        return CascadeStatistics.from_row(rows[0])
-    return [CascadeStatistics.from_row(r) for r in rows]
-
-
-def collect_cascade_stats(stats_df: DataFrame, key_col: str = "station_id") -> dict:
-    """Collect a ``build_casc`` result into
-    ``{(station_id, season): CascadeStatistics | [CascadeStatistics]}``
-    for inspection on the driver."""
-    by_key: dict = {}
-    for r in stats_df.collect():
-        by_key.setdefault((r[key_col], r["season"]), []).append(r)
-    return {k: _stats_from_rows(rows) for k, rows in by_key.items()}
-
-
-# ---------------------------------------------------------------------------
-# Disaggregation
-# ---------------------------------------------------------------------------
 
 
 def _disagg_one_level(

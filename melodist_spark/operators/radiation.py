@@ -4,21 +4,21 @@ Reference: `radiation.py:32-344`. The hourly scaling
 ``glob = pot_rad / pot_rad_daily · glob_daily`` is a window average
 per (station, day) — no join against a separately aggregated daily
 frame. Angstroem is linear in (a, b) so its "curve fit" is a
-two-regressor OLS aggregation (`util/ols.py`); Bristow-Campbell's
-(A, C) fit is genuinely nonlinear → grouped-map pandas UDF per group.
+two-regressor OLS aggregation (`util/ols.py`). Bristow-Campbell's
+(A, C) fit is least squares on the zero-bias curve: A is closed-form
+for each C, and C comes from a refined grid, so the whole fit is
+grouped sums.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from melodist_spark.functions.solar import potential_radiation, sun_times_exprs
 from melodist_spark.util.calendar import hourly_calendar
-from melodist_spark.util.execution import key_schema, pin_partitions
 from melodist_spark.util.ols import normal_equations_fit
 
 METHODS = ("pot_rad", "pot_rad_via_ssd", "pot_rad_via_bc", "mean_course")
@@ -234,53 +234,64 @@ def fit_angstroem_params(
     return normal_equations_fit(d, list(keys), "obs_rad_daily", xs, ["a", "b"])
 
 
+#: C grid of the Bristow-Campbell fit: 64 log-spaced points around 1
+#: (0.047-19.2), then 64 points 32x finer around the best of those
+_BC_GRID, _BC_STEP, _BC_REFINE, _BC_ROUNDS = 64, math.log(1.1), 32, 2
+
+
 def fit_bristow_campbell_params(
     daily: DataFrame,
     keys: list[str] = ("station_id",),
     date_col: str = "date",
 ) -> DataFrame:
-    """Fit Bristow-Campbell (A, C) by minimizing |mean bias|.
+    """Fit Bristow-Campbell (A, C) by least squares at zero mean bias.
 
-    Non-convex scalar optimization (`radiation.py:251-280`) run per
-    group (a station, or a station's month range) over its daily rows in
-    a grouped-map pandas UDF (scipy.optimize.minimize when available,
-    else our Nelder-Mead — same |mean bias| objective). Input needs
-    tmin, tmax, pot_rad_daily, obs_rad_daily. Returns (keys..., a, c).
+    The reference minimizes |mean bias| (`radiation.py:251-280`), which
+    is 0 along a whole curve: for any C, ``A(C) = Σobs / Σ(pot·τ_C)``
+    with ``τ_C = 1 − exp(−B·dT^C)``. This fit returns the point of that
+    curve with the least ``Σ(A(C)·pot·τ_C − obs)²``, C from a grid
+    refined around its best point; each round is one grouped
+    aggregation of the days × grid cross product.
+
+    Input needs tmin, tmax, pot_rad_daily, obs_rad_daily. Rows with a
+    null or NaN input leave before dT pairs each day with the next
+    calendar day's tmin (:func:`_bc_daily_terms`); days with dT ≤ 0
+    leave the sums. A group with no day left, or with ``Σ(pot·τ_C) =
+    0`` for every C, gets null (a, c). Returns (keys..., a, c).
+
+    The rounds join by sort-merge in the partitions of the dT windows,
+    which hold each group's days in date order, so every sum adds the
+    same terms in the same order for any input partitioning.
     """
-    from melodist_spark.util.optimize import minimize2
-
     keys = list(keys)
-    schema = key_schema(daily, keys) + ", a double, c double"
-
-    prepared = (
-        daily.select(*keys, date_col, "tmin", "tmax", "pot_rad_daily", "obs_rad_daily")
-        .na.drop(subset=["tmin", "tmax", "pot_rad_daily", "obs_rad_daily"])
+    quoted = [f"`{k}`" for k in keys]
+    inputs = ["tmin", "tmax", "pot_rad_daily", "obs_rad_daily"]
+    days = _bc_daily_terms(
+        daily.select(*keys, date_col, *inputs).na.drop(subset=inputs), keys, date_col
+    ).selectExpr(
+        *quoted, "__dT", "__B", "IF(__dT > 0, pot_rad_daily, NULL) AS __pot",
+        "IF(__dT > 0, obs_rad_daily, NULL) AS __obs",
     )
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(date_col)
-        tmin = pdf["tmin"].to_numpy()
-        tmax = pdf["tmax"].to_numpy()
-        pot = pdf["pot_rad_daily"].to_numpy()
-        obs = pdf["obs_rad_daily"].to_numpy()
-        dates = pd.DatetimeIndex(pd.to_datetime(pdf[date_col]))
-
-        # the next calendar day's tmin, else the day's own (as _bc_daily_terms)
-        nxt_ok = np.diff(dates.to_numpy()) == np.timedelta64(1, "D")
-        tmin_next = np.append(np.where(nxt_ok, tmin[1:], tmin[:-1]), tmin[-1])
-        dT = tmax - (tmin + tmin_next) / 2.0
-        dT_m = pd.Series(dT).groupby(dates.month).mean()
-        B = 0.036 * np.exp(-0.154 * dT_m.loc[dates.month].to_numpy())
-
-        def absbias(ac):
-            with np.errstate(invalid="ignore", over="ignore"):
-                trans = ac[0] * (1 - np.exp(-B * dT ** ac[1]))
-                v = np.abs(np.mean(trans * pot - obs))
-            return v if np.isfinite(v) else 1e12
-
-        x = minimize2(absbias, [0.75, 2.4])
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        out.update(a=[float(x[0])], c=[float(x[1])])
-        return pd.DataFrame(out)
-
-    return pin_partitions(prepared, keys).groupBy(*keys).applyInPandas(fit, schema=schema)
+    c = f"__c0 * exp((__k - {_BC_GRID // 2}) * __step)"
+    pt = f"__pot * (1 - exp(-__B * pow(__dT, {c})))"
+    sums = [F.expr(f"sum({e}) AS {n}") for n, e in (
+        ("so", "__obs"), ("sp", pt), ("spp", f"pow({pt}, 2)"),
+        ("spo", f"{pt} * __obs"), ("soo", "pow(__obs, 2)"),
+    )]
+    a = "try_divide(so, sp)"
+    best = F.expr(
+        f"min_by(struct({c} AS c, {a} AS a), "
+        f"IF(sp <> 0, struct({a} * {a} * spp - 2 * {a} * spo + soo, __k), NULL)) AS __best"
+    )
+    fit = None
+    for _ in range(_BC_ROUNDS):
+        centre = days.selectExpr("*", "1D AS __c0", f"{_BC_STEP!r}D AS __step") if fit is None else (
+            days.join(fit.hint("merge"), keys)
+        )
+        fit = (
+            centre.selectExpr("*", f"explode(sequence(0, {_BC_GRID - 1})) AS __k")
+            .groupBy(*keys, "__c0", "__step", "__k").agg(*sums)
+            .groupBy(*keys, "__c0", "__step").agg(best)
+            .selectExpr(*quoted, "__best.a", "__best.c AS __c0", f"__step / {_BC_REFINE} AS __step")
+        )
+    return fit.selectExpr(*quoted, "a", "__c0 AS c")

@@ -11,11 +11,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from cascade_oracle import aggregate_precipitation_values, build_casc_values
 from melodist_spark.operators.cascade import (
     CascadeStatistics,
-    aggregate_precipitation_values,
     build_casc,
-    build_casc_values,
     collect_cascade_stats,
     disagg_prec_cascade,
 )
@@ -57,16 +56,106 @@ def test_build_casc_values_threshold_levels():
     assert np.allclose(avg.p01 + avg.p10 + avg.pxx, 1.0, atol=1e-9)
 
 
-def test_build_casc_spark_matches_kernel(spark, met_hourly, met_hourly_pd):
-    stats_df = build_casc(met_hourly, percentile=50)
-    d = collect_cascade_stats(stats_df)
-    got = d[("s1", 0)]
+def test_build_casc_spark_matches_kernel(spark, met_hourly_pd):
+    """Every (station, season, level) row of build_casc equals the numpy
+    oracle's statistics to 1e-12: each level and the count-weighted
+    level mean, hourly and 5-minute (level 9), one season and four;
+    with an all-dry station, a sparse one that takes the sample data,
+    and an odd-length series with gaps."""
+    steps = pd.date_range("2014-01-01", periods=24 * 40 + 7, freq="h")
+    i = np.arange(len(steps))
+    extra = [
+        pd.DataFrame(dict(station_id="dry", ts=steps, precip=0.0)),
+        pd.DataFrame(dict(station_id="sparse", ts=steps, precip=np.where(i % 97 == 0, 1.5, 0.0))),
+        pd.DataFrame(
+            dict(station_id="odd", ts=steps, precip=np.where(i % 3 == 0, i % 5 * 0.3, np.nan))
+        ),
+    ]
+    pdf = pd.concat([met_hourly_pd[["station_id", "ts", "precip"]], *extra], ignore_index=True)
+    df = spark.createDataFrame(pdf)
+    seasonal = [[3, 4, 5], [6, 7, 8], [9, 10, 11], [12, 1, 2]]
+    sample = CascadeStatistics()
+    sample.fill_with_sample_data()
+    for kw in (
+        dict(),
+        dict(avg_stats=False),
+        dict(hourly=False, level=9),
+        dict(hourly=False, level=9, avg_stats=False),
+        dict(months=seasonal),
+        dict(months=seasonal, avg_stats=False),
+    ):
+        got = {(r.station_id, r.season, r.level): r for r in build_casc(df, **kw).collect()}
+        n_sample = 0
+        for sid, g in pdf.groupby("station_id"):
+            g = g.sort_values("ts")
+            for season, months in enumerate(kw.get("months", [list(range(1, 13))])):
+                x = g[g.ts.dt.month.isin(months)]["precip"].to_numpy()
+                if not len(x):
+                    continue
+                avg, per_level = build_casc_values(
+                    x, hourly=kw.get("hourly", True), level=kw.get("level", 9)
+                )
+                exp = {-1: avg} if kw.get("avg_stats", True) else dict(enumerate(per_level))
+                for level, e in exp.items():
+                    r = got.pop((sid, season, level))
+                    for a in ("p01", "p10", "pxx", "wxx", "threshold"):
+                        np.testing.assert_allclose(
+                            np.array(r[a], dtype=float), np.ravel(getattr(e, a)),
+                            rtol=0, atol=1e-12, err_msg=f"{kw} {sid} {season} {level} {a}",
+                        )
+                    assert r.percentile == 50.0
+                    n_sample += sid in ("dry", "sparse") and np.allclose(e.p01, sample.p01)
+        assert not got, f"{kw}: rows without an oracle row {sorted(got)[:5]}"
+        assert n_sample > 0, kw  # the dry and sparse stations take the sample data
 
-    pdf = met_hourly_pd[met_hourly_pd.station_id == "s1"].sort_values("ts")
-    exp, _ = build_casc_values(pdf["precip"].to_numpy(), hourly=True)
-    np.testing.assert_allclose(got.p01, exp.p01, atol=1e-12)
-    np.testing.assert_allclose(got.wxx, exp.wxx, atol=1e-12)
-    np.testing.assert_allclose(got.threshold, exp.threshold, atol=1e-12)
+
+def test_calibration_does_not_depend_on_partitioning(spark, met_hourly_pd):
+    """build_casc and fit_bristow_campbell_params give the same rows
+    whether the input comes in 1, 5 or 64 partitions, with AQE on and
+    off (README, "Determinism at scale"): bit-equal, per level."""
+    from melodist_spark.operators.radiation import fit_bristow_campbell_params
+
+    hourly = spark.createDataFrame(
+        met_hourly_pd[met_hourly_pd.station_id.isin(["s1", "s2"])][["station_id", "ts", "precip"]]
+        .groupby("station_id").head(24 * 90)
+    )
+    rng = np.random.default_rng(3)
+    n = 150
+    days = pd.concat(
+        [
+            pd.DataFrame(
+                dict(
+                    station_id=sid,
+                    date=pd.date_range("2015-02-01", periods=n, freq="D").date,
+                    tmin=t0 + rng.normal(0, 2, n),
+                    tmax=t0 + 9 + rng.gamma(3.0, 2.0, n),
+                    pot_rad_daily=200 + rng.random(n) * 100,
+                    obs_rad_daily=80 + rng.random(n) * 60,
+                )
+            )
+            for sid, t0 in (("a", 275.0), ("b", 281.0), ("c", 288.0))
+        ],
+        ignore_index=True,
+    )
+    daily = spark.createDataFrame(days)
+    cases = {
+        "calibrate per level": lambda n: build_casc(
+            hourly.repartition(n), months=[[1, 2], [3]], avg_stats=False
+        ),
+        "calibrate avg": lambda n: build_casc(hourly.repartition(n)),
+        "bristow-campbell": lambda n: fit_bristow_campbell_params(daily.repartition(n)),
+    }
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        for name, run in cases.items():
+            results = []
+            for enabled in ("true", "false"):
+                spark.conf.set("spark.sql.adaptive.enabled", enabled)
+                results += [sorted(map(repr, run(n).collect())) for n in (1, 5, 64)]
+            assert len(results[0]) > 0, name
+            assert all(r == results[0] for r in results), name
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
 @pytest.fixture(scope="module")
@@ -327,19 +416,11 @@ def test_dict_stats_rejected():
         disagg_prec_cascade(None, {("s1", 0): CascadeStatistics()})
 
 
-def test_results_do_not_depend_on_station_buckets(met_hourly, met_daily, casc_df, casc_s1):
-    """The bucket count only sets what the kernels group by (README,
-    "station_buckets"): every result is row-identical for 0 and 3."""
-    from melodist_spark.statistics import MONTH_RANGES
-
-    seasonal = MONTH_RANGES["seasonal"]
+def test_results_do_not_depend_on_station_buckets(met_daily, casc_df, casc_s1):
+    """The bucket count only sets what the disaggregation kernel groups
+    by (README, "station_buckets"): every result is row-identical for 0
+    and 3."""
     cases = {
-        "calibrate avg": lambda b: build_casc(
-            met_hourly, months=seasonal, station_buckets=b
-        ),
-        "calibrate per level": lambda b: build_casc(
-            met_hourly, months=seasonal, avg_stats=False, station_buckets=b
-        ),
         "disagg stats frame": lambda b: disagg_prec_cascade(
             met_daily, casc_df, seed=11, station_buckets=b
         ),

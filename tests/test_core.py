@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from melodist_spark.functions.meteo import dewpoint_temperature, vapor_pressure
 from melodist_spark.functions.solar import potential_radiation, sun_times_exprs
 from melodist_spark.operators.aggregations import (
-    daily_from_hourly,
     mean_daily_course_by_month,
     month_hour_precip_mean,
 )

@@ -3059,7 +3059,7 @@ def test_pinned_models_match_fresh_training(spark):
 
     # round 11: the global Bristow-Campbell (A, C) fit — the input
     # frame uses exact decimal sums (bit-stable under partition
-    # order) and the pure-python Nelder-Mead is deterministic, so
+    # order) and the fit sums each group's days in date order, so
     # re-fitting reproduces the pinned literals exactly
     from melodist_spark.operators.radiation import fit_bristow_campbell_params
     from melodist_spark.pipeline.pinned import BC_FITTED

@@ -432,6 +432,20 @@ def test_plan_contract_jaccard_no_shingle_explode(spark):
     assert reused, "a-/b-side corpus-prune exchange not reused:\n" + final[:500]
 
 
+def test_plan_contract_calibration_runs_no_python(met_hourly, met_daily, stations):
+    """Precipitation and radiation calibration, the cascade statistics
+    and the Bristow-Campbell fit among them, plan no Python evaluation:
+    no worker starts before the first disaggregation kernel."""
+    from melodist_spark.statistics import StationStatistics
+
+    s = StationStatistics(met_hourly, stations)
+    s.calc_precipitation_stats(months=[[3, 4, 5], [6, 7, 8], [9, 10, 11], [12, 1, 2]])
+    s.calc_radiation_stats(data_daily=met_daily, how="seasonal")
+    pat = re.compile(r"ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas|MapInArrow")
+    for name in ("precip_stats", "glob_bristcamp", "glob_angstroem", "glob_mean_course"):
+        assert not pat.search(_plan(getattr(s, name))), name
+
+
 def test_plan_contract_grouped_map_pinned_parallelism(spark):
     """The bucketed cascade grouped-map must sit behind an explicit
     REPARTITION_BY_NUM exchange (AQE's byte-based coalescing would
@@ -789,9 +803,10 @@ def test_registry_python_eval_counts_pinned(spark, qs):
     a justification.
 
     The non-zero rows, audited this round (wind_cosine_fit is an OLS
-    aggregate, so its ceiling is 0): cascade_disagg/calibration 2 DIFFERENT
-    FlatMapGroupsInPandas kernels each (hourly + level-9 / per-season
-    — verified against the plan arguments); embedding_neardup 2 =
+    aggregate and cascade_calibration windows and aggregations, so
+    their ceiling is 0): cascade_disagg 2 DIFFERENT
+    FlatMapGroupsInPandas kernels (hourly + level-9 — verified against
+    the plan arguments); embedding_neardup 2 =
     the same _bucket once per self-join side (runtime exchange reuse
     dedups the shuffle; a localCheckpoint variant measured flat, see
     OPTIMIZATION_r14.md); ann_topk 6 = per-branch encode/bucket/score
@@ -805,7 +820,6 @@ def test_registry_python_eval_counts_pinned(spark, qs):
     CEILING per row at SF_DIR, not an equality."""
     ceiling = {
         "cascade_disagg": 2,
-        "cascade_calibration": 2,
         "embedding_neardup": 2,
         "ann_topk": 6,
         "doc_sample": 1,

@@ -8,7 +8,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from melodist_spark.operators.cascade import aggregate_precipitation_values
+from cascade_oracle import aggregate_precipitation_values
 from melodist_spark.util.interpolate import interpolate_linear
 
 

@@ -148,13 +148,36 @@ def test_fit_angstroem_singular_range_is_null(spark):
     assert fit["lit"]["b"] == pytest.approx(alone["b"], rel=1e-12)
 
 
+def _zero_bias_grid_fit(t: pd.DataFrame) -> tuple[float, float, float]:
+    """numpy reference of the zero-bias least-squares fit: over the
+    days with dT > 0 of ``t`` (``_bc_daily_terms`` columns), A(C) =
+    Σobs / Σ(pot·τ_C) and the C of least squared error on a log grid
+    with 0.03% steps. Returns (a, c, sse)."""
+    t = t[t["__dT"] > 0]
+    dT, B = t["__dT"].to_numpy(), t["__B"].to_numpy()
+    pot, obs = t["pot_rad_daily"].to_numpy(), t["obs_rad_daily"].to_numpy()
+    best = (np.nan, np.nan, np.inf)
+    for c in np.geomspace(0.05, 19.0, 20001):
+        pt = pot * (1 - np.exp(-B * dT**c))
+        a = obs.sum() / pt.sum()
+        sse = ((a * pt - obs) ** 2).sum()
+        if sse < best[2]:
+            best = (a, c, sse)
+    return best
+
+
+def _bc_sse_bias(t: pd.DataFrame, a: float, c: float) -> tuple[float, float]:
+    t = t[t["__dT"] > 0]
+    res = a * (1 - np.exp(-t["__B"] * t["__dT"] ** c)) * t["pot_rad_daily"] - t["obs_rad_daily"]
+    return float((res**2).sum()), float(res.mean())
+
+
 def test_fit_bristow_campbell_pairs_next_calendar_day(spark):
     """The fit pairs each day with the next CALENDAR day's tmin, or the
     day's own where that day is absent, as disaggregation does: on a
-    frame with a one-day gap its (a, c) is minimize2 on |mean bias|
-    over the dT and B of _bc_daily_terms."""
+    frame with a one-day gap its (a, c) is the zero-bias least-squares
+    fit over the dT and B of _bc_daily_terms (numpy, fine C grid)."""
     from melodist_spark.operators.radiation import _bc_daily_terms
-    from melodist_spark.util.optimize import minimize2
 
     rng = np.random.default_rng(5)
     n = 45
@@ -173,17 +196,61 @@ def test_fit_bristow_campbell_pairs_next_calendar_day(spark):
     fit = fit_bristow_campbell_params(df).collect()[0]
 
     t = _bc_daily_terms(df, ["station_id"]).orderBy("date").toPandas()
-    dT, B = t["__dT"].to_numpy(), t["__B"].to_numpy()
-    pot, obs = t["pot_rad_daily"].to_numpy(), t["obs_rad_daily"].to_numpy()
+    _, c_ref, sse_ref = _zero_bias_grid_fit(t)
+    sse, bias = _bc_sse_bias(t, fit["a"], fit["c"])
+    assert fit["c"] == pytest.approx(c_ref, rel=2e-3)
+    assert sse <= sse_ref * (1 + 1e-6)  # the fit's C grid steps 0.3%
+    assert abs(bias) <= 1e-9 * t["obs_rad_daily"].mean()
 
-    def absbias(ac):
-        with np.errstate(invalid="ignore", over="ignore"):
-            v = np.abs(np.mean(ac[0] * (1 - np.exp(-B * dT ** ac[1])) * pot - obs))
-        return v if np.isfinite(v) else 1e12
 
-    exp = minimize2(absbias, [0.75, 2.4])
-    assert fit["a"] == pytest.approx(exp[0], rel=1e-9)
-    assert fit["c"] == pytest.approx(exp[1], rel=1e-9)
+def _one_bad_day_station(sid: str, n: int = 120, bad: int = 60) -> pd.DataFrame:
+    rng = np.random.default_rng(7)
+    doy = np.arange(n)
+    pot = 250 + 150 * np.sin(2 * np.pi * (doy - 80) / 365.25)
+    tmin = 278 + 8 * np.sin(2 * np.pi * (doy - 110) / 365.25) + rng.normal(0, 1, n)
+    dtr = 4.0 + rng.gamma(4.0, 2.0, n)
+    obs = pot * 0.7 * (1 - np.exp(-0.01 * dtr**2.1)) * np.exp(rng.normal(0, 0.15, n))
+    tmax = tmin + dtr
+    tmax[bad] = tmin[bad] - 3.0  # tmax below mean(tmin, next tmin): dT < 0
+    return pd.DataFrame(
+        dict(
+            station_id=sid,
+            date=pd.date_range("2015-01-01", periods=n, freq="D").date,
+            tmin=tmin, tmax=tmax, pot_rad_daily=pot, obs_rad_daily=obs,
+        )
+    )
+
+
+def test_fit_bristow_campbell_one_bad_day_keeps_the_others(spark):
+    """One day with dT < 0 leaves the fit instead of voiding it: the
+    station gets the zero-bias least-squares fit of its other days
+    (its |mean bias| ~0, its squared error the fine-grid minimum), not
+    the (0.75, 2.4) start point a NaN objective used to return."""
+    from melodist_spark.operators.radiation import _bc_daily_terms
+
+    df = spark.createDataFrame(_one_bad_day_station("bad"))
+    t = _bc_daily_terms(df, ["station_id"]).toPandas()
+    assert (t["__dT"] <= 0).sum() == 1
+    fit = fit_bristow_campbell_params(df).collect()[0]
+    assert (fit["a"], fit["c"]) != (0.75, 2.4)
+    _, c_ref, sse_ref = _zero_bias_grid_fit(t)
+    sse, bias = _bc_sse_bias(t, fit["a"], fit["c"])
+    assert fit["c"] == pytest.approx(c_ref, rel=2e-3)
+    assert sse <= sse_ref * (1 + 1e-6)  # the fit's C grid steps 0.3%
+    assert abs(bias) <= 1e-9 * t["obs_rad_daily"].mean()
+
+
+def test_fit_bristow_campbell_no_usable_day_is_null(spark):
+    """A group whose days all have dT ≤ 0 has nothing to fit: null
+    (a, c), as Angstroem's singular groups; the other group's fit is
+    the one it gets alone."""
+    good = _one_bad_day_station("good")
+    flat = good.assign(station_id="flat", tmax=good["tmin"] - 20.0)
+    df = spark.createDataFrame(pd.concat([good, flat], ignore_index=True))
+    fit = {r["station_id"]: r for r in fit_bristow_campbell_params(df).collect()}
+    assert fit["flat"]["a"] is None and fit["flat"]["c"] is None
+    alone = fit_bristow_campbell_params(df.filter(F.col("station_id") == "good")).collect()[0]
+    assert (fit["good"]["a"], fit["good"]["c"]) == (alone["a"], alone["c"])
 
 
 @pytest.mark.parametrize("how", ["seasonal", "monthly"])
@@ -197,7 +264,8 @@ def test_radiation_range_pass_matches_per_range_fits(how, met_hourly, met_daily,
     s = StationStatistics(met_hourly, stations)
     s.calc_radiation_stats(data_daily=met_daily, how=how)
     ang = s.glob_angstroem.toPandas().set_index(["station_id", "month"])
-    bc = s.glob_bristcamp.toPandas().set_index(["station_id", "month"])
+    # collected rows, so a null fit (a polar-night month) compares as null
+    bc = {(r["station_id"], r["month"]): (r["a"], r["c"]) for r in s.glob_bristcamp.collect()}
     n_ang = n_bc = 0
     for months in MONTH_RANGES[how]:
         sub = StationStatistics(met_hourly, stations)
@@ -210,8 +278,7 @@ def test_radiation_range_pass_matches_per_range_fits(how, met_hourly, met_daily,
             assert got["b"] == pytest.approx(r["b"], rel=1e-12)
             n_ang += 1
         for r in sub.glob_bristcamp.filter(F.col("month").isin(months)).collect():
-            got = bc.loc[(r["station_id"], r["month"])]
-            assert (got["a"], got["c"]) == (r["a"], r["c"])
+            assert bc[(r["station_id"], r["month"])] == (r["a"], r["c"])
             n_bc += 1
     # a polar-night month has no Angstroem fit, with or without ranges
     assert (len(ang), len(bc)) == (n_ang, n_bc)

@@ -54,8 +54,8 @@ def bc_fit_input(spark, sf_dir=SF_DIR):
     per-station pins would not transfer; a fleet-level (A, C) applies
     to any fleet. All means use exact decimal sums so the fit input
     (hence the pinned literals) is bit-stable under any partition
-    order; the optimizer is the pure-python Nelder-Mead
-    (util/optimize.py), deterministic given its input."""
+    order; the zero-bias least-squares fit sums each group's days in
+    date order, so it is deterministic given its input."""
     import __spark_entry__ as entry
     from pyspark.sql import functions as F
 
@@ -164,8 +164,8 @@ LOGREG_MODEL = {{
 
 # fit_bristow_campbell_params on the per-date fleet-mean daily frame
 # (tools/gen_pinned.bc_fit_input) — the global (A, C) applied by the
-# radiation_proxy_variants 'bc_fitted' branch; the Nelder-Mead
-# trainer itself stays pytest-pinned
+# radiation_proxy_variants 'bc_fitted' branch; the fit itself stays
+# pytest-pinned
 # (test_pinned_models_match_fresh_training re-fits and asserts these)
 BC_FITTED = {{"a": {bc["a"]!r}, "c": {bc["c"]!r}}}
 
