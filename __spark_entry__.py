@@ -286,10 +286,9 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """The registry: one Spark plan per key, in a fixed order.
 
-    The correctness gate checks the first 50 keys, each against its
-    ``oracle_sql()`` twin. The last three rows have no possible SQL
-    oracle and are pinned by tests instead: ``wind_random`` (per-hour
-    RNG with no conserved statistic) and ``bpe_tokenize`` /
+    The correctness gate checks the first 51 keys, each against its
+    ``oracle_sql()`` twin. The last two rows have no possible SQL
+    oracle and are pinned by tests instead: ``bpe_tokenize`` /
     ``unigram_tokenize`` (iterative training, where step k depends on
     step k-1)."""
     return {
@@ -1784,6 +1783,27 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
             SELECT 'cosine' AS method, user_id, ts,
                    round(0.4 * wind * cos(pi() * (h - 2.0) / 12.0) + 1.0 * wind, 6) AS wind_h
             FROM grid
+        """,
+        # wind_random: the counter-based uniform of util/rng.py, keyed
+        # by (user_id, seed 42, unix seconds of the hour)
+        "wind_random": f"""
+            WITH daily AS (
+              SELECT user_id, date, hum / 10.0 AS wind
+              FROM ({_MET_DAILY_SQL})
+            ),
+            grid AS (
+              SELECT user_id, wind, CAST(date AS TIMESTAMP) + to_hours(h.h) AS ts
+              FROM daily CROSS JOIN (SELECT unnest(generate_series(0, 23)) AS h) h
+            ),
+            u AS (
+              SELECT user_id, ts, wind,
+                     CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || chr(31) || '42'
+                         || chr(31) || CAST(epoch_ms(ts) // 1000 AS VARCHAR)), 1, 15))::BIGINT AS DOUBLE)
+                     / CAST(1152921504606846976 AS DOUBLE) AS u
+              FROM grid
+            )
+            SELECT user_id, ts, round(wind * pow(-ln(u), 0.3), 6) AS wind_h
+            FROM u
         """,
         "interpolate": f"""
             WITH daily AS ({_MET_DAILY_SQL}),
@@ -3432,26 +3452,13 @@ def q_cascade_disagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = CascadeStatistics()
     stats.fill_with_sample_data()
     daily = _met_daily(spark, sf_dir).select("user_id", "date", "precip")
-    # ~27 days/station at this SF → tiny-group regime, bucket to
-    # amortize per-group Arrow costs (results are bucket-invariant)
-    hourly = disagg_prec_cascade(
-        daily, stats, seed=42, keys=["user_id"], station_buckets=64
-    )
-    # 5-min branch aggregates inside the kernel (emit='daily'): the
-    # 288×-wider grid never leaves the grouped map — map-side partial
-    # aggregation instead of shipping 288 rows/day through Arrow only
-    # to re-sum them. The hourly branch keeps the full-grid + shuffle
-    # re-aggregation shape so the bench still times materializing a
-    # complete sub-daily product.
+    hourly = disagg_prec_cascade(daily, stats, seed=42, keys=["user_id"])
+    # the 5-min branch sums each day's steps in its own row
+    # (emit='daily'): the 288×-wider grid is never exploded. The hourly
+    # branch keeps the full-grid + shuffle re-aggregation shape so the
+    # bench still times materializing a complete sub-daily product.
     fivemin_daily = disagg_prec_cascade(
-        daily,
-        [stats] * 9,
-        hourly=False,
-        level=9,
-        seed=7,
-        keys=["user_id"],
-        station_buckets=64,
-        emit="daily",
+        daily, [stats] * 9, hourly=False, level=9, seed=7, keys=["user_id"], emit="daily"
     )
 
     hourly_day = (
@@ -4049,9 +4056,9 @@ def q_wind_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_wind_random(spark: SparkSession, sf_dir: str) -> DataFrame:
     """random wind disaggregation (`wind.py:69-70`):
-    ``w̄·(-ln U)^0.3`` with seeded ``rand`` — reproducible in this
-    engine (the reference's RNG is unseeded). Stochastic → rows-only
-    (n_days × 24)."""
+    ``w̄·(-ln U)^0.3`` with U the counter-based uniform keyed by
+    (user_id, seed, hour) — reproducible on any layout and rebuilt by
+    the DuckDB oracle (the reference's RNG is unseeded)."""
     from melodist_spark.operators.wind import disaggregate_wind
 
     daily = _met_daily(spark, sf_dir).withColumn("wind", F.col("hum") / 10.0)

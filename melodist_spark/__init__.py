@@ -10,8 +10,8 @@ one-station case.
 Design principles (see SURVEY.md §7):
 - declarative DataFrame plans; Catalyst handles pushdown/pruning/joins
 - parameter tables are tiny → always broadcast-joined
-- Python only inside `applyInPandas` kernels (cascade disaggregation, spline fill)
-- deterministic, seedable randomness (the reference is unseeded)
+- Python only inside the spline fill's `applyInPandas` kernel
+- deterministic, seedable randomness keyed by counters (the reference is unseeded)
 """
 
 from melodist_spark.session import get_spark

@@ -205,7 +205,7 @@ class Stations:
             s = self.statistics
             if s is None or s.precip_stats is None:
                 raise ValueError("cascade needs calibrated precipitation statistics")
-            # stats stay a DataFrame — joined into the kernel input per
+            # stats stay a DataFrame — joined into the station-days per
             # station, never collected to the driver (fleet-scale safe)
             parts = []
             for season_idx, months in enumerate(s.precip_months):

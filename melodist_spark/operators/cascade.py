@@ -5,35 +5,29 @@ Reference: `cascade.py` (statistics container), `precipitation.py:74-372`
 `precipitation.py:631-702` (build_casc).
 
 Spark mapping (SURVEY.md §2.8): calibration is windows and
-aggregations over each station-season's numbered steps, in the JVM
-(:func:`build_casc`). Disaggregation is a grouped-map pandas UDF
-partitioned by station — a station's daily series is far below a
-task's memory, and stations are embarrassingly parallel. Inside the
-kernel the reference's per-box Python loops are replaced by numpy
-vectorization over whole levels (every box of a level branches
-simultaneously with pre-drawn random arrays). Randomness is seeded per
-station (crc32 of the id XOR a user seed) — the reference uses an
-unseeded global RNG; we define reproducible behavior.
+aggregations over each station-season's numbered steps
+(:func:`build_casc`). Disaggregation is one row per station-day holding
+the day's boxes: every box of a level splits at once in one
+``transform``, and only neighbouring boxes couple, which ``lag``/``lead``
+over the station's days express (:func:`disagg_prec_cascade`). Both run
+in the JVM. Each draw is a counter-based uniform keyed by station, seed,
+day, level and box (`util/rng.py`) — the reference uses an unseeded
+global RNG; we define reproducible behavior.
 """
 
 from __future__ import annotations
 
-import zlib
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..util.execution import key_schema
+from ..util.calendar import LEVEL11_STEP_US
+from ..util.rng import counter_key, digest_uniform
 
 #: class boundaries of the weight histogram (`precipitation.py:143`)
 WCLASSBOUNDS = np.array([0.0, 0.1429, 0.2857, 0.4286, 0.5714, 0.7143, 0.8571, 1.0])
 WUPPER = WCLASSBOUNDS[1:]
-
-#: µs per box at cascade level 11 (`precipitation.py:706`)
-LEVEL11_STEP_US = 42_187_500
 
 
 class BoxTypes:
@@ -144,20 +138,6 @@ class CascadeStatistics:
         s.threshold = np.array(r["threshold"])
         s.percentile = r["percentile"]
         return s
-
-
-def _box_types(x: np.ndarray) -> np.ndarray:
-    """Vectorized box-type classification (`precipitation.py:474-497`):
-    edges treat out-of-range neighbours as dry."""
-    wet = x > 0
-    prev_wet = np.concatenate(([False], wet[:-1]))
-    next_wet = np.concatenate((wet[1:], [False]))
-    bt = np.zeros(len(x), dtype=np.int64)
-    bt[wet & ~prev_wet & next_wet] = BoxTypes.starting
-    bt[wet & prev_wet & next_wet] = BoxTypes.enclosed
-    bt[wet & prev_wet & ~next_wet] = BoxTypes.ending
-    bt[wet & ~prev_wet & ~next_wet] = BoxTypes.isolated
-    return bt
 
 
 # ---------------------------------------------------------------------------
@@ -312,140 +292,80 @@ def collect_cascade_stats(stats_df: DataFrame, key_col: str = "station_id") -> d
 # Disaggregation
 # ---------------------------------------------------------------------------
 
+#: left-half weight of each weight class: its center (`precipitation.py:264`)
+W_LEFT = (WCLASSBOUNDS[1:] - 1.0 / 14.0).tolist()
 
-def _station_slices(pdf: pd.DataFrame, keys: list[str], order: str):
-    """Sort ``pdf`` by (keys, order) and find each station's rows.
 
-    Returns the sorted frame, the key columns as arrays and one
-    ``(start, end)`` row range per station. One sort plus numpy
-    boundary detection on the FULL key tuple (``keys[0]`` alone would
-    merge stations sharing the first component): pandas ``groupby``
-    sub-frames per station dominated the kernel wall time on short
-    series, where the cascade math itself is ~20% of it.
+def _double(x: float) -> str:
+    return f"double('{x}')" if not np.isfinite(x) else f"{float(x)!r}D"
+
+
+def _stats_literal(opts) -> str:
+    """Fleet-wide statistics as a SQL literal in :func:`build_casc`'s row
+    layout: one ``level = -1`` struct, or one struct per level."""
+    rows = [(-1, opts)] if isinstance(opts, CascadeStatistics) else list(enumerate(opts))
+    return "array(" + ", ".join(
+        f"named_struct('level', {lvl}, " + ", ".join(
+            f"'{n}', array({', '.join(map(_double, s.to_row()[n]))})"
+            for n in ("p01", "p10", "wxx", "threshold")
+        ) + ")"
+        for lvl, s in rows
+    ) + ")"
+
+
+def _split(t: int, n_levels: int) -> str:
+    """SQL of split ``t`` (`precipitation.py:201-281`): every box of
+    ``__v`` (``2^t`` per day) becomes two, with the statistics of
+    cascade level ``si = n_levels - 1 - t`` (the reference counts down):
+    the averaged row with ``threshold[si]``, or row ``si`` with its
+    ``threshold[0]``.
+
+    A box's type comes from its neighbours, the previous day's last box
+    (``__p``) and the next day's first (``__n``) at the edges; its
+    branch and weight draws are digits 1-15 and 16-30 of one md5 keyed
+    by (``__k``, t, box), taken for wet boxes only. The weight class is
+    the first whose cumulative weight reaches the draw, counted over the
+    non-decreasing running sums.
     """
-    pdf = pdf.sort_values([*keys, order], kind="mergesort")
-    karrs = [pdf[k].to_numpy() for k in keys]
-    n = len(pdf)
-    change = np.zeros(n, dtype=bool)
-    change[0] = True
-    for a in karrs:
-        change[1:] |= a[1:] != a[:-1]
-    starts = np.flatnonzero(change)
-    return pdf, karrs, list(zip(starts, np.r_[starts[1:], n]))
+    si = n_levels - 1 - t
+    avg = "__stats[0].level = -1"
+    r = f"IF({avg}, __stats[0], __stats[{si}])"
+    thr = f"IF({avg}, __stats[0].threshold[{si}], __stats[{si}].threshold[0])"
+    wet = "coalesce({} > 0, false)"
+    prev, nxt = wet.format("IF(i = 0, __p, __v[i - 1])"), wet.format(f"IF(i = {(1 << t) - 1}, __n, __v[i + 1])")
+    bt = BoxTypes
+    # cell = intensity * 4 + box type - 1, the type indexed by (prev, next) wetness
+    types = ", ".join(str(b - 1) for b in (bt.isolated, bt.starting, bt.ending, bt.enclosed))
+    cell = f"IF(x > {thr}, 4, 0) + array({types})[2 * int({prev}) + int({nxt})]"
+    draws = (f"transform(__v, (x, i) -> IF(x > 0, named_struct('h', md5({counter_key('__k', t, 'i')}), "
+             f"'c', {cell}), NULL))")
+    u1, u2 = digest_uniform("d.h", 1), digest_uniform("d.h", 16)
+    w = f"{r}.wxx[j * 8 + d.c]"
+    k = (f"aggregate(sequence(0, 5), named_struct('k', 0, 'c', 0D), (s, j) -> named_struct("
+         f"'k', s.k + int({u2} > s.c + {w}), 'c', s.c + {w}), s -> s.k)")
+    frac = (f"transform({draws}, d -> CASE WHEN d IS NULL THEN NULL "
+            f"WHEN {u1} <= {r}.p01[d.c] THEN 0D WHEN {u1} <= {r}.p01[d.c] + {r}.p10[d.c] THEN 1D "
+            f"ELSE array({', '.join(map(_double, W_LEFT))})[{k}] END)")
+    return f"flatten(transform({frac}, (f, i) -> array(coalesce(f * __v[i], 0D), coalesce((1D - f) * __v[i], 0D))))"
 
 
-def _grouped(df: DataFrame, keys: list[str], station_buckets: int):
-    """What a station-slicing kernel groups by.
+def _regrid(hourly: bool, level: int) -> str:
+    """SQL of the day's steps from its final boxes ``__v``: 32 × 45 min
+    → 96 × 15 min (÷3) → 24 × 1 h (`precipitation.py:283-305`), or the
+    ``2^level`` boxes summed into 288 5-min bins by their start offset,
+    like ``resample('5min').sum()`` (`precipitation.py:307-311`).
 
-    ``0`` groups by ``keys`` unpinned, reusing the input's existing
-    station partitioning (a bucketed scan skips its exchange). ``> 0``
-    hash-buckets stations into that many groups behind an explicit
-    REPARTITION_BY_NUM exchange, which AQE may not coalesce onto one
-    task; each group then holds many stations, amortizing the
-    per-group Arrow and pandas costs of tiny series. Results are
-    per-station, so they do not depend on the choice.
-    """
-    if station_buckets and station_buckets > 0:
-        bucket = F.pmod(F.xxhash64(*keys), F.lit(station_buckets))
-        return (
-            df.withColumn("__bucket", bucket)
-            .repartition(station_buckets, "__bucket")
-            .groupBy("__bucket")
-        )
-    return df.groupBy(*keys)
-
-
-def _disagg_one_level(
-    x: np.ndarray,
-    stats: CascadeStatistics,
-    wxxcum: np.ndarray,
-    meanvol: float,
-    rng: np.random.Generator,
-) -> np.ndarray:
-    """Split every box of one level into two, vectorized
-    (`precipitation.py:201-281`): branch choice and weights for all
-    boxes of the level are drawn at once.
-    """
-    n = len(x)
-    wet = x > 0
-    bt = _box_types(x)
-    ba = (x > meanvol).astype(np.int64)
-    cell = np.where(wet, ba * 4 + (bt - 1), 0)
-
-    p01v = stats.p01.reshape(8)[cell]
-    p10v = stats.p10.reshape(8)[cell]
-
-    rndp = rng.random(n)
-    case01 = rndp <= p01v
-    case10 = (rndp > p01v) & (rndp <= p01v + p10v)
-
-    rndw = rng.random(n)
-    cum = wxxcum.reshape(7, 8)[:, cell]  # (7, n)
-    hit = rndw[None, :] <= cum
-    k = hit.argmax(axis=0)
-    k = np.where(hit.any(axis=0), k, 6)  # numerical guard: fall in last class
-    w1 = WCLASSBOUNDS[k + 1] - 1.0 / 14.0  # class centers (`precipitation.py:264`)
-
-    left = np.where(case01, 0.0, np.where(case10, x, w1 * x))
-    right = np.where(case01, x, np.where(case10, 0.0, (1.0 - w1) * x))
-    left = np.where(wet, left, 0.0)
-    right = np.where(wet, right, 0.0)
-
-    out = np.empty(2 * n)
-    out[0::2] = left
-    out[1::2] = right
-    return out
-
-
-def disagg_cascade_values(
-    x: np.ndarray,
-    cascade_options,
-    hourly: bool = True,
-    level: int = 9,
-    rng: np.random.Generator | None = None,
-) -> np.ndarray:
-    """Disaggregate one station's daily values (missing already zeroed).
-
-    Returns hourly values (24/day) or 2**level dyadic boxes per day
-    (5-min aggregation is done by the caller). Mirrors
-    `precipitation.py:74-311` including the threshold indexing
-    (level l uses ``threshold[si]`` after the in-loop decrement).
-    """
-    if rng is None:
-        rng = np.random.default_rng()
-    si = 5 if hourly else level
-
-    if isinstance(cascade_options, CascadeStatistics):
-        overwrite = False
-        stats = cascade_options
-        wxxcum = np.cumsum(stats.wxx, axis=0)
-    elif isinstance(cascade_options, list):
-        if len(cascade_options) != si:
-            raise ValueError(f"Cascade statistics list must have {si} elements!")
-        overwrite = True
-    else:
-        raise TypeError("cascade_options has invalid type")
-
-    v = np.asarray(x, dtype=float)
-    for _ in range(si if not hourly else 5):
-        si -= 1
-        if overwrite:
-            stats = cascade_options[si]
-            wxxcum = np.cumsum(stats.wxx, axis=0)
-            meanvol = stats.threshold[0]
-        else:
-            meanvol = stats.threshold[si]
-        v = _disagg_one_level(v, stats, wxxcum, meanvol, rng)
-
+    The boxes are bound once as the lambda variable ``v``: referenced
+    once inside a lambda, ``__v`` would let the optimizer inline the
+    last split into the lambda body and evaluate it once per step."""
     if hourly:
-        # 32×45 min → 96×15 min (÷3) → 24×1 h (`precipitation.py:283-305`)
-        q = np.repeat(v, 3) / 3.0
-        return q.reshape(-1, 4).sum(axis=1)
-    return v
-
-
-def _station_seed(station_id, seed: int) -> int:
-    return (zlib.crc32(str(station_id).encode()) ^ seed) & 0xFFFFFFFF
+        steps = "transform(sequence(0, 23), h -> aggregate(sequence(0, 3), 0D, (a, q) -> a + v[(4 * h + q) div 3] / 3D))"
+    else:
+        bins = np.arange(2**level) * (LEVEL11_STEP_US << (11 - level)) // 300_000_000
+        lo = f"array({', '.join(map(str, np.searchsorted(bins, np.arange(289))))})"
+        steps = (f"transform(sequence(0, 287), b -> aggregate(slice(v, {lo}[b] + 1, "
+                 f"{lo}[b + 1] - {lo}[b]), 0D, (a, x) -> a + x))")
+    return f"transform(array(__v), v -> {steps})[0]"
 
 
 def disagg_prec_cascade(
@@ -459,40 +379,35 @@ def disagg_prec_cascade(
     date_col: str = "date",
     ts_col: str = "ts",
     season: int = 0,
-    station_buckets: int = 0,
     emit: str = "steps",
 ) -> DataFrame:
-    """Distributed cascade disaggregation.
+    """Distributed cascade disaggregation, one row per station-day.
 
     ``cascade_options`` may be:
 
     - the **DataFrame returned by** :func:`build_casc` — the scale
-      path: each station's ``season`` statistics are joined into the
-      kernel input as one column, so the driver never materializes the
-      fleet's statistics;
+      path: each station's ``season`` statistics are joined in per
+      station, so the driver never materializes the fleet's statistics;
     - a single :class:`CascadeStatistics` (or per-level list) applied
-      to every station. It is a few hundred doubles and rides in the
-      kernel's closure.
+      to every station, as a SQL literal.
+
+    Each row holds the day's boxes; each split (5 when ``hourly``,
+    else ``level``) is one window step over ``PARTITION BY keys ORDER
+    BY date`` — the adjacent rows' edge boxes give the box types — and
+    one :func:`_split`, so one exchange and one sort serve every split.
+    Draws are keyed by (keys, seed, unix_date(date), split, box)
+    (`util/rng.py`): no partitioning, retry or cluster size changes
+    them, and extending a record changes only its two edge days.
 
     Missing daily values are zeroed before and restored to null after
     (`precipitation.py:96-99`, `313-315`); ``shift`` relabels the
     result by N steps (`precipitation.py:317-319`).
 
-    One grouped-map kernel loops the stations of its group, each
-    seeded by its own id, so results are identical for any grouping;
-    ``station_buckets`` only sets what it groups by (see
-    :func:`_grouped`). Bucketing wins when station series are short (a
-    2× win measured at 1500 stations × 30 days).
-
     ``emit='steps'`` (default) returns (keys..., ts, precip) at hourly
-    or 5-minute resolution. ``emit='daily'`` runs the same stochastic
-    kernel but aggregates back to daily totals *inside* the grouped
-    map, returning (keys..., date, n_steps, precip): the map-side
-    partial aggregation a mass-balance audit wants — the full sub-daily
-    grid never leaves the kernel, so a 100 TB conservation check ships
-    1/24th (1/288th at 5 min) of the rows through Arrow and skips the
-    re-aggregation shuffle entirely. A fully-missing day aggregates to
-    NaN → null, matching the post-shuffle ``sum`` of the steps path.
+    or 5-minute resolution. ``emit='daily'`` sums each day's steps in
+    its own row, returning (keys..., date, n_steps, precip): the
+    sub-daily grid is never exploded, which is what a mass-balance
+    audit wants. A missing day sums to null.
     """
     if emit not in ("steps", "daily"):
         raise ValueError(f"emit must be 'steps' or 'daily', got {emit!r}")
@@ -500,115 +415,56 @@ def disagg_prec_cascade(
         # a shifted grid moves mass across day boundaries; daily totals
         # would no longer be the input totals — refuse rather than lie
         raise ValueError("emit='daily' requires shift=0")
-    stats_in_col = isinstance(cascade_options, DataFrame)
-    if not stats_in_col and not isinstance(cascade_options, (CascadeStatistics, list)):
+    n_levels = 5 if hourly else level
+    if isinstance(cascade_options, list) and len(cascade_options) != n_levels:
+        raise ValueError(f"Cascade statistics list must have {n_levels} elements!")
+    if not isinstance(cascade_options, (DataFrame, CascadeStatistics, list)):
         raise TypeError(
             "cascade_options must be a build_casc DataFrame, a "
             f"CascadeStatistics or a per-level list, got {type(cascade_options)}"
         )
-    # the kernel must not close over a DataFrame (unpicklable)
-    fleet_opts = None if stats_in_col else cascade_options
     keys = list(keys)
-    out_step_us = 3_600_000_000 if hourly else 300_000_000
-    steps_per_day = 24 if hourly else 288
-    box_step_us = LEVEL11_STEP_US * (2 ** (11 - level))
-    boxes_per_day = 2**level
-
-    if emit == "daily":
-        schema = key_schema(daily, keys) + f", {date_col} date, n_steps long, precip double"
-    else:
-        schema = key_schema(daily, keys) + f", {ts_col} timestamp, precip double"
-
-    def disagg_core(sid, opts, x_raw, dates):
-        """One station's date-sorted arrays in, (ts, vals) out."""
-        missing = np.isnan(x_raw)
-        x = np.nan_to_num(x_raw, nan=0.0)
-
-        rng = np.random.default_rng(_station_seed(sid, seed))
-        v = disagg_cascade_values(x, opts, hourly=hourly, level=level, rng=rng)
-
-        n_days = len(x_raw)
-
-        if hourly:
-            vals = v
-        else:
-            # accumulate 2**level dyadic boxes into 5-min bins by their
-            # start offset, like resample('5min').sum()
-            # (`precipitation.py:307-311`)
-            bins = (np.arange(boxes_per_day) * box_step_us) // out_step_us
-            day_idx = np.repeat(np.arange(n_days), boxes_per_day)
-            flat_bins = day_idx * steps_per_day + np.tile(bins, n_days)
-            # bincount(weights=...) over the flat bin ids: same
-            # accumulation order as np.add.at (input order per bin) at
-            # a fraction of the scatter-add cost
-            vals = np.bincount(
-                flat_bins, weights=v, minlength=n_days * steps_per_day
-            )
-
-        # restore missing days to null (`precipitation.py:313-315`)
-        mask = np.repeat(missing, steps_per_day)
-        vals = np.where(mask, np.nan, vals)
-
-        if shift != 0:
-            shifted = np.full_like(vals, np.nan)
-            if shift > 0:
-                shifted[shift:] = vals[: len(vals) - shift]
-            else:
-                shifted[:shift] = vals[-shift:]
-            vals = shifted
-
-        if emit == "daily":
-            # in-kernel partial aggregation: a missing day is all-NaN →
-            # NaN → null, same as summing the steps path post-shuffle
-            return None, vals.reshape(n_days, steps_per_day).sum(axis=1)
-        offs = (np.arange(steps_per_day) * out_step_us).astype("timedelta64[us]")
-        ts = (dates[:, None] + offs[None, :]).ravel()
-        return ts, vals
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, karrs, slices = _station_slices(pdf, keys, date_col)
-        precip = pdf["precip"].to_numpy(dtype=float)
-        date_np = pd.to_datetime(pdf[date_col]).to_numpy().astype("datetime64[us]")
-        stats_np = pdf["__stats"].to_numpy() if stats_in_col else None
-
-        key_parts = [[] for _ in keys]
-        ts_parts, val_parts = [], []
-        for s0, s1 in slices:
-            sid = karrs[0][s0] if len(keys) == 1 else tuple(a[s0] for a in karrs)
-            opts = _stats_from_rows(stats_np[s0]) if stats_in_col else fleet_opts
-            ts, vals = disagg_core(sid, opts, precip[s0:s1], date_np[s0:s1])
-            for i, a in enumerate(karrs):
-                key_parts[i].append(np.repeat(a[s0], len(vals)))
-            ts_parts.append(ts)
-            val_parts.append(vals)
-        res = {k: np.concatenate(key_parts[i]) for i, k in enumerate(keys)}
-        if emit == "daily":
-            # stations are contiguous in the sorted frame, so the
-            # concatenated per-station day rows line up with pdf's
-            res[date_col] = pdf[date_col].to_numpy()
-            res["n_steps"] = np.full(len(pdf), steps_per_day, dtype=np.int64)
-        else:
-            res[ts_col] = np.concatenate(ts_parts)
-        res["precip"] = np.concatenate(val_parts)
-        return pd.DataFrame(res)
-
-    selected = daily.select(*keys, date_col, "precip")
-    if stats_in_col:
-        # one struct-array column per station, joined on the same keys
-        # the grouped map shuffles on — no driver materialization
-        per_station = (
+    qk = [f"`{k}`" for k in keys]
+    date = f"`{date_col}`"
+    steps = 24 if hourly else 288
+    rows = daily.selectExpr(
+        *qk, date,
+        "precip IS NULL OR isnan(precip) AS __miss",
+        "array(nanvl(coalesce(double(precip), 0D), 0D)) AS __v",
+        f"{counter_key(*qk, seed, f'unix_date({date})')} AS __k",
+    )
+    if isinstance(cascade_options, DataFrame):
+        stats = (
             cascade_options.filter(F.col("season") == F.lit(season))
             .groupBy(*keys)
-            .agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            "level", "p01", "p10", "pxx", "wxx",
-                            "threshold", "percentile",
-                        )
-                    )
-                ).alias("__stats")
-            )
+            .agg(F.expr("sort_array(collect_list(struct(level, p01, p10, wxx, threshold))) AS __stats"))
         )
-        selected = selected.join(per_station, keys)
-    return _grouped(selected, keys, station_buckets).applyInPandas(kernel, schema=schema)
+        rows = rows.join(stats, keys)
+    else:
+        rows = rows.selectExpr("*", f"{_stats_literal(cascade_options)} AS __stats")
+
+    over = f"OVER (PARTITION BY {', '.join(qk)} ORDER BY {date})"
+    carry = [*qk, date, "__miss", "__k", "__stats"]
+    for t in range(n_levels):
+        rows = rows.selectExpr(
+            *carry, "__v", f"lag(element_at(__v, -1)) {over} AS __p", f"lead(element_at(__v, 1)) {over} AS __n"
+        ).selectExpr(*carry, f"{_split(t, n_levels)} AS __v")
+
+    vals = _regrid(hourly, level)
+    if emit == "daily":
+        return rows.selectExpr(
+            *qk, date, f"{steps}L AS n_steps",
+            f"IF(__miss, NULL, aggregate({vals}, 0D, (a, x) -> a + x)) AS precip",
+        )
+    step_us = 86_400_000_000 // steps
+    out = rows.selectExpr(*qk, date, "__miss", f"posexplode({vals}) AS (__i, __x)").selectExpr(
+        *qk, f"timestamp_micros(unix_micros(to_timestamp({date})) + __i * {step_us}L) AS `{ts_col}`",
+        "IF(__miss, NULL, __x) AS precip",
+    )
+    if shift:
+        fn = "lag" if shift > 0 else "lead"
+        out = out.selectExpr(
+            *qk, f"`{ts_col}`",
+            f"{fn}(precip, {abs(shift)}) OVER (PARTITION BY {', '.join(qk)} ORDER BY `{ts_col}`) AS precip",
+        )
+    return out

@@ -1,10 +1,11 @@
 """Wind disaggregation and the cosine-fit calibration.
 
 Reference: `wind.py:28-93`. equal/cosine are pure column expressions;
-``random`` uses Spark's seedable ``rand()`` (the reference draws from
-an unseeded global RNG — we define reproducible behavior instead, see
-SURVEY.md §4.2). The scipy ``curve_fit`` calibration is an exact OLS,
-one grouped aggregation (`util/ols.py`).
+``random`` draws one counter-based uniform per station-hour
+(`util/rng.py`; the reference draws from an unseeded global RNG — we
+define reproducible behavior instead, see SURVEY.md §4.2). The scipy
+``curve_fit`` calibration is an exact OLS, one grouped aggregation
+(`util/ols.py`).
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from pyspark.sql import functions as F
 
 from melodist_spark.util.calendar import hourly_calendar
 from melodist_spark.util.ols import normal_equations_fit
+from melodist_spark.util.rng import counter_key, uniform
 
 PI = 3.141592653589793
 
@@ -34,7 +36,8 @@ def disaggregate_wind(
     - equal: replicate the daily mean (`wind.py:60-63`)
     - cosine: ``a·w̄·cos(π(h - t_shift)/12) + b·w̄`` (`wind.py:28-42`)
       with per-station (a, b, t_shift) from ``wind_params``
-    - random: ``w̄·(-ln U)^0.3`` (`wind.py:69-70`), U from ``rand(seed)``
+    - random: ``w̄·(-ln U)^0.3`` (`wind.py:69-70`), U keyed by
+      (keys, seed, unix_seconds(ts)), so no partitioning can change it
 
     Returns (keys..., ts, wind).
     """
@@ -57,7 +60,8 @@ def disaggregate_wind(
             F.lit(PI) * (h - F.col("t_shift")) / F.lit(12.0)
         ) + F.col("b") * F.col("wind")
     else:  # random
-        wind = F.col("wind") * F.pow(-F.log(F.rand(seed)), F.lit(0.3))
+        u = uniform(counter_key(*[f"`{k}`" for k in keys], seed, f"unix_seconds(`{ts_col}`)"))
+        wind = F.expr(f"wind * pow(-ln({u}), 0.3D)")
 
     return out.select(*keys, ts_col, wind.alias("wind"))
 

@@ -25,27 +25,12 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util.rng import counter_key, sql_string, uniform
+
 __all__ = ["weighted_mixture", "mixture_audit", "temperature_weights"]
-
-#: 2^60 as float — the md5-prefix uniform's denominator (same 60-bit
-#: prefix construction as the dedup/decontamination hashes)
-_U_DENOM = float(1 << 60)
-
-
-def _unit_hash(seed: int, name: str, id_col: Column) -> Column:
-    """Deterministic uniform in [0, 1) from (seed, source name, id) —
-    engine-portable (DuckDB: ('0x' || substr(md5(...), 1, 15))::BIGINT
-    / 2^60)."""
-    key = F.concat_ws(
-        "\x1f", F.lit(str(seed)), F.lit(name), id_col.cast("string")
-    )
-    return (
-        F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint")
-        / F.lit(_U_DENOM)
-    )
 
 
 def weighted_mixture(
@@ -122,7 +107,8 @@ def weighted_mixture(
         # computes, and the draw must be engine-portable.
         full = int(math.floor(target / n_s))
         frac = (target - full * n_s) / n_s
-        u = _unit_hash(seed, name, F.col(id_col))
+        # uniform keyed by (seed, source name, id)
+        u = F.expr(uniform(counter_key(seed, sql_string(name), f"`{id_col}`")))
         # epochs 0..full-1 unconditionally, epoch `full` iff u < frac:
         # one sequence per row, length full or full+1 — the narrow
         # fan-out IS the intended upsampling

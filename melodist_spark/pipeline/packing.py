@@ -146,8 +146,7 @@ def pack_sequences(
         if tokens_col is not None
         else token_count(F.col(text_col))
     ).cast("bigint")
-    key = F.concat(F.col(id_col).cast("string"), F.lit(f"|{salt}"))
-    staged = df.withColumn("__h", _hash01(key)).withColumn(
+    staged = df.withColumn("__h", _hash01(id_col, salt)).withColumn(
         "__ntok", ntok
     )
     bucket = F.least(

@@ -21,20 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# md5 prefix of 15 hex digits = 60 bits, interpreted as a fraction of
-# 16^15; cryptographically uniform on [0, 1) and identical in DuckDB:
-# ('0x' || substr(md5(x), 1, 15))::BIGINT / 16.0^15
-_HASH_SPACE = float(16**15)
+from ..util.rng import sql_string, uniform
 
 
-def _hash01(col) -> F.Column:
-    """Uniform [0,1) hash of a column, engine-portable (md5 hex)."""
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        .cast("double")
-        / F.lit(_HASH_SPACE)
-    )
+def _hash01(id_col: str, salt: str) -> F.Column:
+    """Uniform [0,1) keyed by ``id|salt``, engine-portable (``util/rng.py``)."""
+    return F.expr(uniform(f"concat(string(`{id_col}`), {sql_string('|' + salt)})"))
 
 
 def hash_sample(
@@ -51,8 +43,7 @@ def hash_sample(
     """
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    key = F.concat(F.col(id_col).cast("string"), F.lit(f"|{salt}"))
-    return df.filter(_hash01(key) < F.lit(fraction))
+    return df.filter(_hash01(id_col, salt) < F.lit(fraction))
 
 
 def stratified_sample_n(
@@ -79,8 +70,7 @@ def stratified_sample_n(
     salt only bounds phase-1 group sizes — the selected sample is
     salt-invariant. ``skew_groups=1`` collapses to the plain window.
     """
-    key = F.concat(F.col(id_col).cast("string"), F.lit(f"|{salt}"))
-    h = _hash01(key).alias("__h")
+    h = _hash01(id_col, salt).alias("__h")
     staged = df.withColumn("__h", h)
     if skew_groups > 1:
         sg = F.pmod(F.xxhash64(F.col(id_col)), F.lit(skew_groups))
@@ -140,7 +130,7 @@ def importance_resample(
         F.col("cross_entropy__t").alias("__h_t"),
         F.col("cross_entropy__r").alias("__h_r"),
     )
-    u = _hash01(F.concat(F.col(id_col).cast("string"), F.lit("|" + salt)))
+    u = _hash01(id_col, salt)
     # clamp u away from {0,1}: -log(-log(u)) must stay finite
     u = F.least(F.greatest(u, F.lit(1e-15)), F.lit(1.0 - 1e-15))
     scored = (

@@ -13,10 +13,9 @@ def pin_partitions(df: DataFrame, cols) -> DataFrame:
 
     AQE's ``coalescePartitions`` sizes post-shuffle partitions by
     *bytes*, which is the wrong signal in front of a compute-bound
-    grouped map: a cascade/fit kernel expands or iterates far beyond
-    its byte-small input, and letting AQE fold the 40k-row shuffle
-    into one partition serializes the whole fleet onto a single task
-    (measured 2×+ on the 5-minute cascade at sf0.1). An explicit
+    grouped map: a kernel that expands or iterates far beyond its
+    byte-small input is serialized onto a single task once AQE folds
+    the shuffle into one partition. An explicit
     ``repartition(n, cols)`` is a REPARTITION_BY_NUM exchange, which
     AQE is contractually not allowed to coalesce, and its
     HashPartitioning satisfies the downstream ``groupBy(cols)``
@@ -29,13 +28,6 @@ def pin_partitions(df: DataFrame, cols) -> DataFrame:
     """
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *[F.col(c) if isinstance(c, str) else c for c in cols])
-
-
-def key_schema(df: DataFrame, keys) -> str:
-    """DDL fragment declaring ``keys`` with their types in ``df``: the
-    key part of a grouped map's output schema."""
-    types = dict(df.dtypes)
-    return ", ".join(f"{k} {types[k]}" for k in keys)
 
 
 def local_frame(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:

@@ -11,6 +11,26 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session")
+def layout_runs(spark):
+    """``layout_runs(run, frames)``: ``run`` on every input layout, each
+    frame repartitioned to 1, 5 and 64 partitions with AQE on and off;
+    each result's rows as sorted reprs."""
+
+    def runs(run, frames):
+        aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        out = []
+        try:
+            for enabled in ("true", "false"):
+                spark.conf.set("spark.sql.adaptive.enabled", enabled)
+                out += [sorted(map(repr, run(f.repartition(n)).collect())) for f in frames for n in (1, 5, 64)]
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        return out
+
+    return runs
+
+
 def _station_frame(station_id: str, seed: int, start="2014-01-01", periods=2 * 8760):
     """Deterministic synthetic hourly met series (FIXTURES.md §1):
     diurnal+seasonal temperature, bursty precipitation with wet spells,

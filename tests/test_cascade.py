@@ -6,12 +6,19 @@ unseeded); statistical invariants + seeded reproducibility are the
 correctness instruments, as in the reference's own test suite.
 """
 
+import datetime as dt
+
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from cascade_oracle import aggregate_precipitation_values, build_casc_values
+from cascade_oracle import (
+    aggregate_precipitation_values,
+    build_casc_values,
+    cascade_uniforms,
+    disagg_station,
+)
 from melodist_spark.operators.cascade import (
     CascadeStatistics,
     build_casc,
@@ -354,9 +361,7 @@ def test_multi_key_stations_not_merged(spark):
         ignore_index=True,
     )
     daily = spark.createDataFrame(pdf)
-    out = disagg_prec_cascade(
-        daily, stats, seed=3, keys=["net", "sid"], station_buckets=4
-    )
+    out = disagg_prec_cascade(daily, stats, seed=3, keys=["net", "sid"])
     got = out.groupBy("net", "sid", F.to_date("ts").alias("date")).agg(
         F.sum("precip").alias("s")
     ).toPandas()
@@ -416,28 +421,6 @@ def test_dict_stats_rejected():
         disagg_prec_cascade(None, {("s1", 0): CascadeStatistics()})
 
 
-def test_results_do_not_depend_on_station_buckets(met_daily, casc_df, casc_s1):
-    """The bucket count only sets what the disaggregation kernel groups
-    by (README, "station_buckets"): every result is row-identical for 0
-    and 3."""
-    cases = {
-        "disagg stats frame": lambda b: disagg_prec_cascade(
-            met_daily, casc_df, seed=11, station_buckets=b
-        ),
-        "disagg fleet-wide shift": lambda b: disagg_prec_cascade(
-            met_daily, casc_s1, seed=5, shift=5, station_buckets=b
-        ),
-        "disagg 5-min list daily": lambda b: disagg_prec_cascade(
-            met_daily, [casc_s1] * 9, hourly=False, level=9, seed=7,
-            emit="daily", station_buckets=b,
-        ),
-    }
-    for name, run in cases.items():
-        direct, bucketed = (sorted(map(repr, run(b).collect())) for b in (0, 3))
-        assert len(direct) > 0, name
-        assert direct == bucketed, name
-
-
 def test_absent_hour_calibrates_like_null_hour(spark, met_hourly_pd):
     """An hour missing from the calibration data must count as the null
     hour it stands for, not shift the dyadic pairing of every later
@@ -463,3 +446,94 @@ def test_absent_hour_calibrates_like_null_hour(spark, met_hourly_pd):
     ]
     for attr in ("p01", "p10", "pxx", "wxx", "threshold"):
         np.testing.assert_array_equal(getattr(got[0], attr), getattr(got[1], attr), attr)
+
+
+def _expected(pdf, opts, keys, seed, **kw):
+    """The numpy oracle's output for every station of ``pdf``, in
+    (keys, date) order, fed the engine's md5-keyed uniforms."""
+    out = []
+    for key, g in pdf.sort_values([*keys, "date"]).groupby(keys, sort=True):
+        key = key if isinstance(key, tuple) else (key,)
+        days = [(d - dt.date(1970, 1, 1)).days for d in g["date"]]
+        o = opts.get(key) if isinstance(opts, dict) else opts
+        x = g["precip"].to_numpy(dtype=float)
+        out.append(disagg_station(x, o, cascade_uniforms(key, seed, days), **kw))
+    return np.concatenate(out)
+
+
+def test_disagg_matches_numpy_oracle(spark, met_hourly, met_daily):
+    """Fed the same uniforms, recomputed with hashlib from the engine's
+    key strings, the moved numpy kernel gives the JVM output bit for
+    bit; ``emit='daily'`` within 1e-12 relative, because numpy sums a
+    day's steps pairwise. Covers hourly and level 9, averaged and
+    per-level statistics, the build_casc frame and fleet-wide
+    statistics, missing days, both shift directions, a multi-key
+    station and both emit modes."""
+    pdf = met_daily.filter(F.col("date") < dt.date(2014, 3, 15)).select("station_id", "date", "precip").toPandas()
+    pdf.loc[(pdf.station_id == "s2") & pdf.date.isin([dt.date(2014, 1, 9), dt.date(2014, 2, 1)]), "precip"] = None
+    pdf.loc[(pdf.station_id == "s3") & (pdf.date == dt.date(2014, 1, 20)), "precip"] = np.nan
+    daily = spark.createDataFrame(pdf)
+    hourly_part = met_hourly.filter(F.col("ts") < "2014-07-01")
+    avg_df = build_casc(hourly_part)
+    lv9_df = build_casc(hourly_part, hourly=False, level=9, avg_stats=False)
+    avg, lv9 = collect_cascade_stats(avg_df), collect_cascade_stats(lv9_df)
+    fleet_lv5 = collect_cascade_stats(build_casc(hourly_part, avg_stats=False))[("s1", 0)]
+    fleet_avg = avg[("s2", 0)]
+    frame = {k: {(sid,): v for (sid, _), v in d.items()} for k, d in (("avg", avg), ("lv9", lv9))}
+    cases = [
+        (avg_df, frame["avg"], dict(seed=11)),
+        (lv9_df, frame["lv9"], dict(hourly=False, level=9, seed=5)),
+        (fleet_avg, fleet_avg, dict(seed=3, shift=7)),
+        (fleet_lv5, fleet_lv5, dict(seed=3, shift=-30)),
+        (fleet_avg, fleet_avg, dict(seed=8, emit="daily")),
+        ([fleet_avg] * 9, [fleet_avg] * 9, dict(hourly=False, level=9, seed=8, emit="daily")),
+    ]
+    for opts, oracle_opts, kw in cases:
+        order = ["station_id", "date" if kw.get("emit") == "daily" else "ts"]
+        got = disagg_prec_cascade(daily, opts, **kw).orderBy(*order).toPandas()["precip"]
+        exp = _expected(pdf, oracle_opts, ["station_id"], **kw)
+        if kw.get("emit") == "daily":
+            np.testing.assert_allclose(got.to_numpy(dtype=float), exp, rtol=1e-12, atol=0, equal_nan=True,
+                                       err_msg=str(kw))
+        else:
+            np.testing.assert_array_equal(got.to_numpy(dtype=float), exp, err_msg=str(kw))
+        assert np.isnan(exp).any() and (exp > 0).any(), kw
+
+    # (n1, s1), (n1, s2) and (n2, s1): each shares a key part with another
+    two = pdf[pdf.station_id != "s3"]
+    multi = pd.concat([two.assign(net="n1", sid=two.station_id), two[two.station_id == "s2"].assign(net="n2", sid="s1")])
+    multi = multi.drop(columns="station_id")
+    got = disagg_prec_cascade(spark.createDataFrame(multi), fleet_avg, seed=2, keys=["net", "sid"])
+    got = got.orderBy("net", "sid", "ts").toPandas()["precip"].to_numpy(dtype=float)
+    np.testing.assert_array_equal(got, _expected(multi, fleet_avg, ["net", "sid"], seed=2))
+
+
+def test_disagg_does_not_depend_on_layout_or_record_extent(met_hourly, met_daily, layout_runs):
+    """README, "Determinism at scale": the cascade's output is bit-equal
+    under input repartitioning to 1, 5 and 64 partitions with AQE on
+    and off, hourly and at level 9, from the build_casc frame and from
+    a fleet-wide per-level list. A record extended by one day at each
+    end keeps every day but the first two and last two of the original
+    record: a new edge day can change the box types of those only."""
+    first, last = dt.date(2014, 2, 1), dt.date(2014, 3, 31)
+    day = F.col("date")
+    base = met_daily.select("station_id", "date", "precip").filter(day.between(first, last))
+    ext = met_daily.select("station_id", "date", "precip").filter(
+        day.between(first - dt.timedelta(1), last + dt.timedelta(1))
+    )
+    keep = F.to_date("ts").between(first + dt.timedelta(2), last - dt.timedelta(2))
+    hourly_part = met_hourly.filter(F.col("ts") < "2014-07-01")
+    lv5 = collect_cascade_stats(build_casc(hourly_part, avg_stats=False))[("s1", 0)]
+    lv9 = collect_cascade_stats(build_casc(hourly_part, hourly=False, level=9, avg_stats=False))[("s2", 0)]
+    cases = {
+        "hourly frame": lambda d: disagg_prec_cascade(d, build_casc(hourly_part), seed=11),
+        "hourly list": lambda d: disagg_prec_cascade(d, lv5, seed=4),
+        "level 9 frame": lambda d: disagg_prec_cascade(
+            d, build_casc(hourly_part, hourly=False, level=9), hourly=False, level=9, seed=5
+        ),
+        "level 9 list": lambda d: disagg_prec_cascade(d, lv9, hourly=False, level=9, seed=6),
+    }
+    for name, run in cases.items():
+        results = layout_runs(lambda d: run(d).filter(keep), [base, ext])
+        assert len(results[0]) > 0, name
+        assert all(r == results[0] for r in results), name

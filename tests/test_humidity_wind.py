@@ -157,6 +157,26 @@ def test_wind_random_seeded_and_nonnegative(met_daily):
     np.testing.assert_allclose(pa["wind"].values, pb["wind"].values)
 
 
+def test_wind_random_does_not_depend_on_layout_or_record_extent(met_daily, layout_runs):
+    """README, "Determinism at scale": each hour's draw is keyed by
+    (station, seed, hour), so the output is bit-equal under input
+    repartitioning to 1, 5 and 64 partitions with AQE on and off, and a
+    record extended by one day at each end keeps every overlapping
+    hour."""
+    first, last = dt.date(2014, 5, 1), dt.date(2014, 6, 30)
+    daily = met_daily.select("station_id", "date", "wind")
+    base = daily.filter(F.col("date").between(first, last))
+    ext = daily.filter(F.col("date").between(first - dt.timedelta(1), last + dt.timedelta(1)))
+    results = layout_runs(
+        lambda d: disaggregate_wind(d, method="random", seed=7).filter(
+            F.to_date("ts").between(first, last)
+        ),
+        [base, ext],
+    )
+    assert len(results[0]) == 3 * 61 * 24
+    assert all(r == results[0] for r in results)
+
+
 def test_wind_cosine_fit_roundtrip(spark, met_daily):
     """Generate hourly wind from a known (a,b,t_shift) cosine and check
     the scipy fit recovers it (`wind.py:75-93`)."""

@@ -24,15 +24,15 @@ def qs():
     return entry.queries()
 
 
-#: registry rows with no possible SQL oracle (per-hour RNG; iterative
-#: tokenizer training) — they sit past the 50 keys the gate checks
-NO_ORACLE = {"wind_random", "bpe_tokenize", "unigram_tokenize"}
+#: registry rows with no possible SQL oracle (iterative tokenizer
+#: training) — they sit past the 51 keys the gate checks
+NO_ORACLE = {"bpe_tokenize", "unigram_tokenize"}
 
 
 def test_registry_oracle_parity(qs):
     """One oracle per checked row and no dead rows, checked without
     Spark: every ``oracle_sql()`` key names a registry row, every
-    row but the three un-oracle-able ones has one, those three are the
+    row but the two un-oracle-able ones has one, those two are the
     registry's tail, and every module-level ``q_*`` function is
     reachable from ``queries()``."""
     import ast
@@ -433,53 +433,39 @@ def test_plan_contract_jaccard_no_shingle_explode(spark):
 
 
 def test_plan_contract_calibration_runs_no_python(met_hourly, met_daily, stations):
-    """Precipitation and radiation calibration, the cascade statistics
-    and the Bristow-Campbell fit among them, plan no Python evaluation:
-    no worker starts before the first disaggregation kernel."""
+    """Calibration, the cascade statistics and the Bristow-Campbell fit
+    among them, and the five disaggregations the fleet benchmark runs,
+    the seasonal cascade union among them, plan no Python evaluation."""
+    from melodist_spark.api import Stations
     from melodist_spark.statistics import StationStatistics
 
     s = StationStatistics(met_hourly, stations)
+    s.calc_wind_stats().calc_humidity_stats().calc_temperature_stats()
     s.calc_precipitation_stats(months=[[3, 4, 5], [6, 7, 8], [9, 10, 11], [12, 1, 2]])
     s.calc_radiation_stats(data_daily=met_daily, how="seasonal")
     pat = re.compile(r"ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas|MapInArrow")
     for name in ("precip_stats", "glob_bristcamp", "glob_angstroem", "glob_mean_course"):
         assert not pat.search(_plan(getattr(s, name))), name
+    st = Stations(stations, met_daily)
+    st.statistics = s
+    outs = {
+        "temp": st.disaggregate_temperature("sine_min_max", min_max_time="sun_loc"),
+        "hum": st.disaggregate_humidity("dewpoint_regression"),
+        "wind": st.disaggregate_wind("cosine"),
+        "glob": st.disaggregate_radiation("pot_rad_via_bc"),
+        "precip": st.disaggregate_precipitation("cascade", seed=7),
+    }
+    for name, df in outs.items():
+        assert not pat.search(_plan(df)), name
 
 
-def test_plan_contract_grouped_map_pinned_parallelism(spark):
-    """The bucketed cascade grouped-map must sit behind an explicit
-    REPARTITION_BY_NUM exchange (AQE's byte-based coalescing would
-    otherwise serialize the compute-heavy kernel onto one task), while
-    the direct station_buckets=0 path must NOT insert one (its point
-    is reusing the table's existing station partitioning)."""
-    import pandas as pd
-
-    from melodist_spark.operators.cascade import (
-        CascadeStatistics,
-        disagg_prec_cascade,
-    )
-
-    stats = CascadeStatistics()
-    stats.fill_with_sample_data()
-    daily = spark.createDataFrame(
-        pd.DataFrame(
-            dict(
-                station_id="s1",
-                date=pd.date_range("2015-01-01", periods=10, freq="D").date,
-                precip=1.0,
-            )
-        )
-    )
-    pinned = _plan(
-        disagg_prec_cascade(daily, stats, seed=1, station_buckets=8)
-    )
-    assert re.search(r"REPARTITION_BY_NUM|RoundRobin|rep", pinned) and re.search(
-        r"hashpartitioning\(__bucket[^)]*, 8\)", pinned
-    ), "bucket path lost its explicit 8-partition exchange"
-    direct = _plan(
-        disagg_prec_cascade(daily, stats, seed=1, station_buckets=0)
-    )
-    assert not re.search(r"REPARTITION_BY_NUM", direct)
+def test_plan_contract_cascade_splits_evaluate_once(spark, qs):
+    """Each cascade split is its own projection between window steps:
+    the registry row's plan holds one md5 per split, 5 hourly plus 9 at
+    level 9. A split inlined into a later lambda (the optimizer inlines
+    a column referenced once) would run once per step and add an md5."""
+    plan = _plan(qs["cascade_disagg"](spark, SF_DIR))
+    assert plan.count("md5(") == 5 + 9, plan.count("md5(")
 
 
 def test_lm_reuse_exchange_no_cache_residue(spark):
@@ -803,10 +789,8 @@ def test_registry_python_eval_counts_pinned(spark, qs):
     a justification.
 
     The non-zero rows, audited this round (wind_cosine_fit is an OLS
-    aggregate and cascade_calibration windows and aggregations, so
-    their ceiling is 0): cascade_disagg 2 DIFFERENT
-    FlatMapGroupsInPandas kernels (hourly + level-9 — verified against
-    the plan arguments); embedding_neardup 2 =
+    aggregate, cascade_calibration and cascade_disagg windows and
+    aggregations, so their ceiling is 0): embedding_neardup 2 =
     the same _bucket once per self-join side (runtime exchange reuse
     dedups the shuffle; a localCheckpoint variant measured flat, see
     OPTIMIZATION_r14.md); ann_topk 6 = per-branch encode/bucket/score
@@ -819,7 +803,6 @@ def test_registry_python_eval_counts_pinned(spark, qs):
     session (the plan then reads Scan ExistingRDD), so the pin is a
     CEILING per row at SF_DIR, not an equality."""
     ceiling = {
-        "cascade_disagg": 2,
         "embedding_neardup": 2,
         "ann_topk": 6,
         "doc_sample": 1,
