@@ -35,15 +35,16 @@ class Stations:
     meta : DataFrame(station_id, lon, lat, timezone[, name])
     data_daily : daily observations (validated + calendar-filled on set,
         `station.py:81-103`)
-    validate : 'lazy' (default) or 'eager'. The Kelvin plausibility
-        check on ``temp`` differs from the reference's
-        raise-at-assignment: 'lazy' compiles ``raise_error`` into the
-        column, so it fires only when (and where) ``temp`` is actually
-        evaluated — a plan that prunes the column, or filters out the
-        offending rows first, will NOT raise. That is the right trade
-        at fleet scale (assignment stays a no-job operation instead of
-        paying a full scan), but callers wanting the reference's
-        fail-fast contract must pass ``validate='eager'``.
+    validate : 'lazy' (default) or 'eager'; anything else raises
+        ValueError. The Kelvin plausibility check on ``temp`` differs
+        from the reference's raise-at-assignment: 'lazy' compiles
+        ``raise_error`` into the column, so it fires only when (and
+        where) ``temp`` is actually evaluated — a plan that prunes the
+        column, or filters out the offending rows first, will NOT
+        raise. That is the right trade at fleet scale (assignment
+        stays a no-job operation instead of paying a full scan), but
+        callers wanting the reference's fail-fast contract must pass
+        ``validate='eager'``.
     """
 
     def __init__(
@@ -52,6 +53,8 @@ class Stations:
         data_daily: DataFrame | None = None,
         validate: str = "lazy",
     ):
+        if validate not in ("lazy", "eager"):
+            raise ValueError(f"validate must be 'lazy' or 'eager', got {validate!r}")
         self.meta = meta
         self._data_daily: DataFrame | None = None
         self.statistics: StationStatistics | None = None

@@ -6,29 +6,21 @@ typed metadata struct; all per-item compute is Arrow-batched
 
 Decoders: real, pure stdlib+numpy — binary PPM/PGM (P6/P5) and 24-bit
 uncompressed BMP images, 8-bit PNG (gray/RGB/RGBA/palette, all five
-scanline filters; zlib is stdlib), baseline/extended-sequential JPEG
-(pipeline/jpeg.py — canonical Huffman + 8×8 DCT + YCbCr are plain
-arithmetic), GIF87a/89a including full animations (variable-width
-LZW, interlacing, local/global palettes; per-frame delay/transparency/
-disposal compositing via ``decode_gif_frames`` — round 7), FLAC audio
-(pipeline/flac.py — Rice + fixed/
-LPC predictors + stereo decorrelation; all four added round 6,
-previously listed as env-blocked), PCM WAV audio, MJPEG video in AVI
-containers (pipeline/avi.py — RIFF chunk walk + per-frame baseline
-JPEG incl. the table-less MJPEG convention; round 7) — and images
-resize through a numpy nearest-neighbor kernel. The remaining
-compressed codecs (H.264,
-MP3) genuinely need PIL/ffmpeg, which this container does not have:
-those payloads fall back to the clearly-marked deterministic fake
-(`_fake_decode`) or raise, while every piece of Spark-side plumbing
-(schema, batching, partition sizing, UDF signatures) is real and
-tested either way.
+scanline filters; zlib is stdlib), GIF87a/89a including full
+animations (variable-width LZW, interlacing, local/global palettes;
+per-frame delay/transparency/disposal compositing via
+``decode_gif_frames``), baseline TIFF, and PCM/G.711/IMA-ADPCM WAV
+audio — and images resize through a numpy nearest-neighbor kernel.
+Every other codec needs a library this package does not carry: those
+payloads fall back to the clearly-marked deterministic fake
+(`_fake_decode`), a null hash, an ``err`` row or ``codec='raw'`` byte
+framing, while every piece of Spark-side plumbing (schema, batching,
+partition sizing, UDF signatures) is real and tested either way.
 """
 
 from __future__ import annotations
 
 import hashlib
-import struct
 from collections.abc import Iterator
 
 import numpy as np
@@ -1266,7 +1258,7 @@ def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 
 def _audio_rms_features(mono: np.ndarray, dim: int) -> np.ndarray:
     """Per-slice RMS energy over ``dim`` equal windows — shared by the
-    WAV and FLAC feature paths."""
+    WAV feature path and the audio fingerprint."""
     edges = np.linspace(0, len(mono), dim + 1).astype(np.int64)
     feat = np.zeros(dim)
     for k in range(dim):
@@ -1280,14 +1272,13 @@ def numpy_media_decoder(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
     """Real feature extraction for the formats the pure-numpy codecs
     cover, sniffed by magic bytes:
 
-    - PPM/PGM/BMP/PNG/JPEG/GIF images → grayscale (alpha dropped), nearest-
-      resized to an 8×8 patch, scaled to [0, 1] (a tiny perceptual
-      thumbprint — the classic aHash input), padded/truncated to
-      ``dim``;
-    - PCM WAV / FLAC audio → per-slice RMS energy over ``dim`` equal
-      windows (FLAC peak-normalized to [-1, 1] first);
-    - anything else (compressed codecs need PIL/ffmpeg, absent here) →
-      the deterministic :func:`_fake_decode`.
+    - PPM/PGM/BMP/PNG/GIF/TIFF images → grayscale (alpha dropped),
+      nearest-resized to an 8×8 patch, scaled to [0, 1] (a tiny
+      perceptual thumbprint — the classic aHash input),
+      padded/truncated to ``dim``;
+    - WAV audio → per-slice RMS energy over ``dim`` equal windows;
+    - anything else (other codecs need a library this package does
+      not carry) → the deterministic :func:`_fake_decode`.
     """
     try:
         img = _decode_image(payload)
@@ -1300,17 +1291,6 @@ def numpy_media_decoder(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
         if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
             samples, _ = decode_wav(payload)
             return _audio_rms_features(samples.mean(axis=1), dim)
-        if payload[:4] == b"fLaC":
-            from melodist_spark.pipeline.flac import decode_flac
-
-            samples, _, bps = decode_flac(payload)
-            # full-scale normalization to [-1, 1], same convention as
-            # the WAV path (so the same signal gives the same features
-            # through either container)
-            return _audio_rms_features(
-                samples.mean(axis=1).astype(np.float64) / float(1 << (bps - 1)),
-                dim,
-            )
         return _fake_decode(payload, dim)
     except ValueError:
         return _fake_decode(payload, dim)
@@ -1318,10 +1298,10 @@ def numpy_media_decoder(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
 
 def _decode_image(payload: bytes) -> np.ndarray | None:
     """Sniff + decode the still-image formats the pure-numpy codecs
-    cover (PPM/PGM, PNG with alpha dropped, baseline/progressive
-    JPEG, GIF first frame, BMP, baseline TIFF). ``None`` when the
-    magic bytes match none of them — audio and compressed-video
-    payloads are not images, and the caller decides the fallback."""
+    cover (PPM/PGM, PNG with alpha dropped, GIF first frame, BMP,
+    baseline TIFF). ``None`` when the magic bytes match none of them
+    (audio, or an image in another codec); the caller decides the
+    fallback."""
     if payload[:2] in (b"P6", b"P5"):
         return decode_ppm(payload)
     if payload[: len(_PNG_SIG)] == _PNG_SIG:
@@ -1329,10 +1309,6 @@ def _decode_image(payload: bytes) -> np.ndarray | None:
         if img.ndim == 3 and img.shape[2] in (2, 4):
             img = img[:, :, :-1]  # drop alpha before the gray mean
         return img
-    if payload[:2] == b"\xff\xd8":
-        from melodist_spark.pipeline.jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         return decode_gif(payload)
     if payload[:2] == b"BM":
@@ -1352,8 +1328,8 @@ def resize_images(
     payload_col: str = "payload",
     id_col: str = "media_id",
 ) -> DataFrame:
-    """Distributed image resize for PPM/PGM/BMP/PNG/JPEG/GIF
-    payloads: decode → nearest-neighbor resize → re-encode (PNG/JPEG/
+    """Distributed image resize for PPM/PGM/BMP/PNG/GIF/TIFF
+    payloads: decode → nearest-neighbor resize → re-encode (PNG and
     GIF keep their format, everything else re-encodes as PPM),
     Arrow-batched. Output is again an opaque
     binary column (plus the new dimensions), so the operator composes
@@ -1381,14 +1357,9 @@ def resize_images(
                         raise ValueError("null payload")
                     b = bytes(p)
                     is_png = b[: len(_PNG_SIG)] == _PNG_SIG
-                    is_jpg = b[:2] == b"\xff\xd8"
                     is_gif = b[:6] in (b"GIF87a", b"GIF89a")
                     if is_png:
                         img = decode_png(b)
-                    elif is_jpg:
-                        from melodist_spark.pipeline.jpeg import decode_jpeg
-
-                        img = decode_jpeg(b)
                     elif is_gif:
                         img = decode_gif(b)
                     elif b[:2] == b"BM":
@@ -1402,10 +1373,6 @@ def resize_images(
                     small = resize_nearest(img, out_h, out_w)
                     if is_png:
                         enc = encode_png(small)
-                    elif is_jpg:
-                        from melodist_spark.pipeline.jpeg import encode_jpeg
-
-                        enc = encode_jpeg(small)
                     elif is_gif:
                         # nearest-neighbor only picks existing pixels,
                         # so the palette stays <=256 and GIF stays GIF
@@ -1436,9 +1403,8 @@ def decode_features(
     """payload → feature vector, Arrow-batched.
 
     The default decoder is :func:`numpy_media_decoder` — REAL features
-    for PPM/PGM/BMP/PNG/JPEG/GIF/PCM-WAV/FLAC payloads,
-    deterministic fake for formats that need the absent PIL/ffmpeg
-    (H.264, MP3). ``real_decoder(bytes) ->
+    for PPM/PGM/BMP/PNG/GIF/TIFF/WAV payloads, deterministic fake for
+    every other codec. ``real_decoder(bytes) ->
     np.ndarray`` plugs in an actual model/codec stack instead.
     """
     decoder = real_decoder or numpy_media_decoder
@@ -1518,8 +1484,8 @@ def phash64(payload: bytes) -> int | None:
 
     Complements :func:`dhash64`: the gradient hash is sensitive to
     resampling phase, while the low-frequency DCT block survives
-    resizes and JPEG requantization — the same reason JPEG keeps
-    those coefficients at highest fidelity. Both feed the identical
+    resizes and lossy requantization, which keeps those coefficients
+    at highest fidelity. Both feed the identical
     banded LSH join (``dhash_neardup_pairs(hash_col=...)``)."""
     try:
         img = _decode_image(payload)
@@ -1570,21 +1536,13 @@ def audio_fingerprint64(payload: bytes) -> int | None:
     equal windows, adjacent-difference sign bits packed like
     :func:`dhash64` — the audio analogue of the image dHash.
     Level-invariant by construction (uniform gain scales every
-    window's RMS equally, so no comparison flips), and
-    container-invariant across PCM WAV and FLAC of the same signal
-    (both decode paths normalize to [-1, 1]). ``None`` for non-audio
+    window's RMS equally, so no comparison flips); the WAV decode
+    normalizes every sample format to [-1, 1]. ``None`` for non-WAV
     or undecodable payloads."""
     try:
         if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
             samples, _ = decode_wav(payload)
             mono = samples.mean(axis=1)
-        elif payload[:4] == b"fLaC":
-            from melodist_spark.pipeline.flac import decode_flac
-
-            samples, _, bps = decode_flac(payload)
-            mono = samples.mean(axis=1).astype(np.float64) / float(
-                1 << (bps - 1)
-            )
         else:
             return None
     except ValueError:
@@ -1744,11 +1702,11 @@ def video_phash(
     ``(media_id, frame_idx, phash)`` — the standard frame-fingerprint
     basis for video near-dup (a re-encoded/rescaled copy of a video
     shares most of its frame hashes even when no two FILES share a
-    byte). Composes :func:`sample_frames` (offset-walk sampling — the
-    unsampled 90%+ of each container is never entropy-decoded) with
-    :func:`phash64` over the decodable sampled frames; ``codec='raw'``
-    rows (the H.264 seam) and error rows drop out here, so the
-    signature is exactly the frames we can actually see."""
+    byte). Composes :func:`sample_frames` with :func:`phash64` over
+    the decodable sampled frames (``codec`` 'gif' or 'png');
+    ``codec='raw'`` rows (containers this package cannot parse) and
+    error rows drop out here, so the signature is exactly the frames
+    we can actually see."""
     frames = sample_frames(
         df,
         every_n=every_n,
@@ -1760,7 +1718,7 @@ def video_phash(
         # GIF canvases that exceed 256 colors — fully decodable frames
         # that must not vanish from color-rich animation signatures
         F.col("err").isNull()
-        & F.col("codec").isin("jpeg", "gif", "png")
+        & F.col("codec").isin("gif", "png")
     )
     schema = StructType(
         [
@@ -1904,23 +1862,19 @@ def sample_frames(
 ) -> DataFrame:
     """Frame sampling for video-typed payloads, Arrow-batched.
 
-    Two container formats are sampled for REAL. Animated GIF: every
-    ``every_n``-th *composited* frame (full GIF89a animation
-    semantics via :func:`decode_gif_frames`: per-frame disposal
-    methods, transparency, local palettes, delays) is re-encoded as
-    a standalone single-frame GIF. MJPEG/AVI (round 7, pipeline/avi.py):
-    the RIFF chunk walk yields byte offsets, sampled ``00dc`` chunks
-    are emitted VERBATIM as ``codec='jpeg'`` rows (each is an
-    independent baseline JPEG; table-less MJPEG frames decode via the
-    decoder's Annex-K fallback) with h/w from a marker-walk-only SOF
-    read — no re-encode, no entropy decode of unsampled frames, so
-    1% sampling of an hour-long capture touches ~1% of the bytes.
-    Both real paths compose with the downstream image operators
-    (:func:`resize_images`, :func:`decode_features`) directly. Other
-    video payloads keep fixed-size byte framing (``codec='raw'``):
-    real H.264/MP4 parsing needs the absent ffmpeg — documented seam;
-    the row shape and partitioning are identical to the real path.
-    Poison blobs become error rows, never job failures.
+    Animated GIF is sampled for REAL: every ``every_n``-th
+    *composited* frame (full GIF89a animation semantics via
+    :func:`decode_gif_frames`: per-frame disposal methods,
+    transparency, local palettes, delays) is re-encoded as a
+    standalone single-frame GIF (``codec='gif'``, or ``'png'`` when
+    the composite exceeds 256 colors), which composes with the
+    downstream image operators (:func:`resize_images`,
+    :func:`decode_features`) directly. Every other video payload
+    keeps fixed-size byte framing (``codec='raw'``): parsing other
+    containers needs a library this package does not carry —
+    documented seam; the row shape and partitioning are identical to
+    the real path. Poison GIFs become error rows, never job
+    failures.
 
     Returns (media_id, frame_idx, delay_cs, height, width, frame,
     codec, err) — one row per sampled frame, fanned out inside the
@@ -1972,38 +1926,6 @@ def sample_frames(
                             canvas.shape[1], enc, codec, None,
                         ))
                     continue
-                if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                    from .avi import frame_dimensions, parse_avi
-
-                    try:
-                        meta = parse_avi(b)
-                    except (ValueError, struct.error) as e:
-                        rows.append((mid, None, None, None, None, None,
-                                     "avi", str(e)))
-                        continue
-                    delay = int(round((meta["usec_per_frame"] or 0) / 1e4))
-                    picked = list(range(0, len(meta["frames"]), every_n))
-                    if max_frames is not None:
-                        picked = picked[:max_frames]
-                    for fi in picked:
-                        off, size = meta["frames"][fi]
-                        fb = b[off : off + size]
-                        try:
-                            fh, fw = frame_dimensions(fb)
-                        except (ValueError, struct.error) as e:
-                            rows.append((mid, fi, delay, None, None, None,
-                                         "jpeg", str(e)))
-                            continue
-                        # the chunk IS a standalone baseline JPEG
-                        # (table-less MJPEG frames decode via the
-                        # Annex-K fallback in jpeg.py) — emit it
-                        # verbatim: zero re-encode cost, h/w from a
-                        # header walk, entropy decode deferred to
-                        # whichever downstream op actually needs
-                        # pixels
-                        rows.append((mid, fi, delay, fh, fw, fb,
-                                     "jpeg", None))
-                    continue
                 n_frames = max(len(b) // frame_bytes, 1)
                 idxs = range(0, n_frames, every_n)
                 if max_frames is not None:
@@ -2020,15 +1942,4 @@ def sample_frames(
         df.filter(F.col("media_type") == "video")
         .select(id_col, payload_col)
         .mapInPandas(run, schema=schema)
-    )
-
-
-def resize_stub(*_args, **_kwargs):
-    """Kept for API compatibility: resize of video (H.264) needs
-    ffmpeg/opencv. PPM/PGM/BMP/PNG/baseline-JPEG resize is real —
-    use :func:`resize_images`."""
-    raise NotImplementedError(
-        "resize of video formats needs ffmpeg/opencv which are not "
-        "installed; PPM/PGM/BMP/PNG/JPEG payloads resize for real "
-        "via resize_images()"
     )

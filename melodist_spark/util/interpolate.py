@@ -25,8 +25,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .execution import pin_partitions
-
 
 def interpolate_linear(
     df: DataFrame,
@@ -48,7 +46,11 @@ def interpolate_linear(
     - ``limit``: at most this many consecutive nulls are filled,
       counted from the valid value in fill direction
     """
-    assert limit_direction in ("forward", "both", "backward")
+    if limit_direction not in ("forward", "both", "backward"):
+        raise ValueError(
+            "limit_direction must be 'forward', 'both' or 'backward', "
+            f"got {limit_direction!r}"
+        )
     keys = list(keys)
     out_col = out_col or value_col
 
@@ -234,9 +236,9 @@ def interpolate_spline(
     extrapolation is numerically explosive and never meaningful for
     met series).
 
-    The input is repartitioned by ``keys`` with an explicit count so
-    AQE cannot coalesce a small fleet onto one task in front of the
-    spline kernel (see ``util.execution.pin_partitions``).
+    The input is repartitioned by ``keys`` into
+    ``spark.sql.shuffle.partitions`` so AQE cannot coalesce a small
+    fleet onto one task in front of the spline kernel.
     """
     if method not in ("cubic", "spline", "cubicspline"):
         raise NotImplementedError(
@@ -261,4 +263,7 @@ def interpolate_spline(
         pdf[ocol] = _spline_fill(pdf[vcol].to_numpy(dtype=float))
         return pdf[names]
 
-    return pin_partitions(df, keys).groupBy(*keys).applyInPandas(fill, schema=out_schema)
+    # an explicit count is a REPARTITION_BY_NUM exchange, which AQE cannot
+    # coalesce onto one task in front of this compute-bound kernel
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *keys).groupBy(*keys).applyInPandas(fill, schema=out_schema)

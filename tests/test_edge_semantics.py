@@ -15,6 +15,7 @@ from melodist_spark.operators.radiation import disaggregate_radiation
 from melodist_spark.operators.temperature import disaggregate_temperature
 from melodist_spark.operators.wind import disaggregate_wind
 from melodist_spark.statistics import StationStatistics
+from melodist_spark.util.interpolate import interpolate_linear
 
 
 def test_mod_nighttime_three_piece(met_daily):
@@ -159,6 +160,10 @@ MISSING_PARAM_CALLS = {
     "radiation stats how": lambda d, st: StationStatistics(
         None, st
     ).calc_radiation_stats(how="bogus"),
+    "interpolate_linear limit_direction": lambda d, st: interpolate_linear(
+        d, "temp", ts_col="date", limit_direction="Both"
+    ),
+    "Stations validate": lambda d, st: Stations(st, d, validate="Eager"),
 }
 
 
